@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
   * (/root/reference/README.md, lib/view.js:67). Bounds are compound keys
   * (bare scalars accepted); `limit` counts KEYS for map views (the
   * reference limits the LevelDB key stream, then flattens multi-values).
+  * A negative limit means no limit — levelup's `limit: -1` default,
+  * which the reference's `list` passes through.
   */
 final case class ListOpts(
     gt: Option[Seq[Any]] = None,
@@ -20,7 +22,9 @@ final case class ListOpts(
     lt: Option[Seq[Any]] = None,
     lte: Option[Seq[Any]] = None,
     limit: Option[Int] = None,
-    reverse: Boolean = false)
+    reverse: Boolean = false) {
+  private[core] def keyLimit: Option[Int] = limit.filter(_ >= 0)
+}
 
 /** One materialized view entry, driver-side. */
 final case class Entry(key: Any, value: Any)
@@ -73,11 +77,16 @@ object GraftEvent {
   *     trivially, and readers pin the generation they resolved.
   *   - `list` range bounds compile to BinaryType comparisons on `kb`
   *     that push into the parquet scan (row-group pruning via min/max).
-  *   - Reduced views aggregate AT QUERY TIME with partial aggregation:
-  *     the reference pre-folds into LevelDB because its reads are
-  *     single-threaded point lookups; on Spark the fold is a shuffle-
-  *     light `groupBy(kb)` over only the key range being read, which
-  *     scales with executors instead of serializing on write.
+  *   - Reduced views aggregate AT QUERY TIME (unless `materialize`d)
+  *     with partial aggregation: a `groupBy(kb)` over only the key
+  *     range being read.
+  *   - Driver reads (`getValue`/`listEntries`) of a view small enough
+  *     for `graft.driverCollect.maxRows` (rows, and bytes derived from
+  *     it) are answered from a READ SNAPSHOT: the second read of a state
+  *     generation collects the view's whole ordered answer once, later
+  *     reads of that generation binary-search it on the driver without a
+  *     Spark job. Any manifest flip, by any engine on the state root,
+  *     invalidates it (see [[ReadSnapshot]] and `readSnapshot`).
   */
 class Graft(val spark: SparkSession, val stateRoot: String,
     initialListeners: Seq[GraftEvent => Unit] = Nil) {
@@ -115,8 +124,33 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   // spec-visible count of actual probe jobs (GraftEngineSpec asserts one
   // probe across repeated reads)
   private[graft] var foldProbeRuns = 0L
-  private def bumpStateGen(view: String): Unit =
+  // Driver read snapshots (see readSnapshot), with spec-visible counts of
+  // fills (whole-view collects), hits (reads answered with no Spark job)
+  // and declined fills
+  private val snapshots = new ReadSnapshots
+  private val fillLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]
+  private[graft] var snapshotFills = 0L
+  private[graft] var snapshotHits = 0L
+  private[graft] var snapshotDeclines = 0L
+  private[graft] def snapshotRowsHeld: Long = snapshots.heldRows
+  // state dir -> (data file -> parquet footer (rows, uncompressed bytes))
+  // for the dir's current files; data files are never rewritten in place
+  private val footerStats = mutable.Map.empty[String, Map[String, (Long, Long)]]
+  private def bumpStateGen(view: String): Unit = {
     synchronized { stateGen(view) = stateGen.getOrElse(view, 0L) + 1L }
+    snapshots.drop(view)
+  }
+  private def foldCap: Int = spark.conf.getOption("graft.fold.maxValuesPerKey")
+    .map(_.toInt).getOrElse(Graft.defaultFoldCap)
+  /** A full-state Fold probe passed for the view's current state under a
+    * cap no looser than today's.
+    */
+  private def foldProbePassed(view: String): Boolean = {
+    val cap = foldCap
+    synchronized(foldProbeOkGen.get(view).exists { case (g, c) =>
+      g == stateGen.getOrElse(view, 0L) && c <= cap
+    })
+  }
 
   listeners ++= initialListeners
   // `open` / `open-failed` (reference index.js:53-58): catalog load IS
@@ -552,7 +586,9 @@ class Graft(val spark: SparkSession, val stateRoot: String,
         viewVersions.clear()
         stateGen.clear()
         foldProbeOkGen.clear()
+        footerStats.clear()
       }
+      snapshots.clear()
     }
   }
 
@@ -623,13 +659,25 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     * BOUNDED like [[listEntries]]: a map-view key with more than
     * `graft.driverCollect.maxRows` values fails loudly instead of
     * collecting them all (reduced views return one row and never trip).
+    * Served from the view's read snapshot when it has one (see
+    * [[readSnapshot]]).
     */
   def getValue(view: String, key: Any): Option[Any] = {
-    val rows = boundedCollect(get(view, key), s"getValue($view, $key)", s"get($view, key)")
-    if (rows.isEmpty) None
-    else viewDef(view).reduce match {
-      case Some(_) => Some(Json.parse(rows(0).getAs[String]("value_json")))
-      case None => Some(rows.map(r => Json.parse(r.getAs[String]("value_json"))).toVector)
+    val vd = viewDef(view)
+    val what = s"getValue($view, $key)"
+    val dfForm = s"get($view, key)"
+    val values = readSnapshot(view, vd) match {
+      case Some(s) =>
+        val at = s.at(KeyCodec.encode(KeyCodec.asKey(key)))
+        checkDriverRows(at.size, driverCollectCap, what, dfForm)
+        at.map(s.value)
+      case None =>
+        boundedCollect(get(view, key), what, dfForm).map(_.getAs[String]("value_json"))
+    }
+    if (values.isEmpty) None
+    else vd.reduce match {
+      case Some(_) => Some(Json.parse(values.head))
+      case None => Some(values.map(Json.parse).toVector)
     }
   }
 
@@ -653,26 +701,13 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     // five times). The kb range bounds push into whichever state is
     // being scanned — folds for materialized reduced views, raw
     // entries otherwise.
-    def buildReduced(): DataFrame = {
-      var df = if (fromFolds) folds(view) else entries(view)
-      opts.gt.foreach(k => df = df.filter(col("kb") > lit(KeyCodec.encode(k))))
-      opts.gte.foreach(k => df = df.filter(col("kb") >= lit(KeyCodec.encode(k))))
-      opts.lt.foreach(k => df = df.filter(col("kb") < lit(KeyCodec.encode(k))))
-      opts.lte.foreach(k => df = df.filter(col("kb") <= lit(KeyCodec.encode(k))))
-      vd.reduce match {
-        case Some(r) if fromFolds => mergeFolds(df, r, keepKb = true)
-        case Some(r) => reduceEntries(df, r, keepKb = true, probeCacheView = Some(view))
-        case None => df.select(col("kb"), col("key_json"), col("file_url"), col("seq"), col("value_json"))
-      }
-    }
+    def buildReduced(): DataFrame =
+      rangeRows(view, vd, fromFolds, if (fromFolds) folds(view) else entries(view), opts)
     val reduced = buildReduced()
 
-    val ordCols: Seq[Column] =
-      if (vd.reduce.isDefined) Seq(col("kb"))
-      else Seq(col("kb"), col("file_url"), col("seq"))
-    val ord = if (opts.reverse) ordCols.map(_.desc) else ordCols
+    val ord = if (opts.reverse) answerOrder(vd).map(_.desc) else answerOrder(vd)
 
-    val limited = opts.limit match {
+    val limited = opts.keyLimit match {
       case Some(n) if vd.reduce.isEmpty =>
         // Limit counts keys, then multi-values flatten (view.js:73-82).
         val keyOrd = if (opts.reverse) col("kb").desc else col("kb").asc
@@ -680,10 +715,9 @@ class Graft(val spark: SparkSession, val stateRoot: String,
         if (n <= Graft.listKeyInlineMax) {
           // r12: the winning key set is BOUNDED by n — resolve it once
           // (a distributed TopK, ≤ n kbs back to the driver) and push
-          // it into the main scan as an In(kb) literal filter. One
+          // it into the main scan as an In(kb) literal filter: one
           // state scan instead of two plus a broadcast exchange, and
-          // the In predicate prunes parquet row-groups — strictly
-          // better at 100 TB than joining against a 50-row frame.
+          // the In predicate prunes parquet row-groups.
           // boundedCollect retries against a FRESH buildReduced() frame
           // per attempt (topKeys is a def), so the overwrite-race
           // defense re-resolves the manifest, not the stale pin.
@@ -698,18 +732,187 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     limited.orderBy(ord: _*).select(col("key_json"), col("value_json"))
   }
 
+  /** The rows of a `list` plan over `state` (the view's entries, or its
+    * folds when `fromFolds`), kb range bounds applied, kb kept: map views
+    * give (kb, key_json, file_url, seq, value_json), reduced views one
+    * (kb, key_json, value_json) row per key.
+    */
+  private def rangeRows(view: String, vd: ViewDef, fromFolds: Boolean,
+      state: DataFrame, opts: ListOpts): DataFrame = {
+    var df = state
+    opts.gt.foreach(k => df = df.filter(col("kb") > lit(KeyCodec.encode(k))))
+    opts.gte.foreach(k => df = df.filter(col("kb") >= lit(KeyCodec.encode(k))))
+    opts.lt.foreach(k => df = df.filter(col("kb") < lit(KeyCodec.encode(k))))
+    opts.lte.foreach(k => df = df.filter(col("kb") <= lit(KeyCodec.encode(k))))
+    vd.reduce match {
+      case Some(r) if fromFolds => mergeFolds(df, r, keepKb = true)
+      case Some(r) => reduceEntries(df, r, keepKb = true, probeCacheView = Some(view))
+      case None => df.select(col("kb"), col("key_json"), col("file_url"), col("seq"), col("value_json"))
+    }
+  }
+
+  /** Ascending answer order of [[rangeRows]]. */
+  private def answerOrder(vd: ViewDef): Seq[Column] =
+    if (vd.reduce.isDefined) Seq(col("kb"))
+    else Seq(col("kb"), col("file_url"), col("seq"))
+
   /** Driver-side `list` returning parsed entries — BOUNDED: collects at
     * most `graft.driverCollect.maxRows` rows (default 100k) and fails
     * loudly past that, naming the escape hatches. The cap counts result
     * ROWS (what occupies driver memory); `opts.limit` counts KEYS
     * (reference view.js:73-82), so a limited read can still trip the cap
-    * if its keys flatten to more rows than fit.
+    * if its keys flatten to more rows than fit. Served from the view's
+    * read snapshot when it has one (see [[readSnapshot]]).
     */
-  def listEntries(view: String, opts: ListOpts = ListOpts()): Seq[Entry] =
-    boundedCollect(list(view, opts), s"listEntries($view)", s"list($view)")
-      .map { r =>
-        Entry(Json.parse(r.getAs[String]("key_json")), Json.parse(r.getAs[String]("value_json")))
+  def listEntries(view: String, opts: ListOpts = ListOpts()): Seq[Entry] = {
+    val what = s"listEntries($view)"
+    val dfForm = s"list($view)"
+    readSnapshot(view, viewDef(view)) match {
+      case Some(s) =>
+        val rows = s.range(opts)
+        checkDriverRows(rows.size, driverCollectCap, what, dfForm)
+        rows.map(i => Entry(Json.parse(s.key(i)), Json.parse(s.value(i))))
+      case None =>
+        boundedCollect(list(view, opts), what, dfForm).map { r =>
+          Entry(Json.parse(r.getAs[String]("key_json")), Json.parse(r.getAs[String]("value_json")))
+        }
+    }
+  }
+
+  // --- driver read snapshots ------------------------------------------
+  //
+  // View state changes only at a manifest flip, so a driver read between
+  // two commits can be answered from rows the engine already collected.
+  // A generation (ReadGen: the view's manifests' bytes, re-read on every
+  // call) is filled on its SECOND driver read: the first runs the Spark
+  // read as before, the second collects the view's whole ordered answer
+  // once through boundedCollect, and later reads of the generation slice
+  // it on the driver with no Spark job. So a loop alternating commits
+  // with single reads never pays for a whole-view collect. Bounds:
+  //   - a view is filled only if the data files of the generation it
+  //     scans hold at most graft.driverCollect.maxRows rows and
+  //     snapshotByteBudget uncompressed bytes (parquet footers, memoised
+  //     per file), so a large or wide view never pays for a wasted
+  //     collect and keeps the Spark path; the decline is remembered for
+  //     the generation and cap, so it costs the footer pass once;
+  //   - all snapshots together hold at most graft.driverCollect.maxRows
+  //     rows and snapshotByteBudget payload bytes, least recently read
+  //     view evicted first;
+  //   - a state dir without a manifest (legacy, streaming sink) is never
+  //     snapshotted: nothing tells when it changed;
+  //   - a Reduce.Fold view is served only while its cap probe holds a
+  //     pass for the current state and cap, so fills never probe and a
+  //     lowered cap re-probes through the Spark path.
+  // The DataFrame forms (get/list) never use snapshots.
+
+  private def driverCollectCap: Int =
+    spark.conf.getOption("graft.driverCollect.maxRows")
+      .map(_.toInt).getOrElse(Graft.defaultDriverCollectMax)
+
+  /** Byte bound of a fill and of all snapshots, derived from the row cap. */
+  private def snapshotByteBudget(cap: Int): Long = cap.toLong * Graft.snapshotBytesPerRow
+
+  private def checkDriverRows(rows: Int, cap: Int, what: String, dfForm: String): Unit =
+    if (rows > cap) throw new IllegalStateException(
+      s"$what would materialize more than $cap rows on the driver. " +
+        s"Page with ListOpts(limit=...), use the $dfForm DataFrame form " +
+        "(distributed, unbounded), or raise spark conf " +
+        "graft.driverCollect.maxRows.")
+
+  /** The view's current read generation; None when a state dir it reads
+    * has no manifest (never indexed, legacy or streaming-sink dirs).
+    */
+  private def readGeneration(view: String): Option[ReadGen] = {
+    def text(dir: String): Option[String] =
+      try Some(new String(Files.readAllBytes(manifestPath(dir)), StandardCharsets.UTF_8))
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    text(viewDir(view)).flatMap { e =>
+      text(foldsDir(view)) match {
+        case None if Files.exists(Paths.get(foldsDir(view))) => None
+        case f => Some(ReadGen(e, f))
       }
+    }
+  }
+
+  /** The snapshot to answer a driver read of `view` from; None sends the
+    * read down the Spark path (see the block comment above).
+    */
+  private def readSnapshot(view: String, vd: ViewDef): Option[ReadSnapshot] =
+    readGeneration(view).flatMap { gen =>
+      val cap = driverCollectCap
+      val servable = !vd.reduce.exists(_.isInstanceOf[Reduce.Fold]) || foldProbePassed(view)
+      def go(locked: Boolean): Option[ReadSnapshot] =
+        snapshots.route(view, gen, cap, snapshotByteBudget(cap)) match {
+          case _ if !servable => None
+          case ReadSnapshots.Serve(s) => synchronized { snapshotHits += 1 }; Some(s)
+          case ReadSnapshots.Spark => None
+          // one fill per generation: concurrent readers wait for it
+          case ReadSnapshots.Fill if !locked =>
+            fillLocks.computeIfAbsent(view, _ => new Object).synchronized(go(locked = true))
+          case ReadSnapshots.Fill => fillSnapshot(view, vd, gen, cap)
+        }
+      go(locked = false)
+    }
+
+  /** Collect the view's whole ordered answer, pinned to the generation
+    * resolved at each attempt. None, remembered as a decline, when the
+    * view is over the budget or has no manifest, or when the collect
+    * fails: the Spark path then answers (or fails) exactly as it would
+    * without snapshots.
+    */
+  private def fillSnapshot(view: String, vd: ViewDef, readGen: ReadGen,
+      cap: Int): Option[ReadSnapshot] = {
+    val byteBudget = snapshotByteBudget(cap)
+    var gen = readGen
+    def declined(): Option[ReadSnapshot] = {
+      snapshots.decline(view, gen, cap)
+      synchronized { snapshotDeclines += 1 }
+      None
+    }
+    val rows =
+      try boundedCollect({
+        gen = readGeneration(view).getOrElse(throw Graft.FillDeclined)
+        val fromFolds = vd.reduce.isDefined && vd.materialize && gen.folds.isDefined
+        val (dir, schema, text) =
+          if (fromFolds) (foldsDir(view), foldsSchema, gen.folds.get)
+          else (viewDir(view), Graft.entrySchemaWithPartition, gen.entries)
+        val m = parseManifest(dir, text)
+        val (n, bytes) = scannedSize(dir, m)
+        if (n > cap || bytes > byteBudget) throw Graft.FillDeclined
+        rangeRows(view, vd, fromFolds, pinnedFrame(dir, schema, m), ListOpts())
+          .orderBy(answerOrder(vd): _*)
+          .select(col("kb"), col("key_json"), col("value_json"))
+      }, s"listEntries($view)", s"list($view)")
+      catch { case scala.util.control.NonFatal(_) => return declined() } // incl. FillDeclined
+    val s = new ReadSnapshot(gen, rows, keyed = vd.reduce.isEmpty)
+    synchronized { snapshotFills += 1 }
+    // answered either way; a snapshot over the byte budget is not kept
+    // (footer bytes are encoded sizes, so a dictionary-encoded column can
+    // pass the footer check and still collect wider)
+    if (!snapshots.put(view, s, cap, byteBudget)) declined()
+    Some(s)
+  }
+
+  /** Rows and uncompressed bytes in the current data files of a
+    * manifest-managed dir, summed from parquet footers on the driver.
+    */
+  private def scannedSize(dir: String, m: Manifest): (Long, Long) = {
+    val files = m.valuesIterator.flatMap(_._1).toSet
+    val known = synchronized(footerStats.getOrElse(dir, Map.empty))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stats = files.iterator.map { f =>
+      f -> known.getOrElse(f, {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(s"$dir/$f"), conf))
+        import scala.jdk.CollectionConverters._
+        try (r.getRecordCount, r.getFooter.getBlocks.asScala.map(_.getTotalByteSize).sum)
+        finally r.close()
+      })
+    }.toMap
+    synchronized { footerStats(dir) = stats }
+    (stats.valuesIterator.map(_._1).sum, stats.valuesIterator.map(_._2).sum)
+  }
 
   /** Collect with the driver-OOM guard: one extra row past the cap is
     * fetched to distinguish "exactly cap" from "over cap".
@@ -729,8 +932,9 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     * own collects retry.
     */
   private[graft] def boundedCollect(df: => DataFrame, what: String, dfForm: String): Seq[Row] = {
-    val cap = spark.conf.getOption("graft.driverCollect.maxRows")
-      .map(_.toInt).getOrElse(Graft.defaultDriverCollectMax)
+    val cap = driverCollectCap
+    // saturated: cap + 1 overflows to a negative limit at Int.MaxValue
+    val fetch = if (cap == Int.MaxValue) cap else cap + 1
     def overwriteRace(t: Throwable): Boolean = {
       var c = t; var depth = 0
       while (c != null && depth < 16) {
@@ -743,17 +947,13 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     var rows: Array[Row] = null
     var attempt = 0
     while (rows == null) {
-      try rows = df.limit(cap + 1).collect()
+      try rows = df.limit(fetch).collect()
       catch {
         case scala.util.control.NonFatal(t) if overwriteRace(t) && attempt < 5 =>
           attempt += 1; Thread.sleep(200L * attempt)
       }
     }
-    if (rows.length > cap) throw new IllegalStateException(
-      s"$what would materialize more than $cap rows on the driver. " +
-        s"Page with ListOpts(limit=...), use the $dfForm DataFrame form " +
-        "(distributed, unbounded), or raise spark conf " +
-        "graft.driverCollect.maxRows.")
+    checkDriverRows(rows.length, cap, what, dfForm)
     rows.toSeq
   }
 
@@ -825,11 +1025,11 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     * and each micro-batch does a LISTING DIFF — a 3-aggregate metadata
     * job (count, max fversion, hash of (url, fversion)) that reads no
     * file contents. When the signature moves, the batch runs the same
-    * incremental [[index]] pass as the batch API: per-origin dynamic
-    * partition overwrite merging prior entries of unchanged files with
-    * re-mapped entries of changed ones, keyed on fversion. That makes
-    * the write IDEMPOTENT — a replayed batch overwrites the origin
-    * partition with the identical merge result instead of appending
+    * incremental [[index]] pass as the batch API: a per-origin snapshot
+    * commit merging prior entries of unchanged files with re-mapped
+    * entries of changed ones, keyed on fversion. That makes the write
+    * IDEMPOTENT — a replayed batch commits the origin's identical merge
+    * result as its next generation instead of appending
     * duplicates, so no streaming-checkpoint coordination is needed.
     *
     * Missing/err transitions surface as [[GraftEvent]]s; each completed
@@ -901,7 +1101,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     * the write half of `materialize = true` (reference reducesLevel,
     * lib/view.js:42-46). Runs inside the index pass that rewrote the
     * origin's entries: retraction, incremental merge and full build all
-    * funnel through the same partition overwrite, so the fold state can
+    * funnel through the same per-origin commit, so the fold state can
     * never drift from the entry state it derives from. Partials are
     * per-origin (the maintenance unit); reads merge them across origins.
     */
@@ -1100,14 +1300,16 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   private[graft] def loadManifest(dir: String): Option[Manifest] = {
     val p = manifestPath(dir)
     if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).map { ln =>
-        val f = ln.split("\t", -1)
-        require(f.length == 3, s"corrupt state manifest line in $p: $ln")
-        def files(s: String) = if (s.isEmpty) Nil else s.split(",", -1).toSeq
-        f(0) -> ((files(f(1)), files(f(2))))
-      }.toMap)
+    else Some(parseManifest(dir, new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
   }
+
+  private def parseManifest(dir: String, text: String): Manifest =
+    text.linesIterator.filter(_.nonEmpty).map { ln =>
+      val f = ln.split("\t", -1)
+      require(f.length == 3, s"corrupt state manifest line in ${manifestPath(dir)}: $ln")
+      def files(s: String) = if (s.isEmpty) Nil else s.split(",", -1).toSeq
+      f(0) -> ((files(f(1)), files(f(2))))
+    }.toMap
 
   private def saveManifest(dir: String, m: Manifest): Unit = {
     Files.createDirectories(Paths.get(dir))
@@ -1237,17 +1439,22 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   private def stateFrame(dir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     loadManifest(dir) match {
-      case Some(m) =>
-        val files = m.valuesIterator.flatMap(_._1).toSeq.sorted
-        if (files.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        else spark.read.schema(schema).option("basePath", dir)
-          .parquet(files.map(f => s"$dir/$f"): _*)
+      case Some(m) => pinnedFrame(dir, schema, m)
       case None =>
         if (!Files.exists(Paths.get(dir)))
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         else spark.read.schema(schema).parquet(dir)
     }
+
+  /** The current generations of manifest `m` as an explicit file list. */
+  private def pinnedFrame(dir: String,
+      schema: org.apache.spark.sql.types.StructType, m: Manifest): DataFrame = {
+    val files = m.valuesIterator.flatMap(_._1).toSeq.sorted
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).option("basePath", dir)
+      .parquet(files.map(f => s"$dir/$f"): _*)
+  }
 
   /** Snapshot-commit of exactly the origin partitions present in
     * `rows` — the incremental-maintenance primitive (see the block
@@ -1339,14 +1546,9 @@ class Graft(val spark: SparkSession, val stateRoot: String,
         // get() of an under-cap key still succeeds while an over-cap key
         // exists elsewhere in the view (nothing is cached in that case —
         // the cache is whole-view-scoped).
-        val cap = spark.conf.getOption("graft.fold.maxValuesPerKey")
-          .map(_.toInt).getOrElse(Graft.defaultFoldCap)
+        val cap = foldCap
         val genBefore = probeCacheView.map(v => synchronized(stateGen.getOrElse(v, 0L)))
-        val cached = probeCacheView.exists(v => synchronized(
-          foldProbeOkGen.get(v).exists { case (g, c) =>
-            g == stateGen.getOrElse(v, 0L) && c <= cap
-          }))
-        if (!cached) {
+        if (!probeCacheView.exists(foldProbePassed)) {
           synchronized { foldProbeRuns += 1 }
           def overCap(frame: DataFrame) = frame
             .groupBy(col("kb")).agg(count(lit(1)).as("n"), first(col("key_json")).as("k"))
@@ -1500,4 +1702,14 @@ object Graft {
     * plan so the driver never materializes an unbounded key set.
     */
   val listKeyInlineMax: Int = 1000
+
+  /** Uncompressed parquet bytes per row of `graft.driverCollect.maxRows`
+    * that read snapshots may hold: a fill is declined when the files it
+    * would scan exceed cap x this, and all snapshots together hold at
+    * most that many payload bytes (51 MB at the default cap).
+    */
+  val snapshotBytesPerRow: Int = 512
+
+  /** A read snapshot fill that stepped aside for the Spark path. */
+  private[core] object FillDeclined extends Exception with scala.util.control.NoStackTrace
 }

@@ -756,6 +756,48 @@ class GraftEngineSpec extends SparkSpec {
     db9.index(arch)
     assert(db9.listEntries("sv").isEmpty)
   }
+
+  test("a negative list limit means no limit (levelup's limit: -1) on map and reduced views") {
+    val d = Files.createTempDirectory("graft-neglimit")
+    Seq("a", "b", "b", "c").zipWithIndex.foreach { case (k, i) =>
+      writeJson(d, s"/f$i.json", "first" -> k, "second" -> i) }
+    val dbL = new Graft(spark, root.resolve("state-neglimit").toString)
+    dbL.define("sv", ViewDef("/*.json", MapFn((v, m) => Seq(parseFirst(v) -> m.pathname))))
+    dbL.define("cnt", ViewDef("/*.json", MapFn((v, _) => Seq(parseFirst(v) -> 1)), Reduce.Count))
+    dbL.index(new DirArchive("dat://neglimit", d.toString))
+    Seq("sv" -> 4, "cnt" -> 3).foreach { case (view, rows) =>
+      Seq(false, true).foreach { rev =>
+        val unlimited = ListOpts(reverse = rev)
+        val negative = ListOpts(limit = Some(-1), reverse = rev)
+        assert(dbL.list(view, negative).collect().toSeq == dbL.list(view, unlimited).collect().toSeq)
+        assert(dbL.listEntries(view, negative) == dbL.listEntries(view, unlimited))
+        assert(dbL.listEntries(view, negative).size == rows)
+      }
+    }
+    // the same through a dir without a manifest, which reads through Spark
+    Files.delete(root.resolve("state-neglimit/sv/entries/_manifest.txt"))
+    assert(dbL.listEntries("sv", ListOpts(limit = Some(-1))).map(_.key) == Seq("a", "b", "b", "c"))
+  }
+
+  test("graft.driverCollect.maxRows=Int.MaxValue does not overflow into a negative limit") {
+    val d = Files.createTempDirectory("graft-maxcap")
+    writeJson(d, "/a.json", "first" -> "k", "second" -> 1)
+    writeJson(d, "/b.json", "first" -> "k", "second" -> 2)
+    val dbX = new Graft(spark, root.resolve("state-maxcap").toString)
+    dbX.define("sv", ViewDef("/*.json", MapFn((v, m) => Seq(parseFirst(v) -> m.pathname))))
+    dbX.define("cnt", ViewDef("/*.json", MapFn((v, _) => Seq(parseFirst(v) -> 1)), Reduce.Count))
+    dbX.index(new DirArchive("dat://maxcap", d.toString))
+    spark.conf.set("graft.driverCollect.maxRows", Int.MaxValue.toString)
+    try {
+      assert(dbX.getValue("sv", "k") == Some(Vector("/a.json", "/b.json")))
+      assert(dbX.getValue("cnt", "k") == Some(2.0))
+      assert(dbX.listEntries("sv").size == 2 && dbX.listEntries("cnt").size == 1)
+      // and through Spark, for a dir without a manifest
+      Files.delete(root.resolve("state-maxcap/sv/entries/_manifest.txt"))
+      assert(dbX.getValue("sv", "k") == Some(Vector("/a.json", "/b.json")))
+      assert(dbX.listEntries("sv", ListOpts(limit = Some(1))).size == 2)
+    } finally spark.conf.unset("graft.driverCollect.maxRows")
+  }
 }
 
 object GraftEngineSpec extends Serializable {
