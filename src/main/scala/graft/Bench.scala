@@ -226,11 +226,11 @@ object Bench {
     // timed. Measured end-to-end at pollInterval=200ms: edit → watcher
     // tick detects the moved listing signature → incremental re-index
     // (merge pass over the one changed file) → state write → the value
-    // READS BACK through getValue. Bounded by construction: detection
-    // waits ≤ pollInterval + one in-flight tick, and the merge pass
-    // touches only the edited file's partition — the latency is
-    // tick-scheduling + fixed per-job Spark overhead, independent of
-    // how much already-indexed state the origin carries. Reported like
+    // READS BACK through getValue. Detection waits ≤ pollInterval + one
+    // in-flight tick; the merge pass re-maps only the edited file but
+    // re-reads the origin's files and rewrites its whole state segment
+    // in every view, so the latency grows with the origin's size as
+    // well as the fixed per-job Spark overhead. Reported like
     // any query (median of `repeats` edits) under "watch_latency"; runs
     // in the session-mutating tail (it starts/stops a streaming query).
     def watchLatencyMedian(): Double = {

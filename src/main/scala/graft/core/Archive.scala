@@ -45,8 +45,11 @@ trait Archive {
 
 /** A directory on a (distributed) filesystem treated as an archive.
   * Reads through Spark's binaryFile source so listing/metadata and
-  * content access are distributed and column-pruned: plans that only
-  * need `pathname`/`fversion` (change detection) never read file bytes.
+  * content access are distributed and column-pruned: a plan that only
+  * needs `pathname`/`fversion` (the watch tick's listing signature)
+  * never reads file bytes. An [[Graft.index]] pass does: it persists
+  * every file's content along with the listing it diffs, so each pass
+  * reads the whole archive once, whatever changed.
   *
   * `fversion` is modification time by default: a file restored with a
   * REGRESSED mtime, or rewritten within the same mtime granule (same

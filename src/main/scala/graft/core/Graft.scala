@@ -244,22 +244,26 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     // per-view parallelism below still applies inside each pass —
     // different views, different dirs, different manifests.)
     indexLock.synchronized {
+    val pass = s"graft index ${archive.url}"
     // one listing/content read SHARED by all view jobs (spill-safe
     // cache, dropped at the end of the pass): unshared, each of N views
     // would re-list the tree and re-read overlapping file contents, and
     // files changing mid-pass would be seen inconsistently across views
     val filesNow = archive.files(spark)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The catalog version is captured BEFORE the view jobs run: a file
-    // modified mid-pass then carries fversion > v and is re-processed by
-    // the next pass (over-claiming the version would silently skip it).
-    // Computed from the persisted snapshot, not archive.version(): for a
-    // content-versioned archive the latter would read every file's bytes
-    // a second time just for the max.
-    val v = filesNow.agg(coalesce(max(col("fversion")), lit(0L))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => math.max(r.getLong(0), 0L)
+    try {
+    // The pass's change set is worked out ONCE, on the driver, from one
+    // collect of the listing (which also fills the cache above): the
+    // catalog version, and below, each view's changed and dropped files.
+    // The version is captured BEFORE the view jobs run: a file modified
+    // mid-pass then carries fversion > v and is re-processed by the next
+    // pass (over-claiming the version would silently skip it).
+    val listing = described(s"$pass: listing") {
+      filesNow.select(col("url"), col("pathname"), col("fversion")).collect().map(r =>
+        Graft.Listed(r.getString(0), r.getString(1),
+          if (r.isNullAt(2)) None else Some(r.getLong(2))))
     }
+    val v = math.max(listing.flatMap(_.fversion).maxOption.getOrElse(0L), 0L)
     emit(GraftEvent.ArchiveIndexing(archive.url, v))
     // Materialize the views CONCURRENTLY: each view's write is an
     // independent Spark job, and submitting them from separate driver
@@ -283,14 +287,12 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     // written by the previous pass — (url, fversion) pairs not in the
     // sidecar are new or rewritten (catches same-mtime rewrites and
     // regressed mtimes that the `> lastV` stamp comparison can't see).
-    // PERSISTED so the diff computes once, not once per view job.
-    val hashChanged: Option[DataFrame] =
-      if (archive.contentVersioned) Some(
-        filesNow.join(fileVersions(archive.url),
-          filesNow("url") === col("fv_url") && filesNow("fversion") === col("fv_fversion"),
-          "left_anti")
-          .select(col("url").as("hchg_url"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val hashChanged: Option[Set[String]] =
+      if (archive.contentVersioned) Some(described(s"$pass: change set") {
+        val prev = fileVersions(archive.url).collect()
+          .collect { case r if !r.isNullAt(1) => (r.getString(0), r.getLong(1)) }.toSet
+        listing.filterNot(f => f.fversion.exists(fv => prev((f.url, fv)))).map(_.url).toSet
+      })
       else None
     // A sidecar left by a PREVIOUS contentHash-mode pass means lastV is a
     // 63-bit hash no mtime will ever exceed — after a switch back to
@@ -299,40 +301,61 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     // the sidecar so the origin is cleanly back in stamp mode.
     val modeSwitchedToMtime = !archive.contentVersioned &&
       Files.exists(Paths.get(fileVersionsDir(archive.url)))
+    // The files each incrementally maintained view already holds entries
+    // for, read for all of them in one job. The distinct runs per scan
+    // partition (a file's entries sit together in the state files), so
+    // the driver receives about one row per (view, file) and no shuffle
+    // runs.
+    val incremental = viewsSnap.collect { case (n, _, lastV) if lastV >= 0 => n }
+    val known: Map[String, Set[String]] =
+      if (incremental.isEmpty) Map.empty
+      else described(s"$pass: change set") {
+        import spark.implicits._
+        incremental.map(n => entriesForOrigin(n, archive.url)
+            .select(lit(n).as("view"), col("file_url")))
+          .reduce(_ unionByName _).as[(String, String)]
+          .mapPartitions(_.toSet.iterator).collect()
+          .groupMap(_._1)(_._2).map { case (n, us) => n -> us.toSet }
+      }
     val jobs = viewsSnap.map { case (name, view, lastV) => Future {
-      val matched = filesNow.filter(view.pathFilter(col("pathname")))
       if (lastV < 0) {
-        writeOriginPartition(name, archive.url, mapEntries(view, matched))
-        refoldOrigin(name, view, archive.url)
-      } else {
-        // Incremental: reprocess files whose version advanced PLUS files
-        // the index has never seen — a file placed with a backdated
-        // mtime (mv, cp -p, tar) has fversion <= lastV but no prior
-        // entries, and keying on fversion alone would drop it forever.
-        // (A matched file that legitimately emitted zero entries gets
-        // re-mapped each pass — idempotent and proportional to such
-        // files.) Keep prior entries of unchanged files that still
-        // exist; deleted files drop out (retraction, indexer.js:269).
-        val knownUrls = entriesForOrigin(name, archive.url)
-          .select(col("file_url").as("known_url")).distinct()
-        val versionChanged = hashChanged match {
-          case Some(h) => matched.join(h, col("url") === col("hchg_url"), "left_semi")
-          case None if modeSwitchedToMtime => matched
-          case None => matched.filter(col("fversion") > lastV)
+        described(s"$pass: write $name") {
+          writeOriginPartition(name, archive.url,
+            mapEntries(view, filesNow.filter(view.pathFilter(col("pathname")))))
         }
-        val changed = versionChanged
-          .unionByName(matched.join(knownUrls,
-            col("url") === col("known_url"), "left_anti"))
-          .dropDuplicates("url")
-        val currentUrls = matched.select(col("url").as("cur_url"))
-        val prior = entriesForOrigin(name, archive.url)
-          .join(broadcast(currentUrls), col("file_url") === col("cur_url"), "left_semi")
-          .join(broadcast(changed.select(col("url").as("chg_url"))),
-            col("file_url") === col("chg_url"), "left_anti")
-          .select(Graft.entrySchemaWithPartition.fieldNames.toIndexedSeq.map(col): _*)
-        writeOriginPartition(name, archive.url,
-          prior.unionByName(mapEntries(view, changed)), readsState = true)
-        refoldOrigin(name, view, archive.url)
+        described(s"$pass: refold $name")(refoldOrigin(name, view, archive.url))
+      } else {
+        // Incremental: re-map the matched files whose version advanced
+        // PLUS matched files the view has never seen — a file placed with
+        // a backdated mtime (mv, cp -p, tar) has fversion <= lastV but no
+        // prior entries, and keying on fversion alone would drop it
+        // forever. (A matched file that legitimately emitted zero entries
+        // gets re-mapped each pass — idempotent and proportional to such
+        // files.) Drop the old entries of those files and of files that no
+        // longer match (deleted, or outside the glob: retraction,
+        // indexer.js:269); keep the rest. A view with nothing to drop has
+        // nothing to commit and keeps its state generation.
+        val seen = known.getOrElse(name, Set.empty[String])
+        val matched = listing.filter(f => view.pathMatches(f.pathname))
+        val changed = matched.filter { f =>
+          !seen(f.url) || (hashChanged match {
+            case Some(h) => h(f.url)
+            case None => modeSwitchedToMtime || f.fversion.exists(_ > lastV)
+          })
+        }.map(_.url).toSet
+        val drop = (seen -- matched.map(_.url)) ++ changed
+        if (drop.nonEmpty) {
+          val sc = spark.sparkContext
+          val dropB = sc.broadcast(drop)
+          val changedB = sc.broadcast(changed)
+          try described(s"$pass: write $name") {
+            val kept = entriesForOrigin(name, archive.url)
+              .filter(!Graft.memberOf(dropB)(col("file_url")))
+            writeOriginPartition(name, archive.url, kept.unionByName(
+              mapEntries(view, filesNow.filter(Graft.memberOf(changedB)(col("url"))))))
+          } finally { dropB.destroy(); changedB.destroy() }
+          described(s"$pass: refold $name")(refoldOrigin(name, view, archive.url))
+        }
       }
       emit(GraftEvent.IndexProgress(archive.url, name, done.incrementAndGet(), total))
     } }
@@ -341,19 +364,17 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     // futures are still writing view state, and the next pass (e.g. the
     // watch tick's retry) would race them with concurrent overwrites
     val outcomes = jobs.map(j => scala.util.Try(Await.result(j, Duration.Inf)))
-    outcomes.collectFirst { case scala.util.Failure(e) =>
-      hashChanged.foreach(_.unpersist(false)); filesNow.unpersist(false); throw e }
+    outcomes.collectFirst { case scala.util.Failure(e) => throw e }
     // sidecar AFTER every view landed, BEFORE the catalog claims the
     // version: a failed pass leaves the old sidecar, so the retried pass
     // re-detects the same changed set (idempotent overwrite). Written
     // from the persisted pre-pass snapshot — a file modified mid-pass is
     // absent from it and re-detected next pass.
-    if (archive.contentVersioned)
+    if (archive.contentVersioned) described(s"$pass: change set") {
       writeFileVersions(archive.url,
         filesNow.select(col("url").as("fv_url"), col("fversion").as("fv_fversion")))
+    }
     else if (modeSwitchedToMtime) deleteDir(fileVersionsDir(archive.url))
-    hashChanged.foreach(_.unpersist(false))
-    filesNow.unpersist(false)
     synchronized {
       indexed(archive.url) = v
       viewsSnap.foreach { case (name, _, _) =>
@@ -363,6 +384,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     }
     emit(GraftEvent.ArchiveIndexed(archive.url, v))
     emit(GraftEvent.IndexesUpdated(archive.url, v))
+    } finally filesNow.unpersist(false)
     }
     if (watch) archive match {
       case d: DirArchive => synchronized {
@@ -456,11 +478,14 @@ class Graft(val spark: SparkSession, val stateRoot: String,
         // of running a .limit(1).count() Spark job per view per file touch
         if (view.pathMatches(pathname)) {
           val fileUrl = archive.url + pathname
-          val prior = entriesForOrigin(name, archive.url)
-            .filter(col("file_url") =!= fileUrl)
-          writeOriginPartition(name, archive.url,
-            prior.unionByName(mapEntries(view, file)), readsState = true)
-          refoldOrigin(name, view, archive.url)
+          described(s"graft indexFile $fileUrl: write $name") {
+            val prior = entriesForOrigin(name, archive.url)
+              .filter(col("file_url") =!= fileUrl)
+            writeOriginPartition(name, archive.url,
+              prior.unionByName(mapEntries(view, file)))
+          }
+          described(s"graft indexFile $fileUrl: refold $name")(
+            refoldOrigin(name, view, archive.url))
         }
       }
     }
@@ -471,9 +496,11 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     val fileUrl = origin + pathname
     val snap = synchronized(views.toSeq)
     snap.foreach { case (name, view) =>
-      val prior = entriesForOrigin(name, origin).filter(col("file_url") =!= fileUrl)
-      writeOriginPartition(name, origin, prior, readsState = true)
-      refoldOrigin(name, view, origin)
+      described(s"graft unindexFile $fileUrl: write $name") {
+        writeOriginPartition(name, origin,
+          entriesForOrigin(name, origin).filter(col("file_url") =!= fileUrl))
+      }
+      described(s"graft unindexFile $fileUrl: refold $name")(refoldOrigin(name, view, origin))
     }
   }
 
@@ -499,18 +526,18 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   def compact(view: String): Unit = indexLock.synchronized {
     val dir = viewDir(view)
     if (Files.exists(Paths.get(dir))) {
-      // one origin at a time: the readsState localCheckpoint then holds
-      // exactly ONE origin's entries (the documented sizing invariant) —
-      // compacting the whole view in one pass would materialize every
-      // origin at once
+      // one origin per commit: each sort holds one origin's entries
       liveObs(dir).toList.sorted.foreach { obVal =>
         val rows = stateFrame(dir, Graft.entrySchemaWithPartition)
           .filter(col("ob") === obVal)
           .repartition(col("ob"))
           // kb-clustered layout (see scaladoc); (file_url, seq) as
-          // tiebreakers keep multi-value emit order physically contiguous
-          .sortWithinPartitions(col("kb"), col("file_url"), col("seq"))
-        writeOriginPartition(view, origin = "", rows, readsState = true)
+          // tiebreakers keep multi-value emit order physically contiguous.
+          // The leading ob (one value here) satisfies the partitioned
+          // write's required ordering, which would otherwise re-sort by
+          // ob alone and drop this sort from the plan.
+          .sortWithinPartitions(col("ob"), col("kb"), col("file_url"), col("seq"))
+        writeOriginPartition(view, origin = "", rows)
       }
       // compaction is also the GC hook of the snapshot discipline: drop
       // files no generation references (retired grace generations,
@@ -1095,6 +1122,17 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   private def entriesForOrigin(view: String, origin: String): DataFrame =
     entries(view).filter(col("ob") === escape(origin))
 
+  /** Runs `body` with `desc` as the Spark job description of this
+    * thread's jobs (a thread-local property), then restores the previous
+    * one.
+    */
+  private def described[T](desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
+
   // --- write-time reduce materialization (folds/ state) ---------------
 
   /** Re-fold ONE origin's partial folds from its just-written entries —
@@ -1111,17 +1149,13 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   private def refoldOb(name: String, view: ViewDef, ob: String): Unit =
     view.reduce match {
       case Some(r) if view.materialize =>
-        // eager localCheckpoint: one row per (key, origin) — computed once,
-        // then reused by the emptiness probe and the write
-        val folded = reduceEntries(entries(name).filter(col("ob") === ob), r, keepKb = true)
-          .withColumn("ob", lit(ob))
-          .localCheckpoint(true)
-        if (folded.isEmpty) {
-          // retraction: snapshot-commit an empty generation (the stale
-          // folds keep serving pinned frames for one grace generation)
-          if (Files.exists(Paths.get(foldsDir(name))))
-            commitObs(foldsDir(name), Map(ob -> Seq.empty[String]))
-        } else commitStateWrite(foldsDir(name), folded, retractIfAbsent = Some(ob))
+        // an origin with no entries left folds to no rows, which the
+        // commit records as a retraction (the stale folds keep serving
+        // pinned frames for one grace generation)
+        commitStateWrite(foldsDir(name),
+          reduceEntries(entries(name).filter(col("ob") === ob), r, keepKb = true)
+            .withColumn("ob", lit(ob)),
+          retractIfAbsent = Some(ob))
       case _ => ()
     }
 
@@ -1458,20 +1492,13 @@ class Graft(val spark: SparkSession, val stateRoot: String,
 
   /** Snapshot-commit of exactly the origin partitions present in
     * `rows` — the incremental-maintenance primitive (see the block
-    * comment above for the manifest discipline).
-    *
-    * When `rows` derives from the view's own current state (incremental
-    * merge), the carried rows are materialized first (localCheckpoint —
-    * executor-local, sized to ONE origin's entries, the incremental
-    * unit, never the whole view); staged files never overwrite the
-    * files the plan reads, but the checkpoint also bounds how long the
-    * commit holds the prior generation's file handles.
+    * comment above for the manifest discipline). `rows` may read the
+    * view's own current generation (an incremental merge): the write
+    * stages new files beside it and the flip deletes only the generation
+    * before it, so the plan's input outlives the commit.
     */
-  private def writeOriginPartition(
-      view: String, origin: String, rows: DataFrame,
-      readsState: Boolean = false): Unit = {
-    val out = if (readsState) rows.localCheckpoint(true) else rows
-    commitStateWrite(viewDir(view), out,
+  private def writeOriginPartition(view: String, origin: String, rows: DataFrame): Unit = {
+    commitStateWrite(viewDir(view), rows,
       retractIfAbsent = if (origin.nonEmpty) Some(escape(origin)) else None)
     // AFTER the state change lands (a bump before it would let a
     // racing Fold probe cache a pass under the NEW generation while
@@ -1669,6 +1696,13 @@ object Graft {
       java.util.concurrent.Executors.newFixedThreadPool(
         8,
         r => { val t = new Thread(r, "graft-index"); t.setDaemon(true); t }))
+
+  /** One file of an index pass's listing, on the driver. */
+  private[core] final case class Listed(url: String, pathname: String, fversion: Option[Long])
+
+  /** `c` is in the broadcast set (a null is in no set). */
+  private[core] def memberOf(set: org.apache.spark.broadcast.Broadcast[Set[String]])(c: Column): Column =
+    udf((u: String) => set.value.contains(u)).apply(c)
 
   val entrySchema: StructType = StructType(Seq(
     StructField("kb", BinaryType),

@@ -31,10 +31,11 @@ class FatFrameSpec extends SparkSpec {
     }
 
   test("persist and localCheckpoint fat forms produce identical results") {
-    // dedup_ngram_jaccard exercises the miner's gram-set fat frame;
+    // pipeline_pretrain_e2e materializes the cascade's stage frames, its
+    // gram sets and the retained set through Pinned.fat;
     // pipeline_pretrain_compact composes every fat site (stage frames,
     // shared gsets, the union miner input, retained, iq)
-    for (arm <- Seq("dedup_ngram_jaccard", "pipeline_pretrain_compact")) {
+    for (arm <- Seq("pipeline_pretrain_e2e", "pipeline_pretrain_compact")) {
       val ckpt = rows(arm, "ckpt")
       val persist = rows(arm, "persist")
       assert(ckpt == persist, s"$arm diverged between fat modes")

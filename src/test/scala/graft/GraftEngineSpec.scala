@@ -757,6 +757,67 @@ class GraftEngineSpec extends SparkSpec {
     assert(db9.listEntries("sv").isEmpty)
   }
 
+  test("incremental index == full rebuild after a mixed batch of edits (mtime and contentHash)") {
+    import org.apache.spark.sql.functions.{col, hex}
+    def defineBoth(g: Graft): Unit = {
+      // "none" emits zero entries
+      g.define("mv", ViewDef("/*.json", MapFn((v, m) =>
+        if (parseFirst(v) == "none") Nil else Seq(parseFirst(v) -> m.url))))
+      g.define("cnt", ViewDef(Seq("/*.json"), MapFn((v, _) =>
+        if (parseFirst(v) == "none") Nil else Seq(parseFirst(v) -> 1)),
+        Some(Reduce.Count), materialize = true))
+    }
+    def entryRows(g: Graft, view: String): Seq[String] =
+      g.entries(view).select(hex(col("kb")), col("key_json"), col("file_url"),
+        col("pathname"), col("seq"), col("value_json"), col("ob"))
+        .collect().map(_.toString).toSeq.sorted
+    def foldRows(g: Graft, view: String): Seq[String] = {
+      val dir = Paths.get(g.stateRoot, view, "folds")
+      val files = g.loadManifest(dir.toString).toSeq.flatMap(_.values.flatMap(_._1))
+      if (files.isEmpty) Nil
+      else spark.read.option("basePath", dir.toString)
+        .parquet(files.map(f => dir.resolve(f).toString): _*)
+        .select(hex(col("kb")), col("key_json"), col("value_json"), col("ob"))
+        .collect().map(_.toString).toSeq.sorted
+    }
+    for (contentHash <- Seq(false, true)) {
+      val d = Files.createTempDirectory("graft-equiv")
+      val t0 = System.currentTimeMillis() - 3600000L
+      def put(rel: String, first: String, mtime: Long): Unit = {
+        writeJson(d, rel, "first" -> first, "second" -> 1)
+        Files.setLastModifiedTime(d.resolve(rel.stripPrefix("/")), FileTime.fromMillis(mtime))
+      }
+      Seq("/a.json" -> "k1", "/b.json" -> "k2", "/c.json" -> "k1", "/gone.json" -> "k2",
+        "/quiet.json" -> "none").foreach { case (f, k) => put(f, k, t0) }
+      val arch = new DirArchive(s"dat://equiv-$contentHash", d.toString, contentHash)
+      val inc = new Graft(spark, root.resolve(s"state-equiv-inc-$contentHash").toString)
+      defineBoth(inc)
+      inc.index(arch)
+      assert(inc.getValue("cnt", "k1") == Some(2.0))
+
+      put("/a.json", "k3", t0 + 60000)                 // a rewrite
+      Files.delete(d.resolve("gone.json"))             // a delete
+      put("/old.json", "k2", t0 - 60000)               // new, backdated mtime
+      Files.write(d.resolve("notes.txt"), "{}".getBytes(StandardCharsets.UTF_8)) // outside the glob
+      put("/zero.json", "none", t0 + 60000)            // its map emits nothing
+      put("/tmp.json", "k4", t0 + 60000)               // indexFile, then deleted
+      inc.indexFile(arch, "/tmp.json")
+      assert(inc.getValue("mv", "k4") == Some(Vector(s"${arch.url}/tmp.json")))
+      Files.delete(d.resolve("tmp.json"))
+      inc.index(arch)
+
+      val full = new Graft(spark, root.resolve(s"state-equiv-full-$contentHash").toString)
+      defineBoth(full)
+      full.index(arch)
+      Seq("mv", "cnt").foreach { v =>
+        assert(entryRows(inc, v) == entryRows(full, v), s"contentHash=$contentHash: entries($v)")
+      }
+      assert(foldRows(inc, "cnt") == foldRows(full, "cnt"), s"contentHash=$contentHash: folds(cnt)")
+      assert(foldRows(full, "cnt").size == 3, "k1, k2 and k3 fold; the comparison is not vacuous")
+      assert(inc.listEntries("mv").map(_.key) == Seq("k1", "k2", "k2", "k3"))
+    }
+  }
+
   test("a negative list limit means no limit (levelup's limit: -1) on map and reduced views") {
     val d = Files.createTempDirectory("graft-neglimit")
     Seq("a", "b", "b", "c").zipWithIndex.foreach { case (k, i) =>

@@ -1,0 +1,149 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.core._
+
+/** The Spark jobs of a write: an incremental index pass works out its
+  * change set once on the driver, so a 1-file edit costs a listing, the
+  * change set, and one write per view (plus the refold of a materialized
+  * view), each job named for its step; `indexFile`/`unindexFile` cost one
+  * write per touched view plus its refold.
+  */
+class IndexPassSpec extends SparkSpec {
+  import IndexPassSpec._
+
+  private var root: Path = _
+  private var stamp = System.currentTimeMillis() - 3600000L
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    root = Files.createTempDirectory("graft-index-pass")
+    spark.sparkContext.addSparkListener(Jobs)
+  }
+
+  override def afterAll(): Unit = {
+    spark.sparkContext.removeSparkListener(Jobs)
+    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    super.afterAll()
+  }
+
+  private def write(dir: Path, name: String, first: String, second: Int): Unit = {
+    Files.createDirectories(dir)
+    val p = dir.resolve(name)
+    Files.write(p, s"""{"first":"$first","second":$second}""".getBytes(StandardCharsets.UTF_8))
+    stamp += 1000
+    Files.setLastModifiedTime(p, FileTime.fromMillis(stamp))
+  }
+
+  private val viewNames = Seq("by-first", "by-url", "pairs", "count", "sums")
+  private val materialized = Set("count")
+
+  /** Three map views, a materialized Count and a read-time Sum. */
+  private def defineAll(g: Graft): Unit = {
+    g.define("by-first", ViewDef("/*.json", MapFn((v, m) => Seq(first(v) -> m.url))))
+    g.define("by-url", ViewDef("/*.json", MapFn((v, m) => Seq(m.url -> second(v)))))
+    g.define("pairs", ViewDef("/*.json", MapFn((v, _) => Seq(Seq(first(v), second(v)) -> 1))))
+    g.define("count", ViewDef(Seq("/*.json"), MapFn((v, _) => Seq(first(v) -> 1)),
+      Some(Reduce.Count), materialize = true))
+    g.define("sums", ViewDef("/*.json", MapFn((v, _) => Seq(first(v) -> second(v))), Reduce.Sum))
+  }
+
+  private def indexed(name: String, files: Int): (Graft, DirArchive, Path) = {
+    val dir = root.resolve(name)
+    (0 until files).foreach(i => write(dir, f"f$i%03d.json", s"k${i % 4}", i))
+    val g = new Graft(spark, root.resolve(s"$name-state").toString)
+    defineAll(g)
+    val a = new DirArchive(s"dat://$name", dir.toString)
+    g.index(a)
+    (g, a, dir)
+  }
+
+  test("a 1-file incremental pass over V views runs at most V + 4 Spark jobs, each named for its step") {
+    val (g, a, dir) = indexed("edit", 40)
+    write(dir, "f007.json", "edited", 700)
+    val jobs = jobsIn(g.index(a))
+    val v = viewNames.size
+    val steps = Set("listing", "change set") ++
+      viewNames.map(n => s"write $n") ++ materialized.map(n => s"refold $n")
+    val pass = s"graft index ${a.url}: "
+    assert(jobs.size <= v + 4, s"${jobs.size} jobs for a 1-file edit over $v views: $jobs")
+    assert(jobs.forall(_.startsWith(pass)), s"every job of the pass names it: $jobs")
+    val byStep = jobs.map(_.stripPrefix(pass)).groupBy(identity).map { case (s, js) => s -> js.size }
+    assert(byStep.keySet == steps, s"the pass's steps: $byStep")
+    viewNames.foreach(n => assert(byStep(s"write $n") == 1, s"one write job for $n: $byStep"))
+    assert(g.getValue("by-first", "edited") == Some(Vector(s"${a.url}/f007.json")))
+    assert(g.getValue("count", "edited") == Some(1.0))
+  }
+
+  test("indexFile and unindexFile run one write job per touched view plus its refold") {
+    val (g, a, dir) = indexed("file", 20)
+    write(dir, "f003.json", "edited", 300)
+    def perStep(jobs: Seq[String], call: String): Map[String, Int] = {
+      assert(jobs.forall(_.startsWith(s"$call: ")), s"every job of $call names it: $jobs")
+      jobs.map(_.stripPrefix(s"$call: ")).groupBy(identity).map { case (s, js) => s -> js.size }
+    }
+    // a refold is an aggregation and a write: one shuffle stage job plus
+    // the write job
+    val want = viewNames.map(n => s"write $n" -> 1).toMap ++
+      materialized.map(n => s"refold $n" -> 2)
+    val fileJobs = jobsIn(g.indexFile(a, "/f003.json"))
+    assert(fileJobs.size == want.values.sum, s"indexFile: $fileJobs")
+    assert(perStep(fileJobs, s"graft indexFile ${a.url}/f003.json") == want)
+    assert(g.getValue("by-first", "edited") == Some(Vector(s"${a.url}/f003.json")))
+    val unJobs = jobsIn(g.unindexFile(a.url, "/f003.json"))
+    assert(unJobs.size == want.values.sum, s"unindexFile: $unJobs")
+    assert(perStep(unJobs, s"graft unindexFile ${a.url}/f003.json") == want)
+    assert(g.getValue("by-first", "edited").isEmpty && g.getValue("count", "edited").isEmpty)
+  }
+
+  /** Descriptions of the Spark jobs started while `f` runs, in order
+    * (all threads: the pass runs its view jobs on a pool).
+    */
+  private def jobsIn(f: => Unit): Seq[String] = {
+    val from = flush()
+    f
+    val to = flush()
+    Jobs.between(from, to)
+  }
+
+  /** Runs a marker (one or more jobs) and waits until the listener has
+    * seen it (the bus is FIFO, so every earlier job start has been
+    * delivered too); returns the marker.
+    */
+  private def flush(): String = {
+    val mark = s"flush-${java.util.UUID.randomUUID()}"
+    val sc = spark.sparkContext
+    sc.setJobDescription(mark)
+    try spark.range(1).count() finally sc.setJobDescription(null)
+    val deadline = System.currentTimeMillis() + 30000
+    while (!Jobs.saw(mark) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(Jobs.saw(mark), "listener bus did not deliver the marker job")
+    mark
+  }
+}
+
+object IndexPassSpec extends Serializable {
+  // map lambdas must not capture the (non-serializable) suite instance
+  def first(value: String): Any = Json.parse(value).asInstanceOf[Map[String, Any]]("first")
+  def second(value: String): Any = Json.parse(value).asInstanceOf[Map[String, Any]]("second")
+
+  /** The description of every job start, in order ("" when unset). */
+  object Jobs extends SparkListener {
+    private val started = mutable.ArrayBuffer.empty[String]
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      started += Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+    }
+    def saw(description: String): Boolean = synchronized(started.contains(description))
+    /** The jobs started strictly between two marker jobs. */
+    def between(from: String, to: String): Seq[String] = synchronized {
+      started.slice(started.lastIndexOf(from) + 1, started.indexOf(to)).toList
+    }
+  }
+}

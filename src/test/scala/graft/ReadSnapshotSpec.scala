@@ -224,6 +224,36 @@ class ReadSnapshotSpec extends SparkSpec {
     assert(g.snapshotFills == fills && g.snapshotHits == hits + 5)
   }
 
+  test("an index pass that changed only files outside a view's glob keeps its snapshot") {
+    val dir = root.resolve("skip-a")
+    def note(text: String): Unit = {
+      Files.write(dir.resolve("notes.txt"), text.getBytes(StandardCharsets.UTF_8))
+      stamp += 1000
+      Files.setLastModifiedTime(dir.resolve("notes.txt"), FileTime.fromMillis(stamp))
+    }
+    write(dir, "a.json", "b", 1); write(dir, "b.json", "c", 2); note("one")
+    val g = new Graft(spark, root.resolve("skip-state").toString)
+    defineAll(g)
+    g.define("notes", ViewDef("/*.txt", MapFn((v, _) => Seq(v -> 1))))
+    val a = new DirArchive("dat://skip", dir.toString)
+    g.index(a)
+    val views = Seq("by-first", "count", "sums")
+    views.foreach(v => (1 to 2).foreach(_ => g.listEntries(v)))
+    val fills = g.snapshotFills
+    assert(fills == 3)
+    note("two")
+    g.index(a)
+    val hits = g.snapshotHits
+    // twice: a rewritten view would run the Spark read, then fill
+    (1 to 2).foreach { _ =>
+      assert(g.listEntries("by-first") == Seq(Entry("b", "dat://skip/a.json"), Entry("c", "dat://skip/b.json")))
+      assert(g.getValue("count", "b") == Some(1.0) && g.getValue("sums", "c") == Some(2.0))
+    }
+    assert(g.snapshotFills == fills, "views the pass did not touch keep their snapshots")
+    assert(g.snapshotHits == hits + 6)
+    assert(g.listEntries("notes") == Seq(Entry("two", 1.0)))
+  }
+
   test("snapshot slices equal the list DataFrame form for every range option") {
     val dir = root.resolve("slices-a")
     Seq("a" -> 1, "b" -> 2, "b" -> 3, "c" -> 4, "d" -> 5, "d" -> 6, "d" -> 7, "f" -> 8)
