@@ -105,6 +105,10 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      // Spark's default 100-entry codegen cache recompiles a warm
+      // pipeline_pretrain_* pass as much as the cold one; 4000 keeps
+      // the generated classes of a whole run
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // steady-state measurement: touch every table once so JVM/codegen/

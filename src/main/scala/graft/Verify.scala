@@ -12,6 +12,10 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Spark's default 100-entry codegen cache recompiles a warm
+      // pipeline_pretrain_* pass as much as the cold one; 4000 keeps
+      // the generated classes of a whole run
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

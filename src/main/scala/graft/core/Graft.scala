@@ -83,15 +83,19 @@ object GraftEvent {
   *   - Driver reads (`getValue`/`listEntries`) of a view small enough
   *     for `graft.driverCollect.maxRows` (rows, and bytes derived from
   *     it) are answered from a READ SNAPSHOT: the second read of a state
-  *     generation collects the view's whole ordered answer once, later
-  *     reads of that generation binary-search it on the driver without a
-  *     Spark job. Any manifest flip, by any engine on the state root,
-  *     invalidates it (see [[ReadSnapshot]] and `readSnapshot`).
+  *     generation collects and parses the view's whole ordered answer
+  *     once, later reads of that generation binary-search it on the
+  *     driver without a Spark job or a parse, after one read of each of
+  *     the view's manifests. Any manifest flip, by any engine on the
+  *     state root, invalidates it (see [[ReadSnapshot]] and
+  *     `readSnapshot`).
   */
 class Graft(val spark: SparkSession, val stateRoot: String,
     initialListeners: Seq[GraftEvent => Unit] = Nil) {
 
-  private val views = mutable.LinkedHashMap.empty[String, ViewDef]
+  // definition order; replaced (never mutated) under the engine monitor,
+  // so a read resolves its view without taking it
+  @volatile private var views = scala.collection.immutable.VectorMap.empty[String, ViewDef]
   // origin -> last indexed fversion (drives listIndexed/isIndexed)
   private val indexed = mutable.LinkedHashMap.empty[String, Long]
   // (origin, view) -> last indexed fversion. PER VIEW, matching the
@@ -116,11 +120,13 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   // foldProbeOkGen records the generation whose probe last passed — a
   // read-heavy deployment then pays the probe once per state version,
   // not once per get/list (r4 verdict finding #4).
-  private val stateGen = mutable.Map.empty[String, Long]
+  // (both concurrent maps: a driver read checks them without the engine
+  // monitor; writes still take it)
+  private val stateGen = scala.collection.concurrent.TrieMap.empty[String, Long]
   // view -> (state generation, cap) of the last PASSED full-state probe;
   // valid while the generation matches and the current cap is >= the
   // probed one (a pass under a tighter cap implies a pass under a looser)
-  private val foldProbeOkGen = mutable.Map.empty[String, (Long, Int)]
+  private val foldProbeOkGen = scala.collection.concurrent.TrieMap.empty[String, (Long, Int)]
   // spec-visible count of actual probe jobs (GraftEngineSpec asserts one
   // probe across repeated reads)
   private[graft] var foldProbeRuns = 0L
@@ -129,10 +135,13 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   // and declined fills
   private val snapshots = new ReadSnapshots
   private val fillLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]
-  private[graft] var snapshotFills = 0L
-  private[graft] var snapshotHits = 0L
-  private[graft] var snapshotDeclines = 0L
+  private val readPaths = new java.util.concurrent.ConcurrentHashMap[String, Graft.ReadPaths]
+  private val fills, hits, declines = new java.util.concurrent.atomic.AtomicLong
+  private[graft] def snapshotFills: Long = fills.get
+  private[graft] def snapshotHits: Long = hits.get
+  private[graft] def snapshotDeclines: Long = declines.get
   private[graft] def snapshotRowsHeld: Long = snapshots.heldRows
+  private[graft] def snapshotBytesHeld: Long = snapshots.heldBytes
   // state dir -> (data file -> parquet footer (rows, uncompressed bytes))
   // for the dir's current files; data files are never rewritten in place
   private val footerStats = mutable.Map.empty[String, Map[String, (Long, Long)]]
@@ -140,16 +149,20 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     synchronized { stateGen(view) = stateGen.getOrElse(view, 0L) + 1L }
     snapshots.drop(view)
   }
-  private def foldCap: Int = spark.conf.getOption("graft.fold.maxValuesPerKey")
-    .map(_.toInt).getOrElse(Graft.defaultFoldCap)
+  // Read on every call, so a changed cap applies at the next read. With
+  // a (null) default the lookup cannot throw; getOption of an unset key
+  // builds and throws an exception inside Spark, microseconds a read.
+  private def intConf(key: String, default: Int): Int = {
+    val v = spark.conf.get(key, null)
+    if (v == null) default else v.toInt
+  }
+  private def foldCap: Int = intConf("graft.fold.maxValuesPerKey", Graft.defaultFoldCap)
   /** A full-state Fold probe passed for the view's current state under a
     * cap no looser than today's.
     */
   private def foldProbePassed(view: String): Boolean = {
     val cap = foldCap
-    synchronized(foldProbeOkGen.get(view).exists { case (g, c) =>
-      g == stateGen.getOrElse(view, 0L) && c <= cap
-    })
+    foldProbeOkGen.get(view).exists { case (g, c) => g == stateGen.getOrElse(view, 0L) && c <= cap }
   }
 
   listeners ++= initialListeners
@@ -201,7 +214,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
         s"$name: materialize requires an associative AND commutative reduce " +
           "(Count/Sum/Min/Max, or an Assoc whose function is order-insensitive) " +
           "— per-origin partials of an order-sensitive Fold cannot merge")
-    views(name) = view
+    views = views.updated(name, view)
   }
 
   /** `damr.define(name, definition)` — rejects ill-formed definitions with
@@ -217,10 +230,9 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     indexLock.synchronized(reconcileFolds(name, view))
   }
 
-  private def viewDef(name: String): ViewDef = synchronized {
+  private def viewDef(name: String): ViewDef =
     views.getOrElse(name, throw new SchemaError(s"$name is not defined"))
-  }
-  private def viewNames: Seq[String] = synchronized(views.keys.toSeq)
+  private def viewNames: Seq[String] = views.keys.toSeq
 
   // --- indexing ------------------------------------------------------
 
@@ -525,7 +537,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     */
   def compact(view: String): Unit = indexLock.synchronized {
     val dir = viewDir(view)
-    if (Files.exists(Paths.get(dir))) {
+    if (Files.exists(Paths.get(dir))) described(s"graft compact $view") {
       // one origin per commit: each sort holds one origin's entries
       liveObs(dir).toList.sorted.foreach { obVal =>
         val rows = stateFrame(dir, Graft.entrySchemaWithPartition)
@@ -663,7 +675,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     * Lazy, EXCEPT for Fold views: constructing a Fold read runs the
     * cardinality-cap probe eagerly (see [[reduceEntries]]).
     */
-  def get(view: String, key: Any): DataFrame = {
+  def get(view: String, key: Any): DataFrame = described(s"graft get $view") {
     val kb = KeyCodec.encode(KeyCodec.asKey(key))
     val vd = viewDef(view)
     vd.reduce match {
@@ -691,21 +703,21 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     */
   def getValue(view: String, key: Any): Option[Any] = {
     val vd = viewDef(view)
-    val what = s"getValue($view, $key)"
-    val dfForm = s"get($view, key)"
-    val values = readSnapshot(view, vd) match {
+    def what = s"getValue($view, $key)"
+    def dfForm = s"get($view, key)"
+    val cap = driverCollectCap
+    val values = readSnapshot(view, vd, cap) match {
       case Some(s) =>
         val at = s.at(KeyCodec.encode(KeyCodec.asKey(key)))
-        checkDriverRows(at.size, driverCollectCap, what, dfForm)
-        at.map(s.value)
+        checkDriverRows(at.size, cap, what, dfForm)
+        s.values(at)
       case None =>
-        boundedCollect(get(view, key), what, dfForm).map(_.getAs[String]("value_json"))
+        described(s"graft get $view")(boundedCollect(get(view, key), what, dfForm))
+          .map(r => Json.parse(r.getAs[String]("value_json")))
     }
     if (values.isEmpty) None
-    else vd.reduce match {
-      case Some(_) => Some(Json.parse(values.head))
-      case None => Some(values.map(Json.parse).toVector)
-    }
+    else if (vd.reduce.isDefined) Some(values.head)
+    else Some(values.toVector)
   }
 
   /** `damr.list(view, opts)` as a DataFrame of (key_json, value_json)
@@ -718,7 +730,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     * resolve their ≤ limit winning keys eagerly through
     * [[boundedCollect]] so the main read is one In-pushdown scan.
     */
-  def list(view: String, opts: ListOpts = ListOpts()): DataFrame = {
+  def list(view: String, opts: ListOpts = ListOpts()): DataFrame = described(s"graft list $view") {
     val vd = viewDef(view)
     val fromFolds = useFolds(view, vd)
     // frame construction is a def: each call pins a FRESH manifest
@@ -792,15 +804,16 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     * read snapshot when it has one (see [[readSnapshot]]).
     */
   def listEntries(view: String, opts: ListOpts = ListOpts()): Seq[Entry] = {
-    val what = s"listEntries($view)"
-    val dfForm = s"list($view)"
-    readSnapshot(view, viewDef(view)) match {
+    def what = s"listEntries($view)"
+    def dfForm = s"list($view)"
+    val cap = driverCollectCap
+    readSnapshot(view, viewDef(view), cap) match {
       case Some(s) =>
         val rows = s.range(opts)
-        checkDriverRows(rows.size, driverCollectCap, what, dfForm)
-        rows.map(i => Entry(Json.parse(s.key(i)), Json.parse(s.value(i))))
+        checkDriverRows(rows.size, cap, what, dfForm)
+        s.entries(rows)
       case None =>
-        boundedCollect(list(view, opts), what, dfForm).map { r =>
+        described(s"graft list $view")(boundedCollect(list(view, opts), what, dfForm)).map { r =>
           Entry(Json.parse(r.getAs[String]("key_json")), Json.parse(r.getAs[String]("value_json")))
         }
     }
@@ -815,7 +828,14 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   // read as before, the second collects the view's whole ordered answer
   // once through boundedCollect, and later reads of the generation slice
   // it on the driver with no Spark job. So a loop alternating commits
-  // with single reads never pays for a whole-view collect. Bounds:
+  // with single reads never pays for a whole-view collect. A hit costs
+  // one read of each manifest the view reads (entries; and folds, for a
+  // materialized view whose folds dir Files.exists finds), an exact
+  // compare of their bytes with the snapshot's, and a slice of entries
+  // parsed at fill: no Spark job, no JSON parse, no engine monitor (only
+  // ReadSnapshots' own brief one), and both caps read from the conf
+  // without an exception. No TTL or stat-only (inode, mtime, size) check
+  // stands in for the bytes: a reused inode could pass one. Bounds:
   //   - a view is filled only if the data files of the generation it
   //     scans hold at most graft.driverCollect.maxRows rows and
   //     snapshotByteBudget uncompressed bytes (parquet footers, memoised
@@ -823,7 +843,8 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   //     collect and keeps the Spark path; the decline is remembered for
   //     the generation and cap, so it costs the footer pass once;
   //   - all snapshots together hold at most graft.driverCollect.maxRows
-  //     rows and snapshotByteBudget payload bytes, least recently read
+  //     rows and snapshotByteBudget heap bytes (an upper bound on the
+  //     parsed entries, ReadSnapshot.heapBytes), least recently read
   //     view evicted first;
   //   - a state dir without a manifest (legacy, streaming sink) is never
   //     snapshotted: nothing tells when it changed;
@@ -833,13 +854,12 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   // The DataFrame forms (get/list) never use snapshots.
 
   private def driverCollectCap: Int =
-    spark.conf.getOption("graft.driverCollect.maxRows")
-      .map(_.toInt).getOrElse(Graft.defaultDriverCollectMax)
+    intConf("graft.driverCollect.maxRows", Graft.defaultDriverCollectMax)
 
   /** Byte bound of a fill and of all snapshots, derived from the row cap. */
   private def snapshotByteBudget(cap: Int): Long = cap.toLong * Graft.snapshotBytesPerRow
 
-  private def checkDriverRows(rows: Int, cap: Int, what: String, dfForm: String): Unit =
+  private def checkDriverRows(rows: Int, cap: Int, what: => String, dfForm: => String): Unit =
     if (rows > cap) throw new IllegalStateException(
       s"$what would materialize more than $cap rows on the driver. " +
         s"Page with ListOpts(limit=...), use the $dfForm DataFrame form " +
@@ -849,29 +869,31 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   /** The view's current read generation; None when a state dir it reads
     * has no manifest (never indexed, legacy or streaming-sink dirs).
     */
-  private def readGeneration(view: String): Option[ReadGen] = {
-    def text(dir: String): Option[String] =
-      try Some(new String(Files.readAllBytes(manifestPath(dir)), StandardCharsets.UTF_8))
+  private def readGeneration(view: String, vd: ViewDef): Option[ReadGen] = {
+    // one read per manifest that exists; only a dir without one (never
+    // indexed, legacy, a commit racing this read) costs an exception
+    def text(manifest: java.nio.file.Path): Option[String] =
+      try Some(new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8))
       catch { case _: java.nio.file.NoSuchFileException => None }
-    text(viewDir(view)).flatMap { e =>
-      text(foldsDir(view)) match {
-        case None if Files.exists(Paths.get(foldsDir(view))) => None
-        case f => Some(ReadGen(e, f))
-      }
+    val p = Option(readPaths.get(view)).getOrElse(readPaths.computeIfAbsent(view, v =>
+      Graft.ReadPaths(manifestPath(viewDir(v)), Paths.get(foldsDir(v)), manifestPath(foldsDir(v)))))
+    text(p.entries).flatMap { e =>
+      // only a materialized view reads folds; another's answer is its entries
+      if (!vd.materialize || !Files.exists(p.folds)) Some(ReadGen(e, None))
+      else text(p.foldsManifest).map(f => ReadGen(e, Some(f)))
     }
   }
 
   /** The snapshot to answer a driver read of `view` from; None sends the
     * read down the Spark path (see the block comment above).
     */
-  private def readSnapshot(view: String, vd: ViewDef): Option[ReadSnapshot] =
-    readGeneration(view).flatMap { gen =>
-      val cap = driverCollectCap
+  private def readSnapshot(view: String, vd: ViewDef, cap: Int): Option[ReadSnapshot] =
+    readGeneration(view, vd).flatMap { gen =>
       val servable = !vd.reduce.exists(_.isInstanceOf[Reduce.Fold]) || foldProbePassed(view)
       def go(locked: Boolean): Option[ReadSnapshot] =
         snapshots.route(view, gen, cap, snapshotByteBudget(cap)) match {
           case _ if !servable => None
-          case ReadSnapshots.Serve(s) => synchronized { snapshotHits += 1 }; Some(s)
+          case ReadSnapshots.Serve(s) => hits.incrementAndGet(); Some(s)
           case ReadSnapshots.Spark => None
           // one fill per generation: concurrent readers wait for it
           case ReadSnapshots.Fill if !locked =>
@@ -893,26 +915,29 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     var gen = readGen
     def declined(): Option[ReadSnapshot] = {
       snapshots.decline(view, gen, cap)
-      synchronized { snapshotDeclines += 1 }
+      declines.incrementAndGet()
       None
     }
-    val rows =
-      try boundedCollect({
-        gen = readGeneration(view).getOrElse(throw Graft.FillDeclined)
-        val fromFolds = vd.reduce.isDefined && vd.materialize && gen.folds.isDefined
-        val (dir, schema, text) =
-          if (fromFolds) (foldsDir(view), foldsSchema, gen.folds.get)
-          else (viewDir(view), Graft.entrySchemaWithPartition, gen.entries)
-        val m = parseManifest(dir, text)
-        val (n, bytes) = scannedSize(dir, m)
-        if (n > cap || bytes > byteBudget) throw Graft.FillDeclined
-        rangeRows(view, vd, fromFolds, pinnedFrame(dir, schema, m), ListOpts())
-          .orderBy(answerOrder(vd): _*)
-          .select(col("kb"), col("key_json"), col("value_json"))
-      }, s"listEntries($view)", s"list($view)")
-      catch { case scala.util.control.NonFatal(_) => return declined() } // incl. FillDeclined
-    val s = new ReadSnapshot(gen, rows, keyed = vd.reduce.isEmpty)
-    synchronized { snapshotFills += 1 }
+    val s =
+      try {
+        val rows = described(s"graft fill $view")(boundedCollect({
+          gen = readGeneration(view, vd).getOrElse(throw Graft.FillDeclined)
+          val fromFolds = vd.reduce.isDefined && vd.materialize && gen.folds.isDefined
+          val (dir, schema, text) =
+            if (fromFolds) (foldsDir(view), foldsSchema, gen.folds.get)
+            else (viewDir(view), Graft.entrySchemaWithPartition, gen.entries)
+          val m = parseManifest(dir, text)
+          val (n, bytes) = scannedSize(dir, m)
+          if (n > cap || bytes > byteBudget) throw Graft.FillDeclined
+          rangeRows(view, vd, fromFolds, pinnedFrame(dir, schema, m), ListOpts())
+            .orderBy(answerOrder(vd): _*)
+            .select(col("kb"), col("key_json"), col("value_json"))
+        }, s"listEntries($view)", s"list($view)"))
+        // after the collect, so `gen` is the generation its last attempt read
+        new ReadSnapshot(gen, rows, keyed = vd.reduce.isEmpty)
+        // incl. FillDeclined, and a row whose JSON does not parse
+      } catch { case scala.util.control.NonFatal(_) => return declined() }
+    fills.incrementAndGet()
     // answered either way; a snapshot over the byte budget is not kept
     // (footer bytes are encoded sizes, so a dictionary-encoded column can
     // pass the footer check and still collect wider)
@@ -1737,12 +1762,19 @@ object Graft {
     */
   val listKeyInlineMax: Int = 1000
 
-  /** Uncompressed parquet bytes per row of `graft.driverCollect.maxRows`
-    * that read snapshots may hold: a fill is declined when the files it
-    * would scan exceed cap x this, and all snapshots together hold at
-    * most that many payload bytes (51 MB at the default cap).
+  /** Bytes per row of `graft.driverCollect.maxRows` that read snapshots
+    * may hold: a fill is declined when the files it would scan exceed
+    * cap x this uncompressed parquet bytes, and all snapshots together
+    * hold at most that many heap bytes of parsed entries (51 MB at the
+    * default cap).
     */
   val snapshotBytesPerRow: Int = 512
+
+  /** The files a driver read checks, fixed per view name: the entries
+    * manifest, the folds dir and the folds manifest.
+    */
+  private final case class ReadPaths(entries: java.nio.file.Path,
+      folds: java.nio.file.Path, foldsManifest: java.nio.file.Path)
 
   /** A read snapshot fill that stepped aside for the Spark path. */
   private[core] object FillDeclined extends Exception with scala.util.control.NoStackTrace

@@ -1,38 +1,77 @@
 package graft.core
 
+import java.util.Arrays
+
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import org.apache.spark.sql.Row
 import org.apache.spark.unsafe.types.ByteArray
 
 /** A view's read generation: the raw text of its `entries/_manifest.txt`
-  * and, when the view has a folds/ dir, of `folds/_manifest.txt`. Every
-  * state commit rewrites a manifest with fresh data-file names, so equal
-  * text means the view serves exactly the same rows.
+  * and, when the view is materialized and has a folds/ dir, of
+  * `folds/_manifest.txt` (a view that is not materialized never reads
+  * folds). Every state commit rewrites a manifest with fresh data-file
+  * names, so equal text means the view serves exactly the same rows.
   */
-private[core] final case class ReadGen(entries: String, folds: Option[String])
+private[graft] final case class ReadGen(entries: String, folds: Option[String])
 
 /** The whole ordered answer of `list(view)` at one [[ReadGen]], held on
-  * the driver: `(kb, key_json, value_json)` rows in `kb` order (map views:
-  * then emitting file and emit seq; reduced views: one merged row per
-  * key). `getValue`/`listEntries` are answered from it by binary search on `kb`
-  * under Spark's unsigned binary order — the order `list` sorts and
-  * range-filters by.
+  * the driver: one row per `(kb, key_json, value_json)` row in `kb` order
+  * (map views: then emitting file and emit seq; reduced views: one merged
+  * row per key). Key and value JSON are parsed once, here, into one
+  * [[Entry]] per row; `getValue`/`listEntries` hand out those shared
+  * values (`Json.parse` builds immutable ones). Rows are found by binary
+  * search on `kb` under Spark's unsigned binary order — the order `list`
+  * sorts and range-filters by.
   *
   * `keyed`: `limit` counts keys (map views, whose multi-values share a
   * `kb`); otherwise it counts rows (reduced views).
   */
-private[core] final class ReadSnapshot(val gen: ReadGen, rows: Seq[Row], keyed: Boolean) {
+private[graft] final class ReadSnapshot(val gen: ReadGen, rows: Seq[Row], keyed: Boolean) {
   private val kb: Array[Array[Byte]] = rows.iterator.map(_.getAs[Array[Byte]](0)).toArray
-  private val keyJson: Array[String] = rows.iterator.map(_.getString(1)).toArray
-  private val valueJson: Array[String] = rows.iterator.map(_.getString(2)).toArray
+  private val entryAt: Array[Entry] =
+    rows.iterator.map(r => Entry(Json.parse(r.getString(1)), Json.parse(r.getString(2)))).toArray
+  // map views: row -> the values of its key, one Vector per key shared by
+  // its rows (a multi-value getValue hit allocates nothing)
+  private val keyValues: Array[Vector[Any]] =
+    if (!keyed) null
+    else {
+      val out = new Array[Vector[Any]](kb.length)
+      var i = 0
+      while (i < kb.length) {
+        val (from, end) = (i, keyEnd(i, kb.length))
+        val v = Vector.tabulate(end - from)(j => entryAt(from + j).value)
+        while (i < end) { out(i) = v; i += 1 }
+      }
+      out
+    }
 
   def size: Int = kb.length
-  /** Payload held: kb bytes plus key and value JSON chars. */
-  val bytes: Long = kb.iterator.map(_.length.toLong).sum +
-    keyJson.iterator.map(_.length.toLong).sum + valueJson.iterator.map(_.length.toLong).sum
-  def key(i: Int): String = keyJson(i)
-  def value(i: Int): String = valueJson(i)
+  /** An upper bound on the heap bytes the rows hold (see [[ReadSnapshot.heapBytes]]). */
+  val bytes: Long = {
+    var n = 0L
+    var i = 0
+    while (i < kb.length) {
+      n += ReadSnapshot.RowBytes + kb(i).length +
+        ReadSnapshot.heapBytes(entryAt(i).key) + ReadSnapshot.heapBytes(entryAt(i).value)
+      if (keyed && (i == 0 || (keyValues(i) ne keyValues(i - 1)))) n += ReadSnapshot.KeyBytes
+      i += 1
+    }
+    n
+  }
+  /** The entries of rows `r` (an ascending or descending run), in its order. */
+  def entries(r: Range): Seq[Entry] =
+    if (r.isEmpty) Nil
+    else if (r.step > 0) ArraySeq.unsafeWrapArray(Arrays.copyOfRange(entryAt, r.head, r.last + 1))
+    else ArraySeq.unsafeWrapArray(Arrays.copyOfRange(entryAt, r.last, r.head + 1)).reverse
+  /** The values of the rows `at` one key: for a map view the Vector that
+    * every read of the key shares.
+    */
+  def values(r: Range): Vector[Any] =
+    if (r.isEmpty) Vector.empty
+    else if (keyed) keyValues(r.start)
+    else Vector(entryAt(r.start).value)
 
   /** First row whose kb is >= `key` (`strict`: > `key`). */
   private def bound(key: Array[Byte], strict: Boolean): Int = {
@@ -46,8 +85,44 @@ private[core] final class ReadSnapshot(val gen: ReadGen, rows: Seq[Row], keyed: 
     lo
   }
 
+  /** The end of the run of rows that share row `i`'s kb, at most `hi`:
+    * galloping, so a unique key costs one compare and a key of n rows
+    * O(log n).
+    */
+  private def keyEnd(i: Int, hi: Int): Int = {
+    val k = kb(i)
+    var last = i // a row known to hold k
+    var step = 1
+    while (step < hi - last && Arrays.equals(kb(last + step), k)) { last += step; step *= 2 }
+    var lo = last + 1
+    var end = if (step < hi - last) last + step else hi
+    while (lo < end) {
+      val mid = (lo + end) >>> 1
+      if (Arrays.equals(kb(mid), k)) lo = mid + 1 else end = mid
+    }
+    lo
+  }
+
+  /** The start of the run of rows that share row `i`'s kb, at least `lo`. */
+  private def keyStart(i: Int, lo: Int): Int = {
+    val k = kb(i)
+    var first = i
+    var step = 1
+    while (step <= first - lo && Arrays.equals(kb(first - step), k)) { first -= step; step *= 2 }
+    var start = if (step <= first - lo) first - step + 1 else lo
+    var hi = first
+    while (start < hi) {
+      val mid = (start + hi) >>> 1
+      if (Arrays.equals(kb(mid), k)) hi = mid else start = mid + 1
+    }
+    start
+  }
+
   /** Rows at one encoded key, in emit order. */
-  def at(key: Array[Byte]): Range = bound(key, strict = false) until bound(key, strict = true)
+  def at(key: Array[Byte]): Range = {
+    val i = bound(key, strict = false)
+    if (i < size && Arrays.equals(kb(i), key)) i until keyEnd(i, size) else i until i
+  }
 
   /** Rows of `list(view, opts)` in answer order: the gt/gte/lt/lte
     * slice, walked backwards for `reverse`, cut after `opts` limit keys.
@@ -64,18 +139,47 @@ private[core] final class ReadSnapshot(val gen: ReadGen, rows: Seq[Row], keyed: 
     if (!opts.reverse) {
       var end = lo
       while (end < hi && taken < n) {
-        end = if (keyed) math.min(hi, bound(kb(end), strict = true)) else end + 1
+        end = if (keyed) keyEnd(end, hi) else end + 1
         taken += 1
       }
       lo until end
     } else {
       var start = hi
       while (start > lo && taken < n) {
-        start = if (keyed) math.max(lo, bound(kb(start - 1), strict = false)) else start - 1
+        start = if (keyed) keyStart(start - 1, lo) else start - 1
         taken += 1
       }
       hi - 1 to start by -1
     }
+  }
+}
+
+private[graft] object ReadSnapshot {
+  /** Per row, besides its kb bytes and parsed values: the kb array's
+    * header, the [[Entry]], three array slots and a slot in its key's
+    * values Vector, with 8-byte references.
+    */
+  private val RowBytes = 96L
+  /** Per key of a map view: its values Vector and the Vector's arrays. */
+  private val KeyBytes = 128L
+
+  /** An upper bound on the heap bytes of a parsed [[Json]] value on a
+    * 64-bit JVM, compressed references or not: strings at two bytes a
+    * char, objects and arrays with room for their trie nodes, entry
+    * tuples and boxed indexes. ReadSnapshotSpec checks it against
+    * Spark's `SizeEstimator`.
+    */
+  def heapBytes(v: Any): Long = v match {
+    case s: String => 56L + 2L * s.length
+    case m: collection.Map[_, _] =>
+      var n = 192L
+      m.foreach { case (k, x) => n += 96L + heapBytes(k) + heapBytes(x) }
+      n
+    case xs: Iterable[_] =>
+      var n = 64L
+      xs.foreach(x => n += 16L + heapBytes(x))
+      n
+    case _ => 24L // a boxed number or boolean, or null
   }
 }
 
@@ -95,7 +199,7 @@ private[core] object ReadSnapshots {
 }
 
 /** One engine's read snapshots, at most `cap` rows and `byteBudget`
-  * payload bytes in all: storing a snapshot evicts the least recently read
+  * heap bytes in all: storing a snapshot evicts the least recently read
   * views until it fits, and a read under a lowered budget evicts down to
   * it first.
   *
@@ -161,6 +265,7 @@ private[core] final class ReadSnapshots {
   def clear(): Unit = synchronized { byView.clear(); marks.clear(); rows = 0L; bytes = 0L }
 
   def heldRows: Long = synchronized(rows)
+  def heldBytes: Long = synchronized(bytes)
 
   private def evictTo(rowLimit: Long, byteLimit: Long): Unit = {
     val it = byView.values.iterator

@@ -332,7 +332,19 @@ object Dedup {
     */
   def connectedComponents(
       pairs: DataFrame, maxRounds: Int = 30,
-      smallGraphThreshold: Long = 100000L): DataFrame = ccLock.synchronized {
+      smallGraphThreshold: Long = 100000L): DataFrame =
+    components(pairs, maxRounds, smallGraphThreshold).labels
+
+  /** [[connectedComponents]]'s labels, and whether its small-graph path
+    * built them: then they label at most `smallGraphThreshold` nodes, a
+    * size bound a broadcast of them (or of a subset) can rely on.
+    */
+  final case class Components(labels: DataFrame, small: Boolean)
+
+  /** [[connectedComponents]], telling which path ran (see [[Components]]). */
+  def components(
+      pairs: DataFrame, maxRounds: Int = 30,
+      smallGraphThreshold: Long = 100000L): Components = ccLock.synchronized {
     val s = pairs.sparkSession
     // reliable checkpoints go to a PER-RUN subdir that is deleted before
     // returning (Spark never garbage-collects reliable checkpoint files
@@ -402,7 +414,7 @@ object Dedup {
       }
       val out = parent.keys.toSeq.map(x => (x, find(x)))
       import s.implicits._
-      out.toDF("id", "label")
+      Components(out.toDF("id", "label"), small = true)
     } else {
     var labels = edges.select(col("a_id").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
@@ -434,7 +446,7 @@ object Dedup {
     // are deleted; the labels table is |nodes| × 2 longs — small.
     // Tracked: the caller's returned plan reads it lazily, the
     // consumer's Pinned.drain releases it after materialization
-    Pinned.track(labels.localCheckpoint(true))
+    Components(Pinned.track(labels.localCheckpoint(true)), small = false)
     }
     } finally cleanup()
   }

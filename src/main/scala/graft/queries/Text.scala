@@ -542,7 +542,23 @@ object Text {
     * gram sets).
     */
   private case class PretrainStages(q: DataFrame, s1: DataFrame,
-      s2: DataFrame, nd: DataFrame, retained: DataFrame, gsets: DataFrame)
+      s2: DataFrame, nd: DataFrame, retained: DataFrame, gsets: DataFrame,
+      ndSmall: Boolean) {
+    /** `df` without the near-dup losers `nd`. */
+    def withoutLosers(df: DataFrame): DataFrame = dropLosers(df, nd, ndSmall)
+  }
+
+  /** `df` anti-joined with the (doc_id) loser set `nd`. Broadcast only
+    * when `small`: CC's small-graph path bounds the set by its edge
+    * threshold, while on the distributed path a duplicate-heavy corpus
+    * makes it a large share of the corpus, and a forced broadcast would
+    * bypass `autoBroadcastJoinThreshold` (AQE still broadcasts a loser
+    * set that turns out small at runtime).
+    */
+  private def dropLosers(df: DataFrame, nd: DataFrame, small: Boolean): DataFrame = {
+    val losers = nd.select(col("doc_id"))
+    df.join(if (small) broadcast(losers) else losers, Seq("doc_id"), "left_anti")
+  }
 
   /** C83's benchmark→quality→url→exact→neardup cascade prefix over any
     * documents frame — ONE definition shared by batch
@@ -626,20 +642,17 @@ object Text {
     val gsets = Pinned.fat(
       Dedup.gramSets(surv2.select(col("doc_id"), col("text"))))
     val pairs = Dedup.ngramJaccardPairsOnGsets(gsets, 4, 5)
-    val nd = Dedup.connectedComponents(pairs)
+    val cc = Dedup.components(pairs)
+    val nd = cc.labels
       .where(col("id") =!= col("label"))
       .select(col("id").as("doc_id"), lit(1L).as("ndf"))
     // retained is the composites' corpus-side probe base (compact reads
     // it 3×, ingest 4×) — one more materialization ends the lineage
     // here (text-bearing ⇒ corpus-fat ⇒ Pinned.fat, VERDICT #1/#3).
-    // r14: the anti join broadcasts the CC loser set explicitly — nd is
-    // post-verification output, orders of magnitude smaller than the
-    // corpus (the connectedComponents smallGraphThreshold argument),
-    // and its checkpoint-scan stats would otherwise default to huge and
-    // plan a corpus-side shuffle.
+    // The anti join broadcasts the CC loser set when CC's small-graph
+    // path bounded it (dropLosers).
     PretrainStages(q, s1, s2, nd,
-      Pinned.fat(surv2.join(broadcast(nd.select(col("doc_id"))),
-        Seq("doc_id"), "left_anti")), gsets)
+      Pinned.fat(dropLosers(surv2, nd, cc.small)), gsets, cc.small)
   }
 
   /** C83's post-cascade tail over any survivor frame (doc_id, source,
@@ -3220,9 +3233,8 @@ object Text {
       // gram sets are the cascade's materialized gsets MINUS its
       // near-dup losers (retained = surv2 ∖ nd), so ONLY the increment
       // side runs the gram kernel here; nd is the post-verification
-      // near-dup loser set — orders of magnitude smaller than the
-      // corpus (the connectedComponents smallGraphThreshold argument) —
-      // so the anti join broadcasts instead of shuffling gram arrays.
+      // near-dup loser set, so when CC's small-graph path bounded it the
+      // anti join broadcasts instead of shuffling gram arrays.
       // Each miner still builds its own df-count/prefix sliver: the
       // prefix filter's global gram df differs between the two inputs.
       val compactMiner: DataFrame => DataFrame = { mi =>
@@ -3234,10 +3246,7 @@ object Text {
         // cheaper than writing the union once)
         val incrGs = Pinned.fat(Dedup.gramSets(
           mi.where((col("doc_id") % 7).isin(2L, 4L))))
-        val gs = stages.gsets
-          .join(broadcast(stages.nd.select(col("doc_id"))),
-            Seq("doc_id"), "left_anti")
-          .unionByName(incrGs)
+        val gs = stages.withoutLosers(stages.gsets).unionByName(incrGs)
         Dedup.ngramJaccardPairsOnGsets(gs, 4, 5)
       }
       val verdicts = Pinned.track(Dedup.compactStagedVerdicts(s,

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Interleaved A/B timing for one query under two conf values — the
   * instrument for adjudicating small deltas on a noisy host: variants
-  * alternate ABAB... inside one session, so a contention window inflates
-  * both sides equally and the PAIRWISE deltas stay meaningful where two
-  * separate bench runs minutes apart do not (r14: the same arm swung
-  * ±25% between adjacent subset runs).
+  * alternate inside one session in pairs whose order alternates too
+  * (AB, BA, AB, ...), so a contention window inflates both sides equally,
+  * a within-pair ordering effect cancels, and the PAIRWISE deltas stay
+  * meaningful where two separate bench runs minutes apart do not (r14:
+  * the same arm swung ±25% between adjacent subset runs).
   *
   *   SPARK_GRAFT_REPEATS=6 sbt "runMain graft.tools.AbTime \
   *     pipeline_pretrain_compact spark.graft.compactUnion lazy mat"
@@ -43,9 +44,15 @@ object AbTime {
     val as = scala.collection.mutable.ArrayBuffer.empty[Double]
     val bs = scala.collection.mutable.ArrayBuffer.empty[Double]
     (1 to n).foreach { i =>
-      val a = time(va); val b = time(vb)
+      // odd pairs run A first, even pairs B first: drift within a pair
+      // (JIT, caches) lands on each side equally often
+      val aFirst = i % 2 == 1
+      val first = time(if (aFirst) va else vb)
+      val second = time(if (aFirst) vb else va)
+      val (a, b) = if (aFirst) (first, second) else (second, first)
       as += a; bs += b
-      println(f"pair $i: $key=$va ${a}%.3f s | $key=$vb ${b}%.3f s | delta ${b - a}%+.3f")
+      val order = if (aFirst) "AB" else "BA"
+      println(f"pair $i ($order): $key=$va ${a}%.3f s | $key=$vb ${b}%.3f s | delta ${b - a}%+.3f")
     }
     def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
     val wins = as.zip(bs).count { case (a, b) => a < b }

@@ -491,14 +491,17 @@ class DedupAnnSpec extends SparkSpec {
     // threshold 0 forces the DISTRIBUTED pointer-doubling iteration —
     // small test graphs would otherwise only ever exercise the driver
     // union-find fast path
-    val labels = Dedup.connectedComponents(
+    val distributed = Dedup.components(
         q("dedup_simhash", dir).select("a_id", "b_id"),
         smallGraphThreshold = 0L)
+    val labels = distributed.labels
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val fast = Dedup.connectedComponents(
-        q("dedup_simhash", dir).select("a_id", "b_id"))
+    val fastCC = Dedup.components(q("dedup_simhash", dir).select("a_id", "b_id"))
+    val fast = fastCC.labels
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(fast == labels, "fast path and distributed path diverged")
+    // only the small-graph path vouches for a size a broadcast can rely on
+    assert(fastCC.small && !distributed.small)
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       val p = parent.getOrElseUpdate(x, x)

@@ -14,7 +14,8 @@ import graft.core._
   * change set once on the driver, so a 1-file edit costs a listing, the
   * change set, and one write per view (plus the refold of a materialized
   * view), each job named for its step; `indexFile`/`unindexFile` cost one
-  * write per touched view plus its refold.
+  * write per touched view plus its refold. Reads, snapshot fills and
+  * `compact` name their jobs too.
   */
 class IndexPassSpec extends SparkSpec {
   import IndexPassSpec._
@@ -101,6 +102,26 @@ class IndexPassSpec extends SparkSpec {
     assert(unJobs.size == want.values.sum, s"unindexFile: $unJobs")
     assert(perStep(unJobs, s"graft unindexFile ${a.url}/f003.json") == want)
     assert(g.getValue("by-first", "edited").isEmpty && g.getValue("count", "edited").isEmpty)
+  }
+
+  test("reads through Spark, snapshot fills and compact name every job") {
+    val (g, _, _) = indexed("read", 20)
+    g.define("folded", ViewDef("/*.json", MapFn((v, _) => Seq(first(v) -> 1)),
+      Reduce.Fold((acc, _, _) => acc.map(_.asInstanceOf[Double] + 1).getOrElse(1.0))))
+    def only(jobs: Seq[String], desc: String): Unit =
+      assert(jobs.nonEmpty && jobs.forall(_ == desc), s"every job is '$desc': $jobs")
+    // the first driver read of a generation runs the Spark read, the
+    // second fills the view's snapshot
+    only(jobsIn(g.getValue("by-first", "k1")), "graft get by-first")
+    only(jobsIn(g.getValue("by-first", "k1")), "graft fill by-first")
+    only(jobsIn(g.listEntries("count", ListOpts(limit = Some(2)))), "graft list count")
+    only(jobsIn(g.listEntries("count")), "graft fill count")
+    only(jobsIn(g.listEntries("sums")), "graft list sums")
+    // the DataFrame forms' eager jobs: a Fold's cap probe, a limited
+    // map list's winning keys
+    only(jobsIn(g.get("folded", "k1")), "graft get folded")
+    only(jobsIn(g.list("pairs", ListOpts(limit = Some(2)))), "graft list pairs")
+    only(jobsIn(g.compact("by-first")), "graft compact by-first")
   }
 
   /** Descriptions of the Spark jobs started while `f` runs, in order

@@ -224,6 +224,54 @@ class ReadSnapshotSpec extends SparkSpec {
     assert(g.snapshotFills == fills && g.snapshotHits == hits + 5)
   }
 
+  test("hits of one generation hand out the same parsed values") {
+    val dir = root.resolve("shared-a")
+    write(dir, "a.json", "b", 1); write(dir, "b.json", "c", 2); write(dir, "c.json", "b", 3)
+    val g = new Graft(spark, root.resolve("shared-state").toString)
+    defineAll(g)
+    g.index(new DirArchive("dat://shared", dir.toString))
+    Seq("by-first", "count", "sums").foreach(v => (1 to 2).foreach(_ => g.listEntries(v)))
+    assert(g.snapshotFills == 3)
+    def same(x: Any, y: Any): Boolean = x.asInstanceOf[AnyRef] eq y.asInstanceOf[AnyRef]
+    val hits = g.snapshotHits
+    val (m1, m2) = (g.getValue("by-first", "b").get, g.getValue("by-first", "b").get)
+    assert(m1 == Vector("dat://shared/a.json", "dat://shared/c.json"))
+    assert(same(m1, m2) && m1.asInstanceOf[Vector[Any]].zip(m2.asInstanceOf[Vector[Any]]).forall { case (x, y) => same(x, y) })
+    Seq("count", "sums").foreach { v =>
+      val (r1, r2) = (g.getValue(v, "b").get, g.getValue(v, "b").get)
+      assert(r1 == r2 && same(r1, r2), v)
+    }
+    val (l1, l2) = (g.listEntries("by-first"), g.listEntries("by-first"))
+    assert(l1.size == 3 && l1.zip(l2).forall { case (x, y) => same(x.key, y.key) && same(x.value, y.value) })
+    assert(g.snapshotHits == hits + 8)
+  }
+
+  test("views with and without a folds dir serve hits; a folds dir without a manifest declines") {
+    val dir = root.resolve("folds-a")
+    write(dir, "a.json", "b", 1); write(dir, "b.json", "c", 2); write(dir, "c.json", "b", 3)
+    val state = root.resolve("folds-state").toString
+    val g = new Graft(spark, state)
+    defineAll(g)
+    g.index(new DirArchive("dat://folds", dir.toString))
+    assert(!Files.exists(Paths.get(state, "by-first", "folds")) && !Files.exists(Paths.get(state, "count", "folds")))
+    assert(Files.exists(Paths.get(state, "sums", "folds", "_manifest.txt")))
+    Seq("by-first", "count", "sums").foreach(v => (1 to 2).foreach(_ => g.getValue(v, "b")))
+    assert(g.snapshotFills == 3)
+    val hits = g.snapshotHits
+    val jobs = jobsIn {
+      assert(g.getValue("by-first", "b") == Some(Vector("dat://folds/a.json", "dat://folds/c.json")))
+      assert(g.getValue("count", "b") == Some(2.0))
+      assert(g.getValue("sums", "b") == Some(4.0))
+    }
+    assert(jobs == 0 && g.snapshotHits == hits + 3)
+    // a folds dir whose manifest is gone says nothing about when it
+    // changed: its view reads through Spark, the others still hit
+    Files.delete(Paths.get(state, "sums", "folds", "_manifest.txt"))
+    (1 to 3).foreach(_ => assert(jobsIn(assert(g.getValue("sums", "c") == Some(2.0))) > 0))
+    assert(g.getValue("count", "c") == Some(1.0))
+    assert(g.snapshotFills == 3 && g.snapshotHits == hits + 4)
+  }
+
   test("an index pass that changed only files outside a view's glob keeps its snapshot") {
     val dir = root.resolve("skip-a")
     def note(text: String): Unit = {
@@ -424,6 +472,50 @@ class ReadSnapshotSpec extends SparkSpec {
     } finally spark.conf.unset("graft.driverCollect.maxRows")
     twice("count"); g.listEntries("by-first"); g.listEntries("count")
     assert(g.snapshotFills == 4 && g.snapshotRowsHeld == 7, "under the default budget both are held")
+  }
+
+  test("the byte budget counts parsed entries and evicts the least recently read view") {
+    val dir = root.resolve("bytes-a")
+    val tail = "y" * 300
+    Seq("a", "b", "c", "d").zipWithIndex.foreach { case (k, i) => write(dir, s"f$i.json", k, i) }
+    val g = new Graft(spark, root.resolve("bytes-state").toString)
+    g.define("wide1", ViewDef("/*.json", MapFn((v, _) => Seq(first(v) -> s"1$tail"))))
+    g.define("wide2", ViewDef("/*.json", MapFn((v, _) => Seq(first(v) -> s"2$tail"))))
+    g.index(new DirArchive("dat://bytes", dir.toString))
+    // 8 rows fit a cap of 10; each view's parsed 300-char values fit its
+    // 5,120-byte budget alone, not together
+    spark.conf.set("graft.driverCollect.maxRows", "10")
+    def twice(v: String): Unit = (1 to 2).foreach(_ => assert(g.listEntries(v).size == 4))
+    try {
+      twice("wide1")
+      val one = g.snapshotBytesHeld
+      assert(g.snapshotFills == 1 && one > 4 * 600 && one <= 5120, one)
+      twice("wide2")
+      assert(g.snapshotFills == 2 && g.snapshotRowsHeld == 4 && g.snapshotBytesHeld <= 5120,
+        "filling wide2 evicted wide1")
+      g.listEntries("wide1"); g.listEntries("wide1")
+      assert(g.snapshotFills == 3 && g.snapshotRowsHeld == 4)
+    } finally spark.conf.unset("graft.driverCollect.maxRows")
+  }
+
+  test("a snapshot's byte count bounds the heap its parsed rows hold") {
+    import org.apache.spark.util.SizeEstimator
+    val values: Seq[Any] = Seq("x" * 100, "\u00e9\u4e2d" * 50, 1.5, true, null,
+      Vector(1.0, "two", Vector(3.0)), Vector.tabulate(100)(_.toDouble),
+      Map("doc_id" -> 7.0, "lang" -> "en", "source" -> "web", "n_chars" -> 1200.0),
+      (1 to 40).map(i => s"k$i" -> Vector(i.toDouble, s"v$i")).toMap)
+    values.filter(_ != null).foreach { v =>
+      val parsed = Json.parse(Json.render(v)).asInstanceOf[AnyRef]
+      assert(ReadSnapshot.heapBytes(parsed) >= SizeEstimator.estimate(parsed), v)
+    }
+    // a map view's rows: one key per value, then one key of 100 values
+    val rows = (values.zipWithIndex ++ (0 until 100).map(i => (s"m$i", values.size))).map { case (v, i) =>
+      org.apache.spark.sql.Row(KeyCodec.encode(Seq(i.toDouble)), Json.render(i.toDouble), Json.render(v))
+    }
+    Seq(true, false).foreach { keyed =>
+      val s = new ReadSnapshot(ReadGen("", None), rows, keyed)
+      assert(s.bytes >= SizeEstimator.estimate(s), s"keyed=$keyed: ${s.bytes} < ${SizeEstimator.estimate(s)}")
+    }
   }
 
   test("lowering graft.fold.maxValuesPerKey after a fill re-probes and fails") {
