@@ -26,15 +26,11 @@ object AnnScale {
         |as float))""".stripMargin).as("embedding"),
       (col("id") % 50).cast("int").as("label"))
 
-  private def med3(f: => Long): Double = Timing.med3(f)._2
+  private def med3(f: => Long): Double = graft.tools.Session.med3(f)._2
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val small = sys.env.getOrElse("SPARK_GRAFT_ANN_SMALL", "50000").toLong
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.Session()
     Seq(small, small * 4).foreach { n =>
       // the gate queries read $dir/embeddings.parquet — stage the
       // synthetic corpus exactly where a real scale factor would live

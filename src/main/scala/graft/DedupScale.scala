@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.tools.Session.med3
 
 /** Scaling measurement for the similarity-dedup kernels: run the exact
   * prefix-filtered AllPairs join (and the MinHash-LSH path) on synthetic
@@ -45,15 +46,9 @@ object DedupScale {
         |  END)""".stripMargin))).otherwise(col("text")))
   }
 
-  private def med3(f: => Long): (Long, Double) = Timing.med3(f)
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val small = sys.env.getOrElse("SPARK_GRAFT_DEDUP_SMALL", "25000").toLong
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.Session()
     // corpora are materialized ONCE, OUTSIDE the timed window (synthesis
     // is O(n) and would dilute a super-linear kernel toward 4x — the very
     // claim being tested), and shared by both kernels

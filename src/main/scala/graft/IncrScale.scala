@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.tools.Session.med3
 
 /** Scaling measurement for the incremental-dedup family (SURVEY §2
   * C30/C30b): hold the BATCH fixed, grow the CORPUS 4x, and measure how
@@ -58,13 +59,9 @@ object IncrScale {
         .otherwise(text("b", col("id") + base)).as("text"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val small = sys.env.getOrElse("SPARK_GRAFT_INCR_CORPUS", "400000").toLong
     val bSize = sys.env.getOrElse("SPARK_GRAFT_INCR_BATCH", "100000").toLong
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.Session()
     val c1 = corpusDf(spark, small).localCheckpoint(true)
     val c4 = corpusDf(spark, small * 4).localCheckpoint(true)
     val batch1 = batchDf(spark, bSize, small * 10, small).localCheckpoint(true)
@@ -116,8 +113,8 @@ object IncrScale {
       ("bloomIdx", (c, b, _, i) => queries.Dedup.incrementalExactBloomIndexed(b, c, i).count()))
     paths.foreach { case (name, run) =>
       run(c1, batch1, bloom1, idx1) // warm
-      val (r1, t1) = Timing.med3(run(c1, batch1, bloom1, idx1))
-      val (r4, t4) = Timing.med3(run(c4, batch4, bloom4, idx4))
+      val (r1, t1) = med3(run(c1, batch1, bloom1, idx1))
+      val (r4, t4) = med3(run(c4, batch4, bloom4, idx4))
       val s1 = measureShuffle(run(c1, batch1, bloom1, idx1))
       val s4 = measureShuffle(run(c4, batch4, bloom4, idx4))
       println(f"[incrscale] $name: corpus $small%d -> $r1 rows in $t1%.2f s (${s1 / 1024}%d KiB shuffled); " +

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.tools.Session.med3
 import graft.core._
 
 /** Small-files scale smoke for the view engine: ingest many files across
@@ -14,14 +14,10 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     // same env contract as Bench/Verify
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val totalFiles = sys.env.getOrElse("SPARK_GRAFT_SMOKE_FILES", "200000").toLong
     val origins = sys.env.getOrElse("SPARK_GRAFT_SMOKE_ORIGINS", "20").toInt
     val perOrigin = totalFiles / origins
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.Session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
     // replicate the docs table up to perOrigin rows (small synthetic
@@ -83,13 +79,12 @@ object ScaleSmoke {
       (n, (System.nanoTime() - t) / 1e9)
     }
     val (n1, tList) = timedList()
-    // median-of-3 for the sub-second read comparison — the same rule
-    // Bench adopted after single-shot sub-second timings flagged noise
-    def med3(f: () => Long): (Long, Double) = Timing.med3(f())
-    val (counts, tRed) = med3(() => db.list("lang-count").count())
+    // median-of-3 for the sub-second read comparison: single-shot
+    // sub-second timings are noise
+    val (counts, tRed) = med3(db.list("lang-count").count())
     // materialized read path: scans |keys × origins| fold partials
     // instead of re-aggregating every raw entry
-    val (countsM, tRedM) = med3(() => db.list("lang-count-mat").count())
+    val (countsM, tRedM) = med3(db.list("lang-count-mat").count())
     // FULL-ROW divergence check, not key cardinality: a double-folded
     // partial would keep the key set while corrupting per-key counts
     val a = db.list("lang-count"); val b = db.list("lang-count-mat")

@@ -25,13 +25,6 @@ trait Archive {
     */
   def contentVersioned: Boolean = false
 
-  /** Current overall version (max file version). */
-  def version(spark: SparkSession): Long =
-    files(spark).agg(max(col("fversion"))).collect()(0) match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-
   /** All current files with content. */
   def files(spark: SparkSession): DataFrame
 
@@ -130,15 +123,4 @@ final class TableArchive(
       pathname.as("pathname"),
       value.cast("string").as("value"),
       fversion.cast("long").as("fversion"))
-
-  /** Constant fversion (the default) must not cost a full scan of `df`
-    * per index pass: probe the column against a 1-row local relation —
-    * a foldable expression evaluates there without touching `df`; a
-    * per-row expression fails to resolve and falls back to the scan.
-    */
-  override def version(spark: SparkSession): Long =
-    scala.util.Try(
-      spark.range(1).toDF("__graft_probe")
-        .select(fversion.cast("long")).head().getLong(0)
-    ).getOrElse(super.version(spark))
 }

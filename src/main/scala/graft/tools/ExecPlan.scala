@@ -1,44 +1,47 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dump the EXECUTED plan (final AQE plan, post-run) for named queries to
-  * plans/<tag>/<name>_<suffix>.txt — the companion of [[graft.Plans]]
-  * (which dumps the pre-execution formatted plan). Needed where AQE
-  * re-plans at runtime: checkpoint-scan inputs carry estimated stats, so
-  * the initial plan can show SortMergeJoin where the executed plan is an
-  * AQE-converted BroadcastHashJoin over the REAL table size (the
-  * scale-adaptive join choice, guide §3.1). The query is EXECUTED via a
-  * noop write (computes every column, guide §1.4).
+/** Dump plans of named queries to `<outDir>/<name>_<suffix>.txt` and
+  * print the scan and exchange counts the PlanSpecs assert on.
   *
-  *   runMain graft.tools.ExecPlan <sfDir> <outDir> <suffix> q1,q2,...
+  * By default the query is EXECUTED and the dump is the final adaptive
+  * plan, so AQE's runtime choices are the ones that ran: checkpoint-scan
+  * inputs carry estimated stats, so the initial plan can show a
+  * SortMergeJoin where the executed plan is an AQE-converted
+  * BroadcastHashJoin over the real table size. `--before` dumps the
+  * `explain("formatted")` plan instead, without running the query
+  * (streaming arms execute at construction time by contract; their dump
+  * describes the post-stream sink frame).
+  *
+  *   runMain graft.tools.ExecPlan [--before] <sfDir> <outDir> <suffix> q1,q2,...
   */
 object ExecPlan {
   def main(args: Array[String]): Unit = {
-    require(args.length == 4, "usage: ExecPlan <sfDir> <outDir> <suffix> q1,q2,...")
-    val Array(sfDir, outDir, suffix, namesCsv) = args
-    val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val before = args.headOption.contains("--before")
+    val rest = if (before) args.tail else args
+    require(rest.length == 4, "usage: ExecPlan [--before] <sfDir> <outDir> <suffix> q1,q2,...")
+    val Array(sfDir, outDir, suffix, namesCsv) = rest
+    val spark = Session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { n =>
+    namesCsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
-      // collect() executes THIS df's QueryExecution (a noop write would
-      // plan a separate one and leave this plan un-finalized); gate
-      // results are bounded, so the driver fetch is trivial
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-        .split("\\+\\- == Initial Plan ==")(0)
-      graft.queries.Pinned.drain()
+      val plan =
+        if (before)
+          df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+        else {
+          // collect() executes THIS df's QueryExecution (a noop write
+          // would plan a separate one and leave this plan un-finalized);
+          // gate results are bounded, so the driver fetch is trivial
+          try df.collect() finally graft.queries.Pinned.drain()
+          df.queryExecution.executedPlan.toString.split("\\+\\- == Initial Plan ==")(0)
+        }
       java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),
-        plan.getBytes("UTF-8"))
-      println(s"EXECPLAN WRITTEN $n (${plan.length} chars)")
+        java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), plan.getBytes("UTF-8"))
+      def count(p: String => Boolean) = plan.linesIterator.count(p)
+      println(s"PLAN WRITTEN $n (${plan.length} chars): documents scans " +
+        count(l => l.contains("Scan parquet") && l.contains("documents")) +
+        s", reused exchanges ${count(_.contains("ReusedExchange"))}" +
+        s", broadcast exchanges ${count(_.contains("BroadcastExchange"))}" +
+        s", shuffle exchanges ${count(_.contains("Exchange hashpartitioning"))}")
     }
     spark.stop()
   }

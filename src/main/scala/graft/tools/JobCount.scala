@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Fixed-overhead profiler for one query: counts Spark JOBS and sums
   * task time vs wall time, so a floor-bound arm (many small sequential
@@ -17,19 +16,8 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("pipeline_pretrain_compact")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Tables.names.foreach { t =>
-      try {
-        (if (t == "events") graft.core.Tables.events(spark, sfDir)
-         else graft.core.Tables(spark, sfDir, t)).count()
-      } catch { case _: Throwable => }
-    }
+    val spark = Session()
+    Session.warmTables(spark, sfDir)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -51,7 +39,7 @@ object JobCount {
     Thread.sleep(500) // let listener drain
     println(f"JOBCOUNT $name: wall=${wall}%.2f s jobs=${jobs.get} " +
       f"stages=${stages.get} taskTime=${taskMs.get / 1e3}%.1f s " +
-      f"(ideal at $cpus cores ≈ ${taskMs.get / 1e3 / cpus.toInt}%.2f s)")
+      f"(ideal at ${Session.cpus} cores ≈ ${taskMs.get / 1e3 / Session.cpus}%.2f s)")
     spark.stop()
   }
 }

@@ -4,227 +4,168 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-/** The bench's one line of driver record: the recording harness keeps
-  * only the last ~2000 chars of stdout, so the line must fit the budget
-  * AND carry COMPLETE suspect-rerun evidence (r10 lost 14 of 26 rerun
-  * records to a 12-entry cap — exactly the arms graded weak). These
-  * specs drive renderRecordLine with the r10 shape (198 arms, 26
-  * suspects) and worse, and assert the budget + completeness contract
-  * by parsing the emitted JSON.
+/** The bench loop and its one line of driver record. The recording
+  * harness keeps only the last ~2000 chars of stdout, so the line must
+  * fit the budget, name the heaviest arms, and account for every failed
+  * and flaky arm. A "suspect" below is an arm with one slow pass (the
+  * reading the old rerun ladder re-measured and replaced by its best
+  * rerun): its record value must be its median.
   */
 class BenchReportSpec extends AnyFunSuite {
 
   private val budget = 1880
 
-  private def results(n: Int): Seq[(String, Double, Int)] =
-    (1 to n).map(i => (s"query_arm_name_number_$i", 0.1 + (i % 37) * 0.13, 3))
+  private def arm(name: String, passes: Option[Double]*) = Bench.Readings(name, passes)
 
-  /** Build a Rerun the way main() does: clearBar = the suspect trigger,
-    * rerun2 present exactly when needsSecondRerun says so (simulated at
-    * ~baseline — the contention-cleared case — unless overridden).
+  private def results(n: Int): Seq[Bench.Readings] =
+    (1 to n).map { i =>
+      val v = 0.1 + (i % 37) * 0.13
+      arm(s"query_arm_name_number_$i", Some(v), Some(v), Some(v))
+    }
+
+  /** `rs` with its n heaviest arms as suspects: one pass (the k-th
+    * suspect's pass k % 3) three times slower than the others.
     */
-  private def mk(name: String, b: Double, m: Double, r: Double,
-      r2: Option[Double] = None): Bench.Rerun = {
-    val bar = if (b < 5.0) 1.5 else 2.0
-    val second =
-      if (Bench.needsSecondRerun(b, m, r, bar)) r2.orElse(Some(b * 1.02))
-      else None
-    Bench.Rerun(name, b, m, r, second, bar)
+  private def withSuspects(rs: Seq[Bench.Readings], n: Int): Seq[Bench.Readings] = {
+    val k = rs.sortBy(-_.median).take(n).map(_.name).zipWithIndex.toMap
+    rs.map(r => k.get(r.name).fold(r)(i =>
+      r.copy(passes = r.passes.updated(i % 3, r.passes(i % 3).map(_ * 3)))))
   }
 
-  private def suspects(n: Int): Seq[Bench.Rerun] =
-    (1 to n).map(i =>
-      mk(s"query_arm_name_number_$i", 0.5 + i * 0.11, 1.9 + i * 0.3, 0.52 + i * 0.1))
+  private def suspect(r: Bench.Readings) = r.passes.distinct.size > 1
 
   private def parse(line: String): JValue = JsonMethods.parse(line)
 
-  test("one malformed prose baseline drops itself, not the whole map (r11 incident)") {
-    val text =
-      """|| q01_agg | 0.35 | q02_filter | 0.21 |
-         |
-         |- prose additions: `good_arm` 1.25 s and a sentence that ends
-         |  with `bad_arm` 1.04. sf1 medians follow, and `also_good` 0.5 s.
-         |
-         |## sf1
-         || q01_agg (sf1) | 9.99 |
-         |""".stripMargin
-    val m = Bench.parseBaselinesFrom(text)
-    assert(m("q01_agg") == 0.35 && m("q02_filter") == 0.21,
-      s"table rows must parse: $m")
-    assert(m("good_arm") == 1.25 && m("also_good") == 0.5,
-      s"well-formed prose must parse: $m")
-    // "1.04." (greedy [0-9.]+ eating the sentence period) used to THROW
-    // in toDouble and blank the ENTIRE map via the outer catch —
-    // silently disabling the suspect-rerun pass for the whole bench run
-    assert(!m.contains("bad_arm"), s"malformed prose must drop itself: $m")
-    assert(m("q01_agg") == 0.35, "sf1 section must not override the record")
-  }
-
-  /** Suspect accounting is COMPLETE when every fired suspect is either
-    * a verbatim (base, med, rerun) entry or counted by
-    * suspect_cleared_n (cleared = rerun returned ≤ trigger×baseline;
-    * full triples persist in target/bench_full.json).
-    */
-  private def assertSuspectsAccounted(j: JValue,
-      sus: Seq[Bench.Rerun]): Unit = {
-    val JInt(n) = j \ "suspect_n"
-    assert(n == sus.size)
-    val JObject(entries) = j \ "suspect_rerun"
-    val unresolvedNames = sus.filterNot(_.cleared).map(_.name).toSet
-    val shown = entries.map(_._1).toSet
-    assert(unresolvedNames.subsetOf(shown),
-      s"missing unresolved suspects: ${(unresolvedNames -- shown).take(3)}")
-    entries.foreach { case (_, v) =>
-      val keys = v.asInstanceOf[JObject].obj.map(_._1).toSet
-      assert(keys -- Set("r2", "v") == Set("base", "med", "rerun") ||
-        keys -- Set("r2", "v") == Set("b", "m", "r"),
-        s"unexpected suspect keys: $keys")
-    }
-    if (entries.size < sus.size) {
-      val JInt(clearedN) = j \ "suspect_cleared_n"
-      assert(clearedN.toInt + entries.size == sus.size,
-        s"accounting gap: $clearedN cleared + ${entries.size} shown != ${sus.size}")
-    }
+  private def named(j: JValue): Map[String, Double] = {
+    val JObject(qs) = j \ "queries"
+    qs.map {
+      case (k, JDouble(v)) => k -> v
+      case (k, JDecimal(v)) => k -> v.toDouble
+      case (k, JInt(v)) => k -> v.toDouble
+      case (k, v) => fail(s"$k: $v")
+    }.toMap
   }
 
   /** The r12 contract: the heaviest named arms survive ANY fold
     * pressure — a record with "queries":{} (the r11 driver run) is a
-    * regression even when every suspect triple is verbatim.
+    * regression.
     */
-  private def assertHeavyArmsNamed(j: JValue,
-      rs: Seq[(String, Double, Int)], atLeast: Int = 15): Unit = {
-    val JObject(qs) = j \ "queries"
+  private def assertHeavyArmsNamed(j: JValue, rs: Seq[Bench.Readings],
+      atLeast: Int = 15): Unit = {
+    val qs = named(j)
     assert(qs.size >= atLeast, s"only ${qs.size} named arms survived the fold")
-    val heaviest = rs.filter(_._2 >= 0).sortBy(-_._2).take(atLeast).map(_._1).toSet
-    val named = qs.map(_._1).toSet
-    assert(heaviest.subsetOf(named),
-      s"heaviest arms folded away: ${(heaviest -- named).take(3)}")
+    val heaviest = rs.filterNot(_.failed).sortBy(-_.median).take(atLeast).map(_.name).toSet
+    assert(heaviest.subsetOf(qs.keySet),
+      s"heaviest arms folded away: ${(heaviest -- qs.keySet).take(3)}")
   }
 
   test("r10 shape: 198 arms + 26 suspects — accounted, heavy arms named") {
-    val rs = results(198)
-    val sus = suspects(26)
-    val line = Bench.renderRecordLine(rs, sus, 3, "/x/sf0.1")
+    val rs = withSuspects(results(198), 26)
+    val line = Bench.renderRecordLine(rs, 3, "/x/sf0.1")
     assert(line.length <= budget, s"line ${line.length} chars exceeds budget")
     val j = parse(line)
-    assertSuspectsAccounted(j, sus)
     assertHeavyArmsNamed(j, rs)
-  }
-
-  test("r11 driver shape: 219 arms + 36 suspects (1 unresolved) keeps " +
-      "≥15 named arms AND full suspect accounting") {
-    val rs = results(219)
-    // 35 cleared + the view_list_range shape: rerun WORSE than median,
-    // spaced rerun still elevated -> 'regressed', verbatim in the line
-    val sus = (1 to 35).map { i =>
-      val base = 0.5 + i * 0.07
-      mk(s"query_arm_name_number_$i", base, base * 2.2, base * 1.01)
-    } :+ mk("view_list_range_shape_arm", 0.15, 0.276, 0.712, r2 = Some(0.69))
-    val line = Bench.renderRecordLine(rs, sus, 3, "/x/sf0.1")
-    assert(line.length <= budget, s"line ${line.length} chars exceeds budget")
-    val j = parse(line)
-    assertSuspectsAccounted(j, sus)
-    assertHeavyArmsNamed(j, rs)
-    // the unresolved triple is the grading evidence: verbatim, always
-    val JObject(entries) = j \ "suspect_rerun"
-    assert(entries.exists(_._1 == "view_list_range_shape_arm"))
-  }
-
-  test("r12 shape: rerun-worse arms carry spaced-rerun evidence and a verdict") {
-    // the 7-arm r12 signature: med ~3.7x base, first rerun WORSE than
-    // med. Three spaced outcomes: back at baseline (cleared), repeated
-    // high (regressed), improved-but-above-bar (contended).
-    val clearedArm = mk("worse_then_cleared", 0.64, 1.02, 2.36, r2 = Some(0.66))
-    val regressedArm = mk("worse_then_regressed", 0.64, 1.02, 2.36, r2 = Some(2.20))
-    val contendedArm = mk("worse_then_contended", 0.64, 1.02, 2.36, r2 = Some(0.995))
-    assert(Bench.needsSecondRerun(0.64, 1.02, 2.36, 1.5),
-      "a rerun worse than its median must fire the spaced rerun")
-    assert(!Bench.needsSecondRerun(0.64, 1.02, 0.65, 1.5),
-      "a clearing rerun below the median needs no second pass")
-    assert(clearedArm.cleared && clearedArm.verdict == "cleared")
-    assert(regressedArm.verdict == "regressed")
-    assert(contendedArm.verdict == "contended")
-    val sus = Seq(clearedArm, regressedArm, contendedArm)
-    val line = Bench.renderRecordLine(results(226), sus, 3, "/x/sf0.1")
-    assert(line.length <= budget)
-    val j = parse(line)
-    assertSuspectsAccounted(j, sus)
-    val JObject(entries) = j \ "suspect_rerun"
-    // both unresolved entries are verbatim with their r2 + verdict
-    Seq("worse_then_regressed" -> "regressed",
-        "worse_then_contended" -> "contended").foreach { case (nm, v) =>
-      val e = entries.find(_._1 == nm).map(_._2.asInstanceOf[JObject])
-      assert(e.isDefined, s"$nm must stay verbatim")
-      assert(e.get.obj.exists { case (k, jv) => k == "v" && jv == JString(v) },
-        s"$nm must carry verdict $v in the line of record")
-      assert(e.get.obj.exists(_._1 == "r2"), s"$nm must carry its spaced rerun")
+    // every arm is named or counted in fast_other, and a named suspect
+    // carries its median: the slow pass moves neither it nor the record
+    val qs = named(j)
+    val JInt(folded) = j \ "fast_other" \ "n"
+    assert(qs.size + folded.toInt == rs.size)
+    val sus = rs.filter(suspect)
+    assert(sus.size == 26 && sus.forall(r => qs.contains(r.name)))
+    sus.foreach { r =>
+      assert(math.abs(qs(r.name) - r.median) < 0.001 && r.median < r.passes.flatten.max,
+        s"${r.name}: ${qs(r.name)} vs median ${r.median}")
     }
+    val JObject(top) = j
+    assert(!top.exists(_._1.startsWith("suspect")) && !top.exists(_._1 == "drift_n"))
   }
 
   test("pathological: 60 suspects still parse; unresolved entries survive") {
-    // every third suspect's rerun stays above trigger (unresolved)
-    val sus = (1 to 60).map { i =>
-      val base = 0.5 + i * 0.07
-      val rerun = if (i % 3 == 0) base * 3.0 else base * 1.01
-      // unresolved arms' spaced rerun repeats the high reading
-      mk(s"query_arm_name_number_$i", base, base * 2.5, rerun,
-        r2 = if (i % 3 == 0) Some(base * 2.9) else None)
+    // the 20 suspects whose first pass was slow also failed their second
+    // (flaky, unresolved); the rest read one slow pass
+    val rs = withSuspects(results(198), 60).map { r =>
+      if (r.passes(0) != r.passes(1) && r.passes(0) != r.passes(2)) r.copy(passes = r.passes.updated(1, None))
+      else r
     }
-    val rs = results(198)
-    val line = Bench.renderRecordLine(rs, sus, 3, "/x/sf0.1")
+    val line = Bench.renderRecordLine(rs, 3, "/x/sf0.1")
     assert(line.length <= budget, s"line ${line.length} chars exceeds budget")
     val j = parse(line)
-    assertSuspectsAccounted(j, sus)
     assertHeavyArmsNamed(j, rs)
+    val JInt(flakyN) = j \ "flaky_n"
+    assert(flakyN == 20)
+    // a flaky arm is never folded: its median stays next to its name
+    val qs = named(j)
+    rs.filter(_.flaky).foreach(r => assert(qs.contains(r.name), r.name))
   }
 
   test("failed rows are named in failed[] but absent from the queries map") {
-    val rs = results(30) :+ ("watch_latency", -1.0, 0)
-    val line = Bench.renderRecordLine(rs, Nil, 3, "/x/sf0.1")
+    val rs = results(30) :+ arm("watch_latency", None, None, None)
+    val line = Bench.renderRecordLine(rs, 3, "/x/sf0.1")
     val j = parse(line)
     val JArray(failed) = j \ "failed"
     assert(failed.contains(JString("watch_latency")))
-    val JObject(qs) = j \ "queries"
-    assert(!qs.exists(_._1 == "watch_latency"),
+    assert(!named(j).contains("watch_latency"),
       "a failed arm must not carry a -1.0 'timing' in the queries map")
     val JInt(fn) = j \ "failed_n"
     assert(fn == 1)
   }
 
   test("flaky rows stay pinned (resolvable) in the queries map") {
-    val rs = results(120) :+ ("flaky_one", 2.5, 2)
-    val line = Bench.renderRecordLine(rs, suspects(26), 3, "/x/sf0.1")
+    val rs = results(120) :+ arm("flaky_one", Some(2.5), None, Some(2.5))
+    val line = Bench.renderRecordLine(rs, 3, "/x/sf0.1")
     assert(line.length <= budget)
     val j = parse(line)
-    val JObject(qs) = j \ "queries"
-    assert(qs.exists(_._1 == "flaky_one"))
+    assert(named(j).get("flaky_one").contains(2.5))
     val JArray(flaky) = j \ "flaky"
     assert(flaky.contains(JString("flaky_one")))
   }
 
-  test("r14: CLEARED suspects carry their rerun value in the queries map; " +
-      "unresolved keep the median (VERDICT #5)") {
-    val rs = Seq(("cleared_arm", 20.7, 3), ("regressed_arm", 8.0, 3),
-      ("untouched_arm", 0.4, 3))
-    // cleared: med 20.7 >> base 1.57, immediate rerun 1.77 ≤ 2×base
-    val cleared = Bench.Rerun("cleared_arm", 1.57, 20.7, 1.77, None, 2.0)
-    assert(cleared.cleared)
-    // regressed: both readings repeat the elevated value
-    val regressed = Bench.Rerun("regressed_arm", 2.0, 8.0, 7.9, Some(7.8), 2.0)
-    assert(!regressed.cleared && regressed.verdict == "regressed")
-    val adj = Bench.applyClearedReruns(rs, Seq(cleared, regressed))
-    assert(adj.find(_._1 == "cleared_arm").get._2 == 1.77,
-      "the cleared arm's record entry must be its rerun reading")
-    assert(adj.find(_._1 == "regressed_arm").get._2 == 8.0,
-      "a regressed arm keeps its median — no laundering")
-    assert(adj.find(_._1 == "untouched_arm").get._2 == 0.4)
-    // and the rendered line still carries the full suspect evidence
-    val line = Bench.renderRecordLine(adj, Seq(cleared, regressed), 3, "/x/sf0.1")
-    val j = parse(line)
-    val JObject(qs) = j \ "queries"
-    assert(qs.collectFirst { case ("cleared_arm", JDouble(v)) => v }.get == 1.77)
-    val med = j \ "suspect_rerun" \ "cleared_arm" \ "med"
-    assert(med == JDouble(20.7) || med == JDecimal(BigDecimal("20.7")),
-      s"the adjudicated median must stay in the suspect evidence: $med")
+  test("every arm warms once, then timed passes alternate order; pure arms precede the tail") {
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    def rec(n: String) = Bench.Arm(n, () => { calls += n; 1.0 })
+    val rs = Bench.measure(Seq(rec("p1"), rec("p2"), rec("p3")), Seq(rec("t1"), rec("t2")), 3)
+    val warm = Seq("p1", "p2", "p3", "t1", "t2")
+    val fwd = warm
+    val rev = Seq("p3", "p2", "p1", "t2", "t1")
+    assert(calls.toSeq == warm ++ fwd ++ rev ++ fwd)
+    assert(rs.map(_.name) == warm)
+    assert(rs.forall(_.passes == Seq(Some(1.0), Some(1.0), Some(1.0))),
+      "the untimed warm-up must not be a reading")
+  }
+
+  test("an arm's median, p25 and p75 come from its per-pass readings") {
+    val four = arm("four", Some(3.0), Some(1.0), Some(2.0), Some(10.0))
+    assert(four.median == 2.5 && four.q(0.25) == 1.75 && four.q(0.75) == 4.75)
+    // three passes, the first one slow (per-arm warm-up that leaked):
+    // the record carries the middle reading, not the fastest
+    val three = arm("three", Some(9.0), Some(2.0), Some(1.0))
+    assert(three.median == 2.0 && three.q(0.25) == 1.5 && three.q(0.75) == 5.5)
+    val qs = named(parse(Bench.renderRecordLine(Seq(four, three), 4, "/x/sf0.1")))
+    assert(qs == Map("four" -> 2.5, "three" -> 2.0))
+    // a failed pass is left out of the quantiles
+    val holed = arm("holed", Some(4.0), None, Some(2.0))
+    assert(holed.median == 3.0 && holed.flaky && !holed.failed)
+  }
+
+  test("an arm that fails in some passes is flaky; one that fails in all is failed") {
+    var n = 0
+    val sometimes = Bench.Arm("sometimes", () => {
+      n += 1
+      if (n % 2 == 0) throw new RuntimeException("every other run") else 0.5
+    })
+    val always = Bench.Arm("always", () => throw new RuntimeException("never runs"))
+    val steady = Bench.Arm("steady", () => 0.25)
+    val rs = Bench.measure(Seq(sometimes, steady), Seq(always), 3)
+    val byName = rs.map(r => r.name -> r).toMap
+    // run 1 is the warm-up; the timed passes are runs 2, 3, 4
+    assert(byName("sometimes").passes == Seq(None, Some(0.5), None))
+    assert(byName("sometimes").flaky && !byName("sometimes").failed)
+    assert(byName("always").failed && !byName("always").flaky)
+    assert(!byName("steady").flaky && !byName("steady").failed)
+    val j = parse(Bench.renderRecordLine(rs, 3, "/x/sf0.1"))
+    val JArray(flaky) = j \ "flaky"
+    val JArray(failed) = j \ "failed"
+    assert(flaky == List(JString("sometimes")) && failed == List(JString("always")))
+    assert(named(j) == Map("sometimes" -> 0.5, "steady" -> 0.25))
   }
 }

@@ -583,6 +583,30 @@ class GraftEngineSpec extends SparkSpec {
       "a lower cap than the cached pass must force a fresh probe")
   }
 
+  test("Fold cap probe re-runs after another engine's commit to the same root") {
+    val d = Files.createTempDirectory("graft-foldprobe-shared")
+    (1 to 3).foreach(i => writeJson(d, s"/p$i.json", "first" -> s"k$i", "second" -> i))
+    val state = root.resolve("state-foldprobe-shared").toString
+    val folded = ViewDef("/*.json", MapFn((v, m) => Seq(parseFirst(v) -> 1)),
+      Reduce.Fold((acc, _, _) => acc.map(_.asInstanceOf[Double] + 1).getOrElse(1.0)))
+    val arch = new DirArchive("dat://foldprobe-shared", d.toString)
+    val a = new Graft(spark, state)
+    a.define("folded", folded)
+    a.index(arch)
+    assert(a.getValue("folded", "k1") == Some(1.0))
+    val base = a.foldProbeRuns
+    assert(a.getValue("folded", "k2") == Some(1.0))
+    assert(a.foldProbeRuns == base, "unchanged state must reuse the cached probe")
+    // B's commit moves no counter of A's: only the manifest changes
+    val b = new Graft(spark, state)
+    b.define("folded", folded)
+    writeJson(d, "/p4.json", "first" -> "k1", "second" -> 4)
+    b.index(arch)
+    assert(a.getValue("folded", "k1") == Some(2.0))
+    assert(a.foldProbeRuns == base + 1,
+      "A must probe the state B committed before serving it")
+  }
+
   test("listEntries/getValue are driver-OOM bounded; DataFrame forms stay unbounded") {
     val d = Files.createTempDirectory("graft-collectcap")
     (1 to 5).foreach(i => writeJson(d, s"/c$i.json", "first" -> s"k$i", "second" -> i))
