@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.tools.Session
 
 /** Timing record of the query suite plus the engine's watch loop.
@@ -9,46 +10,25 @@ import graft.tools.Session
   * Then `SPARK_GRAFT_REPEATS` (default 3) timed passes go over the arm
   * list, in reverse order on every other pass, so drift across the run
   * falls on each arm from both sides. Within a pass the pure arms run
-  * first, then the session-mutating tail. An arm's value is the median
-  * of its passes; `target/bench_full.json` keeps every pass reading and
-  * p25/p75, and stdout gets the one-line JSON record.
+  * first, then the tail: the arms whose untimed run started a streaming
+  * query. An arm's value is the median of its passes;
+  * `target/bench_full.json` keeps every pass reading, p25/p75 and the
+  * tail's names, and stdout gets the one-line JSON record.
   *
   *   SPARK_GRAFT_SF_DIR=<sf dir> sbt -batch "runMain graft.Bench"
   */
 object Bench {
-
-  /** Arms that mutate shared SparkSession state (start/stop a streaming
-    * query, register+drop a memory sink). They run after the pure arms
-    * of each pass, so their session churn cannot bleed into the timing
-    * of a pure arm (r2 saw q23/q24/q27 inflate >2x right after
-    * q20s_stream_window).
-    */
-  private val sessionMutating =
-    Set("q20s_stream_window", "q21s_stream_sessions", "q17s_stream_distinct",
-      "q28s_stream_join", "dedup_incremental_stream", "pipeline_curate_stream",
-      "media_phash_stream", "text_decontaminate_stream", "text_lm_score_stream",
-      "emb_assign_stream", "text_quality_classifier_stream",
-      "text_mixture_apply_stream", "text_importance_resample_stream",
-      "text_domain_filter_stream", "text_topic_tag_stream",
-      "emb_outlier_stream", "text_chunk_split_stream",
-      "dedup_minhash_stream", "inv_minhash_stream_parity",
-      "text_oov_rate_stream", "pipeline_tokenize_pack_stream",
-      "text_repetition_stream", "text_pii_redact_stream",
-      "pipeline_curate_web_stream", "emb_pca_stream", "inv_pca_stream_parity",
-      "text_langid_stream", "text_gopher_rules_stream", "corpus_drift_stream",
-      "text_url_dedup_stream", "media_text_pair_stream",
-      "ann_probe_stream", "inv_ann_probe_stream_parity",
-      "pipeline_dedup_cascade_stream", "inv_cascade_stream_parity",
-      "pipeline_rag_assign_stream",
-      "emb_pca_int_stream", "text_langid_router_stream", "watch_latency")
 
   /** One bench arm: `run` does the work once and returns the seconds it
     * measured.
     */
   private[graft] final case class Arm(name: String, run: () => Double)
 
-  /** An arm's readings, one per timed pass (None: that pass failed). */
-  private[graft] final case class Readings(name: String, passes: Seq[Option[Double]]) {
+  /** An arm's readings, one per timed pass (None: that pass failed).
+    * `tail`: the arm started a streaming query in its untimed run.
+    */
+  private[graft] final case class Readings(name: String, passes: Seq[Option[Double]],
+      tail: Boolean = false) {
     private val ok = passes.flatten.sorted
     /** Linearly interpolated quantile of the passes that ran; −1 when
       * every pass failed.
@@ -71,10 +51,14 @@ object Bench {
   private[graft] def passOrder[A](pure: Seq[A], tail: Seq[A], pass: Int): Seq[A] =
     if (pass % 2 == 0) pure ++ tail else pure.reverse ++ tail.reverse
 
-  /** Run every arm once untimed, then `repeats` timed passes. A throw
-    * fails that pass of that arm only.
+  /** Run every arm once untimed, then `repeats` timed passes. An arm
+    * that starts a streaming query in its untimed run (`streamStarts`
+    * moved across it) joins the tail, so its session churn cannot bleed
+    * into the timing of a pure arm (r2 saw q23/q24/q27 inflate >2x right
+    * after q20s_stream_window). A throw fails that pass of that arm only.
     */
-  private[graft] def measure(pure: Seq[Arm], tail: Seq[Arm], repeats: Int): Seq[Readings] = {
+  private[graft] def measure(arms: Seq[Arm], repeats: Int,
+      streamStarts: () => Long): Seq[Readings] = {
     def attempt(a: Arm): Option[Double] =
       try Some(a.run())
       catch {
@@ -82,11 +66,29 @@ object Bench {
           System.err.println(s"BENCH FAIL ${a.name}: ${e.getMessage}")
           None
       }
-    (pure ++ tail).foreach(attempt)
+    val (tail, pure) = arms.partition { a =>
+      val before = streamStarts()
+      attempt(a)
+      streamStarts() != before
+    }
     val byArm = (0 until repeats)
       .flatMap(p => passOrder(pure, tail, p).map(a => a.name -> attempt(a)))
       .groupMap(_._1)(_._2)
-    (pure ++ tail).map(a => Readings(a.name, byArm.getOrElse(a.name, Nil)))
+    val inTail = tail.map(_.name).toSet
+    arms.map(a => Readings(a.name, byArm.getOrElse(a.name, Nil), inTail(a.name)))
+  }
+
+  /** Counts the streaming queries started on the session it listens to.
+    * `onQueryStarted` runs inside `start()`, so an arm's starts are
+    * counted by the time the arm returns.
+    */
+  private[graft] final class StreamStarts extends StreamingQueryListener {
+    private val n = new java.util.concurrent.atomic.AtomicLong
+    def count: Long = n.get
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      n.incrementAndGet()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 
   private def queryArm(spark: SparkSession, sfDir: String, q: queries.Q): Arm =
@@ -170,8 +172,10 @@ object Bench {
     val arms = Session.only(
       SparkEntry.allQ.filterNot(_.name.startsWith("inv_")).map(queryArm(spark, sfDir, _)) :+
         Arm("watch_latency", () => watchLatency(spark)))(_.name)
-    val (tail, pure) = arms.partition(a => sessionMutating(a.name))
-    val rs = measure(pure, tail, repeats)
+    val starts = new StreamStarts
+    spark.streams.addListener(starts)
+    val rs = measure(arms, repeats, () => starts.count)
+    System.err.println(s"BENCH tail: ${rs.filter(_.tail).map(_.name).mkString(",")}")
     def names(xs: Seq[Readings]) = xs.map("\"" + _.name + "\"").mkString("[", ",", "]")
     val perArm = rs.map { r =>
       val passes = r.passes.map(_.fold("null")(_.toString)).mkString("[", ",", "]")
@@ -180,7 +184,7 @@ object Bench {
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("target/bench_full.json"),
-        s"""{"total":${rs.filterNot(_.failed).map(_.median).sum},"queries":$perArm,"failed":${names(rs.filter(_.failed))},"flaky":${names(rs.filter(_.flaky))},"sf":"$sfDir","repeats":$repeats,"cpus":${Session.cpus}}""".getBytes("UTF-8"))
+        s"""{"total":${rs.filterNot(_.failed).map(_.median).sum},"queries":$perArm,"failed":${names(rs.filter(_.failed))},"flaky":${names(rs.filter(_.flaky))},"tail":${names(rs.filter(_.tail))},"sf":"$sfDir","repeats":$repeats,"cpus":${Session.cpus}}""".getBytes("UTF-8"))
     } catch { case _: Throwable => } // diagnostics only; never fail the bench
     println(renderRecordLine(rs, repeats, sfDir))
     spark.stop()

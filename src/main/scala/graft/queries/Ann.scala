@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core.Tables
 
@@ -1257,13 +1258,10 @@ object Ann {
     // inv_ann_probe_stream_parity additionally pins stream ≡ the
     // persisted-probe batch path.
     Q("ann_probe_stream", ivfIntSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      topK(Events.runStream(s, OutputMode.Append) {
         val (cents, path) = ivfIntArtifact(s, dir)
         val assigned = s.read.parquet(path)
-        val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "embeddings")
         val queries = stream.where(col("vec_id") < NQ)
           .select(col("vec_id").as("q_id"),
             transform(col("embedding"),
@@ -1273,12 +1271,11 @@ object Ann {
             sqrt(graft.functions.Native.dot(s, col("qemb"), col("qemb"))))
         val probed = queries.select(col("q_id"), col("qemb"), col("qnrm"),
           explode(argmaxCellsInt(cents, 4)(col("q"))).as("cell"))
-        val scored = probed.join(assigned, "cell")
+        probed.join(assigned, "cell")
           .where(col("qnrm") > 0 && col("nnrm") > 0)
           .select(col("q_id"), col("n_id"),
             cosine(s, col("qemb"), col("nemb"), col("qnrm"), col("nnrm")).as("cos"))
-        topK(Events.runToAppendSink(s, "annprobe_sink_", scored))
-      }
+      })
     },
 
     // C8g (PQ side): probe a persisted PQ index — loads the 16-byte

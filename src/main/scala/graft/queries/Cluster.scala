@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Tables
@@ -253,20 +254,16 @@ object Cluster {
       s"""$kmeansCtes
          |SELECT vec_id, cluster, dist FROM aF WHERE rn = 1
          |ORDER BY vec_id""".stripMargin) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Append) {
         val cents = fit(s, dir)._3
-        val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "embeddings")
         val x = stream.select(col("vec_id"),
           transform(col("embedding"),
             v => floor((v.cast("double") + 1.0d) * 1000).cast("long")).as("q"))
-        val asg = assigned(s, withDerived(s, x), cents)
+        assigned(s, withDerived(s, x), cents)
           .select(col("vec_id"), col("cluster"), col("dist"))
-        Events.runToAppendSink(s, "assign_sink_", asg)
-          .orderBy(col("vec_id"))
       }
+        .orderBy(col("vec_id"))
     },
 
     // C39b: cluster-balanced subset — cap every cluster at

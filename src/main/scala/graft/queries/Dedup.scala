@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core.Tables
 
@@ -2510,11 +2511,8 @@ object Dedup {
         |WHERE NOT EXISTS (
         |  SELECT 1 FROM norm c WHERE c.doc_id % 3 != 0 AND c.k = agg.k)
         |ORDER BY keep_id""".stripMargin) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+      Events.runStream(s, OutputMode.Complete) {
+        val stream = Events.streamOf(s, dir, "documents")
           .where(pmod(col("doc_id"), lit(3)) === 0)
           .select(col("doc_id"), unhex(sha2(normText, 256)).as("h"))
         // the static corpus digests — DISTINCT'd batch-side so the anti
@@ -2523,13 +2521,12 @@ object Dedup {
           .where(pmod(col("doc_id"), lit(3)) =!= 0)
           .select(unhex(sha2(normText, 256)).as("h"))
           .distinct()
-        val kept = stream.join(corpus, Seq("h"), "left_anti")
+        stream.join(corpus, Seq("h"), "left_anti")
           .groupBy(col("h"))
           .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("batch_dups"))
-        Events.runToCompleteSink(s, "incr_dedup_sink_", kept)
-          .select(col("keep_id"), col("batch_dups"))
-          .orderBy(col("keep_id"))
       }
+        .select(col("keep_id"), col("batch_dups"))
+        .orderBy(col("keep_id"))
     },
 
     // D19 (r9): NEAR-dup dedup at INGEST — C33's corpus-probe stage as
@@ -2571,7 +2568,7 @@ object Dedup {
         |SELECT doc_id AS keep_id FROM documents
         |WHERE doc_id % 3 = 0 AND doc_id NOT IN (SELECT a_id FROM dropped)
         |ORDER BY keep_id""".stripMargin) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Append) {
         val d = docs(s, dir)
         val isBatch = pmod(col("doc_id"), lit(3)) === 0
         // static probe tables, materialized ONCE (a stream-static join
@@ -2586,10 +2583,7 @@ object Dedup {
             .where(size(col("ws")) >= 3)
             .select(col("c_id"), gramsOf(col("ws")).as("gb"))
             .localCheckpoint(true))
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
           .where(pmod(col("doc_id"), lit(3)) === 0)
         val sw = stream.select(col("doc_id"), split(col("text"), " ").as("ws"))
         val banded = sw.where(size(col("ws")) >= 3)
@@ -2606,13 +2600,12 @@ object Dedup {
           .where(col("ni") / (col("na") + col("nb") - col("ni")) >= 0.8)
           .select(col("doc_id"), lit(1).as("dup"))
         val all = sw.select(col("doc_id"), lit(0).as("dup"))
-        Events.runToAppendSink(s, "minhash_dedup_sink_",
-            all.unionByName(flagged))
-          .groupBy(col("doc_id")).agg(max(col("dup")).as("dup"))
-          .where(col("dup") === 0)
-          .select(col("doc_id").as("keep_id"))
-          .orderBy(col("keep_id"))
+        all.unionByName(flagged)
       }
+        .groupBy(col("doc_id")).agg(max(col("dup")).as("dup"))
+        .where(col("dup") === 0)
+        .select(col("doc_id").as("keep_id"))
+        .orderBy(col("keep_id"))
     },
 
     // Driver gate for D19 (WHERE 1=0 oracle): the stream result must
@@ -2697,7 +2690,7 @@ object Dedup {
         |FROM base b LEFT JOIN near ON near.doc_id = b.doc_id
         |WHERE b.is_incr
         |ORDER BY b.doc_id""".stripMargin) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Append) {
         val d = docs(s, dir)
         val isIncr = (col("doc_id") % 7).isin(2L, 4L)
         val corpus = d.where(!isIncr)
@@ -2714,10 +2707,7 @@ object Dedup {
           .where(size(col("ws")) >= 3)
           .select(col("c_id"), gramsOf(col("ws")).as("gb"))
           .localCheckpoint(true))
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
           .where((col("doc_id") % 7).isin(2L, 4L))
         val sw = stream.select(col("doc_id"), col("text"),
           Text.canonicalUrlCol(Text.messyUrlCol).as("canon"),
@@ -2741,17 +2731,16 @@ object Dedup {
             size(col("ga")).as("na"), size(col("gb")).as("nb"))
           .where(col("ni") / (col("na") + col("nb") - col("ni")) >= 0.8)
           .select(col("doc_id"), lit(0).as("u"), lit(0).as("e"), lit(1).as("n"))
-        Events.runToAppendSink(s, "cascade_stream_sink_",
-            keyed.unionByName(near))
-          .groupBy(col("doc_id"))
-          .agg(max(col("u")).as("u"), max(col("e")).as("e"), max(col("n")).as("n"))
-          .select(col("doc_id"),
-            when(col("u") === 1, lit("url"))
-              .when(col("e") === 1, lit("exact"))
-              .when(col("n") === 1, lit("neardup"))
-              .otherwise(lit("kept")).as("stage"))
-          .orderBy(col("doc_id"))
+        keyed.unionByName(near)
       }
+        .groupBy(col("doc_id"))
+        .agg(max(col("u")).as("u"), max(col("e")).as("e"), max(col("n")).as("n"))
+        .select(col("doc_id"),
+          when(col("u") === 1, lit("url"))
+            .when(col("e") === 1, lit("exact"))
+            .when(col("n") === 1, lit("neardup"))
+            .otherwise(lit("kept")).as("stage"))
+        .orderBy(col("doc_id"))
     },
 
     // D32 gate: the stream verdicts must equal the batch replay of the

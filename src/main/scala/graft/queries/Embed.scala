@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core.Tables
 
@@ -56,11 +57,16 @@ object Embed {
   /** Principal components kept by the gated projection (of d=64). */
   private val P = 8
 
-  /** Kilo-quantized (vec_id, q: array<long>) view of the embeddings. */
-  def quantized(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "embeddings").select(col("vec_id"),
+  /** Kilo-quantized (vec_id, q: array<long>) view of an embeddings
+    * frame, batch or stream.
+    */
+  def quantized(e: DataFrame): DataFrame =
+    e.select(col("vec_id"),
       transform(col("embedding"),
         v => floor(v.cast("double") * 1000).cast("long")).as("q"))
+
+  def quantized(s: SparkSession, dir: String): DataFrame =
+    quantized(Tables(s, dir, "embeddings"))
 
   /** C53 core over any (vec_id, embedding, label) frame: kilo-quantize,
     * per-label integer centroid-sum vector (bounded, broadcasts), and
@@ -94,7 +100,7 @@ object Embed {
 
   /** The τ=0.05 square-free decision per vector — a stateless per-row
     * projection once the bounded centroid table broadcasts (works
-    * identically over a batch frame and a readStream source).
+    * identically over a batch frame and a file stream source).
     */
   private[graft] def embOutlierScore(x: DataFrame, cent: DataFrame): DataFrame =
     x.join(broadcast(cent), Seq("label"))
@@ -206,6 +212,19 @@ object Embed {
       it += 1
     }
     (v, sd, n)
+  }
+
+  /** C40c projection of quantized rows `q` (batch or stream) onto the
+    * integer direction fitted from the corpus moments:
+    * pc0 = n·⟨q,v⟩ − ⟨sd,v⟩.
+    */
+  private def pcaIntProject(s: SparkSession, dir: String, q: DataFrame): DataFrame = {
+    val (v, sd, n) = pcaIntPower(moments(quantized(s, dir)).collect())
+    val svdot = v.indices.foldLeft(0L)((a, i) => a + sd(i) * v(i))
+    q.select(col("vec_id"),
+      (lit(n) * aggregate(
+        zip_with(col("q"), typedLit(v.toSeq), (a, b) => a * b),
+        lit(0L), (acc, x) => acc + x) - lit(svdot)).as("pc0"))
   }
 
   /** C40c oracle: the moment CTEs of emb_covariance, the integer
@@ -483,13 +502,7 @@ object Embed {
     // corpus is touched by exactly two map-side-combinable passes
     // (moments, projection); the iteration runs on d² numbers.
     Q("emb_pca_project_int", pcaIntSql) { (s, dir) =>
-      val (v, sd, n) = pcaIntPower(moments(quantized(s, dir)).collect())
-      val svdot = v.indices.foldLeft(0L)((a, i) => a + sd(i) * v(i))
-      quantized(s, dir).select(col("vec_id"),
-          (lit(n) * aggregate(
-            zip_with(col("q"), typedLit(v.toSeq), (a, b) => a * b),
-            lit(0L), (acc, x) => acc + x) - lit(svdot)).as("pc0"))
-        .orderBy(col("vec_id"))
+      pcaIntProject(s, dir, quantized(s, dir)).orderBy(col("vec_id"))
     },
 
     // D34 (r12): C40c at INGEST — the integer projection with a FROZEN
@@ -503,23 +516,9 @@ object Embed {
     // rows+schema+hash driver-checked batch/stream parity, the D33
     // pattern on the PCA family.
     Q("emb_pca_int_stream", pcaIntSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val (v, sd, n) = pcaIntPower(moments(quantized(s, dir)).collect())
-        val svdot = v.indices.foldLeft(0L)((a, i) => a + sd(i) * v(i))
-        val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
-        val q = stream.select(col("vec_id"),
-          transform(col("embedding"),
-            x => floor(x.cast("double") * 1000).cast("long")).as("q"))
-        Events.runToAppendSink(s, "pcai_sink_",
-            q.select(col("vec_id"),
-              (lit(n) * aggregate(
-                zip_with(col("q"), typedLit(v.toSeq), (a, b) => a * b),
-                lit(0L), (acc, x) => acc + x) - lit(svdot)).as("pc0")))
-          .orderBy(col("vec_id"))
-      }
+      Events.runStream(s, OutputMode.Append) {
+        pcaIntProject(s, dir, quantized(Events.streamOf(s, dir, "embeddings")))
+      }.orderBy(col("vec_id"))
     },
 
     // D25 (r9): C40b at INGEST — dimensionality reduction with a
@@ -532,44 +531,25 @@ object Embed {
     // stream ≡ batch projection bitwise (same literals, same kernel,
     // same per-row arithmetic — any drift is a real bug).
     Q.noOracle("emb_pca_stream") { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val m = pcaFit(s, dir, P)
-        val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
-        val q = stream.select(col("vec_id"),
-          transform(col("embedding"),
-            v => floor(v.cast("double") * 1000).cast("long")).as("q"))
-        Events.runToAppendSink(s, "pca_sink_", pcaProject(s, q, m))
-          .orderBy(col("vec_id"))
-      }
+      Events.runStream(s, OutputMode.Append) {
+        pcaProject(s, quantized(Events.streamOf(s, dir, "embeddings")), pcaFit(s, dir, P))
+      }.orderBy(col("vec_id"))
     },
 
-    // Driver gate for D25 (WHERE 1=0 oracle): the streamed projection
-    // must match the batch projection BITWISE on every vec_id (null-
-    // safe compare — a row missing on either side is also a violation).
+    // Driver gate for D25 (WHERE 1=0 oracle): the shipped stream arm's
+    // projection must match the batch projection BITWISE on every vec_id
+    // (null-safe compare — a row missing on either side is also a
+    // violation).
     Q("inv_pca_stream_parity",
       """SELECT CAST(NULL AS BIGINT) AS vec_id FROM embeddings WHERE 1=0""") { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val m = pcaFit(s, dir, P)
-        val batch = pcaProject(s, quantized(s, dir), m)
-        val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
-        val q = stream.select(col("vec_id"),
-          transform(col("embedding"),
-            v => floor(v.cast("double") * 1000).cast("long")).as("q"))
-        val sr = (0 until P).foldLeft(
-          Events.runToAppendSink(s, "pcap_sink_", pcaProject(s, q, m))) {
-          (df, j) => df.withColumnRenamed(s"pc$j", s"spc$j")
-        }
-        val mismatch = (0 until P)
-          .map(j => !(col(s"pc$j") <=> col(s"spc$j"))).reduce(_ || _)
-        batch.join(sr, Seq("vec_id"), "full_outer")
-          .where(mismatch).select(col("vec_id")).orderBy(col("vec_id"))
+      val batch = pcaProject(s, quantized(s, dir), pcaFit(s, dir, P))
+      val sr = (0 until P).foldLeft(graft.SparkEntry.queries("emb_pca_stream")(s, dir)) {
+        (df, j) => df.withColumnRenamed(s"pc$j", s"spc$j")
       }
+      val mismatch = (0 until P)
+        .map(j => !(col(s"pc$j") <=> col(s"spc$j"))).reduce(_ || _)
+      batch.join(sr, Seq("vec_id"), "full_outer")
+        .where(mismatch).select(col("vec_id")).orderBy(col("vec_id"))
     },
 
     // Driver gate for C40b (WHERE 1=0 oracle): (a) basis orthonormality
@@ -641,16 +621,12 @@ object Embed {
     // model instead of k-means centroids). Gated by the SAME oracle as
     // batch C53 — driver-checked batch/stream parity.
     Q("emb_outlier_stream", embOutlierSql) { (s, dir) =>
-      graft.queries.Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Append) {
         val cent = embCentroids(embQuantLabel(Tables(s, dir, "embeddings")))
-        val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
-        graft.queries.Events.runToAppendSink(s, "outlier_sink_",
-            embOutlierScore(embQuantLabel(stream), cent))
-          .orderBy(col("vec_id"))
+        val stream = Events.streamOf(s, dir, "embeddings")
+        embOutlierScore(embQuantLabel(stream), cent)
       }
+        .orderBy(col("vec_id"))
     },
 
     // C41: int8 scalar quantization + exact reconstruction-error

@@ -1,7 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.core.Tables
 
@@ -20,32 +22,22 @@ object Events {
 
   private val byUserTime = Window.partitionBy(col("user_id")).orderBy(col("ts"))
 
-  /** Shared harness of the streaming gate queries: events file stream →
-    * caller's aggregation → complete-mode memory sink run to completion
-    * (AvailableNow), returning the sink table DETACHED (localCheckpoint)
-    * with the sink dropped — complete-mode memory tables otherwise pin
-    * their result in the driver for the session's lifetime. One
-    * implementation so that invariant can't be half-copied. The
-    * nanosAsLong conf is needed just to READ the nanos-typed schema;
-    * `ts` is rebuilt as a µs timestamp and pruned away by queries that
-    * don't select it.
+  /** The file stream of one table under `dir`, by name (`documents`,
+    * `embeddings`, `events`): the ONE place a gate's stream source is
+    * built, so a fix to a source gotcha cannot miss a copy. The file
+    * source wants a DIRECTORY, so a glob filter narrows it to the table.
+    * `events` needs the nanosAsLong conf just to READ its nanos-typed
+    * schema, and gets `ts` rebuilt as a µs timestamp (pruned away by
+    * gates that don't select it).
     */
-  /** The ONE place the events file-stream source is built (nanos conf,
-    * schema read, directory glob, µs-timestamp rebuild): every streaming
-    * gate — single-source complete-mode sinks and the two-source q28s
-    * join alike — must construct its stream(s) through this factory, so
-    * a fix to any source gotcha can't miss a copy.
-    */
-  private def eventsStreamSource(
-      s: org.apache.spark.sql.SparkSession, dir: String): () => org.apache.spark.sql.DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    // the file streaming source wants a DIRECTORY; narrow it to the
-    // events table with a glob filter
-    () => Tables.normalizeTs(
-      s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+  private[queries] def streamOf(s: SparkSession, dir: String, table: String): DataFrame = {
+    val events = table == "events"
+    if (events) s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema = s.read.parquet(s"$dir/$table.parquet").schema
+    val raw = s.readStream.schema(schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
+    if (events) Tables.normalizeTs(raw) else raw
   }
 
   /** Stateful streaming ops instantiate one state store per shuffle
@@ -53,10 +45,10 @@ object Events {
     * stores (checkpoint dirs, commit files, provider instances) for a
     * stream these gates feed ~10k events — pure overhead. Production
     * streaming jobs size shuffle partitions per query; these gates run
-    * theirs at 8 and restore the session setting after (the gates are in
-    * Bench's session-mutating set and run last/sequentially).
+    * theirs at 8 and restore the session setting after (Bench runs every
+    * arm that starts a stream after its pure arms).
     */
-  private[queries] def withStreamPartitions[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
+  private def withStreamPartitions[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     // min, not a flat 8: a session already below 8 (the local[4] spec
@@ -66,30 +58,29 @@ object Events {
     try body finally s.conf.set(key, prev)
   }
 
-  /** Run an already-built streaming DataFrame to completion and return
-    * the result DETACHED (localCheckpoint). The sink is foreachBatch,
-    * NOT a memory sink: a memory sink collects every output row into
-    * the DRIVER (then the gate re-scans it out of driver memory) —
-    * exactly the driver-bound shape these gates exist to avoid at
-    * 100 TB. foreachBatch checkpoints each batch's rows where they
-    * already live (executor-cached blocks), so the result never rides
-    * through the driver; memory-sink MODE semantics are reproduced at
-    * the batch grain — complete replaces (keep the LAST batch's full
-    * result), update/append accumulate (union every batch's rows). The
-    * ONE implementation of the run/detach plumbing; the public
-    * mode-specific names are thin wrappers so the invariant can't
-    * drift between copies.
+  /** Build a gate's streaming frame (its static probe tables included)
+    * under the gate's partition count, run it to completion
+    * (AvailableNow) in `mode`, and return the result DETACHED
+    * (localCheckpoint). The sink is foreachBatch, NOT a memory sink: a
+    * memory sink collects every output row into the DRIVER (then the
+    * gate re-scans it out of driver memory) — exactly the driver-bound
+    * shape these gates exist to avoid at 100 TB. foreachBatch
+    * checkpoints each batch's rows where they already live
+    * (executor-cached blocks), so the result never rides through the
+    * driver; memory-sink MODE semantics are reproduced at the batch
+    * grain — complete replaces (keep the LAST batch's full result),
+    * update/append accumulate (union every batch's rows). Every stream
+    * gate runs through here.
     */
-  private def runToSink(
-      s: org.apache.spark.sql.SparkSession, sinkPrefix: String,
-      streamed: org.apache.spark.sql.DataFrame,
-      mode: org.apache.spark.sql.streaming.OutputMode): org.apache.spark.sql.DataFrame = {
-    val complete = mode == org.apache.spark.sql.streaming.OutputMode.Complete
-    val batches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+  private[queries] def runStream(s: SparkSession, mode: OutputMode)(
+      build: => DataFrame): DataFrame = withStreamPartitions(s) {
+    val streamed = build
+    val complete = mode == OutputMode.Complete
+    val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val q = streamed.writeStream
       .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (df: Dataset[Row], _: Long) =>
         // AvailableNow runs foreachBatch on the driver's stream thread
         // sequentially — the buffer needs no synchronization. Complete
         // mode re-emits the FULL result each batch, so earlier batches'
@@ -108,42 +99,7 @@ object Events {
     // frame on the streamed plan's schema.
     batches.foreach(Pinned.track)
     batches.reduceOption(_ unionAll _)
-      .getOrElse(s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), streamed.schema))
-  }
-
-  /** Complete-mode [[runToSink]] — the generic core every complete-mode
-    * gate (events aggregations here, the documents dedup gate in
-    * [[Dedup]]) must go through.
-    */
-  private[queries] def runToCompleteSink(
-      s: org.apache.spark.sql.SparkSession, sinkPrefix: String,
-      streamed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    runToSink(s, sinkPrefix, streamed, org.apache.spark.sql.streaming.OutputMode.Complete)
-
-  /** Update-mode [[runToSink]] for custom-state operators
-    * (mapGroupsWithState emits one updated row per touched group per
-    * micro-batch; the sink accumulates updates and the caller's
-    * presentation pass reduces to final values).
-    */
-  private[queries] def runToUpdateSink(
-      s: org.apache.spark.sql.SparkSession, sinkPrefix: String,
-      streamed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    runToSink(s, sinkPrefix, streamed, org.apache.spark.sql.streaming.OutputMode.Update)
-
-  /** Append-mode twin of [[runToCompleteSink]] for STATELESS stream
-    * transforms (per-row scoring/assignment): no aggregation, so
-    * complete mode is unavailable and every input row appends once.
-    */
-  private[queries] def runToAppendSink(
-      s: org.apache.spark.sql.SparkSession, sinkPrefix: String,
-      streamed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    runToSink(s, sinkPrefix, streamed, org.apache.spark.sql.streaming.OutputMode.Append)
-
-  private def streamEventsToCompleteSink(
-      s: org.apache.spark.sql.SparkSession, dir: String, sinkPrefix: String)(
-      build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = withStreamPartitions(s) {
-    runToCompleteSink(s, sinkPrefix, build(eventsStreamSource(s, dir)()))
+      .getOrElse(s.createDataFrame(new java.util.ArrayList[Row](), streamed.schema))
   }
 
   val all: Seq[Q] = Seq(
@@ -327,8 +283,8 @@ object Events {
     },
 
     // D1-gate: the STREAMING form of q20, run to completion through
-    // Structured Streaming (AvailableNow trigger → complete-mode memory
-    // sink) and gated against the SAME DuckDB oracle as the batch query
+    // Structured Streaming (AvailableNow trigger → complete-mode sink)
+    // and gated against the SAME DuckDB oracle as the batch query
     // — batch/stream parity checked by the driver, not just a spec.
     Q("q20s_stream_window",
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00:00') AS hour_bucket,
@@ -339,8 +295,8 @@ object Events {
       // exact integer cents in the streaming state too (same Fixed
       // discipline as batch q20 — the oracles are twins and must stay
       // in lockstep)
-      streamEventsToCompleteSink(s, dir, "q20s_sink_") { src =>
-        src.groupBy(
+      runStream(s, OutputMode.Complete) {
+        streamOf(s, dir, "events").groupBy(
             date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:00:00").as("hour_bucket"),
             col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -349,7 +305,7 @@ object Events {
     },
 
     // D2-gate: STREAMING sessionization through Spark's session_window,
-    // run to completion (AvailableNow → complete-mode memory sink) and
+    // run to completion (AvailableNow → complete-mode sink) and
     // driver-gated like q20s. NOTE the deliberate semantic difference
     // from batch q21: session_window closes a session only when the next
     // event starts STRICTLY after previous-end (= prev ts + gap) — an
@@ -375,8 +331,8 @@ object Events {
         |  count(*) AS n_events, round(sum(value), 4) AS total_value
         |FROM s GROUP BY user_id, sid
         |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
-      streamEventsToCompleteSink(s, dir, "q21s_sink_") { src =>
-        src.select(col("user_id"), col("ts"), col("value"))
+      runStream(s, OutputMode.Complete) {
+        streamOf(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
           .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
           .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
           .select(col("user_id"), col("sw.start").as("session_start"),
@@ -397,8 +353,8 @@ object Events {
         |  count(*) AS n_events
         |FROM events GROUP BY event_type
         |ORDER BY event_type""".stripMargin) { (s, dir) =>
-      streamEventsToCompleteSink(s, dir, "q17s_sink_") { src =>
-        src.select(col("user_id"), col("event_type"))
+      runStream(s, OutputMode.Complete) {
+        streamOf(s, dir, "events").select(col("user_id"), col("event_type"))
           .groupBy(col("user_id"), col("event_type"))
           .agg(count(lit(1)).as("cnt"))
       }
@@ -467,44 +423,24 @@ object Events {
         |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
         |WHERE p.event_type = 'purchase'
         |GROUP BY p.event_id ORDER BY p.event_id""".stripMargin) { (s, dir) =>
-      val rollup = withStreamPartitions(s) {
-      val src = eventsStreamSource(s, dir)
-      val purchases = src().where(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "2 hours")
-      val clicks = src().where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-      val joined = purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") < col("p_ts"))
       // the join output is the raw PAIR SPACE — O(matched pairs), not a
-      // small aggregate like the other gates' sinks — so it goes to a
-      // parquet file sink (stays on executors), never a driver-memory
-      // sink, and the rollup reads it back as a distributed scan
-      val tmp = java.nio.file.Files.createTempDirectory("q28s-pairs").toString
-      val q = joined.writeStream.format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // explicit schema: a zero-match join commits no data files and
-      // schema inference would throw where the INNER oracle returns 0
-      // rows. The rollup (one small row per purchase) is detached
-      // eagerly so the O(pairs) sink + checkpoint can be deleted now
-      // instead of leaking a temp dir per invocation.
-      val rolled = s.read.schema(joined.schema).parquet(s"$tmp/out")
+      // small aggregate like the other gates' sinks — and the harness's
+      // sink keeps it on executors; the rollup is a batch scan of it
+      runStream(s, OutputMode.Append) {
+        val purchases = streamOf(s, dir, "events").where(col("event_type") === "purchase")
+          .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
+            col("ts").as("p_ts"))
+          .withWatermark("p_ts", "2 hours")
+        val clicks = streamOf(s, dir, "events").where(col("event_type") === "click")
+          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+          .withWatermark("c_ts", "2 hours")
+        purchases.join(clicks,
+          col("p_user") === col("c_user") &&
+            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+            col("c_ts") < col("p_ts"))
+      }
         .groupBy(col("p_id").as("event_id"))
         .agg(count(lit(1)).as("n_clicks"))
-        .localCheckpoint(true)
-        .transform(Pinned.track)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      rolled
-      }
-      rollup.orderBy(col("event_id"))
+        .orderBy(col("event_id"))
     })
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.media.Multimodal
 
@@ -244,16 +245,13 @@ object Media {
     // static LEFT ANTI join against the corpus phash index (stateless —
     // the static side is a probe table), one stateful groupBy
     // collapsing batch-internal collisions (state = one row per
-    // surviving hash), AvailableNow → complete memory sink. Gated by
+    // surviving hash), AvailableNow → complete-mode sink. Gated by
     // the SAME oracle as the batch form — driver-checked batch/stream
     // parity, the D6 discipline on the perceptual key.
     Q("media_phash_stream", phashIncrSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Complete) {
         import s.implicits._
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
           .where(pmod(col("doc_id"), lit(7)) === 3)
           .select(col("doc_id"), col("text"), col("n_chars"))
           .as[(Long, String, Long)]
@@ -262,14 +260,13 @@ object Media {
             Multimodal.mediaFromDocuments(s, dir)
               .where(pmod(col("media_id"), lit(7)) =!= 3))
           .toDF().select(col("phash")).distinct()
-        val kept = Multimodal.dHash(stream).toDF()
+        Multimodal.dHash(stream).toDF()
           .join(idx, Seq("phash"), "left_anti")
           .groupBy(col("phash"))
           .agg(min(col("media_id")).as("media_id"), count(lit(1)).as("n_batch_dups"))
-        Events.runToCompleteSink(s, "phash_stream_sink_", kept)
-          .select(col("media_id"), col("n_batch_dups"))
-          .orderBy(col("media_id"))
       }
+        .select(col("media_id"), col("n_batch_dups"))
+        .orderBy(col("media_id"))
     },
 
     // C13f (r9): perceptual NEAR-dup pairs — hamming distance ≤ 3 on
@@ -386,16 +383,13 @@ object Media {
     // join against the corpus signature index (stateless — the static
     // side is a probe table), one stateful groupBy collapsing
     // batch-internal collisions (state = one row per surviving
-    // signature), AvailableNow → complete memory sink. Gated by the
+    // signature), AvailableNow → complete-mode sink. Gated by the
     // SAME oracle as C13j — driver-checked batch/stream parity, the D8
     // discipline on the conjunction key.
     Q("media_text_pair_stream", pairIncrSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Complete) {
         import s.implicits._
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
           .where(pmod(col("doc_id"), lit(7)) === 3)
           .select(col("doc_id"), col("text"), col("n_chars"))
           .as[(Long, String, Long)]
@@ -403,14 +397,13 @@ object Media {
         val idx = pairSignatures(
             Multimodal.pairsFromDocuments(s, dir).filter(p => p.pair_id % 7 != 3))
           .select(col("phash"), col("cdig")).distinct()
-        val kept = pairSignatures(stream)
+        pairSignatures(stream)
           .join(idx, Seq("phash", "cdig"), "left_anti")
           .groupBy(col("phash"), col("cdig"))
           .agg(min(col("pair_id")).as("pair_id"), count(lit(1)).as("n_batch_dups"))
-        Events.runToCompleteSink(s, "pair_stream_sink_", kept)
-          .select(col("pair_id"), col("n_batch_dups"))
-          .orderBy(col("pair_id"))
       }
+        .select(col("pair_id"), col("n_batch_dups"))
+        .orderBy(col("pair_id"))
     },
 
     // C13h (r10): image HASH-EMBED — the image analog of C61

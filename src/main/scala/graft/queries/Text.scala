@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core.Tables
 
@@ -937,6 +938,22 @@ object Text {
     * score and the pipeline's cutoff can never drift. See the C38 Q
     * below for the plan-shape reasoning (single bgc exchange, reuse).
     */
+  /** Dense word-id dictionary (w, wid) over the distinct tokens of the
+    * one string column of `words`, checkpointed. The ids number the
+    * checkpointed distinct tokens by zipWithIndex, so no single-partition
+    * window sorts the vocabulary; the LM arms need only injectivity (ids
+    * never reach their output).
+    */
+  private def wordIds(words: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val tokens = Pinned.track(words.distinct().localCheckpoint(true))
+    val ids = tokens.rdd.zipWithIndex.map { case (r, i) => Row(r.getString(0), i.toInt + 1) }
+    Pinned.track(words.sparkSession.createDataFrame(ids, StructType(Seq(
+        StructField("w", StringType), StructField("wid", IntegerType, nullable = false))))
+      .localCheckpoint(true))
+  }
+
   /** The shared per-doc bigram-count frame (doc_id, w1, w2, nd) — THE
     * one corpus-scale aggregation both LM scorers (C38 add-free MLE,
     * C38b Kneser-Ney) derive everything from, so the tokenize+explode
@@ -1289,7 +1306,7 @@ object Text {
       |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** C55 core: per-row explode+slice chunking — a pure projection
-    * (works identically over a batch frame and a readStream source).
+    * (works identically over a batch frame and a file stream source).
     */
   private[graft] def chunkSplit(d: DataFrame): DataFrame =
     d.select(col("doc_id"), words.as("ws"), size(words).as("n"))
@@ -1473,7 +1490,7 @@ object Text {
   }
 
   /** C52 core: per-row taxonomy argmax — a pure projection (works
-    * identically over a batch frame and a readStream source).
+    * identically over a batch frame and a file stream source).
     */
   private[graft] def topicTag(d: DataFrame): DataFrame = {
     val (topic, m) = topicExprs
@@ -2091,14 +2108,9 @@ object Text {
     // rule, the gate rule, and the model's teacher are one definition.
     // Same oracle as batch C9 (driver-checked parity), append mode.
     Q("text_langid_stream", langidSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        Events.runToAppendSink(s, "langid_sink_", langidFrame(stream))
-          .orderBy(col("doc_id"))
-      }
+      Events.runStream(s, OutputMode.Append)(
+          langidFrame(Events.streamOf(s, dir, "documents")))
+        .orderBy(col("doc_id"))
     },
 
     // C71 (r9): langid CONFUSION matrix — the router-validation table
@@ -2207,14 +2219,9 @@ object Text {
     // projection sharing gopherFrame verbatim with batch C60 and C66's
     // ablation — SAME oracle as C60, append mode, no state store.
     Q("text_gopher_rules_stream", gopherSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        Events.runToAppendSink(s, "gopher_sink_", gopherFrame(stream))
-          .orderBy(col("doc_id"))
-      }
+      Events.runStream(s, OutputMode.Append)(
+          gopherFrame(Events.streamOf(s, dir, "documents")))
+        .orderBy(col("doc_id"))
     },
 
     // C66 (r9): filter ABLATION report — the attribution matrix dataset
@@ -2439,19 +2446,15 @@ object Text {
         |    THEN 1 ELSE 0 END AS keep FROM c4)
         |SELECT doc_id, url, canon FROM k WHERE keep = 1
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+      Events.runStream(s, OutputMode.Complete) {
+        val stream = Events.streamOf(s, dir, "documents")
           .select(col("doc_id"), messyUrlCol.as("url"))
           .withColumn("canon", canonicalUrlCol(col("url")))
-        val kept = stream.groupBy(col("canon"))
+        stream.groupBy(col("canon"))
           .agg(min(col("doc_id")).as("doc_id"))
-        Events.runToCompleteSink(s, "urldedup_sink_", kept)
-          .select(col("doc_id"), messyUrlCol.as("url"), col("canon"))
-          .orderBy(col("doc_id"))
       }
+        .select(col("doc_id"), messyUrlCol.as("url"), col("canon"))
+        .orderBy(col("doc_id"))
     },
 
     // C11: token counting — whitespace tokens, regex word tokens, and a
@@ -3424,7 +3427,7 @@ object Text {
     // decidable ⇒ FULL rows+schema+hash gate (pretrainIngestSql).
     Q("pipeline_pretrain_ingest", pretrainIngestSql) { (s, dir) =>
       Dedup.ensureLocalCkptDir(s)
-      Events.withStreamPartitions(s) {
+      val agg = Events.runStream(s, OutputMode.Append) {
         val d = docs(s, dir)
         val isIncr = (col("doc_id") % 7).isin(2L, 4L)
         val retained = pretrainCascade(d.where(!isIncr)).retained
@@ -3461,10 +3464,7 @@ object Text {
         val retB = Await.result(fB, Duration.Inf)
         val retG = Await.result(fG, Duration.Inf)
         val bprobe = Await.result(fP, Duration.Inf)
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
           .where((col("doc_id") % 7).isin(2L, 4L))
         val fq = stream.select(col("doc_id"), col("text"),
             size(words).as("n_words"),
@@ -3513,30 +3513,29 @@ object Text {
           .join(broadcast(bprobe), Seq("h"), "left_semi")
           .select(col("doc_id"), lit(0L).as("qbp"), lit(0).as("nw"),
             lit(0).as("u"), lit(0).as("e"), lit(0).as("n"), col("pos"))
-        val agg = Events.runToAppendSink(s, "pretrain_ingest_sink_",
-            base.unionByName(near).unionByName(hits))
-          .groupBy(col("doc_id")).agg(
-            max(col("qbp")).as("qbp"), max(col("nw")).as("nw"),
-            max(col("u")).as("u"), max(col("e")).as("e"), max(col("n")).as("n"),
-            collect_list(when(col("pos") >= 0, col("pos"))).as("ps"))
-        val cov = Dedup.spanFold(agg.select(col("doc_id"), col("nw").as("nt"),
-            size(col("ps")).as("dup_gram_hits"), col("ps")), 4)
-          .select(col("doc_id"), col("covered"))
-        agg.join(cov, Seq("doc_id"))
-          .select(col("doc_id"),
-            when(col("doc_id") % 20 === 0, lit("benchmark"))
-              .when(col("qbp") < 5000, lit("quality"))
-              .when(col("u") === 1, lit("url"))
-              .when(col("e") === 1, lit("exact"))
-              .when(col("n") === 1, lit("neardup"))
-              .when(col("nw").cast("long") - col("covered") === 0, lit("contaminated"))
-              .otherwise(lit("kept")).as("stage"),
-            col("nw"), col("covered"))
-          .select(col("doc_id"), col("stage"),
-            when(col("stage").isin("contaminated", "kept"),
-              col("nw").cast("long") - col("covered")).as("clean_tokens"))
-          .orderBy(col("doc_id"))
+        base.unionByName(near).unionByName(hits)
       }
+        .groupBy(col("doc_id")).agg(
+          max(col("qbp")).as("qbp"), max(col("nw")).as("nw"),
+          max(col("u")).as("u"), max(col("e")).as("e"), max(col("n")).as("n"),
+          collect_list(when(col("pos") >= 0, col("pos"))).as("ps"))
+      val cov = Dedup.spanFold(agg.select(col("doc_id"), col("nw").as("nt"),
+          size(col("ps")).as("dup_gram_hits"), col("ps")), 4)
+        .select(col("doc_id"), col("covered"))
+      agg.join(cov, Seq("doc_id"))
+        .select(col("doc_id"),
+          when(col("doc_id") % 20 === 0, lit("benchmark"))
+            .when(col("qbp") < 5000, lit("quality"))
+            .when(col("u") === 1, lit("url"))
+            .when(col("e") === 1, lit("exact"))
+            .when(col("n") === 1, lit("neardup"))
+            .when(col("nw").cast("long") - col("covered") === 0, lit("contaminated"))
+            .otherwise(lit("kept")).as("stage"),
+          col("nw"), col("covered"))
+        .select(col("doc_id"), col("stage"),
+          when(col("stage").isin("contaminated", "kept"),
+            col("nw").cast("long") - col("covered")).as("clean_tokens"))
+        .orderBy(col("doc_id"))
     },
 
     // C18-stream: the SAME curation pipeline run at INGEST time — the
@@ -3575,32 +3574,28 @@ object Text {
         |  lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
         |FROM kept WHERE rn = 1
         |GROUP BY 1, lang ORDER BY split, lang""".stripMargin) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+      Events.runStream(s, OutputMode.Complete) {
+        val stream = Events.streamOf(s, dir, "documents")
         val f = stream.select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
           size(words).as("n_words"),
           size(array_distinct(words)).as("n_distinct"),
           size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"))
-        val kept = f.withColumn("quality_bp",
+        f.withColumn("quality_bp",
             (least(col("n_words"), lit(100)) * 40
               + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
               + expr("(n_distinct * 3000) div n_words")).cast("long"))
           .where(col("quality_bp") >= 5000)
           .groupBy(unhex(sha2(Dedup.normText, 256)).as("h"))
           .agg(min(struct(col("doc_id"), col("lang"), col("n_chars"))).as("keep"))
-        Events.runToCompleteSink(s, "curate_sink_", kept)
-          .select(
-            when(col("keep.doc_id") % 10 < 8, lit("train"))
-              .when(col("keep.doc_id") % 10 === 8, lit("val"))
-              .otherwise(lit("test")).as("split"),
-            col("keep.lang").as("lang"), col("keep.n_chars").as("n_chars"))
-          .groupBy(col("split"), col("lang"))
-          .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-          .orderBy(col("split"), col("lang"))
       }
+        .select(
+          when(col("keep.doc_id") % 10 < 8, lit("train"))
+            .when(col("keep.doc_id") % 10 === 8, lit("val"))
+            .otherwise(lit("test")).as("split"),
+          col("keep.lang").as("lang"), col("keep.n_chars").as("n_chars"))
+        .groupBy(col("split"), col("lang"))
+        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
+        .orderBy(col("split"), col("lang"))
     },
 
     // C18c: the corpus DATA CARD — the per-release statistics report a
@@ -3705,19 +3700,16 @@ object Text {
     // the smallest cap ids per domain from the sink. Gated by the SAME
     // oracle as batch C48 — driver-checked batch/stream parity.
     Q("text_domain_filter_stream", domainFilterSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Update) {
         val sess = s
         import sess.implicits._
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
         val block = BlockedDomains.toDF("domain")
         val d = stream.select(col("doc_id"), domainCol.as("domain"))
           .join(broadcast(block), Seq("domain"), "left_anti")
           // using-join reorders the key column first; pin (id, domain)
           .select(col("doc_id"), col("domain"))
-        val capped = d.as[(Long, String)].groupByKey(_._2)
+        d.as[(Long, String)].groupByKey(_._2)
           .mapGroupsWithState[Seq[Long], (String, Seq[Long])] {
             (domain: String, rows: Iterator[(Long, String)],
              state: org.apache.spark.sql.streaming.GroupState[Seq[Long]]) =>
@@ -3727,16 +3719,15 @@ object Text {
               (domain, next)
           }
           .toDF("domain", "keep")
-        Events.runToUpdateSink(s, "domain_sink_", capped)
-          .select(col("domain"), explode(col("keep")).as("doc_id"))
-          .distinct()
-          .withColumn("rk", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("domain")).orderBy(col("doc_id"))))
-          .where(col("rk") <= DomainCap)
-          .select(col("doc_id"), col("domain"))
-          .orderBy(col("doc_id"))
       }
+        .select(col("domain"), explode(col("keep")).as("doc_id"))
+        .distinct()
+        .withColumn("rk", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("domain")).orderBy(col("doc_id"))))
+        .where(col("rk") <= DomainCap)
+        .select(col("doc_id"), col("domain"))
+        .orderBy(col("doc_id"))
     },
 
     // C82 (r11): per-domain QUOTA CAP — the anti-spam curation rule
@@ -3915,14 +3906,11 @@ object Text {
     // domain, never corpus-scale. Gated by the SAME oracle as batch C54
     // (driver-checked batch/stream parity).
     Q("pipeline_curate_web_stream", curateWebSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      val W = org.apache.spark.sql.expressions.Window
+      val admitted = Events.runStream(s, OutputMode.Update) {
         val sess = s
         import sess.implicits._
-        val W = org.apache.spark.sql.expressions.Window
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
         val base = stream.select(col("doc_id"), col("lang"), col("n_chars"),
           domainCol.as("domain"),
           size(words).as("n_words"),
@@ -3938,7 +3926,7 @@ object Text {
           .select(col("domain"), col("doc_id"), col("lang"),
             col("n_chars"), col("qbp"), col("hx"))
           .as[(String, Long, String, Long, Long, String)]
-        val capped = f.groupByKey(_._1)
+        f.groupByKey(_._1)
           .mapGroupsWithState[Seq[(Long, String, Long, Long, String)],
             (String, Seq[(Long, String, Long, Long, String)])] {
             (domain: String, rows: Iterator[(String, Long, String, Long, Long, String)],
@@ -3950,31 +3938,30 @@ object Text {
               (domain, next)
           }
           .toDF("domain", "keep")
-        val admitted = Events.runToUpdateSink(s, "web_sink_", capped)
-          .select(col("domain"), explode(col("keep")).as("r"))
-          .select(col("domain"), col("r._1").as("doc_id"), col("r._2").as("lang"),
-            col("r._3").as("n_chars"), col("r._4").as("qbp"), col("r._5").as("hx"))
-          .distinct()
-          .withColumn("rk", row_number().over(
-            W.partitionBy(col("domain")).orderBy(col("doc_id"))))
-          .where(col("rk") <= DomainCap).drop("rk")
-        val repKeep = Dedup.adaptiveBuild(
-          domainReputation(docs(s, dir))
-            .where(col("verdict") === "keep").select(col("domain")))
-        val v2 = admitted.join(repKeep, Seq("domain"), "left_semi")
-          .where(col("qbp") >= 5000)
-        v2.withColumn("rn", row_number().over(
-            W.partitionBy(col("hx")).orderBy(col("doc_id"))))
-          .where(col("rn") === 1)
-          .select(
-            when(col("doc_id") % 10 < 8, lit("train"))
-              .when(col("doc_id") % 10 === 8, lit("val"))
-              .otherwise(lit("test")).as("split"),
-            col("lang"), col("n_chars"))
-          .groupBy(col("split"), col("lang"))
-          .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-          .orderBy(col("split"), col("lang"))
       }
+        .select(col("domain"), explode(col("keep")).as("r"))
+        .select(col("domain"), col("r._1").as("doc_id"), col("r._2").as("lang"),
+          col("r._3").as("n_chars"), col("r._4").as("qbp"), col("r._5").as("hx"))
+        .distinct()
+        .withColumn("rk", row_number().over(
+          W.partitionBy(col("domain")).orderBy(col("doc_id"))))
+        .where(col("rk") <= DomainCap).drop("rk")
+      val repKeep = Dedup.adaptiveBuild(
+        domainReputation(docs(s, dir))
+          .where(col("verdict") === "keep").select(col("domain")))
+      val v2 = admitted.join(repKeep, Seq("domain"), "left_semi")
+        .where(col("qbp") >= 5000)
+      v2.withColumn("rn", row_number().over(
+          W.partitionBy(col("hx")).orderBy(col("doc_id"))))
+        .where(col("rn") === 1)
+        .select(
+          when(col("doc_id") % 10 < 8, lit("train"))
+            .when(col("doc_id") % 10 === 8, lit("val"))
+            .otherwise(lit("test")).as("split"),
+          col("lang"), col("n_chars"))
+        .groupBy(col("split"), col("lang"))
+        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
+        .orderBy(col("split"), col("lang"))
     },
 
     // C52 (r9): TOPIC TAGGING — broadcast keyword-taxonomy
@@ -3999,14 +3986,9 @@ object Text {
     // append mode over a pure projection). Gated by the SAME oracle as
     // batch C52 — driver-checked batch/stream parity.
     Q("text_topic_tag_stream", topicTagSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        Events.runToAppendSink(s, "topic_sink_", topicTag(stream))
-          .orderBy(col("doc_id"))
-      }
+      Events.runStream(s, OutputMode.Append)(
+          topicTag(Events.streamOf(s, dir, "documents")))
+        .orderBy(col("doc_id"))
     },
 
     // C57 (r9): TOPIC-balanced mixture — C42's temperature allocation
@@ -4132,21 +4114,17 @@ object Text {
     // D24 corpus-level-artifacts-batch-side stance). SAME oracle as
     // batch C64 — driver-checked parity of the whole monitoring table.
     Q("corpus_drift_stream", corpusDriftSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+      val q1 = Events.runStream(s, OutputMode.Complete) {
+        val stream = Events.streamOf(s, dir, "documents")
           .where(col("doc_id") % 7 =!= 2)
           .select(col("lang"), col("text"))
-        val q1 = Events.runToCompleteSink(s, "drift_sink_",
-          driftStats(stream, "n1", "t1", "sq1"))
-        val d = docs(s, dir)
-        val q0 = driftStats(d.where(col("doc_id") % 5 =!= 4).select(col("lang"),
-          when(col("doc_id") % 11 === 3, concat(col("text"), lit(" v0")))
-            .otherwise(col("text")).as("text")), "n0", "t0", "sq0")
-        driftFinish(q0, q1)
+        driftStats(stream, "n1", "t1", "sq1")
       }
+      val d = docs(s, dir)
+      val q0 = driftStats(d.where(col("doc_id") % 5 =!= 4).select(col("lang"),
+        when(col("doc_id") % 11 === 3, concat(col("text"), lit(" v0")))
+          .otherwise(col("text")).as("text")), "n0", "t0", "sq0")
+      driftFinish(q0, q1)
     },
 
 
@@ -4192,14 +4170,9 @@ object Text {
     // append mode; shares repetitionFrame verbatim with batch C20 and
     // is gated by the SAME oracle (driver-checked parity).
     Q("text_repetition_stream", repetitionSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        Events.runToAppendSink(s, "rep_sink_", repetitionFrame(stream))
-          .orderBy(col("doc_id"))
-      }
+      Events.runStream(s, OutputMode.Append)(
+          repetitionFrame(Events.streamOf(s, dir, "documents")))
+        .orderBy(col("doc_id"))
     },
 
     // C21: benchmark-contamination check — flag training documents whose
@@ -4290,28 +4263,24 @@ object Text {
     // SAME oracle as batch C43: driver-checked batch/stream parity, the
     // C30/D6 discipline.
     Q("text_decontaminate_stream", decontamSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+      Dedup.spanFold(Events.runStream(s, OutputMode.Complete) {
+        val stream = Events.streamOf(s, dir, "documents")
         val probe = Dedup.substringGrams(
             docs(s, dir).where(col("doc_id") % 20 === 0), 4)
           .select(col("h")).distinct()
-        val grouped = Dedup.substringGrams(stream.where(col("doc_id") % 20 =!= 0), 4)
+        Dedup.substringGrams(stream.where(col("doc_id") % 20 =!= 0), 4)
           .join(broadcast(probe), Seq("h"), "left_semi")
           .groupBy(col("doc_id"))
           .agg(first(col("n_tokens")).as("nt"),
             count(lit(1)).as("dup_gram_hits"),
             collect_list(col("pos")).as("ps"))
-        Dedup.spanFold(Events.runToCompleteSink(s, "decon_sink_", grouped), 4)
-          .select(col("doc_id"), col("n_tokens"),
-            col("dup_gram_hits").as("probe_hits"),
-            col("covered").as("removed"),
-            (col("n_tokens") - col("covered")).as("clean_tokens"),
-            col("dup_frac_bp").as("removed_bp"))
-          .orderBy(col("doc_id"))
-      }
+      }, 4)
+        .select(col("doc_id"), col("n_tokens"),
+          col("dup_gram_hits").as("probe_hits"),
+          col("covered").as("removed"),
+          (col("n_tokens") - col("covered")).as("clean_tokens"),
+          col("dup_frac_bp").as("removed_bp"))
+        .orderBy(col("doc_id"))
     },
 
     // C49 (r9): FUZZY decontamination — C21/C43 are exact n-gram
@@ -4484,27 +4453,23 @@ object Text {
     // SAME oracle as batch C80 (driver-checked batch/stream parity, the
     // D18 pattern).
     Q("pipeline_rag_assign_stream", ragIndexSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Append) {
         val chB = chunkSplit(docs(s, dir))
           .select((col("doc_id") * 4096 + col("chunk_id")).as("vec_id"),
             graft.functions.Kernels.featureHashVec(16)(split(col("chunk_text"), " ")).as("hv"))
         val (_, _, cents) = Cluster.fitOn(s,
           chB.select(col("vec_id"), transform(col("hv"), v => v + lit(32L)).as("q")))
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
         val chS = chunkSplit(stream)
           .select(col("doc_id"), col("chunk_id"),
             graft.functions.Kernels.featureHashVec(16)(split(col("chunk_text"), " ")).as("hv"))
           .select(col("doc_id"), col("chunk_id"),
             transform(col("hv"), v => v + lit(32L)).as("q"))
-        val assignedS = Cluster.assigned(s, Cluster.withDerived(s, chS), cents)
+        Cluster.assigned(s, Cluster.withDerived(s, chS), cents)
           .select(col("doc_id"), col("chunk_id"),
             col("cluster").cast("long").as("cluster"), col("dist"))
-        Events.runToAppendSink(s, "rag_assign_sink_", assignedS)
-          .orderBy(col("doc_id"), col("chunk_id"))
       }
+        .orderBy(col("doc_id"), col("chunk_id"))
     },
 
     // D18 (r9): C55 at INGEST — chunking as documents land (the shape a
@@ -4513,14 +4478,9 @@ object Text {
     // append mode — no watermark, no state store; gated by the SAME
     // oracle as batch C55 (driver-checked batch/stream parity).
     Q("text_chunk_split_stream", chunkSplitSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        Events.runToAppendSink(s, "chunk_sink_", chunkSplit(stream))
-          .orderBy(col("doc_id"), col("chunk_id"))
-      }
+      Events.runStream(s, OutputMode.Append)(
+          chunkSplit(Events.streamOf(s, dir, "documents")))
+        .orderBy(col("doc_id"), col("chunk_id"))
     },
 
     // C56 (r9): OOV-rate evaluation — per-document out-of-vocabulary
@@ -4561,24 +4521,20 @@ object Text {
     // size(filter(...)) per row — no join, no state store, append
     // mode. Gated by the SAME oracle as batch C56.
     Q("text_oov_rate_stream", oovRateSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Append) {
         val vocab = docs(s, dir).select(explode(words).as("t"))
           .groupBy(col("t")).agg(count(lit(1)).as("c"))
           .orderBy(col("c").desc, col("t").asc).limit(OovVocabK)
           .collect().map(_.getString(0)).toSeq
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val scored = stream.select(col("doc_id"),
+        val stream = Events.streamOf(s, dir, "documents")
+        stream.select(col("doc_id"),
             size(words).cast("long").as("n_words"),
             size(filter(words, w => !w.isin(vocab.map(lit(_)): _*)))
               .cast("long").as("n_oov"))
           .select(col("doc_id"), col("n_words"), col("n_oov"),
             expr("n_oov * 10000 div n_words").as("oov_bp"))
-        Events.runToAppendSink(s, "oov_sink_", scored)
-          .orderBy(col("doc_id"))
       }
+        .orderBy(col("doc_id"))
     },
 
     // C22: greedy sequence packing — fill 512-token bins with documents
@@ -4696,7 +4652,7 @@ object Text {
     // by doc_id, so replaying the corpus file reproduces batch C59
     // exactly — gated by the SAME oracle (driver-checked parity).
     Q("pipeline_tokenize_pack_stream", tokenizePackSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Append) {
         val sess = s
         import sess.implicits._
         val eos = TokPackVocabK + 1L
@@ -4706,11 +4662,8 @@ object Text {
           .orderBy(col("c").desc, col("w").asc).limit(TokPackVocabK)
           .collect().zipWithIndex
           .map { case (r, i) => r.getString(0) -> (i + 1L) }.toMap
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val packed = stream
+        val stream = Events.streamOf(s, dir, "documents")
+        stream
           .select(col("doc_id"), expr("doc_id div 100").as("shard"), words.as("ws"))
           .as[(Long, Long, Seq[String])]
           .groupByKey(_._2)
@@ -4735,9 +4688,8 @@ object Text {
               out.result().iterator
           }
           .toDF("shard", "block", "n_eos", "ids")
-        Events.runToAppendSink(s, "tokpack_sink_", packed)
-          .orderBy(col("shard"), col("block"))
       }
+        .orderBy(col("shard"), col("block"))
     },
 
     // C23: deterministic global shuffle — the reproducible corpus
@@ -4988,15 +4940,9 @@ object Text {
     // realization rule provably cannot drift between the nightly batch
     // and the ingest path.
     Q("text_mixture_apply_stream", mixtureApplySql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        Events.runToCompleteSink(s, "mixa_sink_",
-            mixtureApplied(stream, mixtureSchedule(docs(s, dir))))
-          .orderBy(col("source"), col("lang"))
-      }
+      Events.runStream(s, OutputMode.Complete)(
+          mixtureApplied(Events.streamOf(s, dir, "documents"), mixtureSchedule(docs(s, dir))))
+        .orderBy(col("source"), col("lang"))
     },
 
     // C26: corpus n-gram LM counts — the classic wordcount shape at
@@ -5270,11 +5216,7 @@ object Text {
       // word-id dictionary — the probe spine joins five count tables on
       // 1-3 word STRING keys; ids make every downstream key an int (see
       // text_lm_backoff for the injectivity argument and A/B evidence)
-      val dict = Pinned.track(
-        base.select(explode(ws).as("w")).distinct()
-          .withColumn("wid", row_number().over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("w"))))
-          .localCheckpoint(true))
+      val dict = wordIds(base.select(explode(ws).as("w")))
       def wid(slot: String, out: String) =
         broadcast(dict.select(col("w").as(slot), col("wid").as(out)))
       val tgc = base
@@ -5416,7 +5358,7 @@ object Text {
       // r14 OPT (VERDICT #2, guide §2.3 — shuffle fewer bytes): the
       // probe spine joins SEVEN count tables on 1-4 word STRING keys,
       // and every count-table groupBy shuffled those strings too. A
-      // dense word-id dictionary (distinct tokens → row_number) makes
+      // dense word-id dictionary (distinct tokens → zipWithIndex) makes
       // every downstream key an int: the mapping is injective, so every
       // group, every count and every join match is IDENTICAL to the
       // string form, and ids never reach the output (doc_id + counts +
@@ -5425,13 +5367,7 @@ object Text {
       // broadcasts into the one gram-assembly pass; at cluster scale
       // that one token-keyed hash join replaces seven string-keyed
       // corpus shuffles.
-      val dict = Pinned.track(
-        base.select(explode(ws).as("w")).distinct()
-          // vocab-bounded single-partition window (the bounded-model-
-          // frame class — unpartitioned-Window audit, OPTIMIZATION_r14)
-          .withColumn("wid", row_number().over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("w"))))
-          .localCheckpoint(true))
+      val dict = wordIds(base.select(explode(ws).as("w")))
       def wid(slot: String, out: String) =
         broadcast(dict.select(col("w").as(slot), col("wid").as(out)))
       val fg0 = base.select(col("doc_id"), ws.as("ws"))
@@ -5545,25 +5481,21 @@ object Text {
     // reference corpus gives CCNet's train-on-Wikipedia shape, where the
     // inner join also implements its drop-unmodeled-bigrams choice.
     Q("text_lm_score_stream", lmScoreSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+      Events.runStream(s, OutputMode.Complete) {
+        val stream = Events.streamOf(s, dir, "documents")
         val bgc = bigramCounts(s, dir)
         val c2 = bgc.groupBy(col("w1"), col("w2")).agg(sum(col("nd")).as("c2"))
         val cp = c2.groupBy(col("w1")).agg(sum(col("c2")).as("cp"))
         val model = c2.join(cp, Seq("w1"))
           .select(col("w1"), col("w2"), expr("(c2 * 10000) div cp").as("p"))
-        val scored = bigramPairs(stream)
+        bigramPairs(stream)
           .join(model, Seq("w1", "w2"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_bigrams"), sum(col("p")).as("sum_pbp"))
-        Events.runToCompleteSink(s, "lmscore_sink_", scored)
-          .select(col("doc_id"), col("n_bigrams"), col("sum_pbp"),
-            expr("sum_pbp div n_bigrams").as("lm_bp"))
-          .orderBy(col("doc_id"))
       }
+        .select(col("doc_id"), col("n_bigrams"), col("sum_pbp"),
+          expr("sum_pbp div n_bigrams").as("lm_bp"))
+        .orderBy(col("doc_id"))
     },
 
     // C38c: LM percentile BUCKETS — CCNet's actual output artifact: the
@@ -5798,14 +5730,9 @@ object Text {
     // projection, append mode; shares piiRedactFrame/piiStages verbatim
     // with batch C28 and is gated by the SAME oracle.
     Q("text_pii_redact_stream", piiRedactSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        Events.runToAppendSink(s, "pii_sink_", piiRedactFrame(stream))
-          .orderBy(col("doc_id"))
-      }
+      Events.runStream(s, OutputMode.Append)(
+          piiRedactFrame(Events.streamOf(s, dir, "documents")))
+        .orderBy(col("doc_id"))
     },
 
     // C29: deterministic weighted (importance) sampling — keep
@@ -5884,22 +5811,18 @@ object Text {
     // sink. Gated by the SAME oracle as batch C46 — driver-checked
     // batch/stream parity, the C30/D6/D10 discipline.
     Q("text_importance_resample_stream", dsirOracleSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+      dsirFinish(Events.runStream(s, OutputMode.Complete) {
+        val stream = Events.streamOf(s, dir, "documents")
         val model = dsirModel(
           dsirBuckets(docs(s, dir))
             .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("nd")))
-        val grouped = dsirBuckets(stream)
+        dsirBuckets(stream)
           .join(broadcast(model), Seq("b"))
           .select(col("doc_id"), dsirRatio.as("r_bp"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_feats"), sum(col("r_bp")).as("sum_rbp"))
-        dsirFinish(Events.runToCompleteSink(s, "dsir_sink_", grouped))
-          .orderBy(col("doc_id"))
-      }
+      })
+        .orderBy(col("doc_id"))
     },
 
     // C31: hashing-trick quality CLASSIFIER — the fastText-style linear
@@ -6014,15 +5937,9 @@ object Text {
     // stream share one definition and one oracle (the C30/D6/D10
     // discipline), so the scoring rule provably cannot drift.
     Q("text_quality_classifier_stream", classifierWeightsSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        Events.runToCompleteSink(s, "clfw_sink_",
-            qualityClassifierWeighted(stream, demoWeights(s)))
-          .orderBy(col("doc_id"))
-      }
+      Events.runStream(s, OutputMode.Complete)(
+          qualityClassifierWeighted(Events.streamOf(s, dir, "documents"), demoWeights(s)))
+        .orderBy(col("doc_id"))
     },
 
     // C12: polynomial position-weighted fingerprint over characters —

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core.Tables
 
@@ -888,13 +889,10 @@ object Train {
     // streamed value integer ⇒ gated by the SAME oracle as batch C47b:
     // full rows+schema+hash batch/stream parity.
     Q("text_langid_router_stream", langidRouterSql) { (s, dir) =>
-      Events.withStreamPartitions(s) {
+      Events.runStream(s, OutputMode.Append) {
         val (detC, _) = langidRouterDets(
           langidRouterFeatures(Tables(s, dir, "documents")))
-        val schema = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val stream = Events.streamOf(s, dir, "documents")
         def decLit(v: BigInt) =
           lit(new java.math.BigDecimal(v.bigInteger)).cast("decimal(38,0)")
         val f = langidRouterFeatures(stream)
@@ -908,10 +906,9 @@ object Train {
           .foldLeft(when(scores.head === m, lit(0L))) {
             case (acc, (sc, c)) => acc.when(sc === m, lit(c.toLong))
           }
-        Events.runToAppendSink(s, "router_sink_",
-            f.select(col("doc_id"), col("y").as("label"), pred.as("pred")))
-          .orderBy(col("doc_id"))
+        f.select(col("doc_id"), col("y").as("label"), pred.as("pred"))
       }
+        .orderBy(col("doc_id"))
     },
 
     // C31d (r12): see the block comment at ridgePerms — the trained

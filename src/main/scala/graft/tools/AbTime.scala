@@ -27,7 +27,7 @@ object AbTime {
       try { q(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       finally graft.queries.Pinned.drain()
     })
-    val Seq(a, b) = graft.Bench.measure(Seq(arm("A", va), arm("B", vb)), Nil, n)
+    val Seq(a, b) = graft.Bench.measure(Seq(arm("A", va), arm("B", vb)), n, () => 0L)
     val pairs = a.passes.zip(b.passes).zipWithIndex.collect {
       case ((Some(x), Some(y)), i) => (x, y, i)
     }

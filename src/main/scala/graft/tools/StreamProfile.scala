@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * The r11 sweep this drove: addBatch dominated steady-state, and the
   * complete-mode MEMORY sink (all rows through the driver, then
   * re-scanned) was the removable cost — replaced by the foreachBatch
-  * executor-side checkpoint in [[graft.queries.Events.runToSink]].
+  * executor-side checkpoint in [[graft.queries.Events.runStream]].
   *
   *   SPARK_GRAFT_REPEATS=6 sbt "runMain graft.tools.StreamProfile q21s_stream_sessions"
   */

@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -9,9 +8,10 @@ import org.json4s.jackson.JsonMethods
   * fit the budget, name the heaviest arms, and account for every failed
   * and flaky arm. A "suspect" below is an arm with one slow pass (the
   * reading the old rerun ladder re-measured and replaced by its best
-  * rerun): its record value must be its median.
+  * rerun): its record value must be its median. The tail of a pass is
+  * the arms whose untimed run started a streaming query.
   */
-class BenchReportSpec extends AnyFunSuite {
+class BenchReportSpec extends SparkSpec {
 
   private val budget = 1880
 
@@ -122,8 +122,11 @@ class BenchReportSpec extends AnyFunSuite {
 
   test("every arm warms once, then timed passes alternate order; pure arms precede the tail") {
     val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    var starts = 0L
     def rec(n: String) = Bench.Arm(n, () => { calls += n; 1.0 })
-    val rs = Bench.measure(Seq(rec("p1"), rec("p2"), rec("p3")), Seq(rec("t1"), rec("t2")), 3)
+    def streaming(n: String) = Bench.Arm(n, () => { calls += n; starts += 1; 1.0 })
+    val rs = Bench.measure(Seq(rec("p1"), rec("p2"), rec("p3"), streaming("t1"), streaming("t2")),
+      3, () => starts)
     val warm = Seq("p1", "p2", "p3", "t1", "t2")
     val fwd = warm
     val rev = Seq("p3", "p2", "p1", "t2", "t1")
@@ -131,6 +134,45 @@ class BenchReportSpec extends AnyFunSuite {
     assert(rs.map(_.name) == warm)
     assert(rs.forall(_.passes == Seq(Some(1.0), Some(1.0), Some(1.0))),
       "the untimed warm-up must not be a reading")
+  }
+
+  test("an arm whose warm run starts a stream runs after every pure arm in every pass") {
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    var starts = 0L
+    var warmed = false
+    def rec(n: String) = Bench.Arm(n, () => { calls += n; 1.0 })
+    // reports a start in its warm run only: the warm pass alone decides
+    val s = Bench.Arm("s", () => {
+      calls += "s"
+      if (!warmed) { warmed = true; starts += 1 }
+      1.0
+    })
+    val rs = Bench.measure(Seq(rec("a"), s, rec("b"), rec("c")), 4, () => starts)
+    val fwd = Seq("a", "b", "c", "s")
+    val rev = Seq("c", "b", "a", "s")
+    assert(calls.toSeq == Seq("a", "s", "b", "c") ++ fwd ++ rev ++ fwd ++ rev)
+    assert(rs.map(_.name) == Seq("a", "s", "b", "c"))
+    assert(rs.filter(_.tail).map(_.name) == Seq("s"))
+  }
+
+  test("the stream listener puts an arm that starts a MemoryStream query in the tail") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val streams = new Bench.StreamStarts
+    spark.streams.addListener(streams)
+    try {
+      val streamArm = Bench.Arm("tiny_stream", () => {
+        val input = MemoryStream[Int]
+        input.addData(1, 2, 3)
+        val q = input.toDF().writeStream.format("noop").start()
+        try q.processAllAvailable() finally q.stop()
+        0.0
+      })
+      val pureArm = Bench.Arm("batch", () => { spark.range(3).count(); 0.0 })
+      val rs = Bench.measure(Seq(streamArm, pureArm), 1, () => streams.count)
+      assert(rs.map(r => r.name -> r.tail) == Seq("tiny_stream" -> true, "batch" -> false))
+    } finally spark.streams.removeListener(streams)
   }
 
   test("an arm's median, p25 and p75 come from its per-pass readings") {
@@ -155,7 +197,7 @@ class BenchReportSpec extends AnyFunSuite {
     })
     val always = Bench.Arm("always", () => throw new RuntimeException("never runs"))
     val steady = Bench.Arm("steady", () => 0.25)
-    val rs = Bench.measure(Seq(sometimes, steady), Seq(always), 3)
+    val rs = Bench.measure(Seq(sometimes, steady, always), 3, () => 0L)
     val byName = rs.map(r => r.name -> r).toMap
     // run 1 is the warm-up; the timed passes are runs 2, 3, 4
     assert(byName("sometimes").passes == Seq(None, Some(0.5), None))

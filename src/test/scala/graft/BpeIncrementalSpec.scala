@@ -11,8 +11,11 @@ import graft.queries.Tokenizer
   * Two contracts:
   *
   *  1. EQUALITY — the incremental trainer's merge sequence equals the
-  *     naive loop's row-for-row at k=100 (same argmax tie-break, same
-  *     rewrite, exact integer delta folding).
+  *     reference sequence row-for-row at k=100 (same argmax tie-break,
+  *     same rewrite, exact integer delta folding). The reference is
+  *     [[BpeIncrementalSpec.driverTrain]], an in-memory stand-in for
+  *     the naive loop that one test anchors to the naive Spark loop at
+  *     k=20, so "the naive loop" in the test names means either.
   *  2. FLAT ITERATIONS — per-iteration shuffle volume depends on the
   *     touched sliver + the bounded pair-TYPE table only. Map-side
   *     combine makes even the naive recount flat in vocabulary SIZE
@@ -48,10 +51,30 @@ class BpeIncrementalSpec extends SparkSpec {
     }.distinct
   }
 
+  /** Two-letter soup: merged symbols keep colliding and re-pairing,
+    * which exercises self-pairs and overlapping runs ("aaa").
+    */
+  private def abSoup(n: Int, seed: Long): Seq[(String, Long)] = {
+    var x = seed
+    def nxt(m: Int): Int = { x = x * 6364136223846793005L + 1442695040888963407L; (((x >>> 33) % m) + m).toInt % m }
+    (0 until n).map { _ =>
+      val len = 3 + nxt(9)
+      ((0 until len).map(_ => ('a' + nxt(2)).toChar).mkString, 1L + nxt(4))
+    }.distinct
+  }
+
+  test("the driver reference trainer equals the naive Spark loop at k=20") {
+    for (words <- Seq(soup(60, 42L), abSoup(40, 99L))) {
+      val naive = Tokenizer.bpeTrainFromVocabNaive(vocabDF(words), 20)
+      assert(naive.size == 20)
+      assert(BpeIncrementalSpec.driverTrain(words, 20) == naive)
+    }
+  }
+
   test("incremental trainer equals the naive loop row-for-row at k=100") {
-    val wf = vocabDF(soup(60, 42L))
-    val inc = Tokenizer.bpeTrainFromVocab(wf, 100)
-    val naive = Tokenizer.bpeTrainFromVocabNaive(wf, 100)
+    val words = soup(60, 42L)
+    val inc = Tokenizer.bpeTrainFromVocab(vocabDF(words), 100)
+    val naive = BpeIncrementalSpec.driverTrain(words, 100)
     assert(inc.size == naive.size, s"lengths: inc=${inc.size} naive=${naive.size}")
     inc.zip(naive).foreach { case (i, n) =>
       assert(i == n, s"merge diverged at step ${i._1}: inc=$i naive=$n")
@@ -69,9 +92,9 @@ class BpeIncrementalSpec extends SparkSpec {
     */
   test("batched trainer equals the naive loop row-for-row at k=100 across corpora and batch sizes") {
     for (seed <- Seq(42L, 1234L); m <- Seq(8, 16)) {
-      val wf = vocabDF(soup(60, seed))
-      val (bat, rounds, sims) = Tokenizer.bpeTrainFromVocabBatchedStats(wf, 100, m)
-      val naive = Tokenizer.bpeTrainFromVocabNaive(wf, 100)
+      val words = soup(60, seed)
+      val (bat, rounds, sims) = Tokenizer.bpeTrainFromVocabBatchedStats(vocabDF(words), 100, m)
+      val naive = BpeIncrementalSpec.driverTrain(words, 100)
       assert(bat.size == naive.size, s"seed=$seed m=$m lengths: ${bat.size} vs ${naive.size}")
       bat.zip(naive).foreach { case (b, n) =>
         assert(b == n, s"seed=$seed m=$m diverged at step ${b._1}: batched=$b naive=$n")
@@ -97,9 +120,9 @@ class BpeIncrementalSpec extends SparkSpec {
     * (a,b) and still emit the exact sequential sequence.
     */
   test("validation repairs when a merge-created pair preempts the batch") {
-    val wf = vocabDF(Seq(("cab", 100L), ("de", 90L), ("fg", 80L)))
-    val (bat, _, sims) = Tokenizer.bpeTrainFromVocabBatchedStats(wf, 4, 4)
-    val naive = Tokenizer.bpeTrainFromVocabNaive(wf, 4)
+    val words = Seq(("cab", 100L), ("de", 90L), ("fg", 80L))
+    val (bat, _, sims) = Tokenizer.bpeTrainFromVocabBatchedStats(vocabDF(words), 4, 4)
+    val naive = BpeIncrementalSpec.driverTrain(words, 4)
     assert(bat == naive, s"batched=$bat naive=$naive")
     assert(bat.take(2).map(t => (t._2, t._3)) == Seq(("a", "b"), ("c", "ab")),
       s"greedy must pick the created pair second: $bat")
@@ -113,15 +136,9 @@ class BpeIncrementalSpec extends SparkSpec {
     * merged symbols to keep colliding and re-pairing.
     */
   test("batched trainer handles self-pairs and overlap runs identically") {
-    var x = 99L
-    def nxt(m: Int): Int = { x = x * 6364136223846793005L + 1442695040888963407L; (((x >>> 33) % m) + m).toInt % m }
-    val words = (0 until 40).map { _ =>
-      val len = 3 + nxt(9)
-      ((0 until len).map(_ => ('a' + nxt(2)).toChar).mkString, 1L + nxt(4))
-    }.distinct
-    val wf = vocabDF(words)
-    val (bat, _, _) = Tokenizer.bpeTrainFromVocabBatchedStats(wf, 60, 8)
-    val naive = Tokenizer.bpeTrainFromVocabNaive(wf, 60)
+    val words = abSoup(40, 99L)
+    val (bat, _, _) = Tokenizer.bpeTrainFromVocabBatchedStats(vocabDF(words), 60, 8)
+    val naive = BpeIncrementalSpec.driverTrain(words, 60)
     assert(bat == naive,
       s"diverged: ${bat.zip(naive).collectFirst { case (b, n) if b != n => s"$b vs $n" }}")
   }
@@ -205,5 +222,47 @@ class BpeIncrementalSpec extends SparkSpec {
       assert(incBig * 3 < naiveBig,
         s"incremental ($incBig) should shuffle far less than naive ($naiveBig) on the big corpus")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+}
+
+object BpeIncrementalSpec {
+
+  /** In-memory BPE trainer over a (word, freq) vocabulary: the
+    * reference of the equality tests. Same argmax order as the Spark
+    * trainers (cnt desc, a, b) and the same greedy left-to-right merge
+    * rewrite as `Tokenizer.mergePair`.
+    */
+  def driverTrain(words: Seq[(String, Long)], k: Int): Seq[(Int, String, String, Long)] = {
+    var vocab = words.map { case (t, f) => (t.map(_.toString).toVector, f) }
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    var done = false
+    while (!done && merges.size < k) {
+      val counts = scala.collection.mutable.Map.empty[(String, String), Long].withDefaultValue(0L)
+      for ((syms, f) <- vocab; i <- 0 until syms.size - 1) counts((syms(i), syms(i + 1))) += f
+      if (counts.isEmpty) done = true
+      else {
+        val ((a, b), cnt) = counts.minBy { case ((a, b), c) => (-c, a, b) }
+        merges += ((merges.size, a, b, cnt))
+        vocab = vocab.map { case (syms, f) => (merge(syms, a, b), f) }
+      }
+    }
+    merges.toSeq
+  }
+
+  /** `Tokenizer.mergePair`'s fold: a pending `a` joins a following `b`;
+    * otherwise it is emitted as is.
+    */
+  private def merge(syms: Vector[String], a: String, b: String): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var pend = false
+    syms.foreach { x =>
+      if (pend && x == b) { out += a + b; pend = false }
+      else if (pend && x == a) out += a
+      else if (pend) { out += a; out += x; pend = false }
+      else if (x == a) pend = true
+      else out += x
+    }
+    if (pend) out += a
+    out.result()
   }
 }
