@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{Ann, Cluster, Dedup, Embed, Events, Invariants, Media, Q, Relational, SetOps, Text, Tokenizer, Train, Views}
+import graft.queries.{Ann, Cluster, Dedup, Embed, Events, Invariants, Media, Pinned, Q, Relational, SetOps, Text, Tokenizer, Train, Views}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -18,6 +18,20 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQ.map(q => q.name -> q.run).toMap
+
+  /** Release every frame that the DataFrames returned by [[queries]]
+    * pinned: the checkpointed slivers and persisted corpus frames their
+    * plans read lazily, which a query cannot release itself. Call it
+    * once the action that consumed a query's result has finished;
+    * without it each run keeps the blocks of every earlier run for the
+    * rest of the session.
+    *
+    * Contract: after this call a DataFrame that embedded a pinned frame
+    * must not be executed again (a local checkpoint has no lineage to
+    * recompute from); build the query's plan afresh instead. Safe to
+    * call repeatedly, and with nothing pinned.
+    */
+  def releasePinned(): Unit = Pinned.drain()
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

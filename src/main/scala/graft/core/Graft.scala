@@ -6,7 +6,6 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Range-query options — the reference's `list(view, opts)`
@@ -512,10 +511,11 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   }
 
   /** Compact a view's state: rewrite each origin partition as one file,
-    * CLUSTERED BY `kb`. Repeated incremental merges leave an origin's
-    * partition as several small files (one per write's task set) with
-    * interleaved key ranges; compaction restores scan efficiency without
-    * changing contents — the routine small-files pass of any
+    * CLUSTERED BY `kb`. An index write already leaves a segment as one
+    * file (one per `spark.sql.files.maxPartitionBytes` of input), but
+    * in input order: a segment's rows follow their files, so every row
+    * group spans most of the key range. Compaction re-sorts each segment
+    * by kb without changing contents — the routine layout pass of any
     * incrementally-maintained table.
     *
     * The kb sort is the storage-layout move of [[graft.functions.Layout]]
@@ -538,13 +538,13 @@ class Graft(val spark: SparkSession, val stateRoot: String,
         val rows = stateFrame(dir, Graft.entrySchemaWithPartition)
           .filter(col("ob") === obVal)
           .repartition(col("ob"))
-          // kb-clustered layout (see scaladoc); (file_url, seq) as
-          // tiebreakers keep multi-value emit order physically contiguous.
+          // kb-clustered layout (see scaladoc); the rest of the answer
+          // order as tiebreakers keeps multi-values physically in it.
           // The leading ob (one value here) satisfies the partitioned
           // write's required ordering, which would otherwise re-sort by
           // ob alone and drop this sort from the plan.
-          .sortWithinPartitions(col("ob"), col("kb"), col("file_url"), col("seq"))
-        writeOriginPartition(view, origin = "", rows)
+          .sortWithinPartitions(col("ob"), col("kb"), col("file_url"), col("seq"), col("value_json"))
+        commitStateWrite(dir, rows, retractIfAbsent = None)
       }
       // compaction is also the GC hook of the snapshot discipline: drop
       // files no generation references (retired grace generations,
@@ -639,6 +639,10 @@ class Graft(val spark: SparkSession, val stateRoot: String,
 
   /** Raw entry state of a view:
     * (kb, key_json, file_url, pathname, seq, value_json, ob).
+    * `seq` numbers a compat map's ([[MapFn]]) emissions per file; a
+    * declarative map's ([[MapDF]]) is 1, and its values at one key of
+    * one file read in `value_json` order (see [[get]]). Rows sit in a
+    * segment's files in no particular order until [[compact]].
     *
     * SNAPSHOT-PINNED (r12): the frame resolves the state manifest at
     * construction and scans an explicit file list, so a merge pass
@@ -654,8 +658,8 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   }
 
   /** `damr.get(view, key)` as a DataFrame of (key_json, value_json):
-    * one row per value for map views (ordered by emitting file then emit
-    * seq, reference view.js:51), one row for reduced views.
+    * one row per value for map views (ordered by emitting file, emit
+    * seq, then value, reference view.js:51), one row for reduced views.
     *
     * Lazy, EXCEPT for Fold views: constructing a Fold read runs the
     * cardinality-cap probe eagerly (see [[reduceEntries]]).
@@ -673,7 +677,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
           probeCacheView = Some(view))
       case None =>
         entries(view).filter(col("kb") === lit(kb))
-          .orderBy(col("file_url"), col("seq"))
+          .orderBy(col("file_url"), col("seq"), col("value_json"))
           .select(col("key_json"), col("value_json"))
     }
   }
@@ -775,10 +779,15 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     }
   }
 
-  /** Ascending answer order of [[rangeRows]]. */
+  /** Ascending answer order of [[rangeRows]]. A map view's values at a
+    * key order by emitting file, then emit seq, then `value_json`: a
+    * declarative map's seq is 1, so its in-file values order by their
+    * JSON (as do state files written when its seq numbered values in
+    * that order), while a compat map's seqs are unique per file.
+    */
   private def answerOrder(vd: ViewDef): Seq[Column] =
     if (vd.reduce.isDefined) Seq(col("kb"))
-    else Seq(col("kb"), col("file_url"), col("seq"))
+    else Seq(col("kb"), col("file_url"), col("seq"), col("value_json"))
 
   /** Driver-side `list` returning parsed entries — BOUNDED: collects at
     * most `graft.driverCollect.maxRows` rows (default 100k) and fails
@@ -1002,12 +1011,10 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   /** Run a view's map over matched files, producing entry rows. */
   private[graft] def mapEntries(view: ViewDef, files: DataFrame): DataFrame = {
     val emitted = view.map match {
-      case MapDF(f) =>
-        val out = f(files)
-        // seq = deterministic per-file emit ordinal for declarative maps
-        // (emit order is undefined there; key order is the stable choice).
-        out.withColumn("seq",
-          row_number().over(Window.partitionBy(col("url")).orderBy(col("kb"), col("value_json"))))
+      // a declarative map has no emit order, so its seq is 1 and a file's
+      // values at one key read in `value_json` order (see answerOrder):
+      // numbering them would cost every write a shuffle by file and a sort
+      case MapDF(f) => f(files).withColumn("seq", lit(1))
       case MapFn(f) =>
         import spark.implicits._
         val fn = f
@@ -1023,31 +1030,26 @@ class Graft(val spark: SparkSession, val stateRoot: String,
           }
           .toDF("origin", "url", "pathname", "kb", "key_json", "value_json", "seq")
     }
-    projectEntries(emitted)
-  }
-
-  private def projectEntries(emitted: DataFrame): DataFrame =
     emitted.select(
       col("kb"), col("key_json"),
       col("url").as("file_url"), col("pathname"),
       col("seq"), col("value_json"),
       sha2(col("origin"), 256).substr(1, 16).as("ob"))
+  }
 
   /** The view's map pipeline applied to a STREAMING files DataFrame
     * (Structured Streaming file source with the archive schema
     * `origin,url,pathname,value,fversion`) — the building block for
     * append-only streaming ingestion pipelines (D3). NOTE: this is NOT
     * the A4 watch path — appends cannot retract a modified file's old
-    * entries; [[watch]] runs merge passes for that. `seq` is constant in
-    * streaming; per-file multi-values order by key bytes.
+    * entries; [[watch]] runs merge passes for that. The rows are the
+    * ones an index pass writes: a declarative map's `seq` is 1, so a
+    * file's values at one key read back in `value_json` order (the
+    * typed flatMap of a compat map is streaming-safe and numbers them).
     */
   def streamEntries(view: String, files: DataFrame): DataFrame = {
     val v = viewDef(view)
-    val matched = files.filter(v.pathFilter(col("pathname")))
-    v.map match {
-      case MapDF(f) => projectEntries(f(matched).withColumn("seq", lit(1)))
-      case MapFn(_) => mapEntries(v, matched) // typed flatMap is streaming-safe
-    }
+    mapEntries(v, files.filter(v.pathFilter(col("pathname"))))
   }
 
   /** A4 watch mode — continuous maintenance of EVERY defined view over a
@@ -1474,17 +1476,35 @@ class Graft(val spark: SparkSession, val stateRoot: String,
       .parquet(files.map(f => s"$dir/$f"): _*)
   }
 
-  /** Snapshot-commit of exactly the origin partitions present in
-    * `rows` — the incremental-maintenance primitive (see the block
-    * comment above for the manifest discipline). `rows` may read the
-    * view's own current generation (an incremental merge): the write
-    * stages new files beside it and the flip deletes only the generation
-    * before it, so the plan's input outlives the commit.
+  /** Snapshot-commit of one origin's segment, whose entries are `rows`
+    * (none: a retraction) — the incremental-maintenance primitive of an
+    * index pass (see the block comment above for the manifest
+    * discipline). `rows` may read the view's own current generation (an
+    * incremental merge): the write stages new files beside it and the
+    * flip deletes only the generation before it, so the plan's input
+    * outlives the commit.
     */
   private def writeOriginPartition(view: String, origin: String, rows: DataFrame): Unit = {
-    commitStateWrite(viewDir(view), rows,
-      retractIfAbsent = if (origin.nonEmpty) Some(escape(origin)) else None)
+    val ob = escape(origin)
+    // every row is the origin's: ob set as a literal above the coalesce
+    // is a constant the optimizer sees, so the partitioned write's
+    // required ordering on it needs no sort
+    commitStateWrite(viewDir(view), perSegmentFiles(rows).withColumn("ob", lit(ob)),
+      retractIfAbsent = Some(ob))
     snapshots.drop(view)
+  }
+
+  /** `rows` coalesced, with no shuffle, to one partition (so one file of
+    * the segment) per `spark.sql.files.maxPartitionBytes` of the plan's
+    * estimated size: an index write would otherwise leave a file per
+    * input partition. The estimate is planning-time statistics (pruned
+    * file sizes, a filled cache's bytes), so no job runs; coalesce never
+    * raises the input's partition count, which caps the result there.
+    */
+  private def perSegmentFiles(rows: DataFrame): DataFrame = {
+    val perFile = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
+    val est = rows.queryExecution.optimizedPlan.stats.sizeInBytes
+    rows.coalesce(((est + perFile - 1) / perFile).max(1).min(Int.MaxValue).toInt)
   }
 
   /** Stage, move, flip the manifest. `retractIfAbsent`: an origin this
@@ -1596,7 +1616,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
                   "Reduce.Assoc for order-insensitive folds, or raise " +
                   "spark conf graft.fold.maxValuesPerKey.")
               val key = Json.parse(keyJson)
-              val sorted = vals.sortBy(r => (r.getAs[String]("file_url"), r.getAs[Int]("seq")))
+              val sorted = vals.sortWith(Graft.replayLt)
               var acc: Option[Any] = None
               sorted.foreach { row =>
                 acc = Some(f(acc, Json.parse(row.getAs[String]("value_json")), key))
@@ -1687,6 +1707,17 @@ object Graft {
 
   /** One file of an index pass's listing, on the driver. */
   private[core] final case class Listed(url: String, pathname: String, fversion: Option[Long])
+
+  /** The Fold replay order of a key's `(file_url, seq, value_json)`
+    * rows: a map view's answer order ([[Graft.get]]), strings compared
+    * as Spark compares them, in UTF-8 byte order.
+    */
+  private[core] def replayLt(a: Row, b: Row): Boolean = {
+    var c = KeyCodec.compareUtf8(a.getString(0), b.getString(0))
+    if (c == 0) c = Integer.compare(a.getInt(1), b.getInt(1))
+    if (c == 0) c = KeyCodec.compareUtf8(a.getString(2), b.getString(2))
+    c < 0
+  }
 
   /** `c` is in the broadcast set (a null is in no set). */
   private[core] def memberOf(set: org.apache.spark.broadcast.Broadcast[Set[String]])(c: Column): Column =

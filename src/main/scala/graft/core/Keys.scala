@@ -142,4 +142,13 @@ object KeyCodec {
     */
   def compare(a: Array[Byte], b: Array[Byte]): Int =
     java.util.Arrays.compareUnsigned(a, b)
+
+  /** Strings in UTF-8 byte order — Spark's `StringType` order. Java's
+    * `String.compareTo` compares UTF-16 code units, which disagrees with
+    * it for supplementary characters (`"😀" < "！"` in UTF-16, `>` in
+    * UTF-8), so driver-side code that must agree with a Spark sort
+    * compares with this.
+    */
+  def compareUtf8(x: String, y: String): Int =
+    compare(x.getBytes(StandardCharsets.UTF_8), y.getBytes(StandardCharsets.UTF_8))
 }

@@ -18,10 +18,10 @@ private[graft] final case class ReadGen(entries: String, folds: Option[String])
 
 /** The whole ordered answer of `list(view)` at one [[ReadGen]], held on
   * the driver: one row per `(kb, key_json, value_json)` row in `kb` order
-  * (map views: then emitting file and emit seq; reduced views: one merged
-  * row per key). Key and value JSON are parsed once, here, into one
-  * [[Entry]] per row; `getValue`/`listEntries` hand out those shared
-  * values (`Json.parse` builds immutable ones). Rows are found by binary
+  * (map views: then emitting file, emit seq and value; reduced views:
+  * one merged row per key). Key and value JSON are parsed once, here,
+  * into one [[Entry]] per row; `getValue`/`listEntries` hand out those
+  * shared values (`Json.parse` builds immutable ones). Rows are found by binary
   * search on `kb` under Spark's unsigned binary order — the order `list`
   * sorts and range-filters by.
   *

@@ -34,10 +34,10 @@ final case class MapFn(f: (String, FileMeta) => Seq[(Any, Any)]) extends MapSpec
 
 /** Per-key fold, the reference's `reduce(acc, value, key)`. Built-ins
   * compile to native Spark aggregates (partial agg map-side); `Fold`
-  * replays the reference's sequential fold in deterministic
-  * (file url, emit seq) order via a sorted collect — use only when the
-  * fold really is order-sensitive and per-key cardinality is bounded,
-  * which is the reference's own operating regime.
+  * replays the reference's sequential fold in a map view's `get` order
+  * (file url, emit seq, value JSON) via a sorted collect — use only
+  * when the fold really is order-sensitive and per-key cardinality is
+  * bounded, which is the reference's own operating regime.
   */
 sealed trait Reduce
 object Reduce {

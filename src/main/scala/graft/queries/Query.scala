@@ -101,7 +101,15 @@ private[graft] object Pinned {
   def drain(): Unit = {
     var d = reg.poll()
     while (d != null) {
-      try d.unpersist(blocking = false) catch { case _: Throwable => }
+      try {
+        d.unpersist(blocking = false)
+        // a local checkpoint is not in the cache manager: its blocks are
+        // the persisted RDD under the frame's LogicalRDD
+        d.queryExecution.analyzed match {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+          case _ =>
+        }
+      } catch { case _: Throwable => }
       d = reg.poll()
     }
   }

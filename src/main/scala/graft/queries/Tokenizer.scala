@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{KeyCodec, Tables}
 
 /** Tokenizer operators over the `documents` table: the corpus-scale
   * steps of building a subword tokenizer for an LLM data pipeline —
@@ -305,35 +305,17 @@ object Tokenizer {
             s"(syms[i] = ${sqlLit(c.a)} AND syms[i+1] = ${sqlLit(c.b)})")
             .mkString(" OR ")})""".stripMargin
 
-  /** UTF-8 binary `<` — Spark's UTF8String ordering for ANY symbol
-    * alphabet (r8 advice: Java String compares UTF-16 code units, which
-    * diverges from UTF-8 byte order for supplementary characters, so a
-    * non-ASCII vocabulary could make the driver argmax disagree with
-    * the cluster-side TakeOrdered without any guard).
-    */
-  private def utf8Lt(x: String, y: String): Boolean = {
-    val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val c = (a(i) & 0xff) - (b(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    a.length < b.length
-  }
-
   /** Driver-side argmax under the trainer's deterministic order
-    * (cnt desc, a asc, b asc in UTF-8 BYTE order — [[utf8Lt]] — so the
-    * replay provably matches Spark's UTF8String TakeOrdered on any
-    * alphabet, not just ASCII).
+    * (cnt desc, a asc, b asc in UTF-8 BYTE order —
+    * [[graft.core.KeyCodec.compareUtf8]] — so the replay provably
+    * matches Spark's UTF8String TakeOrdered on any alphabet, not just
+    * ASCII; Java String order diverges for supplementary characters).
     */
   private def pairMax(cands: Iterator[(String, String, Long)]): Option[(String, String, Long)] =
     cands.reduceOption { (x, y) =>
       if (x._3 != y._3) { if (x._3 > y._3) x else y }
-      else if (x._1 != y._1) { if (utf8Lt(x._1, y._1)) x else y }
-      else if (!utf8Lt(y._2, x._2)) x else y
+      else if (x._1 != y._1) { if (KeyCodec.compareUtf8(x._1, y._1) < 0) x else y }
+      else if (KeyCodec.compareUtf8(y._2, x._2) >= 0) x else y
     }
 
   /** Extend a forced chain prefix with ranked candidates that are

@@ -4,6 +4,12 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, explode, from_json}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+
 import graft.core._
 
 /** End-to-end engine parity with the reference's own test suites
@@ -883,9 +889,101 @@ class GraftEngineSpec extends SparkSpec {
       assert(dbX.listEntries("sv", ListOpts(limit = Some(1))).size == 2)
     } finally spark.conf.unset("graft.driverCollect.maxRows")
   }
+
+  test("Fold replays a key's values in its map twin's get order, strings in UTF-8 byte order") {
+    import spark.implicits._
+    // U+1F600 sorts before U+FF01 in UTF-16 code units and after it in
+    // UTF-8 bytes, in the file urls and in the in-file values alike
+    assert("😀".compareTo("！") < 0 && KeyCodec.compareUtf8("😀", "！") > 0)
+    val files = Seq(
+      "/😀.json" -> """{"first":"k","vs":["😀","！","a"]}""",
+      "/！.json" -> """{"first":"k","vs":["！","😀"]}""").toDF("pathname", "value")
+    val arch = new TableArchive("dat://utf8", files, col("pathname"), col("value"))
+    val g = new Graft(spark, root.resolve("state-utf8").toString)
+    val map = MapDF(GraftEngineSpec.explodeVs(StringType))
+    g.define("vals", ViewDef("/*.json", map))
+    g.define("replay", ViewDef("/*.json", map, GraftEngineSpec.joinFold))
+    g.index(arch)
+    val values = g.getValue("vals", "k").get.asInstanceOf[Vector[Any]]
+    assert(values == Vector("！", "😀", "a", "！", "😀"))
+    val replayed = values.map(Json.render).mkString(",")
+    assert(g.getValue("replay", "k") == Some(replayed))
+    assert(g.get("replay", "k").collect().map(_.getString(1)).toSeq == Seq(Json.render(replayed)))
+  }
+
+  test("state written with per-file row_number seqs reads back in the same order, beside new state") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{max, row_number}
+    val d = Files.createTempDirectory("graft-legacy-seq")
+    val t0 = System.currentTimeMillis() - 3600000L
+    def put(rel: String, first: String, vs: Seq[Int], mtime: Long): Unit = {
+      writeJson(d, rel, "first" -> first, "vs" -> vs)
+      Files.setLastModifiedTime(d.resolve(rel.stripPrefix("/")), FileTime.fromMillis(mtime))
+    }
+    put("/a.json", "k", Seq(9, 10, 2), t0)
+    put("/b.json", "k", Seq(30, 4), t0)
+    put("/c.json", "j", Seq(5, 40), t0)
+    val arch = new DirArchive("dat://legacy-seq", d.toString)
+    val state = root.resolve("state-legacy-seq")
+    val g = new Graft(spark, state.toString)
+    val map = MapDF(GraftEngineSpec.explodeVs(LongType))
+    g.define("vals", ViewDef("/*.json", map))
+    g.define("replay", ViewDef("/*.json", map, GraftEngineSpec.joinFold))
+    g.index(arch)
+    // Rewrite each view's segment the way an engine that numbered a
+    // file's values by (kb, value_json) wrote it, through the manifest.
+    Seq("vals", "replay").foreach { v =>
+      val dir = state.resolve(s"$v/entries")
+      val (ob, (current, _)) = g.loadManifest(dir.toString).get.head
+      val numbered = g.entries(v)
+        .withColumn("seq", row_number().over(Window.partitionBy("file_url").orderBy("kb", "value_json")))
+        .drop("ob").coalesce(1).localCheckpoint(true)
+      assert(numbered.agg(max("seq")).head().getInt(0) == 3)
+      val tmp = Files.createTempDirectory("graft-legacy-seq-out").resolve("out")
+      numbered.write.parquet(tmp.toString)
+      val part = Files.list(tmp).iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+      val name = s"ob=$ob/legacy-${part.getFileName}"
+      Files.move(part, dir.resolve(name))
+      Files.write(dir.resolve("_manifest.txt"),
+        s"$ob\t$name\t${current.mkString(",")}".getBytes(StandardCharsets.UTF_8))
+    }
+    def reads(k: Vector[Double]): Unit = {
+      val all = Vector(40.0, 5.0).map(Entry("j", _)) ++ k.map(Entry("k", _))
+      assert(g.getValue("vals", "k") == Some(k))
+      assert(g.get("vals", "k").collect().map(r => Json.parse(r.getString(1))).toVector == k)
+      // the Spark path, then the fill
+      assert(g.listEntries("vals") == all && g.listEntries("vals") == all)
+      assert(g.listEntries("vals", ListOpts(reverse = true)) == all.reverse)
+      assert(g.getValue("replay", "k") == Some(k.map(Json.render).mkString(",")))
+    }
+    // value_json order within a file: "10" < "2" < "9"
+    reads(Vector(10.0, 2.0, 9.0, 30.0, 4.0))
+    // one rewritten file: its new rows have seq 1, the others keep theirs
+    put("/b.json", "k", Seq(30, 4, 300), t0 + 60000)
+    g.index(arch)
+    val seqs = g.entries("vals").groupBy("file_url").agg(max("seq")).collect()
+      .map(r => r.getString(0).stripPrefix(arch.url) -> r.getInt(1)).toMap
+    assert(seqs == Map("/a.json" -> 3, "/b.json" -> 1, "/c.json" -> 2))
+    reads(Vector(10.0, 2.0, 9.0, 30.0, 300.0, 4.0))
+  }
 }
 
 object GraftEngineSpec extends Serializable {
   def parseFirst(value: String): Any =
     core.Json.parse(value).asInstanceOf[Map[String, Any]]("first")
+
+  /** A declarative map: key `first`, one value per element of the
+    * array `vs` (of `elem`s), so a file emits several values at a key.
+    */
+  def explodeVs(elem: DataType)(files: DataFrame): DataFrame = {
+    val parsed = files
+      .withColumn("j", from_json(col("value"), StructType(Seq(
+        StructField("first", StringType), StructField("vs", ArrayType(elem))))))
+      .withColumn("v", explode(col("j.vs")))
+    GraftFunctions.emitEntry(parsed, Seq(col("j.first")), col("v"))
+  }
+
+  /** A Fold that joins the JSON of a key's values with commas, in replay order. */
+  val joinFold: Reduce = Reduce.Fold((acc, v, _) =>
+    acc.fold(core.Json.render(v))(a => s"$a,${core.Json.render(v)}"))
 }

@@ -5,8 +5,16 @@ import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.functions.{array, col, explode, from_json}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core._
 
@@ -15,7 +23,8 @@ import graft.core._
   * change set, and one write per view (plus the refold of a materialized
   * view), each job named for its step; `indexFile`/`unindexFile` cost one
   * write per touched view plus its refold. Reads, snapshot fills and
-  * `compact` name their jobs too.
+  * `compact` name their jobs too. A write's plan has no sort or
+  * exchange, and it leaves one data file per origin segment.
   */
 class IndexPassSpec extends SparkSpec {
   import IndexPassSpec._
@@ -43,14 +52,23 @@ class IndexPassSpec extends SparkSpec {
     Files.setLastModifiedTime(p, FileTime.fromMillis(stamp))
   }
 
-  private val viewNames = Seq("by-first", "by-url", "pairs", "count", "sums")
+  private val viewNames = Seq("by-first", "by-url", "pairs", "tags", "count", "sums")
   private val materialized = Set("count")
 
-  /** Three map views, a materialized Count and a read-time Sum. */
+  /** Three compat map views, a declarative one that emits two values
+    * per file at one key, a materialized Count and a read-time Sum.
+    */
   private def defineAll(g: Graft): Unit = {
     g.define("by-first", ViewDef("/*.json", MapFn((v, m) => Seq(first(v) -> m.url))))
     g.define("by-url", ViewDef("/*.json", MapFn((v, m) => Seq(m.url -> second(v)))))
     g.define("pairs", ViewDef("/*.json", MapFn((v, _) => Seq(Seq(first(v), second(v)) -> 1))))
+    g.define("tags", ViewDef("/*.json", MapDF { files =>
+      val j = from_json(col("value"), StructType(Seq(
+        StructField("first", StringType), StructField("second", LongType))))
+      val parsed = files.withColumn("j", j)
+        .withColumn("v", explode(array(col("j.second"), col("j.second") + 10)))
+      GraftFunctions.emitEntry(parsed, Seq(col("j.first")), col("v"))
+    }))
     g.define("count", ViewDef(Seq("/*.json"), MapFn((v, _) => Seq(first(v) -> 1)),
       Some(Reduce.Count), materialize = true))
     g.define("sums", ViewDef("/*.json", MapFn((v, _) => Seq(first(v) -> second(v))), Reduce.Sum))
@@ -124,6 +142,58 @@ class IndexPassSpec extends SparkSpec {
     only(jobsIn(g.compact("by-first")), "graft compact by-first")
   }
 
+  test("index, indexFile and unindexFile writes plan no sort, window or exchange") {
+    val (g, a, dir) = indexed("plans", 12)
+    write(dir, "f004.json", "edited", 400)
+    val plans = entryWritePlans {
+      g.index(a)
+      write(dir, "f005.json", "edited", 500)
+      g.indexFile(a, "/f005.json")
+      g.unindexFile(a.url, "/f006.json")
+    }
+    // one write per view for each of the three calls
+    assert(plans.size == 3 * viewNames.size, s"${plans.size} entry writes")
+    plans.foreach { p =>
+      val nodes = Plans.collect(p) { case n => n.nodeName }
+      assert(!nodes.exists(n => Seq("Sort", "Window", "Exchange").exists(n.contains)),
+        s"an index write sorts or shuffles: $nodes")
+    }
+    assert(g.getValue("tags", "edited") == Some(Vector(400.0, 410.0, 500.0, 510.0)))
+  }
+
+  test("successive 1-file edits leave one data file per origin segment") {
+    val (g, a, dir) = indexed("segments", 30)
+    (1 to 5).foreach { i =>
+      write(dir, f"f$i%03d.json", s"edit$i", i)
+      g.index(a)
+    }
+    viewNames.foreach { n =>
+      val segments = g.loadManifest(s"${g.stateRoot}/$n/entries").get
+      assert(segments.size == 1 && segments.values.forall(_._1.size == 1),
+        s"$n: current files per segment ${segments.map { case (ob, (cur, _)) => ob -> cur }}")
+    }
+    assert(g.getValue("tags", "edit5") == Some(Vector(15.0, 5.0)))
+  }
+
+  /** The executed plans of the view-entry writes that `f` runs (not the
+    * refolds of folds state).
+    */
+  private def entryWritePlans(f: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.executedPlan match {
+          case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+              if c.outputPath.toString.contains("/entries/") => plans.add(w)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { f; flush() } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
   /** Descriptions of the Spark jobs started while `f` runs, in order
     * (all threads: the pass runs its view jobs on a pool).
     */
@@ -151,6 +221,9 @@ class IndexPassSpec extends SparkSpec {
 }
 
 object IndexPassSpec extends Serializable {
+  /** Plan traversal through adaptive plans and their query stages. */
+  object Plans extends AdaptiveSparkPlanHelper
+
   // map lambdas must not capture the (non-serializable) suite instance
   def first(value: String): Any = Json.parse(value).asInstanceOf[Map[String, Any]]("first")
   def second(value: String): Any = Json.parse(value).asInstanceOf[Map[String, Any]]("second")

@@ -330,6 +330,39 @@ class ReadSnapshotSpec extends SparkSpec {
     }
   }
 
+  test("a declarative map's values at one key read in value_json order on every read path") {
+    val dir = root.resolve("multi-a")
+    Files.createDirectories(dir)
+    def put(name: String, body: String): Unit = { Files.write(dir.resolve(name), body.getBytes(StandardCharsets.UTF_8)); () }
+    put("a.json", """{"first":"k","vs":[9,10,2]}""")
+    put("b.json", """{"first":"k","vs":[30,4]}""")
+    put("c.json", """{"first":"m","vs":[7,100]}""")
+    val g = new Graft(spark, root.resolve("multi-state").toString)
+    val map = MapDF(GraftEngineSpec.explodeVs(org.apache.spark.sql.types.LongType))
+    g.define("vals", ViewDef("/*.json", map))
+    g.define("replay", ViewDef("/*.json", map, GraftEngineSpec.joinFold))
+    g.index(new DirArchive("dat://multi", dir.toString))
+    // by file, then value_json: "10" < "2" < "9" and "30" < "4"
+    val k = Vector(10.0, 2.0, 9.0, 30.0, 4.0)
+    val all = k.map(Entry("k", _)) ++ Vector(100.0, 7.0).map(Entry("m", _))
+    val cases = Seq(ListOpts() -> all, ListOpts(reverse = true) -> all.reverse,
+      ListOpts(limit = Some(1)) -> all.take(5), ListOpts(reverse = true, limit = Some(1)) -> all.takeRight(2).reverse)
+    // the DataFrame forms always read through Spark
+    assert(g.get("vals", "k").collect().map(r => Json.parse(r.getString(1))).toVector == k)
+    cases.foreach { case (o, want) =>
+      assert(g.list("vals", o).collect().toSeq.map(r =>
+        Entry(Json.parse(r.getString(0)), Json.parse(r.getString(1)))) == want, s"list $o")
+    }
+    // the driver forms: the first read runs through Spark, the second
+    // fills the snapshot, and the rest are hits
+    (1 to 2).foreach { pass =>
+      assert(g.getValue("vals", "k") == Some(k), s"pass $pass: getValue")
+      cases.foreach { case (o, want) => assert(g.listEntries("vals", o) == want, s"pass $pass: listEntries $o") }
+    }
+    assert(g.snapshotFills == 1 && g.snapshotHits == 8)
+    assert(g.getValue("replay", "k") == Some(k.map(Json.render).mkString(",")))
+  }
+
   test("a manifest-less state dir is re-read on every driver read") {
     // the shape of a streaming append sink writing straight into a
     // view's entries dir: no manifest says when it changed

@@ -223,6 +223,36 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("D3b: a stream sink's in-file values at one key read back in value_json order") {
+    val in = Files.createTempDirectory("graft-d3b-in")
+    val ckpt = Files.createTempDirectory("graft-d3b-ckpt")
+    val stateRoot = Files.createTempDirectory("graft-d3b-state")
+    val db = new Graft(spark, stateRoot.toString)
+    db.define("vals", ViewDef("/*.json", MapDF(GraftEngineSpec.explodeVs(LongType))))
+    val origin = "dat://watched-multi"
+    val files = spark.readStream
+      .format("text").option("wholetext", "true")
+      .load(in.toString)
+      .select(
+        lit(origin).as("origin"),
+        concat(lit(origin), regexp_replace(col("_metadata.file_path"), "^.*(/[^/]+)$", "$1")).as("url"),
+        regexp_replace(col("_metadata.file_path"), "^.*(/[^/]+)$", "$1").as("pathname"),
+        col("value"),
+        lit(1L).as("fversion"))
+    val q = db.streamEntries("vals", files).writeStream
+      .outputMode(OutputMode.Append)
+      .format("parquet").option("path", s"$stateRoot/vals/entries")
+      .option("checkpointLocation", ckpt.toString)
+      .partitionBy("ob")
+      .start()
+    try {
+      writeFile(in, "a.json", Seq("""{"first":"k","vs":[9,10,2,100]}"""))
+      q.processAllAvailable()
+      // every value has seq 1; the order is the values' JSON
+      assert(db.getValue("vals", "k") == Some(Vector(10.0, 100.0, 2.0, 9.0)))
+    } finally q.stop()
+  }
+
   test("D4: streaming exact dedup — dropDuplicates with watermark emits each id once") {
     val in = Files.createTempDirectory("graft-d4-in")
     val ckpt = Files.createTempDirectory("graft-d4-ckpt")
