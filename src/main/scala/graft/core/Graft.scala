@@ -84,10 +84,10 @@ object GraftEvent {
   *     it) are answered from a READ SNAPSHOT: the second read of a state
   *     generation collects and parses the view's whole ordered answer
   *     once, later reads of that generation binary-search it on the
-  *     driver without a Spark job or a parse, after one read of each of
-  *     the view's manifests. Any manifest flip, by any engine on the
-  *     state root, invalidates it (see [[ReadSnapshot]] and
-  *     `readSnapshot`).
+  *     driver without a Spark job or a parse, after one stat of each of
+  *     the view's manifests, which the engine holds open once read. Any
+  *     manifest flip, by any engine on the state root, invalidates it
+  *     (see [[ReadSnapshot]], [[ManifestPins]] and `readSnapshot`).
   */
 class Graft(val spark: SparkSession, val stateRoot: String,
     initialListeners: Seq[GraftEvent => Unit] = Nil) {
@@ -117,7 +117,7 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   // Fold cap-probe cache: view -> (read generation, cap) of the last
   // PASSED full-state probe, so a read-heavy deployment pays the probe
   // once per state version, not once per get/list (r4 verdict finding
-  // #4). The generation is the manifests' bytes (readGeneration), so a
+  // #4). The generation is the manifests' text (readGeneration), so a
   // commit by any engine on the root invalidates the pass; valid while
   // the current cap is >= the probed one (a pass under a tighter cap
   // implies a pass under a looser). A concurrent map: a driver read
@@ -134,9 +134,13 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   private val snapshots = new ReadSnapshots
   private val fillLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]
   private val readPaths = new java.util.concurrent.ConcurrentHashMap[String, Graft.ReadPaths]
+  // the manifests readGeneration has read, held open (see ManifestPins)
+  private[core] val manifestPins = new ManifestPins
   private val fills, hits, declines = new java.util.concurrent.atomic.AtomicLong
   private[graft] def snapshotFills: Long = fills.get
   private[graft] def snapshotHits: Long = hits.get
+  private[graft] def manifestByteReads: Long = manifestPins.reads
+  private[graft] def manifestPinsHeld: Int = manifestPins.held
   private[graft] def snapshotDeclines: Long = declines.get
   private[graft] def snapshotRowsHeld: Long = snapshots.heldRows
   private[graft] def snapshotBytesHeld: Long = snapshots.heldBytes
@@ -590,6 +594,8 @@ class Graft(val spark: SparkSession, val stateRoot: String,
       deleteDir(viewDir(view))
       deleteDir(foldsDir(view))
       snapshots.drop(view)
+      manifestPins.release(manifestPath(viewDir(view)))
+      manifestPins.release(manifestPath(foldsDir(view)))
       synchronized {
         viewVersions.filterInPlace { case (k, _) => !k.endsWith("\n" + view) }
         saveCatalog()
@@ -617,15 +623,17 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   }
 
   /** Lifecycle mapping: the reference's `open()` is this constructor
-    * (catalog load); `close()` stops every active watch (index.js:67) —
-    * state is parquet on disk, the catalog is flushed on every mutation,
-    * and the SparkSession belongs to the caller.
+    * (catalog load); `close()` stops every active watch (index.js:67)
+    * and closes the manifests driver reads hold open (a later read opens
+    * them again) — state is parquet on disk, the catalog is flushed on
+    * every mutation, and the SparkSession belongs to the caller.
     */
   def close(): Unit = {
     // collect under the lock, stop OUTSIDE it: stop() waits for the
     // in-flight micro-batch, whose tick() -> index() needs this lock
     val qs = synchronized { val v = watchers.values.toList; watchers.clear(); v }
     qs.foreach(q => if (q.isActive) q.stop())
+    manifestPins.releaseAll()
   }
 
   def listIndexed(): Seq[String] = synchronized(indexed.keys.toSeq)
@@ -817,19 +825,26 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   //
   // View state changes only at a manifest flip, so a driver read between
   // two commits can be answered from rows the engine already collected.
-  // A generation (ReadGen: the view's manifests' bytes, re-read on every
-  // call) is filled on its SECOND driver read: the first runs the Spark
-  // read as before, the second collects the view's whole ordered answer
-  // once through boundedCollect, and later reads of the generation slice
-  // it on the driver with no Spark job. So a loop alternating commits
-  // with single reads never pays for a whole-view collect. A hit costs
-  // one read of each manifest the view reads (entries; and folds, for a
-  // materialized view whose folds dir Files.exists finds), an exact
-  // compare of their bytes with the snapshot's, and a slice of entries
-  // parsed at fill: no Spark job, no JSON parse, no engine monitor (only
-  // ReadSnapshots' own brief one), and both caps read from the conf
-  // without an exception. No TTL or stat-only (inode, mtime, size) check
-  // stands in for the bytes: a reused inode could pass one. Bounds:
+  // A generation (ReadGen: the text of the view's manifests) is filled on
+  // its SECOND driver read: the first runs the Spark read as before, the
+  // second collects the view's whole ordered answer once through
+  // boundedCollect, and later reads of the generation slice it on the
+  // driver with no Spark job. So a loop alternating commits with single
+  // reads never pays for a whole-view collect. A hit costs one stat of
+  // each manifest the view reads (entries; and folds, for a materialized
+  // view), an exact compare of their text with the snapshot's, and a
+  // slice of entries parsed at fill: no Spark job, no JSON parse, no
+  // file read, no engine monitor (only ReadSnapshots' own brief one), and
+  // both caps read from the conf without an exception. The text comes
+  // from ManifestPins, which holds each manifest it has read open: a
+  // manifest is only ever replaced by a rename, and an open file's inode
+  // number cannot be reused, so a path that stats as the held file's
+  // (dev, ino) still holds the held text. No TTL or bare stat (inode,
+  // mtime, size) of a file not held open stands in for it: a freed inode
+  // number is reused, and after two rename-over flips ext4 gave the
+  // manifest path its first inode number back in 200 of 200 tries. A
+  // materialized view whose folds manifest is absent tests its folds dir
+  // with Files.exists: a folds dir without a manifest declines. Bounds:
   //   - a view is filled only if the data files of the generation it
   //     scans hold at most graft.driverCollect.maxRows rows and
   //     snapshotByteBudget uncompressed bytes (parquet footers, memoised
@@ -864,17 +879,16 @@ class Graft(val spark: SparkSession, val stateRoot: String,
     * has no manifest (never indexed, legacy or streaming-sink dirs).
     */
   private def readGeneration(view: String, vd: ViewDef): Option[ReadGen] = {
-    // one read per manifest that exists; only a dir without one (never
-    // indexed, legacy, a commit racing this read) costs an exception
-    def text(manifest: java.nio.file.Path): Option[String] =
-      try Some(new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8))
-      catch { case _: java.nio.file.NoSuchFileException => None }
     val p = Option(readPaths.get(view)).getOrElse(readPaths.computeIfAbsent(view, v =>
       Graft.ReadPaths(manifestPath(viewDir(v)), Paths.get(foldsDir(v)), manifestPath(foldsDir(v)))))
-    text(p.entries).flatMap { e =>
+    manifestPins.text(p.entries).flatMap { e =>
       // only a materialized view reads folds; another's answer is its entries
-      if (!vd.materialize || !Files.exists(p.folds)) Some(ReadGen(e, None))
-      else text(p.foldsManifest).map(f => ReadGen(e, Some(f)))
+      if (!vd.materialize) Some(ReadGen(e, None))
+      else manifestPins.text(p.foldsManifest) match {
+        case Some(f) => Some(ReadGen(e, Some(f)))
+        // a folds dir without a manifest says nothing about when it changed
+        case None => if (Files.exists(p.folds)) None else Some(ReadGen(e, None))
+      }
     }
   }
 

@@ -11,8 +11,11 @@ import org.apache.spark.unsafe.types.ByteArray
 /** A view's read generation: the raw text of its `entries/_manifest.txt`
   * and, when the view is materialized and has a folds/ dir, of
   * `folds/_manifest.txt` (a view that is not materialized never reads
-  * folds). Every state commit rewrites a manifest with fresh data-file
-  * names, so equal text means the view serves exactly the same rows.
+  * folds). Every state commit renames a new manifest with fresh
+  * data-file names over the old one, so equal text means the view serves
+  * exactly the same rows. A driver read gets the text from
+  * [[ManifestPins]]: one stat of each manifest while it is the file the
+  * engine holds open, a read of its bytes after it was replaced.
   */
 private[graft] final case class ReadGen(entries: String, folds: Option[String])
 

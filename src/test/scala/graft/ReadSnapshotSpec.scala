@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
 import scala.collection.mutable
@@ -114,13 +114,28 @@ class ReadSnapshotSpec extends SparkSpec {
   }
 
   test("every state change invalidates the snapshot; one fill per (view, generation)") {
-    val dirA = root.resolve("inv-a")
-    val dirB = root.resolve("inv-b")
+    invalidationSequence("inv", state => new Graft(spark, state))
+  }
+
+  test("without descriptor identity every state change still invalidates; nothing is pinned") {
+    val g = invalidationSequence("inv-nofd",
+      state => core.ManifestPinsAccess.withoutDescriptors(new Graft(spark, state)))
+    assert(g.manifestPinsHeld == 0)
+    if (Files.isDirectory(procFd)) assert(manifestDescriptors(root.resolve("inv-nofd-state")).isEmpty)
+  }
+
+  /** Every kind of state change, each followed by a check of every view
+    * through the driver reads of an engine that `open` builds (as do the
+    * other engines committing to its root); returns that engine.
+    */
+  private def invalidationSequence(tag: String, open: String => Graft): Graft = {
+    val dirA = root.resolve(s"$tag-a")
+    val dirB = root.resolve(s"$tag-b")
     write(dirA, "a1.json", "b", 1); write(dirA, "a2.json", "c", 2); write(dirA, "a3.json", "b", 3)
     write(dirB, "b1.json", "a", 10); write(dirB, "b2.json", "c", 20)
-    val state = root.resolve("inv-state").toString
+    val state = root.resolve(s"$tag-state").toString
     val (a, b) = (new DirArchive("dat://a", dirA.toString), new DirArchive("dat://b", dirB.toString))
-    val g = new Graft(spark, state)
+    val g = open(state)
     defineAll(g)
     val model = new Model
     g.index(a); g.index(b)
@@ -157,7 +172,7 @@ class ReadSnapshotSpec extends SparkSpec {
     assert(check(g, model, "compact") == 3)
 
     // a commit by another engine on the same state root
-    val g2 = new Graft(spark, state)
+    val g2 = open(state)
     defineAll(g2)
     write(dirA, "a2.json", "e", 7)
     g2.index(a)
@@ -166,7 +181,7 @@ class ReadSnapshotSpec extends SparkSpec {
 
     // define-time fold reconcile by other engines: a non-materializing
     // definition drops the folds, a materializing one rebuilds them
-    val g3 = new Graft(spark, state)
+    val g3 = open(state)
     defineAll(g3, sumsMaterialized = false)
     assert(!Files.exists(Paths.get(state, "sums", "folds")))
     assert(check(g, model, "reconcile drops folds") == 1)
@@ -174,10 +189,91 @@ class ReadSnapshotSpec extends SparkSpec {
     g3.index(a)
     model.indexed("dat://a", dirA)
     assert(check(g, model, "index without folds") == 3)
-    val g4 = new Graft(spark, state)
+    val g4 = open(state)
     defineAll(g4)
     assert(Files.exists(Paths.get(state, "sums", "folds")))
     assert(check(g, model, "reconcile refolds") == 1)
+    g
+  }
+
+  // --- manifests held open: a hit stats them, a flip reads them once ----
+
+  test("a held manifest tells another engine's two flips from none") {
+    val dir = root.resolve("flips-a")
+    write(dir, "a.json", "b", 1); write(dir, "b.json", "c", 2); write(dir, "c.json", "b", 3)
+    val state = root.resolve("flips-state").toString
+    val a = new DirArchive("dat://flips", dir.toString)
+    val g = new Graft(spark, state)
+    defineAll(g)
+    g.index(a)
+    val model = new Model
+    model.indexed("dat://flips", dir)
+    assert(check(g, model, "index") == 3)
+    val hits = g.snapshotHits
+    assert(check(g, model, "unchanged") == 0 && g.snapshotHits > hits, "every view hits")
+    // two flips of every manifest g reads: with no file held, the path
+    // could name a file with the first one's inode number again
+    val g2 = new Graft(spark, state)
+    defineAll(g2)
+    write(dir, "a.json", "d", 4); g2.index(a)
+    write(dir, "a.json", "e", 5); g2.index(a)
+    model.indexed("dat://flips", dir)
+    assert(check(g, model, "two flips by another engine") == 3)
+  }
+
+  test("hits read no manifest bytes; a commit costs one read of each manifest it flipped") {
+    assume(Files.isDirectory(procFd), "descriptor identity needs /proc/self/fd")
+    val dir = root.resolve("reads-a")
+    write(dir, "a.json", "b", 1); write(dir, "b.json", "c", 2)
+    val g = new Graft(spark, root.resolve("reads-state").toString)
+    defineAll(g)
+    val a = new DirArchive("dat://reads", dir.toString)
+    g.index(a)
+    val views = Seq("by-first", "count", "sums")
+    views.foreach(v => (1 to 2).foreach(_ => g.listEntries(v)))
+    // entries of each view, and the folds of materialized sums
+    assert(g.snapshotFills == 3 && g.manifestByteReads == 4 && g.manifestPinsHeld == 4)
+    val hits = g.snapshotHits
+    (1 to 20).foreach(_ => views.foreach(v => g.getValue(v, "b")))
+    assert(g.snapshotHits == hits + 60 && g.manifestByteReads == 4)
+    write(dir, "a.json", "c", 3)
+    g.index(a)
+    assert(g.manifestByteReads == 4, "a commit reads its manifests as a writer")
+    (1 to 3).foreach(_ => views.foreach(v => g.listEntries(v)))
+    assert(g.manifestByteReads == 8 && g.manifestPinsHeld == 4)
+    g.close()
+    assert(g.manifestPinsHeld == 0)
+    assert(g.getValue("count", "c") == Some(2.0))
+    assert(g.manifestByteReads == 9 && g.manifestPinsHeld == 1, "a read after close pins again")
+  }
+
+  test("commits and reads hold at most two manifest descriptors per view; destroy holds none") {
+    assume(Files.isDirectory(procFd), "descriptor identity needs /proc/self/fd")
+    val dir = root.resolve("fds-a")
+    write(dir, "a.json", "b", 1); write(dir, "b.json", "c", 2)
+    val state = root.resolve("fds-state")
+    val g = new Graft(spark, state.toString)
+    defineAll(g)
+    val a = new DirArchive("dat://fds", dir.toString)
+    val manifests = Seq("by-first/entries", "count/entries", "sums/entries", "sums/folds")
+      .map(d => state.resolve(d).resolve("_manifest.txt"))
+    (1 to 50).foreach { i =>
+      // every 10th cycle an index pass; the others flip each manifest to
+      // a copy of itself, renamed over it as a commit renames
+      if (i % 10 == 1) { write(dir, "a.json", "b", i); g.index(a) }
+      else manifests.foreach { m =>
+        val copy = Files.copy(m, m.resolveSibling("._manifest.copy"))
+        Files.move(copy, m, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      }
+      Seq("by-first", "count", "sums").foreach(v => (1 to 2).foreach(_ => g.getValue(v, "c")))
+      val held = manifestDescriptors(state)
+      assert(held.keySet == Set("by-first", "count", "sums") && held.values.forall(_ <= 2), s"cycle $i: $held")
+    }
+    assert(g.snapshotHits > 0)
+    g.reset("count")
+    assert(!manifestDescriptors(state).contains("count"))
+    g.destroy()
+    assert(manifestDescriptors(state).isEmpty && g.manifestPinsHeld == 0)
   }
 
   test("the first read of a generation runs the Spark read; the second fills") {
@@ -597,7 +693,8 @@ class ReadSnapshotSpec extends SparkSpec {
   }
 
   /** Commits a folds generation whose partial for `key` is garbage,
-    * through the manifest (the state stays snapshot-eligible).
+    * through the manifest, renamed over the old one as a commit does
+    * (the state stays snapshot-eligible).
     */
   private def corruptFold(g: Graft, view: String, key: String): Unit = {
     val dir = Paths.get(g.stateRoot, view, "folds")
@@ -612,8 +709,25 @@ class ReadSnapshotSpec extends SparkSpec {
     val part = Files.list(tmp).iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
     val name = s"ob=$ob/corrupt-${part.getFileName}"
     Files.move(part, dir.resolve(name))
-    Files.write(dir.resolve("_manifest.txt"),
+    val manifest = Files.write(dir.resolve("._manifest.corrupt"),
       s"$ob\t$name\t${current.mkString(",")}".getBytes(StandardCharsets.UTF_8))
+    Files.move(manifest, dir.resolve("_manifest.txt"), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private val procFd = Paths.get("/proc/self/fd")
+
+  /** This process's open descriptors whose file is a manifest under
+    * `state` (unlinked or not), counted per view.
+    */
+  private def manifestDescriptors(state: Path): Map[String, Int] = {
+    val prefix = state.toString + "/"
+    val fds = Files.list(procFd)
+    try fds.iterator().asScala
+      .flatMap(fd => scala.util.Try(Files.readSymbolicLink(fd).toString).toOption)
+      .filter(t => t.startsWith(prefix) && t.stripSuffix(" (deleted)").endsWith("/_manifest.txt"))
+      .toSeq.groupBy(_.drop(prefix.length).takeWhile(_ != '/')).map { case (v, ts) => v -> ts.size }
+    finally fds.close()
   }
 
   private def chain(t: Throwable): Seq[String] =
