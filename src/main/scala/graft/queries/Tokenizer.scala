@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{KeyCodec, Tables}
+import graft.core.Tables
 
 /** Tokenizer operators over the `documents` table: the corpus-scale
   * steps of building a subword tokenizer for an LLM data pipeline —
@@ -39,8 +39,10 @@ import graft.core.{KeyCodec, Tables}
   *     as C14), then every merge iteration runs over that bounded table
   *     only: count adjacent symbol pairs weighted by freq, take the
   *     global argmax (cnt desc, pair asc — deterministic), rewrite the
-  *     symbol arrays, repeat. k iterations = k jobs over vocab-sized
-  *     data, never k corpus scans. `text_bpe_pairs` (iteration 0's pair
+  *     symbol arrays, fold the pair-count delta, repeat. Each merge
+  *     runs about three jobs over vocab-sized data (the argmax collect,
+  *     the vocab checkpoint, the pair-table checkpoint), never a corpus
+  *     scan. `text_bpe_pairs` (iteration 0's pair
   *     count) is oracle-gated in DuckDB; the merge LOOP is pinned by
   *     BpeSpec on a corpus with hand-computable merges and registered
   *     as the rows-only `text_bpe_merges`.
@@ -188,16 +190,18 @@ object Tokenizer {
 
   /** Learn `k` BPE merges from the corpus. Returns the merge table
     * (step, left, right, cnt) in learned order. The corpus is scanned
-    * exactly once (wordFreq); each iteration is one aggregation over
-    * the persisted vocab table plus a 1-row driver argmax — the
+    * exactly once (wordFreq); every merge then runs the delta-maintained
+    * loop of [[bpeTrainFromVocab]] over the bounded vocab table — the
     * standard trainer shape (Sennrich et al. 2016), distributed.
     * Deterministic: argmax ties break (cnt desc, a asc, b asc).
     */
   def bpeTrain(s: SparkSession, dir: String, k: Int): Seq[(Int, String, String, Long)] =
-    bpeTrainFromVocabBatched(wordFreq(s, dir), k)
+    bpeTrainFromVocab(wordFreq(s, dir), k)
 
   /** The merge loop over an explicit (t, freq) vocabulary table — the
-    * unit BpeSpec drives with hand-computable corpora.
+    * one trainer every caller runs ([[bpeTrain]], [[bpeEncodeDocs]],
+    * [[bpeEncodeViolations]]) and the unit BpeSpec drives with
+    * hand-computable corpora.
     *
     * INCREMENTAL pair maintenance (r6 verdict #3, Sennrich's fast
     * trainer distributed): the naive loop recounts EVERY word's pairs
@@ -272,280 +276,6 @@ object Tokenizer {
     pc.unpersist()
     merges.toSeq
   }
-
-  // ------------------------------------------------- r8 batched trainer
-
-  /** A batch-chain entry: the pair and its count at selection time;
-    * `out` is the symbol the merge creates.
-    */
-  private case class Cand(a: String, b: String, cnt: Long) { def out: String = a + b }
-
-  /** The state-j symbol array of the chained batch rewrite: `syms` with
-    * the first j chain merges applied left-to-right, as one nested SQL
-    * expression (linear growth per mergePairSql's contract). Per-word
-    * chained application in chain order is EXACTLY the sequential
-    * trainer's rewrite — the sequential loop also folds one merge at a
-    * time over every word — so chain states are true greedy states
-    * whenever the chain matches greedy's picks.
-    */
-  private def stateSql(sel: Seq[Cand], j: Int): String =
-    sel.take(j).foldLeft("syms")((s, c) => mergePairSql(s, c.a, c.b))
-
-  /** State-0 adjacency test for ANY chain pair. Complete touched-set
-    * predicate for a whole chain by induction: a word rewritten at any
-    * chain step either contains some chain pair at state 0, or first
-    * gained one through an earlier rewrite — which itself requires
-    * containing a chain pair earlier, bottoming out at state 0. (Chain
-    * pairs whose components are in-batch outputs can't occur at state
-    * 0 — the test is just never true for them.)
-    */
-  private def hasAnySql(sel: Seq[Cand]): String =
-    s"""size(syms) >= 2 AND exists(sequence(0, size(syms) - 2),
-       |  i -> ${sel.map(c =>
-            s"(syms[i] = ${sqlLit(c.a)} AND syms[i+1] = ${sqlLit(c.b)})")
-            .mkString(" OR ")})""".stripMargin
-
-  /** Driver-side argmax under the trainer's deterministic order
-    * (cnt desc, a asc, b asc in UTF-8 BYTE order —
-    * [[graft.core.KeyCodec.compareUtf8]] — so the replay provably
-    * matches Spark's UTF8String TakeOrdered on any alphabet, not just
-    * ASCII; Java String order diverges for supplementary characters).
-    */
-  private def pairMax(cands: Iterator[(String, String, Long)]): Option[(String, String, Long)] =
-    cands.reduceOption { (x, y) =>
-      if (x._3 != y._3) { if (x._3 > y._3) x else y }
-      else if (x._1 != y._1) { if (KeyCodec.compareUtf8(x._1, y._1) < 0) x else y }
-      else if (KeyCodec.compareUtf8(y._2, x._2) >= 0) x else y
-    }
-
-  /** Extend a forced chain prefix with ranked candidates that are
-    * (a) structurally disjoint from everything already in the chain —
-    * a HEURISTIC that makes the first validation pass likely — and
-    * (b) novel-output — a SOUNDNESS condition: each candidate's output
-    * must be a string that is not an existing vocabulary symbol nor
-    * another chain string, so every pair whose count can GROW at an
-    * intermediate state involves a brand-new string with a known
-    * state-0 count of exactly zero (that is what lets the validator
-    * price created pairs without a second lookup job).
-    */
-  private def extendChain(
-      prefix: Vector[Cand], ranked: Seq[Cand], want: Int,
-      symbols: collection.Set[String]): Vector[Cand] = {
-    val strs = mutable.Set.empty[String]
-    prefix.foreach { c => strs += c.a; strs += c.b; strs += c.out }
-    var ch = prefix
-    val it = ranked.iterator
-    while (ch.size < want && it.hasNext) {
-      val c = it.next()
-      if (!strs(c.a) && !strs(c.b) && !strs(c.out) && !symbols(c.out)) {
-        ch :+= c; strs += c.a; strs += c.b; strs += c.out
-      }
-    }
-    ch
-  }
-
-  /** BATCHED merge selection (r7 verdict #1): commit up to `m` merges
-    * per round instead of one, with the emitted sequence PROVABLY
-    * identical to [[bpeTrainFromVocab]]'s. A production tokenizer
-    * learns ~32k merges; one argmax round-trip per merge is ~32k
-    * sequential Spark jobs — hours of pure scheduling overhead on a
-    * cluster — so the at-scale cost here is JOB COUNT, not shuffle.
-    *
-    * Bare non-interference batching is UNSOUND (the difference between
-    * this implementation and the obvious one): merging the top pair
-    * can CREATE a pair that preempts the rest of the batch.
-    * Counter-example: vocab {cab x100, de x90} ranks (a,b):100,
-    * (c,a):100, (d,e):90; (c,a) interferes, so the naive batch is
-    * [(a,b),(d,e)] — but after merging (a,b) the NEW pair (c,ab) has
-    * count 100 and greedy picks it before (d,e). BpeIncrementalSpec
-    * pins exactly this corpus. So the batch is VALIDATED per step and
-    * repaired in-round:
-    *
-    *  1. ONE TakeOrdered collects the top-M ranked pairs (M >= 8m).
-    *     Its head is the true global argmax, and its tail count cntM
-    *     is a sound knowledge horizon: any pair outside top-M has
-    *     state-0 count < cntM (when M rows came back; fewer rows =
-    *     FULL knowledge of the pair table).
-    *  2. The driver builds a candidate chain: the forced head, then
-    *     ranked structurally-disjoint novel-output extensions
-    *     ([[extendChain]]).
-    *  3. ONE job simulates ALL chain states over the touched words
-    *     only ([[hasAnySql]] — the only words any state rewrites) and
-    *     aggregates, per state j, the counts of pairs involving a
-    *     chain string. Those are the only counts that can differ from
-    *     state 0: every adjacency a rewrite creates or destroys
-    *     involves a chain symbol or chain output.
-    *  4. The driver REPLAYS greedy selection exactly: at step j the
-    *     true count of a top-M pair is its state-0 count plus the
-    *     simulated delta; a created pair (involving a novel output
-    *     string) has state-0 count zero, so its simulated count is
-    *     exact; any other unknown pair sits below cntM and cannot win
-    *     while the replayed argmax clears cntM (the replay STOPS the
-    *     round if it doesn't — never guesses). On divergence the true
-    *     argmax q is KNOWN: the chain repairs to
-    *     validated-prefix :+ q (+ fresh extensions) and ONE more
-    *     simulation job re-validates — each repair commits at least
-    *     one more merge, so a round with s simulations always commits
-    *     >= s merges (worst case ~1 job/merge, typical Zipf heads
-    *     validate in 1-2 simulations for the whole batch). A repair
-    *     whose q re-creates an EXISTING symbol ends the round after q:
-    *     past that point created pairs would alias unknown sub-cntM
-    *     counts.
-    *  5. The validated chain commits in TWO checkpoint jobs: one
-    *     chained CASE projection rewrites the vocab, and the pair
-    *     table folds the DRIVER-COLLECTED (state-v minus state-0)
-    *     delta — no second aggregation pass.
-    *
-    * Driver memory stays bounded: top-M rows, the touched sliver's
-    * chain-string pair counts per state, and the symbol set (initial
-    * alphabet + one string per learned merge — the tokenizer model
-    * itself, which any trainer holds).
-    *
-    * Returns (merges, rounds, simulations) — the spec's job-count
-    * proxies.
-    */
-  private[graft] def bpeTrainFromVocabBatchedStats(
-      wf: DataFrame, k: Int, m: Int = 8): (Seq[(Int, String, String, Long)], Int, Int) = {
-    val s = wf.sparkSession
-    import s.implicits._
-    var vocab = wf
-      .select(split(col("t"), "").as("syms"), col("freq"))
-      .localCheckpoint(true)
-    var pc = pairCounts(vocab).localCheckpoint(true)
-    // the alphabet: every learned output must be checked for novelty
-    // against it (chars now, plus outputs as merges commit)
-    val symbols = mutable.Set.empty[String]
-    vocab.select(explode(col("syms")).as("sym")).distinct().collect()
-      .foreach(r => symbols += r.getString(0))
-    val merges = mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rounds = 0
-    var sims = 0
-    var done = false
-    while (!done && merges.size < k) {
-      val want = math.min(m, k - merges.size)
-      val mTop = math.max(128, 8 * want)
-      val topM = pc.orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(mTop).collect()
-        .map(r => Cand(r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      if (topM.isEmpty) { done = true }
-      else {
-        rounds += 1
-        val base: Map[(String, String), Long] =
-          topM.map(c => (c.a, c.b) -> c.cnt).toMap
-        val cntM: Option[Long] = if (topM.size == mTop) Some(topM.last.cnt) else None
-        val head = topM.head
-        // a head whose output re-creates an existing symbol commits alone
-        // (continuing past it would alias unknown sub-cntM counts)
-        var chain: Vector[Cand] =
-          if (symbols(head.out)) Vector(head)
-          else extendChain(Vector(head), topM.tail, want, symbols)
-        var endAfterChain = symbols(head.out)
-        var committed: Vector[(String, String, Long)] = Vector.empty
-        var finalSim: Map[Int, Map[(String, String), Long]] = Map.empty
-        var finalV = 0
-        var settled = false
-        while (!settled) {
-          val chainStrs = chain.flatMap(c => Seq(c.a, c.b, c.out)).distinct
-          val inD = (c: Column) => c.isInCollection(chainStrs)
-          val sim = vocab.where(expr(hasAnySql(chain)))
-            .select(col("freq"), explode(array((0 to chain.size).map(j =>
-              struct(lit(j).as("step"), expr(stateSql(chain, j)).as("st"))): _*)).as("s"))
-            .select(col("freq"), col("s.step").as("step"), col("s.st").as("st"))
-            .where(size(col("st")) >= 2)
-            .select(col("freq"), col("step"), explode(expr(
-              "transform(sequence(0, size(st) - 2), i -> named_struct('a', st[i], 'b', st[i+1]))")).as("p"))
-            .where(inD(col("p.a")) || inD(col("p.b")))
-            .select(col("step"), col("p.a").as("a"), col("p.b").as("b"), col("freq"))
-            .groupBy(col("step"), col("a"), col("b")).agg(sum(col("freq")).as("cnt"))
-            .collect()
-            .groupBy(_.getInt(0))
-            .map { case (j, rows) =>
-              j -> rows.map(r => (r.getString(1), r.getString(2)) -> r.getLong(3)).toMap }
-          sims += 1
-          val simAt = (j: Int) =>
-            sim.getOrElse(j, Map.empty[(String, String), Long])
-          val outs = chain.map(_.out).toSet
-          // greedy replay over exact adjusted counts
-          var i = 0
-          var q: Option[(String, String, Long)] = None
-          var sound = true
-          val acc = mutable.ArrayBuffer.empty[(String, String, Long)]
-          while (sound && q.isEmpty && i < chain.size) {
-            val s0 = simAt(0); val si = simAt(i)
-            val cands = (base.keySet ++ si.keySet ++ s0.keySet).iterator.flatMap { p =>
-              val known = base.contains(p) || p._1.length > 1 && outs(p._1) ||
-                p._2.length > 1 && outs(p._2) || cntM.isEmpty
-              val cnt = base.getOrElse(p, 0L) +
-                si.getOrElse(p, 0L) - s0.getOrElse(p, 0L)
-              if (known && cnt > 0L) Some((p._1, p._2, cnt)) else None
-            }
-            pairMax(cands) match {
-              case Some((a, b, c)) =>
-                // the replayed argmax is trustworthy iff it clears the
-                // knowledge horizon (always true at state 0: TakeOrdered's
-                // head IS the global argmax)
-                if (i > 0 && cntM.exists(c <= _)) sound = false
-                else if (a == chain(i).a && b == chain(i).b) { acc += ((a, b, c)); i += 1 }
-                else q = Some((a, b, c))
-              case None => sound = false
-            }
-          }
-          val v = i
-          if (q.isEmpty || !sound || endAfterChain) {
-            committed = acc.toVector
-            finalSim = sim
-            finalV = v
-            settled = true
-          } else {
-            // repair: the true argmax at state v is known — splice it in
-            // and re-validate (>= 1 more merge per extra simulation)
-            val (qa, qb, _) = q.get
-            val qc = Cand(qa, qb, 0L)
-            if (symbols(qc.out)) { chain = chain.take(v) :+ qc; endAfterChain = true }
-            else chain = extendChain(chain.take(v) :+ qc, topM, want, symbols)
-          }
-        }
-        if (finalV == 0) { done = true } // exhausted pair table mid-round
-        else {
-          committed.foreach { case (a, b, c) =>
-            merges += ((merges.size, a, b, c)); symbols += a + b
-          }
-          val selV = chain.take(finalV)
-          val hasV = expr(hasAnySql(selV))
-          val chainV = expr(stateSql(selV, finalV)).as("syms")
-          val nextVocab = vocab
-            .select(when(hasV, chainV).otherwise(col("syms")).as("syms"), col("freq"))
-            .localCheckpoint(true)
-          val sim0 = finalSim.getOrElse(0, Map.empty[(String, String), Long])
-          val simV = finalSim.getOrElse(finalV, Map.empty[(String, String), Long])
-          val delta = (sim0.keySet ++ simV.keySet).iterator.map { p =>
-            (p._1, p._2, simV.getOrElse(p, 0L) - sim0.getOrElse(p, 0L))
-          }.filter(_._3 != 0L).toSeq
-          val nextPc =
-            (if (delta.isEmpty) pc else pc.unionByName(delta.toDF("a", "b", "cnt")))
-              .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("cnt"))
-              .where(col("cnt") > 0)
-              .localCheckpoint(true)
-          Seq(vocab, pc).foreach(_.unpersist())
-          vocab = nextVocab
-          pc = nextPc
-        }
-      }
-    }
-    vocab.unpersist()
-    pc.unpersist()
-    (merges.toSeq, rounds, sims)
-  }
-
-  /** The shipped trainer: batched selection, provably equal to the
-    * sequential loop (BpeIncrementalSpec) at a fraction of the job
-    * count. `inv_bpe_merges_replay` remains the independent at-gate
-    * witness (its replay recounts naively against the emitted
-    * sequence).
-    */
-  private[graft] def bpeTrainFromVocabBatched(
-      wf: DataFrame, k: Int, m: Int = 8): Seq[(Int, String, String, Long)] =
-    bpeTrainFromVocabBatchedStats(wf, k, m)._1
 
   /** The pre-r7 full-recount loop — kept as BpeIncrementalSpec's
     * equality witness for the incremental trainer (identical argmax
@@ -634,7 +364,7 @@ object Tokenizer {
     * consumers derive from it and a recompute would be a corpus
     * re-scan). The global vocabulary folds out of `perDoc` (never a
     * second scan), the merge table trains on it (k bounded iterations,
-    * see bpeTrainFromVocab), and — the point — the expensive per-word
+    * [[bpeTrainFromVocab]]), and — the point — the expensive per-word
     * merge loop (`Kernels.bpeEncode`) runs once per DISTINCT word over
     * the bounded vocab table, NOT once per corpus token occurrence.
     * Token counts then join back to `perDoc` on the word (shuffle join,
@@ -660,7 +390,7 @@ object Tokenizer {
     */
   def bpeEncodeDocs(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val (perDoc, wf) = perDocVocab(s, dir)
-    val merges = bpeTrainFromVocabBatched(wf, k).map { case (_, a, b, _) => (a, b) }
+    val merges = bpeTrainFromVocab(wf, k).map { case (_, a, b, _) => (a, b) }
     bpeEncodeFinish(perDoc, wf, merges)
   }
 
@@ -786,9 +516,10 @@ object Tokenizer {
     *  - CLOSURE: every multi-char token is some merge's output (the
     *    encoder can only emit source chars and learned symbols).
     *
-    * Trains its own merge table from the same corpus (the
-    * bpeMergeReplayViolations stance: the gate recomputes what it
-    * checks against rather than trusting the operator's internals).
+    * Trains its own merge table from the same corpus with the same
+    * trainer as [[bpeEncodeDocs]] (the bpeMergeReplayViolations stance:
+    * the gate recomputes what it checks against rather than trusting
+    * the operator's intermediate frames).
     */
   def bpeEncodeViolations(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val wf = wordFreq(s, dir).localCheckpoint(true)
@@ -819,21 +550,20 @@ object Tokenizer {
         .orderBy(col("t")))
   }
 
-  /** Left-to-right single-pass merge of adjacent (a, b) into ab — the
-    * BPE application rule (greedy, non-overlapping: "aaa" under (a,a)
-    * becomes ["aa","a"]) — as an aggregate() fold over the `inner`
-    * array expression, so the whole rewrite stays inside Tungsten (no
-    * UDF). acc = (out array, pend flag); pend means the previous symbol
-    * was an unconsumed `a`. When a == b the pend/x=b arm must win,
-    * which the CASE order guarantees. `inner` appears exactly ONCE in
-    * the template, so chaining merges (the batched trainer's per-word
-    * state sequence) grows the SQL linearly, not exponentially.
+  /** Left-to-right single-pass merge of adjacent (a, b) into ab over
+    * `syms` — the BPE application rule (greedy, non-overlapping: "aaa"
+    * under (a,a) becomes ["aa","a"]) — as an aggregate() fold, so the
+    * whole rewrite stays inside Tungsten (no UDF). acc = (out array,
+    * pend flag); pend means the previous symbol was an unconsumed `a`.
+    * When a == b the pend/x=b arm must win, which the CASE order
+    * guarantees. Every trainer rewrites with it, and BpeEncodeSpec
+    * replays it as the encode kernel's witness.
     */
-  private def mergePairSql(inner: String, a: String, b: String): String = {
+  private[graft] def mergePair(a: String, b: String): Column = {
     def st(out: String, pend: String) = s"named_struct('out', $out, 'pend', $pend)"
-    s"""
+    expr(s"""
       aggregate(
-        $inner,
+        syms,
         ${st("CAST(array() AS ARRAY<STRING>)", "false")},
         (acc, x) -> CASE
           WHEN acc.pend AND x = ${sqlLit(b)}
@@ -846,11 +576,8 @@ object Tokenizer {
           ELSE ${st("concat(acc.out, array(x))", "false")} END,
         acc -> CASE WHEN acc.pend THEN concat(acc.out, array(${sqlLit(a)}))
                     ELSE acc.out END)
-    """
+    """).as("syms")
   }
-
-  private[graft] def mergePair(a: String, b: String): Column =
-    expr(mergePairSql("syms", a, b)).as("syms")
 
   private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
 

@@ -316,16 +316,6 @@ object Train {
     predict(s, bucketCounts(d), distillLabels(d), model)
   }
 
-  /** The full-batch comparator (pre-r9 flagship): kept for
-    * ClassifierTrainSpec's sampled-vs-full accuracy comparison.
-    */
-  private[graft] def trainedFullBatch(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir, "documents")
-    val cnts = Pinned.track(bucketCounts(d).localCheckpoint(true))
-    val labels = Pinned.track(distillLabels(d).localCheckpoint(true))
-    predict(s, cnts, labels, logisticTrain(cnts, labels))
-  }
-
   // ------------------------------------------------------- C47 softmax
 
   /** The language classes, fixed by the C9 rule's output alphabet;

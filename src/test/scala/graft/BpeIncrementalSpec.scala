@@ -72,92 +72,43 @@ class BpeIncrementalSpec extends SparkSpec {
   }
 
   test("incremental trainer equals the naive loop row-for-row at k=100") {
-    val words = soup(60, 42L)
-    val inc = Tokenizer.bpeTrainFromVocab(vocabDF(words), 100)
-    val naive = BpeIncrementalSpec.driverTrain(words, 100)
-    assert(inc.size == naive.size, s"lengths: inc=${inc.size} naive=${naive.size}")
-    inc.zip(naive).foreach { case (i, n) =>
-      assert(i == n, s"merge diverged at step ${i._1}: inc=$i naive=$n")
-    }
-    assert(inc.size == 100, s"corpus should sustain 100 merges, got ${inc.size}")
-  }
-
-  // ---- r8: batched merge selection -----------------------------------
-
-  /** r7 verdict #1: the batched trainer commits up to m merges per
-    * driver round-trip. Its contract is EXACT sequence equality with
-    * the sequential loop — the batch validates the greedy order per
-    * step and truncates when a merge-created pair preempts — at a
-    * measured fraction of the rounds (the job-count proxy).
-    */
-  test("batched trainer equals the naive loop row-for-row at k=100 across corpora and batch sizes") {
-    for (seed <- Seq(42L, 1234L); m <- Seq(8, 16)) {
+    for (seed <- Seq(42L, 1234L)) {
       val words = soup(60, seed)
-      val (bat, rounds, sims) = Tokenizer.bpeTrainFromVocabBatchedStats(vocabDF(words), 100, m)
+      val inc = Tokenizer.bpeTrainFromVocab(vocabDF(words), 100)
       val naive = BpeIncrementalSpec.driverTrain(words, 100)
-      assert(bat.size == naive.size, s"seed=$seed m=$m lengths: ${bat.size} vs ${naive.size}")
-      bat.zip(naive).foreach { case (b, n) =>
-        assert(b == n, s"seed=$seed m=$m diverged at step ${b._1}: batched=$b naive=$n")
+      assert(inc.size == naive.size, s"seed=$seed lengths: inc=${inc.size} naive=${naive.size}")
+      inc.zip(naive).foreach { case (i, n) =>
+        assert(i == n, s"seed=$seed merge diverged at step ${i._1}: inc=$i naive=$n")
       }
-      // the point of batching: far fewer driver round-trips than merges.
-      // Every simulation commits >= 1 merge (in-round repair), so
-      // sims <= merges by construction; the dense 8-letter soup is
-      // ADVERSARIAL for batching (merged heads keep creating preempting
-      // pairs, forcing repairs), so the binding regression bar is the
-      // measured-jobs halving test below — here we pin that rounds
-      // (3 fixed jobs each) stay well under k and repairs stay bounded.
-      assert(rounds <= 25, s"seed=$seed m=$m: $rounds rounds for 100 merges")
-      assert(sims < 100, s"seed=$seed m=$m: $sims simulations for 100 merges")
+      assert(inc.size == 100, s"seed=$seed: corpus should sustain 100 merges, got ${inc.size}")
     }
   }
 
-  /** The counter-example that makes per-step validation necessary
-    * (bare non-interference batching is UNSOUND): ranked pairs are
-    * (a,b):100, (c,a):100, (d,e):90, (f,g):80; (c,a) interferes with
-    * (a,b), so a naive batch would commit [(a,b),(d,e),(f,g)] — but
-    * merging (a,b) CREATES (c,ab) with count 100, which greedy picks
-    * before (d,e). The batched trainer must truncate round 1 after
-    * (a,b) and still emit the exact sequential sequence.
+  /** A merge can CREATE the next argmax: ranked pairs are (a,b):100,
+    * (c,a):100, (d,e):90, (f,g):80, and merging (a,b) creates (c,ab)
+    * with count 100, which greedy picks before (d,e). Any trainer that
+    * commits several pre-ranked pairs per round without re-counting
+    * emits (d,e) second; the delta loop must pick the created pair.
     */
-  test("validation repairs when a merge-created pair preempts the batch") {
+  test("incremental trainer picks a merge-created pair that preempts the ranking") {
     val words = Seq(("cab", 100L), ("de", 90L), ("fg", 80L))
-    val (bat, _, sims) = Tokenizer.bpeTrainFromVocabBatchedStats(vocabDF(words), 4, 4)
+    val inc = Tokenizer.bpeTrainFromVocab(vocabDF(words), 4)
     val naive = BpeIncrementalSpec.driverTrain(words, 4)
-    assert(bat == naive, s"batched=$bat naive=$naive")
-    assert(bat.take(2).map(t => (t._2, t._3)) == Seq(("a", "b"), ("c", "ab")),
-      s"greedy must pick the created pair second: $bat")
-    // the naive batch would have committed (d,e) second; the replay must
-    // have detected (c,ab) and re-simulated at least once
-    assert(sims >= 2, s"the preempting pair must force a repair: sims=$sims")
+    assert(inc == naive, s"incremental=$inc naive=$naive")
+    assert(inc.take(2).map(t => (t._2, t._3)) == Seq(("a", "b"), ("c", "ab")),
+      s"greedy must pick the created pair second: $inc")
   }
 
   /** Self-pairs and overlapping runs (the "aaa" -> ["aa","a"] greedy
-    * rule) through the batched chain: a two-letter alphabet forces
-    * merged symbols to keep colliding and re-pairing.
+    * rule) through the delta fold: a two-letter alphabet forces merged
+    * symbols to keep colliding and re-pairing.
     */
-  test("batched trainer handles self-pairs and overlap runs identically") {
+  test("incremental trainer handles self-pairs and overlap runs identically") {
     val words = abSoup(40, 99L)
-    val (bat, _, _) = Tokenizer.bpeTrainFromVocabBatchedStats(vocabDF(words), 60, 8)
+    val inc = Tokenizer.bpeTrainFromVocab(vocabDF(words), 60)
     val naive = BpeIncrementalSpec.driverTrain(words, 60)
-    assert(bat == naive,
-      s"diverged: ${bat.zip(naive).collectFirst { case (b, n) if b != n => s"$b vs $n" }}")
-  }
-
-  test("batched trainer runs a fraction of the sequential loop's Spark jobs") {
-    val wf = vocabDF(soup(120, 7L)).localCheckpoint(true)
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val jl = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def countJobs(f: => Unit): Long = { drainBus(); jobs.set(0L); f; drainBus(); jobs.get() }
-    spark.sparkContext.addSparkListener(jl)
-    try {
-      val seqJobs = countJobs { Tokenizer.bpeTrainFromVocab(wf, 80) }
-      val batJobs = countJobs { Tokenizer.bpeTrainFromVocabBatchedStats(wf, 80, 16) }
-      assert(batJobs * 2 < seqJobs,
-        s"batched should cut driver jobs at least in half: batched=$batJobs sequential=$seqJobs")
-    } finally spark.sparkContext.removeSparkListener(jl)
+    assert(inc == naive,
+      s"diverged: ${inc.zip(naive).collectFirst { case (i, n) if i != n => s"$i vs $n" }}")
   }
 
   // ---- flat-iteration measurement ------------------------------------

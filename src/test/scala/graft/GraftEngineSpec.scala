@@ -7,7 +7,7 @@ import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, explode, from_json}
+import org.apache.spark.sql.functions.{col, explode, from_json, max}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
 import graft.core._
@@ -213,9 +213,19 @@ class GraftEngineSpec extends SparkSpec {
 
   test("listIndexed/isIndexed reflect the catalog; catalog survives restart") {
     assert(db.listIndexed().toSet == Set(aurl(0), aurl(1), aurl(3)))
+    // an origin's indexed version is the max fversion its last pass saw
+    // (archive 0's is its rewrite's bumped mtime)
+    val seen = Seq(0, 1, 3).map { i =>
+      aurl(i) -> archives(i).files(spark).agg(max(col("fversion"))).head().getLong(0)
+    }
+    seen.foreach { case (o, v) => assert(db.indexedVersion(o) == Some(v), o) }
+    assert(db.indexedVersion(aurl(2)).isEmpty, "unindexed origin")
+    assert(db.indexedVersion("dat://never-indexed").isEmpty)
     val db2 = new Graft(spark, root.resolve("state").toString)
     assert(db2.listIndexed().toSet == Set(aurl(0), aurl(1), aurl(3)))
     assert(db2.isIndexed(aurl(1)) && !db2.isIndexed(aurl(2)))
+    seen.foreach { case (o, v) => assert(db2.indexedVersion(o) == Some(v), o) }
+    assert(db2.indexedVersion(aurl(2)).isEmpty)
   }
 
   test("reset clears a view's state; others unaffected") {
