@@ -26,8 +26,6 @@ object AnnScale {
         |as float))""".stripMargin).as("embedding"),
       (col("id") % 50).cast("int").as("label"))
 
-  private def med3(f: => Long): Double = graft.tools.Session.med3(f)._2
-
   def main(args: Array[String]): Unit = {
     val small = sys.env.getOrElse("SPARK_GRAFT_ANN_SMALL", "50000").toLong
     val spark = graft.tools.Session()
@@ -71,8 +69,8 @@ object AnnScale {
       val rowsRead = prunedIdx().count()
       def probe() = graft.queries.Ann.ivfProbe(spark,
         built.copy(assigned = prunedIdx()), queries, p)
-      val tB = med3(brute.count())
-      val tP = med3(probe().count())
+      val rs = Bench.timeArms("brute" -> (() => brute.count()), "probe" -> (() => probe().count()))
+      val (tB, tP) = (rs("brute").median, rs("probe").median)
       // recall@5: fraction of the exact top-5 the IVF probe recovers
       def top(df: DataFrame): Map[Long, Set[Long]] = df
         .select(col("q_id"), col("n_id")).collect()
@@ -86,7 +84,7 @@ object AnnScale {
       println(f"[annscale] n=$n%d: brute/batch ${tB}%.2f s reads $bruteRows%d rows; " +
         f"ivf build ${tIdx}%.2f s (single-shot), probe/batch ${tP}%.2f s reads $rowsRead%d rows " +
         f"(${bruteRows.toDouble / rowsRead}%.1f x fewer; ${cells.size}/$k%d cells for $nq%d queries, " +
-        f"k/p = ${k / p}%d x per query); batch timings median-of-3, recall@5 $recall%.2f")
+        f"k/p = ${k / p}%d x per query); batch timings median of ${Bench.repeats}, recall@5 $recall%.2f")
       // IVFPQ width compression, measured ON DISK against the FLOAT32
       // SOURCE table (what a deployment actually stores — writing the
       // engine's double-cast frame would inflate the ratio ~2x): parquet
@@ -135,7 +133,7 @@ object AnnScale {
         ivfpq.copy(encoded = spark.read.parquet(s"$dir/ivfpq_encoded")
           .where(col("cell").isin(pqCells.map(Int.box): _*))),
         queries, p = p, rerank = rr)
-      val tPq = med3(pqProbeOnDisk().count())
+      val tPq = Bench.timeArms("ivfpq" -> (() => pqProbeOnDisk().count()))("ivfpq").median
       val pqRecall = recallVs(top(pqProbeOnDisk()))
       println(f"[annscale] n=$n%d ivfpq: raw corpus ${rawB / 1024}%d KiB vs encoded index ${encB / 1024}%d KiB " +
         f"(${rawB.toDouble / encB}%.1f x smaller scan, x ${bruteRows.toDouble / rowsRead}%.1f x cell pruning), " +

@@ -78,6 +78,22 @@ object Bench {
     arms.map(a => Readings(a.name, byArm.getOrElse(a.name, Nil), inTail(a.name)))
   }
 
+  /** Timed passes per arm: `SPARK_GRAFT_REPEATS`, default 3. */
+  private[graft] def repeats: Int = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
+
+  private[graft] def seconds(f: => Any): Double = {
+    val t0 = System.nanoTime()
+    f
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** [[measure]] for the scale mains: named closures, each warmed once
+    * and then timed over [[repeats]] interleaved passes; readings by name.
+    */
+  private[graft] def timeArms(arms: (String, () => Any)*): Map[String, Readings] =
+    measure(arms.map { case (n, f) => Arm(n, () => seconds(f())) }, repeats, () => 0L)
+      .map(r => r.name -> r).toMap
+
   /** Counts the streaming queries started on the session it listens to.
     * `onQueryStarted` runs inside `start()`, so an arm's starts are
     * counted by the time the arm returns.
@@ -93,8 +109,7 @@ object Bench {
 
   private def queryArm(spark: SparkSession, sfDir: String, q: queries.Q): Arm =
     Arm(q.name, () => {
-      val t0 = System.nanoTime()
-      try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      try seconds(q.run(spark, sfDir).count())
       // the count was this plan's one materialization and the next run
       // rebuilds it, so draining the pinned checkpoints here is safe
       // (Pinned contract) and keeps them out of the next arm's timing
@@ -162,7 +177,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
     val spark = Session()
     Session.warmTables(spark, sfDir)
     // declaration order (deterministic). inv_* are correctness gates

@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.tools.Session.med3
 
 /** Scaling measurement for the similarity-dedup kernels: run the exact
   * prefix-filtered AllPairs join (and the MinHash-LSH path) on synthetic
@@ -52,23 +51,23 @@ object DedupScale {
     // corpora are materialized ONCE, OUTSIDE the timed window (synthesis
     // is O(n) and would dilute a super-linear kernel toward 4x — the very
     // claim being tested), and shared by both kernels
-    val warm = corpus(spark, small / 5).localCheckpoint(true)
     val d1 = corpus(spark, small).localCheckpoint(true)
     val d4 = corpus(spark, small * 4).localCheckpoint(true)
-    Seq(("allpairs", (d: DataFrame) =>
-      queries.Dedup.ngramJaccardPairs(d, 4, 5).count()),
-      ("minhash", (d: DataFrame) =>
-        queries.Dedup.minhashLshPairs(d, 4, 5).count())
-    ).foreach { case (name, run) =>
-      // warm once at a small size so JIT/codegen cost doesn't inflate
-      // the small-run denominator (which would understate the ratio)
-      run(warm)
-      val (p1, t1) = med3(run(d1))
-      val (p2, t2) = med3(run(d4))
-      println(f"[dedupscale] $name: $small%d docs -> $p1 pairs in $t1%.1f s; " +
-        f"${small * 4}%d docs -> $p2 pairs in $t2%.1f s; 4x data = ${t2 / t1}%.1f x time (median-of-3)")
+    val kernels = Seq(
+      "allpairs" -> ((d: DataFrame) => queries.Dedup.ngramJaccardPairs(d, 4, 5).count()),
+      "minhash" -> ((d: DataFrame) => queries.Dedup.minhashLshPairs(d, 4, 5).count()))
+    // Bench.measure warms every arm once (JIT/codegen off the 1x
+    // denominator) and interleaves the timed passes
+    val pairs = collection.concurrent.TrieMap[String, Long]()
+    val rs = Bench.timeArms((for ((name, run) <- kernels; (tag, d) <- Seq("1x" -> d1, "4x" -> d4))
+      yield s"$name $tag" -> (() => pairs(s"$name $tag") = run(d))): _*)
+    kernels.foreach { case (name, _) =>
+      val (t1, t4) = (rs(s"$name 1x").median, rs(s"$name 4x").median)
+      println(f"[dedupscale] $name: $small%d docs -> ${pairs(s"$name 1x")} pairs in $t1%.1f s; " +
+        f"${small * 4}%d docs -> ${pairs(s"$name 4x")} pairs in $t4%.1f s; 4x data = ${t4 / t1}%.1f x time " +
+        f"(median of ${Bench.repeats})")
     }
-    Seq(warm, d1, d4).foreach(_.unpersist())
+    Seq(d1, d4).foreach(_.unpersist())
     spark.stop()
   }
 }

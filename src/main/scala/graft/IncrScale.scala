@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.tools.Session.med3
 
 /** Scaling measurement for the incremental-dedup family (SURVEY §2
   * C30/C30b): hold the BATCH fixed, grow the CORPUS 4x, and measure how
@@ -111,15 +110,19 @@ object IncrScale {
       ("anti", (c, b, _, _) => queries.Dedup.incrementalExact(b, c).count()),
       ("bloom", (c, b, f, _) => queries.Dedup.incrementalExactBloom(b, c, f).count()),
       ("bloomIdx", (c, b, _, i) => queries.Dedup.incrementalExactBloomIndexed(b, c, i).count()))
+    val rows = collection.concurrent.TrieMap[String, Long]()
+    val rs = Bench.timeArms(paths.flatMap { case (name, run) => Seq(
+      s"$name 1x" -> (() => rows(s"$name 1x") = run(c1, batch1, bloom1, idx1)),
+      s"$name 4x" -> (() => rows(s"$name 4x") = run(c4, batch4, bloom4, idx4)))
+    }: _*)
     paths.foreach { case (name, run) =>
-      run(c1, batch1, bloom1, idx1) // warm
-      val (r1, t1) = med3(run(c1, batch1, bloom1, idx1))
-      val (r4, t4) = med3(run(c4, batch4, bloom4, idx4))
+      val (r1, t1) = (rows(s"$name 1x"), rs(s"$name 1x").median)
+      val (r4, t4) = (rows(s"$name 4x"), rs(s"$name 4x").median)
       val s1 = measureShuffle(run(c1, batch1, bloom1, idx1))
       val s4 = measureShuffle(run(c4, batch4, bloom4, idx4))
       println(f"[incrscale] $name: corpus $small%d -> $r1 rows in $t1%.2f s (${s1 / 1024}%d KiB shuffled); " +
         f"corpus ${small * 4}%d -> $r4 rows in $t4%.2f s (${s4 / 1024}%d KiB shuffled); " +
-        f"4x corpus = ${t4 / t1}%.2f x time, ${s4.toDouble / math.max(1L, s1)}%.2f x shuffle (median-of-3, batch $bSize%d fixed)")
+        f"4x corpus = ${t4 / t1}%.2f x time, ${s4.toDouble / math.max(1L, s1)}%.2f x shuffle (median of ${Bench.repeats}, batch $bSize%d fixed)")
     }
     Seq(c1, c4, batch1, batch4, idx1, idx4).foreach(_.unpersist())
     spark.stop()

@@ -235,24 +235,8 @@ object Multimodal {
   def phashNearDupPairs(media: Dataset[MediaRow], maxHamming: Int,
       codec: Codec = StubCodec): DataFrame = {
     import org.apache.spark.sql.functions._
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"banded recall is only total for maxHamming <= 3 (got $maxHamming)")
-    val h = dHash(media, codec).toDF()
-    val banded = h.select(col("media_id"), col("phash"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          col("phash").bitwiseAND(lit(0xFFFFL << (16 * b))).as("bits"))
-      }: _*)).as("bb"))
-      .select(col("media_id"), col("phash"), col("bb.band"), col("bb.bits"))
-    val a = banded.select(col("band"), col("bits"),
-      col("media_id").as("a_id"), col("phash").as("a_hash"))
-    val b = banded.select(col("band"), col("bits"),
-      col("media_id").as("b_id"), col("phash").as("b_hash"))
-    a.join(b, Seq("band", "bits"))
-      .where(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("a_hash"), col("b_hash"))
-      .distinct()
-      .where(bit_count(col("a_hash").bitwiseXOR(col("b_hash"))) <= maxHamming)
+    graft.queries.Similar.hammingPairs(dHash(media, codec).toDF(), "media_id", "phash",
+        4, 16, maxHamming)
       .select(col("a_id"), col("b_id"))
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core.Tables
+import Similar.{cosine, probe}
 
 /** Similarity search over the `embeddings` table — SURVEY.md §2.C7-C8.
   *
@@ -31,15 +32,9 @@ object Ann {
   // 1 − 0.79⁸ ≈ 0.85 across 8 tables (≈0.98 at cos 0.9); 2⁶
   // buckets/table keeps candidates bucket-local (bits scale up with
   // corpus size in a deployment — more bits = smaller buckets).
-  // Hyperplane weights hash through a LARGE-prime inner mod before the
-  // small range reduction: a plain linear-in-j formula mod 13 is
-  // CYCLIC in j (every plane a shift of one pattern — measured recall
-  // 0.18); the 1000003 inner mod decorrelates planes (measured 0.42 at
-  // sf0.01 — the float ann_lsh family's own spec floor).
+  // Hyperplane weights are [[Similar.lshW]].
   private val LshTables = 8
   private val LshBits = 6
-  private[queries] def lshW(t: Int, b: Int, j: Int): Long =
-    (t.toLong * 2654435761L + b.toLong * 2246822519L + j.toLong * 3266489917L) % 1000003L % 13L - 6L
 
   // C8n integer-PQ geometry: 4 subspaces × 16 dims, 4 codewords each
   // (64 dims → 4 one-byte codes), 3 Lloyd rounds, ADC top-100 re-rank
@@ -61,16 +56,13 @@ object Ann {
     * `sub` added to every key (one chain trains ALL subspace codebooks
     * at once), then the classic PQ serving algebra — per-query ADC
     * lookup table (query-sub × codeword integer dots), code-join
-    * scoring, top-R pool, exact integer-cosine re-rank. Every value is
+    * scoring, top-R pool, exact integer-cosine re-rank, top-K. Every value is
     * an integer or a double of an integer, so the driver's hash gate
     * covers the whole PQ lifecycle.
     */
-  private def pqIntCtes: String = {
+  private def pqIntSql: String = {
     val sb = new StringBuilder
-    sb ++= s"""WITH x AS (
-      |  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-      |    CAST(floor((unnest(embedding)::DOUBLE + 1.0) * 1000) AS BIGINT) AS m
-      |  FROM embeddings),
+    sb ++= s"""WITH x AS (${Similar.kiloSql("m")}),
       |xs AS (SELECT vec_id, d, m, CAST((d - 1) // $PqSubDim AS BIGINT) AS sub FROM x),
       |pc0 AS (SELECT sub, vec_id - $NQ AS cw, d, m AS cent
       |        FROM xs WHERE vec_id >= $NQ AND vec_id < ${NQ + PqKInt}),
@@ -124,20 +116,8 @@ object Ann {
       |        PARTITION BY q_id ORDER BY adc DESC, n_id) AS arn
       |    FROM adc) WHERE arn <= $PqRerankInt),
       |iv AS (SELECT vec_id, d, m - 1000 AS v FROM x),
-      |nrm AS (SELECT vec_id, sqrt(CAST(sum(v * v) AS DOUBLE)) AS nrm
-      |        FROM iv GROUP BY vec_id),
-      |dots AS (SELECT cand.q_id, cand.n_id,
-      |           CAST(sum(q.v * c.v) AS DOUBLE) AS dot
-      |         FROM cand JOIN iv q ON q.vec_id = cand.q_id
-      |                   JOIN iv c ON c.vec_id = cand.n_id AND c.d = q.d
-      |         GROUP BY cand.q_id, cand.n_id),
-      |scored AS (SELECT d.q_id, d.n_id, d.dot / (nq.nrm * nc.nrm) AS cos
-      |           FROM dots d JOIN nrm nq ON nq.vec_id = d.q_id
-      |                       JOIN nrm nc ON nc.vec_id = d.n_id
-      |           WHERE nq.nrm > 0 AND nc.nrm > 0),
-      |ranked AS (SELECT q_id, n_id, cos, row_number() OVER (
-      |             PARTITION BY q_id ORDER BY round(cos, 6) DESC, n_id) AS rank
-      |           FROM scored)""".stripMargin
+      |${Similar.intCosineSql("iv")},
+      |${Similar.topKSql(K)}""".stripMargin
     sb.toString
   }
 
@@ -197,9 +177,6 @@ object Ann {
       sqrt(graft.functions.Native.dot(
         org.apache.spark.sql.SparkSession.active, col("emb"), col("emb"))).as("nrm"))
   }
-
-  private def cosine(s: SparkSession, a: Column, b: Column, na: Column, nb: Column): Column =
-    graft.functions.Native.dot(s, a, b) / (na * nb)
 
   /** (table, signature) bucket keys for all L tables at once — a single
     * batched-kernel call per row (posexplode of the length-L signature
@@ -278,29 +255,14 @@ object Ann {
   private lazy val ivfIntSql: String =
     s"""${Cluster.kmeansCtes},
        |iv AS (SELECT vec_id, d, m - 1000 AS v FROM x),
-       |nrm AS (SELECT vec_id, sqrt(CAST(sum(v * v) AS DOUBLE)) AS nrm
-       |        FROM iv GROUP BY vec_id),
        |probe AS (SELECT vec_id AS q_id, cluster FROM aF
        |          WHERE vec_id < $NQ AND rn <= 4),
        |cells AS (SELECT vec_id AS n_id, cluster FROM aF
        |          WHERE vec_id >= $NQ AND rn = 1),
        |cand AS (SELECT p.q_id, c.n_id
        |         FROM probe p JOIN cells c ON c.cluster = p.cluster),
-       |dots AS (SELECT cand.q_id, cand.n_id,
-       |           CAST(sum(q.v * c.v) AS DOUBLE) AS dot
-       |         FROM cand JOIN iv q ON q.vec_id = cand.q_id
-       |                   JOIN iv c ON c.vec_id = cand.n_id AND c.d = q.d
-       |         GROUP BY cand.q_id, cand.n_id),
-       |scored AS (SELECT d.q_id, d.n_id, d.dot / (nq.nrm * nc.nrm) AS cos
-       |           FROM dots d JOIN nrm nq ON nq.vec_id = d.q_id
-       |                       JOIN nrm nc ON nc.vec_id = d.n_id
-       |           WHERE nq.nrm > 0 AND nc.nrm > 0),
-       |ranked AS (SELECT q_id, n_id, cos, row_number() OVER (
-       |             PARTITION BY q_id ORDER BY round(cos, 6) DESC, n_id) AS rank
-       |           FROM scored)
-       |SELECT q_id, rank, n_id, round(cos, 4) AS cos
-       |FROM ranked WHERE rank <= $K
-       |ORDER BY q_id, rank""".stripMargin
+       |${Similar.intCosineSql("iv")},
+       |${Similar.topKSql(K)}""".stripMargin
 
   /** (vec_id, q kilo codes) — the C8l/C39 integer quantization of the
     * embeddings table, the ONE cast the integer-IVF build, probe and
@@ -308,11 +270,7 @@ object Ann {
     */
   private def kiloCodes(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings").select(col("vec_id"),
-      transform(col("embedding"),
-        v => floor((v.cast("double") + 1.0d) * 1000).cast("long")).as("q"))
-
-  private def signedOf(q: Column): Column =
-    transform(q, m => (m - lit(1000L)).cast("double"))
+      Similar.kiloCodes(col("embedding")).as("q"))
 
   /** Per-query probe cells against FROZEN integer centroids — C8l's
     * driver-side (dist, idx)-sorted 4-nearest computation as a
@@ -323,11 +281,47 @@ object Ann {
     * bit-identical to the collected batch form and the oracle's rn ≤ p.
     */
   private def argmaxCellsInt(cents: Array[Array[Long]], p: Int) = udf { q: Seq[Long] =>
+    nearestCellsInt(cents, q, p)
+  }
+
+  private def nearestCellsInt(cents: Array[Array[Long]], q: Seq[Long], p: Int): Seq[Int] =
     cents.zipWithIndex.map { case (c, ci) =>
       (c.iterator.zip(q.iterator).map { case (cv, mv) =>
         val dd = mv - cv; dd * dd
       }.sum, ci)
     }.sorted.take(p).map(_._2).toSeq
+
+  /** The integer cell index (n_id, cell, nemb, nnrm) of the corpus kilo
+    * codes `x` against frozen centroids — what [[ivfIntArtifact]]
+    * persists and `ann_ivf_int` builds fresh.
+    */
+  private def intCellIndex(s: SparkSession, x: DataFrame, cents: Array[Array[Long]]): DataFrame =
+    Cluster.assigned(s, Cluster.withDerived(s, x), cents)
+      .where(col("vec_id") >= NQ)
+      .select(col("vec_id").as("n_id"), col("cluster").as("cell"),
+        Similar.signed(col("q")).as("nemb"))
+      .withColumn("nnrm", sqrt(graft.functions.Native.dot(s, col("nemb"), col("nemb"))))
+
+  /** C8l probe → score → top-K: each query's 4 nearest integer cells,
+    * resolved on the driver (a bounded NQ×k computation), broadcast as
+    * (q_id, cell) pairs into the cell equi-join of the index `assigned`
+    * returns for the probed cells; exact integer cosine ranks.
+    */
+  private def ivfIntProbe(s: SparkSession, cents: Array[Array[Long]], x: DataFrame,
+      assigned: Seq[Int] => DataFrame): DataFrame = {
+    val queries = x.where(col("vec_id") < NQ)
+      .select(col("vec_id").as("q_id"), col("q"), Similar.signed(col("q")).as("qemb"))
+      .withColumn("qnrm", sqrt(graft.functions.Native.dot(s, col("qemb"), col("qemb"))))
+    val cells = queries.select(col("q_id"), col("q")).collect().toSeq.flatMap { r =>
+      nearestCellsInt(cents, r.getSeq[Long](1), 4).map(c => (r.getLong(0), c))
+    }
+    val sess = s
+    import sess.implicits._
+    topK(probe(assigned(cells.map(_._2).distinct),
+        cells.toDF("q_id", "cell").join(queries.drop("q"), "q_id"), "cell")
+      .where(col("qnrm") > 0 && col("nnrm") > 0)
+      .select(col("q_id"), col("n_id"),
+        cosine(s, col("qemb"), col("nemb"), col("qnrm"), col("nnrm")).as("cos")))
   }
 
   /** Ensure the persisted INTEGER IVF index (r12 verdict #6) exists and
@@ -343,13 +337,7 @@ object Ann {
       s"target/ann_index/${artifactKey(s, dir)}/ivf_int_k8")
     Artifact.publish(root) { tmp =>
       val cents = Cluster.fit(s, dir)._3
-      val corpus = Cluster.assigned(s, Cluster.withDerived(s, kiloCodes(s, dir)), cents)
-        .where(col("vec_id") >= NQ)
-        .select(col("vec_id").as("n_id"), col("cluster").as("cell"),
-          signedOf(col("q")).as("nemb"))
-        .withColumn("nnrm",
-          sqrt(graft.functions.Native.dot(s, col("nemb"), col("nemb"))))
-      corpus.write.mode("overwrite").partitionBy("cell")
+      intCellIndex(s, kiloCodes(s, dir), cents).write.mode("overwrite").partitionBy("cell")
         .parquet(tmp.resolve("assigned.parquet").toString)
       java.nio.file.Files.writeString(tmp.resolve("cents.txt"),
         cents.map(_.mkString(",")).mkString("\n"))
@@ -692,15 +680,7 @@ object Ann {
     Artifact.deleteRecursively(root.resolve("deltas"))
   }
 
-  /** Exact top-K per query: scored candidates → row_number window. */
-  private def topK(scored: DataFrame): DataFrame =
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(round(col("cos"), 6).desc, col("n_id"))))
-      .where(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("q_id"), col("rank"))
+  private def topK(scored: DataFrame): DataFrame = Similar.topK(scored, K)
 
   val all: Seq[Q] = Seq(
 
@@ -717,20 +697,13 @@ object Ann {
          |      GROUP BY q.vec_id, c.vec_id),
          |scored AS (SELECT q_id, n_id, dot / (nq.nrm * nc.nrm) AS cos
          |           FROM d JOIN n nq ON nq.vec_id = q_id JOIN n nc ON nc.vec_id = n_id),
-         |ranked AS (SELECT q_id, n_id, cos, row_number() OVER (
-         |             PARTITION BY q_id ORDER BY round(cos, 6) DESC, n_id) AS rank
-         |           FROM scored)
-         |SELECT q_id, rank, n_id, round(cos, 4) AS cos
-         |FROM ranked WHERE rank <= $K
-         |ORDER BY q_id, rank""".stripMargin) { (s, dir) =>
+         |${Similar.topKSql(K)}""".stripMargin) { (s, dir) =>
       val e = withNorm(embs(s, dir))
       val queries = e.where(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("emb").as("qemb"), col("nrm").as("qnrm"))
-      val corpus = e.where(col("vec_id") >= NQ)
-      val scored = corpus.crossJoin(broadcast(queries))
+      topK(probe(e.where(col("vec_id") >= NQ), queries)
         .select(col("q_id"), col("vec_id").as("n_id"),
-          cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos"))
-      topK(scored)
+          cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos")))
     },
 
     // C7b: FILTERED vector search — top-k cosine restricted to corpus
@@ -758,21 +731,14 @@ object Ann {
          |      GROUP BY q.vec_id, c.vec_id),
          |scored AS (SELECT q_id, n_id, dot / (nq.nrm * nc.nrm) AS cos
          |           FROM d JOIN n nq ON nq.vec_id = q_id JOIN n nc ON nc.vec_id = n_id),
-         |ranked AS (SELECT q_id, n_id, cos, row_number() OVER (
-         |             PARTITION BY q_id ORDER BY round(cos, 6) DESC, n_id) AS rank
-         |           FROM scored)
-         |SELECT q_id, rank, n_id, round(cos, 4) AS cos
-         |FROM ranked WHERE rank <= $K
-         |ORDER BY q_id, rank""".stripMargin) { (s, dir) =>
+         |${Similar.topKSql(K)}""".stripMargin) { (s, dir) =>
       val e = embsWithNormLabel(s, dir)
       val queries = e.where(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("label"),
           col("emb").as("qemb"), col("nrm").as("qnrm"))
-      val corpus = e.where(col("vec_id") >= NQ)
-      val scored = corpus.join(broadcast(queries), Seq("label"))
+      topK(probe(e.where(col("vec_id") >= NQ), queries, "label")
         .select(col("q_id"), col("vec_id").as("n_id"),
-          cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos"))
-      topK(scored)
+          cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos")))
     },
 
     // C7c: filtered search through the IVF index — the at-scale form of
@@ -798,10 +764,8 @@ object Ann {
       val probed = queries.select(col("vec_id").as("q_id"), col("label"),
         col("emb").as("qemb"), col("nrm").as("qnrm"),
         explode(argmaxCells(idx.cents, 6)(col("emb"))).as("cell"))
-      val scored = assigned.join(broadcast(probed), Seq("cell", "label"))
-        .select(col("q_id"), col("n_id"),
-          cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos"))
-      topK(scored)
+      topK(probe(assigned, probed, "cell", "label").select(col("q_id"), col("n_id"),
+        cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos")))
     },
 
     // C8: random-hyperplane LSH — L tables of b sign-bits; queries meet
@@ -824,21 +788,18 @@ object Ann {
       val corpus = tabled.where(col("vec_id") >= NQ)
       // candidate ids only through the bucket join; a pair can meet in
       // several tables, so dedup BEFORE the (expensive) exact scoring
-      val cands = corpus.join(broadcast(queries), "tk")
+      val cands = probe(corpus, queries, "tk")
         .select(col("q_id"), col("vec_id").as("n_id"))
         .distinct()
       // broadcast ONLY the query vectors (vec_id < NQ) — the corpus side
       // of `e` must never be broadcast (fatal at 100 TB); the q_id join
       // can only match query ids anyway.
-      val scored = cands
-        .join(broadcast(e.where(col("vec_id") < NQ)
-          .select(col("vec_id").as("q_id"),
-            col("emb").as("qemb"), col("nrm").as("qnrm"))), "q_id")
+      topK(probe(cands, e.where(col("vec_id") < NQ)
+          .select(col("vec_id").as("q_id"), col("emb").as("qemb"), col("nrm").as("qnrm")), "q_id")
         .join(e.select(col("vec_id").as("n_id"),
           col("emb").as("nemb"), col("nrm").as("nnrm")), "n_id")
         .select(col("q_id"), col("n_id"),
-          cosine(s, col("qemb"), col("nemb"), col("qnrm"), col("nnrm")).as("cos"))
-      topK(scored)
+          cosine(s, col("qemb"), col("nemb"), col("qnrm"), col("nnrm")).as("cos")))
     },
 
     // C8b: IVF (inverted-file) ANN — the centroid-partitioned scale path
@@ -879,42 +840,8 @@ object Ann {
     // determinism making it gateable.
     Q("ann_ivf_int", ivfIntSql) { (s, dir) =>
       val cents = Cluster.fit(s, dir)._3
-      val x = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"),
-          v => floor((v.cast("double") + 1.0d) * 1000).cast("long")).as("q"))
-      // per-query probe cells: NQ×k integer distances, driver-bounded
-      // like every quantizer-model computation in this family
-      val qRows = x.where(col("vec_id") < NQ)
-        .select(col("vec_id"), col("q")).collect()
-      val probe: Seq[(Long, Int)] = qRows.toSeq.flatMap { r =>
-        val qid = r.getLong(0)
-        val qv = r.getSeq[Long](1).toArray
-        cents.zipWithIndex.map { case (c, ci) =>
-          (c.iterator.zip(qv.iterator).map { case (cv, mv) =>
-            val dd = mv - cv; dd * dd
-          }.sum, ci)
-        }.sorted.take(4).map { case (_, ci) => (qid, ci.toLong) }
-      }.map { case (q, c) => (q, c.toInt) }
-      val sess = s
-      import sess.implicits._
-      val signed = transform(col("q"), m => (m - lit(1000L)).cast("double"))
-      val queries = x.where(col("vec_id") < NQ)
-        .select(col("vec_id").as("q_id"), signed.as("qemb"))
-        .withColumn("qnrm",
-          sqrt(graft.functions.Native.dot(s, col("qemb"), col("qemb"))))
-      val probeDf = probe.toDF("q_id", "cluster")
-      val corpus = Cluster.assigned(s, Cluster.withDerived(s, x), cents)
-        .where(col("vec_id") >= NQ)
-        .select(col("vec_id").as("n_id"), col("cluster"), signed.as("nemb"))
-        .withColumn("nnrm",
-          sqrt(graft.functions.Native.dot(s, col("nemb"), col("nemb"))))
-      val scored = corpus
-        .join(broadcast(probeDf.join(queries, "q_id")), "cluster")
-        .where(col("qnrm") > 0 && col("nnrm") > 0)
-        .select(col("q_id"), col("n_id"),
-          (graft.functions.Native.dot(s, col("qemb"), col("nemb")) /
-            (col("qnrm") * col("nnrm"))).as("cos"))
-      topK(scored)
+      val x = kiloCodes(s, dir)
+      ivfIntProbe(s, cents, x, _ => intCellIndex(s, x, cents))
     },
 
     // C8m (r11): the HASH-GATED LSH — C8l's integer-determinism scheme
@@ -934,72 +861,28 @@ object Ann {
     // candidate generation, zero corpus shuffle, the C8 plan with the
     // determinism making it gateable.
     Q("ann_lsh_int",
-      s"""WITH x AS (
-         |  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-         |    CAST(floor((unnest(embedding)::DOUBLE + 1.0) * 1000) AS BIGINT) - 1000 AS v
-         |  FROM embeddings),
-         |nrm AS (SELECT vec_id, sqrt(CAST(sum(v * v) AS DOUBLE)) AS nrm
-         |        FROM x GROUP BY vec_id),
-         |w AS (SELECT t.t, b.b, j.j,
-         |        CAST((t.t * 2654435761 + b.b * 2246822519 + j.j * 3266489917)
-         |          % 1000003 % 13 AS BIGINT) - 6 AS w
-         |      FROM range(0, $LshTables) t(t), range(0, $LshBits) b(b),
-         |           range(1, ${64 + 1}) j(j)),
-         |bits AS (
-         |  SELECT x.vec_id, w.t, w.b,
-         |    CASE WHEN sum(w.w * x.v) >= 0 THEN 1 ELSE 0 END AS bit
-         |  FROM x JOIN w ON w.j = x.d
-         |  GROUP BY x.vec_id, w.t, w.b),
-         |sig AS (SELECT vec_id, t, CAST(sum(bit << b) AS BIGINT) AS sig
-         |        FROM bits GROUP BY vec_id, t),
+      s"""WITH x AS (${Similar.kiloSql("v", shift = 1000)}),
+         |${Similar.lshIntSigSql(LshTables, LshBits)},
          |cand AS (SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS n_id
          |         FROM sig q JOIN sig c ON c.t = q.t AND c.sig = q.sig
          |         WHERE q.vec_id < $NQ AND c.vec_id >= $NQ),
-         |dots AS (SELECT cand.q_id, cand.n_id,
-         |           CAST(sum(q.v * c.v) AS DOUBLE) AS dot
-         |         FROM cand JOIN x q ON q.vec_id = cand.q_id
-         |                   JOIN x c ON c.vec_id = cand.n_id AND c.d = q.d
-         |         GROUP BY cand.q_id, cand.n_id),
-         |scored AS (SELECT d.q_id, d.n_id, d.dot / (nq.nrm * nc.nrm) AS cos
-         |           FROM dots d JOIN nrm nq ON nq.vec_id = d.q_id
-         |                       JOIN nrm nc ON nc.vec_id = d.n_id
-         |           WHERE nq.nrm > 0 AND nc.nrm > 0),
-         |ranked AS (SELECT q_id, n_id, cos, row_number() OVER (
-         |             PARTITION BY q_id ORDER BY round(cos, 6) DESC, n_id) AS rank
-         |           FROM scored)
-         |SELECT q_id, rank, n_id, round(cos, 4) AS cos
-         |FROM ranked WHERE rank <= $K
-         |ORDER BY q_id, rank""".stripMargin) { (s, dir) =>
-      val signed = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"),
-          v => (floor((v.cast("double") + 1.0d) * 1000) - 1000.0d)).as("v"))
-        .withColumn("nrm",
-          sqrt(graft.functions.Native.dot(s, col("v"), col("v"))))
-      // one struct per table: sig_t = Σ_b [w_tb · v ≥ 0] << b, the 8×8
-      // integer dots riding the codegen'd graft_dot kernel
-      val sigCols: Column = array((0 until LshTables).map { t =>
-        val sig = (0 until LshBits).map { b =>
-          val w = typedLit((1 to 64).map(j => lshW(t, b, j).toDouble))
-          when(graft.functions.Native.dot(s, col("v"), w) >= 0,
-            lit(1L << b)).otherwise(lit(0L))
-        }.reduce(_ + _)
-        struct(lit(t).as("t"), sig.as("sig"))
-      }: _*)
-      val sigs = signed.select(col("vec_id"), col("v"), col("nrm"),
-        explode(sigCols).as("ts"))
+         |${Similar.intCosineSql("x")},
+         |${Similar.topKSql(K)}""".stripMargin) { (s, dir) =>
+      val sigs = Tables(s, dir, "embeddings")
+        .select(col("vec_id"), Similar.signed(Similar.kiloCodes(col("embedding"))).as("v"))
+        .withColumn("nrm", sqrt(graft.functions.Native.dot(s, col("v"), col("v"))))
+        .select(col("vec_id"), col("v"), col("nrm"),
+          explode(Similar.lshIntSigs(s, col("v"), LshTables, LshBits)).as("ts"))
         .select(col("vec_id"), col("v"), col("nrm"),
           col("ts.t").as("t"), col("ts.sig").as("sig"))
       val qs = sigs.where(col("vec_id") < NQ)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           col("nrm").as("qnrm"), col("t"), col("sig"))
-      val cand = sigs.where(col("vec_id") >= NQ)
-        .join(broadcast(qs), Seq("t", "sig"))
+      topK(probe(sigs.where(col("vec_id") >= NQ), qs, "t", "sig")
         .where(col("qnrm") > 0 && col("nrm") > 0)
         .select(col("q_id"), col("vec_id").as("n_id"),
-          (graft.functions.Native.dot(s, col("qv"), col("v")) /
-            (col("qnrm") * col("nrm"))).as("cos"))
-        .distinct()
-      topK(cand)
+          cosine(s, col("qv"), col("v"), col("qnrm"), col("nrm")).as("cos"))
+        .distinct())
     },
 
     // C8n (r11): the HASH-GATED PQ — the integer-determinism scheme
@@ -1018,14 +901,8 @@ object Ann {
     // scoring joins the 4-code table against a ≤NQ·S·K broadcast —
     // the compressed-domain scan IS the read path, raw vectors touched
     // only by the 20-row re-rank pool per query.
-    Q("ann_pq_int",
-      s"""$pqIntCtes
-         |SELECT q_id, rank, n_id, round(cos, 4) AS cos
-         |FROM ranked WHERE rank <= $K
-         |ORDER BY q_id, rank""".stripMargin) { (s, dir) =>
-      val x = Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"),
-          v => floor((v.cast("double") + 1.0d) * 1000).cast("long")).as("q"))
+    Q("ann_pq_int", pqIntSql) { (s, dir) =>
+      val x = kiloCodes(s, dir)
       val xd = x.withColumn("qd", transform(col("q"), _.cast("double")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -1119,7 +996,7 @@ object Ann {
               .orderBy(col("adc").desc, col("n_id"))))
           .where(col("arn") <= PqRerankInt)
           .select(col("q_id"), col("n_id"))
-        val signed = transform(col("q"), m => (m - lit(1000L)).cast("double"))
+        val signed = Similar.signed(col("q"))
         val queries = xd.where(col("vec_id") < NQ)
           .select(col("vec_id").as("q_id"), signed.as("qemb"))
           .withColumn("qnrm",
@@ -1128,12 +1005,10 @@ object Ann {
           .select(col("vec_id").as("n_id"), signed.as("nemb"))
           .withColumn("nnrm",
             sqrt(graft.functions.Native.dot(s, col("nemb"), col("nemb"))))
-        val scored = corpusS
-          .join(broadcast(cand.join(queries, "q_id")), "n_id")
+        val scored = probe(corpusS, cand.join(queries, "q_id"), "n_id")
           .where(col("qnrm") > 0 && col("nnrm") > 0)
           .select(col("q_id"), col("n_id"),
-            (graft.functions.Native.dot(s, col("qemb"), col("nemb")) /
-              (col("qnrm") * col("nnrm"))).as("cos"))
+            cosine(s, col("qemb"), col("nemb"), col("qnrm"), col("nnrm")).as("cos"))
         // eager checkpoint BEFORE the cached frame releases (the plan
         // reads xd); tracked so the consumer's drain frees the blocks
         Pinned.track(topK(scored).localCheckpoint(true))
@@ -1205,33 +1080,8 @@ object Ann {
     // store actually runs (load + prune + probe), not just the build.
     Q("ann_ivf_int_probe", ivfIntSql) { (s, dir) =>
       val (cents, path) = ivfIntArtifact(s, dir)
-      val x = kiloCodes(s, dir)
-      val queries = x.where(col("vec_id") < NQ)
-        .select(col("vec_id").as("q_id"), col("q"), signedOf(col("q")).as("qemb"))
-        .withColumn("qnrm",
-          sqrt(graft.functions.Native.dot(s, col("qemb"), col("qemb"))))
-      val qRows = queries.select(col("q_id"), col("q")).collect()
-      val probe: Seq[(Long, Int)] = qRows.toSeq.flatMap { r =>
-        val qid = r.getLong(0)
-        val qv = r.getSeq[Long](1).toArray
-        cents.zipWithIndex.map { case (c, ci) =>
-          (c.iterator.zip(qv.iterator).map { case (cv, mv) =>
-            val dd = mv - cv; dd * dd
-          }.sum, ci)
-        }.sorted.take(4).map { case (_, ci) => (qid, ci) }
-      }
-      val sess = s
-      import sess.implicits._
-      val assigned = s.read.parquet(path)
-        .where(col("cell").isInCollection(probe.map(_._2).distinct))
-      val probeDf = probe.toDF("q_id", "cell")
-      val scored = assigned
-        .join(broadcast(probeDf.join(queries.drop("q"), "q_id")), "cell")
-        .where(col("qnrm") > 0 && col("nnrm") > 0)
-        .select(col("q_id"), col("n_id"),
-          (graft.functions.Native.dot(s, col("qemb"), col("nemb")) /
-            (col("qnrm") * col("nnrm"))).as("cos"))
-      topK(scored)
+      ivfIntProbe(s, cents, kiloCodes(s, dir),
+        cells => s.read.parquet(path).where(col("cell").isInCollection(cells)))
     },
 
     // D31 (r11): STREAMING ANN serving — query vectors arrive as a
@@ -1263,10 +1113,8 @@ object Ann {
         val assigned = s.read.parquet(path)
         val stream = Events.streamOf(s, dir, "embeddings")
         val queries = stream.where(col("vec_id") < NQ)
-          .select(col("vec_id").as("q_id"),
-            transform(col("embedding"),
-              v => floor((v.cast("double") + 1.0d) * 1000).cast("long")).as("q"))
-          .select(col("q_id"), col("q"), signedOf(col("q")).as("qemb"))
+          .select(col("vec_id").as("q_id"), Similar.kiloCodes(col("embedding")).as("q"))
+          .select(col("q_id"), col("q"), Similar.signed(col("q")).as("qemb"))
           .withColumn("qnrm",
             sqrt(graft.functions.Native.dot(s, col("qemb"), col("qemb"))))
         val probed = queries.select(col("q_id"), col("qemb"), col("qnrm"),
@@ -1505,10 +1353,8 @@ object Ann {
     val probed = queries.select(col("vec_id").as("q_id"),
         col("emb").as("qemb"), col("nrm").as("qnrm"),
         explode(argmaxCells(idx.cents, p)(col("emb"))).as("cell"))
-    val scored = idx.assigned.join(broadcast(probed), "cell")
-      .select(col("q_id"), col("n_id"),
-        cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos"))
-    topK(scored)
+    topK(probe(idx.assigned, probed, "cell").select(col("q_id"), col("n_id"),
+      cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos")))
   }
 
   /** The distinct cells a query batch will probe — driver-side (<= |queries|·p
@@ -1667,7 +1513,7 @@ object Ann {
   def pqProbe(s: SparkSession, idx: PqIndex, queries: DataFrame, rerank: Int): DataFrame = {
     val (qunits, score) = pqLutScore(s, idx.codebooks, queries)
     import s.implicits._
-    val scored = idx.encoded.crossJoin(broadcast(qunits.keys.toSeq.sorted.toDF("q_id")))
+    val scored = probe(idx.encoded, qunits.keys.toSeq.sorted.toDF("q_id"))
       .select(col("q_id"), col("n_id"), score(col("q_id"), col("codes")).as("pq"))
     rerankExact(s, pqTop(scored, rerank), idx.corpus, queries)
   }
@@ -1720,9 +1566,8 @@ object Ann {
   private def rerankExact(
       s: SparkSession, cands: DataFrame, corpus: DataFrame,
       queries: DataFrame): DataFrame =
-    topK(cands
-      .join(broadcast(queries.select(col("vec_id").as("q_id"),
-        col("emb").as("qemb"), col("nrm").as("qnrm"))), "q_id")
+    topK(probe(cands, queries.select(col("vec_id").as("q_id"),
+        col("emb").as("qemb"), col("nrm").as("qnrm")), "q_id")
       .join(corpus, "n_id")
       .select(col("q_id"), col("n_id"),
         cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos")))
@@ -1808,7 +1653,7 @@ object Ann {
     val qcentUdf = udf { (qid: Long, cell: Int) => qcentBc.value(qid)(cell) }
     val probed = queries.select(col("vec_id").as("q_id"),
       explode(argmaxCells(cents, p)(col("emb"))).as("cell"))
-    val scored = idx.encoded.join(broadcast(probed), "cell")
+    val scored = probe(idx.encoded, probed, "cell")
       .select(col("q_id"), col("n_id"),
         (qcentUdf(col("q_id"), col("cell")) +
           score(col("q_id"), col("codes"))).as("pq"))

@@ -59,7 +59,7 @@ object Dedup {
     * while reusing the cascade's already-materialized corpus gram sets
     * (VERDICT #1 — one gram-kernel pass feeds both exact miners).
     */
-  private[queries] def gramSets(d: DataFrame): DataFrame =
+  private[graft] def gramSets(d: DataFrame): DataFrame =
     d.select(col("doc_id"), split(col("text"), " ").as("ws"))
       .where(size(col("ws")) >= 3)
       .select(col("doc_id"), gramsOf(col("ws")).as("gs"))
@@ -79,8 +79,8 @@ object Dedup {
     */
   private def gramSetsCkpt(d: DataFrame): DataFrame = Pinned.fat(gramSets(d))
 
-  /** Exact 3-gram Jaccard for a candidate pair set (a_id, b_id):
-    * joins gram SETS back per side and verifies |∩|/|∪| >= tau.
+  /** Exact 3-gram Jaccard for a candidate pair set (a_id, b_id): joins
+    * the gram sets back per side and keeps |∩|/|∪| >= tau.
     */
   private def verifyJaccard(cands: DataFrame, d: DataFrame, tau: Double): DataFrame =
     verifyJaccardOn(cands, gramSetsCkpt(d), tau)
@@ -89,21 +89,8 @@ object Dedup {
     * — the miners pass their checkpointed [[gramSetsCkpt]] so the gram
     * kernel never re-runs for verification.
     */
-  private def verifyJaccardOn(cands: DataFrame, gsets: DataFrame, tau: Double): DataFrame = {
-    cands
-      .join(gsets.select(col("doc_id").as("a_id"), col("gs").as("ga")), "a_id")
-      .join(gsets.select(col("doc_id").as("b_id"), col("gs").as("gb")), "b_id")
-      // hoist |∩| into a named column: computing array_intersect twice
-      // in one expression leans on codegen subexpression elimination for
-      // the most expensive dedup stage — make the single evaluation
-      // structural instead
-      .select(col("a_id"), col("b_id"), col("ga"), col("gb"),
-        size(array_intersect(col("ga"), col("gb"))).as("ni"))
-      .select(col("a_id"), col("b_id"),
-        (col("ni") / (size(col("ga")) + size(col("gb")) - col("ni"))).as("jacc"))
-      .where(col("jacc") >= tau)
-      .select(col("a_id"), col("b_id"), round(col("jacc"), 4).as("jacc"))
-  }
+  private def verifyJaccardOn(cands: DataFrame, gsets: DataFrame, tau: Double): DataFrame =
+    Similar.verify(cands, gsets, "doc_id", ("gs", "ga", "gb"))(Similar.jaccard(tau))
 
   /** Exact n-gram Jaccard near-dup pairs over any (doc_id, text)
     * DataFrame at rational threshold tau = tauNum/tauDen — the prefix-
@@ -155,8 +142,9 @@ object Dedup {
     * rebuilt per call — the prefix filter's global gram df is a
     * property of THIS miner's input set, never shareable across inputs.
     */
-  private[queries] def ngramJaccardPairsOnGsets(gsets: DataFrame,
-      tauNum: Int, tauDen: Int, materializePrefix: Boolean = true): DataFrame = {
+  private[graft] def ngramJaccardPairsOnGsets(gsets: DataFrame,
+      tauNum: Int, tauDen: Int, materializePrefix: Boolean = true,
+      gen: Similar.Candidates = Similar.buckets): DataFrame = {
     require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen, "tau in (0, 1]")
     val tau = tauNum.toDouble / tauDen
     val g = gsets.select(col("doc_id"), size(col("gs")).as("c"), explode(col("gs")).as("g"))
@@ -169,66 +157,37 @@ object Dedup {
     val prefix =
       if (materializePrefix) Pinned.track(prefix0.localCheckpoint(true))
       else prefix0
-    val cands = prefix.as("a").join(prefix.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id") &&
-          expr(s"$tauDen * least(a.c, b.c) >= $tauNum * greatest(a.c, b.c)"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    // length filter: jaccard >= tau needs tauDen·min(c) >= tauNum·max(c)
+    val cands = gen(Similar.Keyed(prefix, "doc_id", Seq("g"),
+      filter = Some(expr(s"$tauDen * least(a.c, b.c) >= $tauNum * greatest(a.c, b.c)"))))
     verifyJaccardOn(cands, gsets, tau)
   }
 
-  /** MinHash(128) + 32×4 LSH banding near-dup pairs at rational
-    * threshold tau = tauNum/tauDen — the approximate counterpart of
-    * [[ngramJaccardPairs]] (same output contract; candidates meet only
-    * inside a (band, 4-hash) bucket, then exact Jaccard verifies).
-    * Banding probability ≈ 1 at j ≥ 0.8 with these parameters.
-    */
   /** (doc_id, bk) MinHash(128) 32×4 band keys of a (doc_id, text) frame
-    * — the ONE banding implementation behind [[minhashLshPairs]] and the
-    * incremental form (C33), so the two can never disagree on signature
-    * or banding layout. At scale this IS the persistable signature
-    * index: write it partitioned/bucketed by bk once, probe it per
-    * increment.
+    * — the ONE banding behind [[minhashLshPairs]] and the incremental
+    * form (C33), so the two can never disagree on signature or banding
+    * layout. At scale this IS the persistable signature index: write it
+    * partitioned/bucketed by bk once, probe it per increment.
     */
   def bandedMinhashKeys(d: DataFrame): DataFrame =
-    bandedMinhashKeysOf(
-      d.select(col("doc_id"), split(col("text"), " ").as("ws"))
-        .where(size(col("ws")) >= 3)
-        .select(col("doc_id"), gramsOf(col("ws")).as("gs")))
-
-  /** [[bandedMinhashKeys]] over an already-built (doc_id, gs) gram-set
-    * frame — STILL the one banding implementation (r13: factored so
-    * [[minhashLshPairs]] can feed its checkpointed gram sets and run the
-    * gram kernel once for banding + verification).
-    */
-  private def bandedMinhashKeysOf(gsets: DataFrame): DataFrame = {
-    val nPerm = 128; val bands = 32; val rows = nPerm / bands
-    gsets
-      .select(col("doc_id"),
-        graft.functions.Kernels.minhash128(col("gs")).as("sig"))
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"), slice(col("sig"), b * rows + 1, lit(rows)).as("bsig")))).as("bk"))
-  }
+    bandedMinhash(gramSets(d), graft.functions.Kernels.minhash128)
 
   /** [[bandedMinhashKeys]] with the SQL-restatable integer sketch
-    * (Kernels.minhashInt128 over the hashCp gram hash) — identical
-    * 32×4 band layout, every slot value integer-decidable by DuckDB,
-    * which is what lets the STREAM near-dup arms (D19/D32) carry full
-    * rows+schema+hash gates (r12 verdict #4/#5): the ingest filter's
-    * entire decision — signature, banding, candidate set, exact
-    * verification — restates in the oracle via [[minhashIntCtes]].
+    * (Kernels.minhashInt128 over the hashCp gram hash): the same 32×4
+    * band layout, every slot integer-decidable by DuckDB, so the stream
+    * near-dup arms (D19/D32) restate the ingest filter's whole decision
+    * (signature, banding, candidates, exact verify) via [[minhashIntCtes]].
     */
-  def bandedMinhashIntKeys(d: DataFrame): DataFrame = {
-    val nPerm = 128; val bands = 32; val rows = nPerm / bands
-    d.select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .where(size(col("ws")) >= 3)
-      .select(col("doc_id"),
-        graft.functions.Kernels.minhashInt128(gramsOf(col("ws"))).as("sig"))
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"), slice(col("sig"), b * rows + 1, lit(rows)).as("bsig")))).as("bk"))
-  }
+  def bandedMinhashIntKeys(d: DataFrame): DataFrame =
+    bandedMinhash(gramSets(d), graft.functions.Kernels.minhashInt128)
+
+  /** (doc_id, bk) band keys of a (doc_id, gs) gram-set frame under a
+    * 128-slot MinHash `kernel` — the signature is its own projection, so
+    * the kernel runs once per row, not once per band.
+    */
+  private def bandedMinhash(gsets: DataFrame, kernel: Column => Column): DataFrame =
+    gsets.select(col("doc_id"), kernel(col("gs")).as("sig"))
+      .select(col("doc_id"), Similar.minhashBands(col("sig")))
 
   /** The ONE DuckDB restatement of the integer MinHash machinery —
     * word 3-grams, the hashCp codepoint polynomial, 128 affine
@@ -270,8 +229,7 @@ object Dedup {
     * materializes its stages, which detaches them from the final plan).
     */
   private[graft] def crossBandCands(corpusB: DataFrame, batchB: DataFrame): DataFrame =
-    corpusB.join(
-        broadcast(batchB.select(col("doc_id").as("b_id"), col("bk"))), "bk")
+    Similar.probe(corpusB, batchB.select(col("doc_id").as("b_id"), col("bk")), "bk")
       .select(col("b_id").as("a_id"), col("c_id").as("b_id"))
       .distinct()
 
@@ -287,22 +245,31 @@ object Dedup {
         "probability ~1; use ngramJaccardPairs for lower thresholds")
   }
 
-  def minhashLshPairs(d: DataFrame, tauNum: Int, tauDen: Int): DataFrame = {
+  /** MinHash(128) + 32×4 LSH banding near-dup pairs at rational threshold
+    * tau = tauNum/tauDen — the approximate counterpart of
+    * [[ngramJaccardPairs]] (same output contract; candidates meet only
+    * inside a (band, 4-hash) bucket, then exact Jaccard verifies).
+    */
+  def minhashLshPairs(d: DataFrame, tauNum: Int, tauDen: Int,
+      gen: Similar.Candidates = Similar.buckets): DataFrame = {
     requireBandingRange(tauNum, tauDen)
-    // r13 OPT: one gram-kernel pass feeds signature banding AND exact
-    // verification (before: banding re-split/re-grammed the corpus, and
-    // each self-join/verify side repeated it — the minhash128 kernel is
-    // the dominant per-row cost here). Band keys derive from the
-    // checkpointed gram sets; the banded sliver itself checkpoints so
-    // the 128-permutation kernel runs once, not once per join side.
-    val gsets = gramSetsCkpt(d)
-    val banded = Pinned.track(
-      bandedMinhashKeysOf(gsets).localCheckpoint(true))
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    verifyJaccardOn(cands, gsets, tauNum.toDouble / tauDen)
+    minhashPairs(gramSetsCkpt(d), graft.functions.Kernels.minhash128,
+      tauNum.toDouble / tauDen, gen)
+  }
+
+  /** [[minhashLshPairs]] under the integer sketch at tau = 0.8 — C4e. */
+  private[graft] def minhashIntPairs(d: DataFrame,
+      gen: Similar.Candidates = Similar.buckets): DataFrame =
+    minhashPairs(gramSetsCkpt(d), graft.functions.Kernels.minhashInt128, 0.8, gen)
+
+  /** r13 OPT: one gram-kernel pass feeds signature banding AND exact
+    * verification, and the banded sliver checkpoints so the 128-slot
+    * kernel runs once, not once per self-join side.
+    */
+  private def minhashPairs(gsets: DataFrame, kernel: Column => Column, tau: Double,
+      gen: Similar.Candidates): DataFrame = {
+    val banded = Pinned.track(bandedMinhash(gsets, kernel).localCheckpoint(true))
+    verifyJaccardOn(gen(Similar.Keyed(banded, "doc_id", Seq("bk"))), gsets, tau)
   }
 
   /** Connected components over an arbitrary near-dup pair source —
@@ -723,11 +690,8 @@ object Dedup {
         s"the $maxVectors ceiling (${n * (n - 1) / 2} pair evaluations). At " +
         "scale use dedup_embedding_lsh (LSH-bucketed candidates) or " +
         "dedup_semantic (cluster-then-dedup) instead")
-    withNorm.as("a").join(withNorm.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        round(graft.functions.Native.dot(s, col("a.emb"), col("b.emb")) /
-          (col("a.nrm") * col("b.nrm")), 4).as("cos"))
-      .where(col("cos") >= tau)
+    Similar.allPairs(Similar.Keyed(withNorm, "vec_id", Nil, Seq("emb", "nrm"), unique = true))
+      .transform(Similar.cosineAtLeast(s, tau))
   }
 
   /** (keep_id, batch_dups) per distinct surviving digest: batch-internal
@@ -954,84 +918,56 @@ object Dedup {
   def semanticCellCount(n: Long): Int =
     math.max(8, math.min(1024, math.ceil(math.sqrt(n / 2.0)).toInt))
 
+  /** C6b: float hyperplane-LSH candidates (24 tables, width growing with
+    * n — see dedup_embedding_lsh) + the exact cosine verify at τ = 0.5.
+    */
+  private[graft] def embeddingLshPairs(s: SparkSession, e: DataFrame,
+      gen: Similar.Candidates = Similar.buckets): DataFrame = {
+    val bits = math.max(6, math.ceil(math.log(e.count() / 64.0) / math.log(2)).toInt)
+    val tabled = e.select(col("vec_id"),
+        posexplode(graft.functions.Kernels.hyperplaneSigs(col("emb"), lit(24), lit(bits)))
+          .as(Seq("t", "sig")))
+      .select(col("vec_id"), struct(col("t"), col("sig")).as("tk"))
+    Similar.verify(gen(Similar.Keyed(tabled, "vec_id", Seq("tk"))), e, "vec_id",
+      Similar.sides("emb", "nrm"): _*)(Similar.cosineAtLeast(s, 0.5))
+  }
+
   /** C6c integer hyperplane-LSH geometry (mirrors the float C6b: 24
     * tables; 6 bits = 64 buckets/table).
     */
   private val EmbLshIntTables = 24
   private val EmbLshIntBits = 6
 
-  /** C6c core: signed integer codes v = floor((e+1)·1000) − 1000 (the
-    * ann_lsh_int quantization), per-table signatures from the shared
-    * [[Ann.lshW]] planes, bucket-equality pairs, square-free τ = 0.5
-    * verify. Returns (a_id, b_id, dot, va, vb) — all BIGINT.
+  /** C6c core: signed integer kilo codes (the ann_lsh_int quantization),
+    * per-table signatures from the shared integer hyperplanes,
+    * bucket-equality pairs, square-free τ = 0.5 verify. Returns (a_id,
+    * b_id, dot, va, vb) — all BIGINT.
     */
-  private[graft] def embeddingLshIntPairs(s: SparkSession, dir: String): DataFrame = {
-    val signed = graft.core.Tables(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"),
-          v => (floor((v.cast("double") + 1.0d) * 1000) - 1000.0d)).as("v"))
-    val sigCols: Column = array((0 until EmbLshIntTables).map { t =>
-      val sig = (0 until EmbLshIntBits).map { b =>
-        val w = typedLit((1 to 64).map(j => Ann.lshW(t, b, j).toDouble))
-        when(graft.functions.Native.dot(s, col("v"), w) >= 0,
-          lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(t).as("t"), sig.as("sig"))
-    }: _*)
-    // r13 OPT: the signature table checkpoints once (before, each
-    // self-join side re-ran the 144-hyperplane signature kernel), and
-    // the verify side checkpoints once (each of the two cands joins
-    // re-ran the parquet scan + quantization). The per-pair dot moves
-    // from the interpreted aggregate(zip_with(...)) fold (one
-    // Expression.eval + boxing per element — the Kernels.scala measured
-    // 30× gap) onto the codegen'd graft_dot over the double view:
-    // components are integers ≤ 1000, so dot ≤ 6.4e7 is exactly
-    // representable and the long cast reproduces the integer fold
-    // bit-for-bit (the Cluster.scala exact-arithmetic envelope).
-    val tabled = Pinned.track(signed
-      .select(col("vec_id"), explode(sigCols).as("ts"))
-      .select(col("vec_id"), col("ts").as("tk"))
+  private[graft] def embeddingLshIntPairs(s: SparkSession, dir: String,
+      gen: Similar.Candidates = Similar.buckets): DataFrame = {
+    // r13 OPT: the codes and the signature table each checkpoint once
+    // (each self-join side and each verify side re-ran the scan,
+    // quantization and 144-hyperplane kernel before)
+    val q = Pinned.track(graft.core.Tables(s, dir, "embeddings")
+      .select(col("vec_id"), Similar.signed(Similar.kiloCodes(col("embedding"))).as("q"))
+      .select(col("vec_id"), col("q"),
+        graft.functions.Native.dot(s, col("q"), col("q")).cast("long").as("vv"))
       .localCheckpoint(true))
-    val cands = tabled.as("a").join(tabled.as("b"),
-        col("a.tk") === col("b.tk") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-    val q = Pinned.track(signed.select(col("vec_id"), col("v"),
-        graft.functions.Native.dot(s, col("v"), col("v")).cast("long").as("vv"))
+    val tabled = Pinned.track(q.select(col("vec_id"),
+        explode(Similar.lshIntSigs(s, col("q"), EmbLshIntTables, EmbLshIntBits)).as("tk"))
       .localCheckpoint(true))
-    cands
-      .join(q.select(col("vec_id").as("a_id"), col("v").as("qa"), col("vv").as("va")), "a_id")
-      .join(q.select(col("vec_id").as("b_id"), col("v").as("qb"), col("vv").as("vb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        graft.functions.Native.dot(s, col("qa"), col("qb")).cast("long").as("dot"),
-        col("va"), col("vb"))
-      .where(col("dot") > 0 &&
-        lit(4L) * col("dot") * col("dot") >= col("va") * col("vb"))
+    Similar.verify(gen(Similar.Keyed(tabled, "vec_id", Seq("tk"))), q, "vec_id",
+      Similar.sides("q", "vv"): _*)(Similar.halfCosineInt(s))
   }
 
   /** C6c oracle: the ann_lsh_int signature CTEs with self-pair
     * candidates and the square-free verify, emitting raw stats.
     */
   private val embLshIntSql: String =
-    s"""WITH x AS (
-      |  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-      |    CAST(floor((unnest(embedding)::DOUBLE + 1.0) * 1000) AS BIGINT) - 1000 AS v
-      |  FROM embeddings),
+    s"""WITH x AS (${Similar.kiloSql("v", shift = 1000)}),
       |nrm AS (SELECT vec_id, CAST(sum(v * v) AS BIGINT) AS vv FROM x GROUP BY vec_id),
-      |w AS (SELECT t.t, b.b, j.j,
-      |        CAST((t.t * 2654435761 + b.b * 2246822519 + j.j * 3266489917)
-      |          % 1000003 % 13 AS BIGINT) - 6 AS w
-      |      FROM range(0, $EmbLshIntTables) t(t), range(0, $EmbLshIntBits) b(b),
-      |           range(1, 65) j(j)),
-      |bits AS (
-      |  SELECT x.vec_id, w.t, w.b,
-      |    CASE WHEN sum(w.w * x.v) >= 0 THEN 1 ELSE 0 END AS bit
-      |  FROM x JOIN w ON w.j = x.d
-      |  GROUP BY x.vec_id, w.t, w.b),
-      |sig AS (SELECT vec_id, t, CAST(sum(bit << b) AS BIGINT) AS sig
-      |        FROM bits GROUP BY vec_id, t),
-      |cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-      |         FROM sig a JOIN sig b
-      |           ON b.t = a.t AND b.sig = a.sig AND b.vec_id > a.vec_id),
+      |${Similar.lshIntSigSql(EmbLshIntTables, EmbLshIntBits)},
+      |cand AS (${Similar.selfPairsSql("sig", "vec_id", Seq("t", "sig"))}),
       |dots AS (SELECT c.a_id, c.b_id, CAST(sum(xa.v * xb.v) AS BIGINT) AS dot
       |         FROM cand c JOIN x xa ON xa.vec_id = c.a_id
       |                     JOIN x xb ON xb.vec_id = c.b_id AND xb.d = xa.d
@@ -1050,10 +986,7 @@ object Dedup {
     * chain (DuckDB requires it when ANY cte recurses).
     */
   private val semanticIntSql: String =
-    s"""WITH RECURSIVE x AS (
-      |  SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-      |    CAST(floor((unnest(embedding)::DOUBLE + 1.0) * 1000) AS BIGINT) AS m
-      |  FROM embeddings),
+    s"""WITH RECURSIVE x AS (${Similar.kiloSql("m")}),
       |c0 AS (SELECT vec_id AS cluster, d, m AS cent FROM x WHERE vec_id < 8),
       |${Cluster.kmeansChainCtes},
       |cellv AS (SELECT vec_id, cluster FROM aF WHERE rn = 1),
@@ -1064,9 +997,7 @@ object Dedup {
       |nrm AS (SELECT vec_id, CAST(sum(m * m) AS BIGINT) AS vv FROM sq GROUP BY vec_id),
       |dots AS (
       |  SELECT p.a_id, p.b_id, CAST(sum(xa.m * xb.m) AS BIGINT) AS dot
-      |  FROM (SELECT ca.vec_id AS a_id, cb.vec_id AS b_id
-      |        FROM cellv ca JOIN cellv cb
-      |          ON cb.cluster = ca.cluster AND cb.vec_id > ca.vec_id) p
+      |  FROM (${Similar.selfPairsSql("cellv", "vec_id", Seq("cluster"))}) p
       |  JOIN sq xa ON xa.vec_id = p.a_id
       |  JOIN sq xb ON xb.vec_id = p.b_id AND xb.d = xa.d
       |  GROUP BY p.a_id, p.b_id),
@@ -1086,20 +1017,44 @@ object Dedup {
       |SELECT id AS removed_id, label AS rep_id FROM labels
       |WHERE id != label ORDER BY removed_id""".stripMargin
 
+  /** C32b pairs: cells from the gated K=8 integer Lloyd run, the τ = 0.5
+    * cosine decided square-free on the signed kilo codes. r13 OPT: the
+    * celled frame checkpoints once (both self-join sides re-ran the scan
+    * and assignment join before).
+    */
+  private[graft] def semanticIntPairs(s: SparkSession, dir: String,
+      gen: Similar.Candidates = Similar.buckets): DataFrame = {
+    ensureLocalCkptDir(s)
+    val (assign, _, _) = Cluster.fit(s, dir)
+    val withCell = Pinned.track(Embed.quantized(s, dir) // signed kilo codes (vec_id, q)
+      .join(assign.select(col("vec_id"), col("cluster")), "vec_id")
+      .select(col("vec_id"), col("cluster"), transform(col("q"), _.cast("double")).as("q"))
+      .select(col("vec_id"), col("cluster"), col("q"),
+        graft.functions.Native.dot(s, col("q"), col("q")).cast("long").as("vv"))
+      .localCheckpoint(true))
+    gen(Similar.Keyed(withCell, "vec_id", Seq("cluster"), Seq("q", "vv"), unique = true))
+      .transform(Similar.halfCosineInt(s))
+  }
+
   def semanticDedup(s: SparkSession, e: DataFrame, k: Int, tau: Double,
       knownCount: Long = -1L): DataFrame = {
     ensureLocalCkptDir(s)
     val a = Ann.ivfBuild(e, k, knownCount).assigned // (n_id, emb, nrm, cell)
-    val pairs = a.as("x").join(a.as("y"),
-        col("x.cell") === col("y.cell") && col("x.n_id") < col("y.n_id"))
-      .select(col("x.n_id").as("a_id"), col("y.n_id").as("b_id"),
-        (graft.functions.Native.dot(s, col("x.emb"), col("y.emb")) /
-          (col("x.nrm") * col("y.nrm"))).as("cos"))
-      .where(col("cos") >= tau)
-    connectedComponents(pairs.select(col("a_id"), col("b_id")))
+    connectedComponents(semanticPairs(s, a, tau).select(col("a_id"), col("b_id")))
       .where(col("id") =!= col("label"))
       .select(col("id").as("removed_id"), col("label").as("rep_id"))
   }
+
+  /** (a_id, b_id, cos) within-cell pairs at cosine >= tau of an IVF
+    * assignment (n_id, emb, nrm, cell) — SemDeDup's candidate space is
+    * quadratic in cell size only.
+    */
+  private[graft] def semanticPairs(s: SparkSession, assigned: DataFrame, tau: Double,
+      gen: Similar.Candidates = Similar.buckets): DataFrame =
+    gen(Similar.Keyed(assigned, "n_id", Seq("cell"), Seq("emb", "nrm"), unique = true))
+      .select(col("a_id"), col("b_id"),
+        Similar.cosine(s, col("emb_a"), col("emb_b"), col("nrm_a"), col("nrm_b")).as("cos"))
+      .where(col("cos") >= tau)
 
   /** (doc_id, sh) 64-bit simhash signatures (JIT kernel — see
     * [[graft.functions.Kernels]]) — public so the spec can brute-force-
@@ -1109,6 +1064,19 @@ object Dedup {
     d.where(col("text").isNotNull) // a null text would NPE inside the kernel
       .select(col("doc_id"),
         graft.functions.Kernels.simhash64(split(col("text"), " ")).as("sh"))
+
+  /** C5: simhash pairs at hamming <= 3 — 4×16-bit pigeonhole blocks. */
+  private[graft] def simhashPairs(d: DataFrame,
+      gen: Similar.Candidates = Similar.buckets): DataFrame =
+    Similar.hammingPairs(simhashSignatures(d), "doc_id", "sh", 4, 16, 3, gen)
+
+  /** C5b: integer simhash pairs at hamming <= 1 — 2×24-bit blocks. */
+  private[graft] def simhashIntPairs(d: DataFrame,
+      gen: Similar.Candidates = Similar.buckets): DataFrame =
+    Similar.hammingPairs(d.where(col("text").isNotNull).select(col("doc_id"),
+        graft.functions.Kernels.simhashInt48(split(col("text"), " ")).as("sh")),
+      "doc_id", "sh", 2, 24, 1, gen)
+      .withColumn("hamming", col("hamming").cast("long"))
 
   /** C37's overlapping word-n-gram stream: one row per token position,
     * digest-keyed. Shared by the shipped operator and
@@ -1528,24 +1496,7 @@ object Dedup {
     // 4-block pigeonhole join, verified with exact popcount. Spec-checked
     // against brute-force hamming; rows-only for the driver.
     Q.noOracle("dedup_simhash") { (s, dir) =>
-      val d = docs(s, dir)
-      val sigs = simhashSignatures(d)
-      // block b = bits [16b, 16b+16): hamming <= 3 over 64 bits implies
-      // at least one of the 4 blocks is equal (pigeonhole)
-      val blocked = sigs.selectExpr("doc_id", "sh",
-        "explode(transform(sequence(0,3), b -> struct(b as blk, shiftright(sh, cast(b*16 as int)) & 65535 as bval))) as x")
-        .select(col("doc_id"), col("sh"), col("x.blk"), col("x.bval"))
-      val cands = blocked.as("a").join(blocked.as("b"),
-          col("a.blk") === col("b.blk") && col("a.bval") === col("b.bval") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-          col("a.sh").as("sha"), col("b.sh").as("shb"))
-        .distinct()
-      cands
-        .select(col("a_id"), col("b_id"),
-          expr("bit_count(sha ^ shb)").as("hamming"))
-        .where(col("hamming") <= 3)
-        .orderBy(col("a_id"), col("b_id"))
+      simhashPairs(docs(s, dir)).orderBy(col("a_id"), col("b_id"))
     },
 
     // C4e (r11): the HASH-GATED MinHash-LSH — the C8l/C8m/C8n
@@ -1562,9 +1513,7 @@ object Dedup {
     // the surviving sliver.
     Q("dedup_minhash_int",
       s"""WITH $minhashIntCtes,
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id),
+        |cand AS (${Similar.selfPairsSql("bands", "doc_id", Seq("band", "bk"))}),
         |inter AS (
         |  SELECT c.a_id, c.b_id, count(*) AS i
         |  FROM cand c
@@ -1577,26 +1526,7 @@ object Dedup {
         |JOIN cnt cb ON cb.doc_id = i.b_id
         |WHERE i.i / (ca.c + cb.c - i.i) >= 0.8
         |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
-      val d = docs(s, dir)
-      // r13 OPT: one gram pass feeds the integer signature AND the exact
-      // verification, and the banded sliver checkpoints so the
-      // 128-permutation kernel runs once, not once per self-join side
-      // (the minhashLshPairs treatment applied to the integer twin)
-      val gsets = gramSetsCkpt(d)
-      val banded = Pinned.track(gsets
-        .select(col("doc_id"),
-          graft.functions.Kernels.minhashInt128(col("gs")).as("sig"))
-        .select(col("doc_id"),
-          explode(transform(sequence(lit(0), lit(31)),
-            b => struct(b.as("band"),
-              array_join(transform(slice(col("sig"), b * 4 + 1, lit(4)),
-                _.cast("string")), ":").as("bsig")))).as("bk"))
-        .localCheckpoint(true))
-      val cands = banded.as("a").join(banded.as("b"),
-          col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        .distinct()
-      verifyJaccardOn(cands, gsets, 0.8).orderBy(col("a_id"), col("b_id"))
+      minhashIntPairs(docs(s, dir)).orderBy(col("a_id"), col("b_id"))
     },
 
     // C5b (r11): the HASH-GATED SimHash — 48 single-bit hashes derived
@@ -1616,7 +1546,7 @@ object Dedup {
     // step integer ⇒ full rows+schema+hash gate; the float-free
     // analogue of C5's production form.
     Q("dedup_simhash_int",
-      """WITH wx AS (
+      s"""WITH wx AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
         |  WHERE text IS NOT NULL),
         |wh AS (SELECT doc_id,
@@ -1635,32 +1565,8 @@ object Dedup {
         |  GROUP BY doc_id, k.k),
         |sig AS (SELECT doc_id, sum(CAST(bit AS BIGINT) << CAST(k AS INT)) AS sh
         |        FROM bits GROUP BY doc_id),
-        |blk AS (SELECT doc_id, sh, b.b, (sh >> CAST(b.b * 24 AS INT)) & 16777215 AS bval
-        |        FROM sig, range(0, 2) b(b)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-        |           a.sh AS sha, b.sh AS shb
-        |         FROM blk a JOIN blk b
-        |           ON a.b = b.b AND a.bval = b.bval AND a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, CAST(bit_count(xor(sha, shb)) AS BIGINT) AS hamming
-        |FROM cand WHERE bit_count(xor(sha, shb)) <= 1
-        |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
-      val sigs = docs(s, dir).where(col("text").isNotNull)
-        .select(col("doc_id"),
-          graft.functions.Kernels.simhashInt48(split(col("text"), " ")).as("sh"))
-      val blocked = sigs.selectExpr("doc_id", "sh",
-        "explode(transform(sequence(0,1), b -> struct(b as blk, shiftright(sh, cast(b*24 as int)) & 16777215 as bval))) as x")
-        .select(col("doc_id"), col("sh"), col("x.blk"), col("x.bval"))
-      val cands = blocked.as("a").join(blocked.as("b"),
-          col("a.blk") === col("b.blk") && col("a.bval") === col("b.bval") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-          col("a.sh").as("sha"), col("b.sh").as("shb"))
-        .distinct()
-      cands
-        .select(col("a_id"), col("b_id"),
-          expr("cast(bit_count(sha ^ shb) as bigint)").as("hamming"))
-        .where(col("hamming") <= 1)
-        .orderBy(col("a_id"), col("b_id"))
+        |${Similar.hammingPairsSql("sig", "doc_id", "sh", 2, 24, 1)}""".stripMargin) { (s, dir) =>
+      simhashIntPairs(docs(s, dir)).orderBy(col("a_id"), col("b_id"))
     },
 
     // C6: embedding-cosine near-dup pairs (exact, tau = 0.5 on the rounded
@@ -2382,36 +2288,7 @@ object Dedup {
     // broadcast literals), pairs bucket-local per cell (quadratic in
     // CELL size only), CC over the verified sliver.
     Q("dedup_semantic_int", semanticIntSql) { (s, dir) =>
-      ensureLocalCkptDir(s)
-      val (assign, _, _) = Cluster.fit(s, dir)
-      val q = Embed.quantized(s, dir) // signed kilo codes (vec_id, q)
-      // r13 OPT: the celled frame checkpoints once (both self-join
-      // sides re-ran the scan + assignment join before), and the
-      // within-cell pair dot moves from the interpreted
-      // aggregate(zip_with(...)) fold to the codegen'd graft_dot over
-      // the double view — codes are ≤ |1000|, dot ≤ 6.4e7: exactly
-      // representable in double, so the long cast is bit-equal to the
-      // integer fold (the Cluster.scala exact-arithmetic envelope).
-      val withCell = Pinned.track(
-        q.join(assign.select(col("vec_id"), col("cluster")), "vec_id")
-          .select(col("vec_id"), col("cluster"),
-            transform(col("q"), _.cast("double")).as("qd"))
-          .select(col("vec_id"), col("cluster"), col("qd"),
-            graft.functions.Native.dot(s, col("qd"), col("qd"))
-              .cast("long").as("vv"))
-          .localCheckpoint(true))
-      val a = withCell.select(col("cluster"), col("vec_id").as("a_id"),
-        col("qd").as("qa"), col("vv").as("va"))
-      val b = withCell.select(col("cluster"), col("vec_id").as("b_id"),
-        col("qd").as("qb"), col("vv").as("vb"))
-      val pairs = a.join(b, Seq("cluster")).where(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          graft.functions.Native.dot(s, col("qa"), col("qb"))
-            .cast("long").as("dot"),
-          col("va"), col("vb"))
-        .where(col("dot") > 0 &&
-          lit(4L) * col("dot") * col("dot") >= col("va") * col("vb"))
-      connectedComponents(pairs.select(col("a_id"), col("b_id")))
+      connectedComponents(semanticIntPairs(s, dir).select(col("a_id"), col("b_id")))
         .where(col("id") =!= col("label"))
         .select(col("id").as("removed_id"), col("label").as("rep_id"))
         .orderBy(col("removed_id"))
@@ -2474,10 +2351,7 @@ object Dedup {
       val survivors = d.where(isBatch).select(col("doc_id"))
         .join(corpusDup, Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
-      val batchCands = batchB.as("a").join(batchB.as("b"),
-          col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        .distinct()
+      val batchCands = Similar.buckets(Similar.Keyed(batchB, "doc_id", Seq("bk")))
         .join(survivors.select(col("doc_id").as("a_id")), Seq("a_id"), "left_semi")
         .join(survivors.select(col("doc_id").as("b_id")), Seq("b_id"), "left_semi")
       val pairs = verifyJaccard(batchCands, d, tau)
@@ -2589,9 +2463,7 @@ object Dedup {
         val banded = sw.where(size(col("ws")) >= 3)
           .select(col("doc_id"), gramsOf(col("ws")).as("ga"),
             graft.functions.Kernels.minhashInt128(gramsOf(col("ws"))).as("sig"))
-          .select(col("doc_id"), col("ga"),
-            explode(transform(sequence(lit(0), lit(31)),
-              b => struct(b.as("band"), slice(col("sig"), b * 4 + 1, lit(4)).as("bsig")))).as("bk"))
+          .select(col("doc_id"), col("ga"), Similar.minhashBands(col("sig")))
         val flagged = banded.join(corpusB, "bk")
           .join(corpusG, "c_id")
           .select(col("doc_id"),
@@ -2721,9 +2593,7 @@ object Dedup {
         val near = swg.where(size(col("ws")) >= 3)
           .select(col("doc_id"), gramsOf(col("ws")).as("ga"),
             graft.functions.Kernels.minhashInt128(gramsOf(col("ws"))).as("sig"))
-          .select(col("doc_id"), col("ga"),
-            explode(transform(sequence(lit(0), lit(31)),
-              b => struct(b.as("band"), slice(col("sig"), b * 4 + 1, lit(4)).as("bsig")))).as("bk"))
+          .select(col("doc_id"), col("ga"), Similar.minhashBands(col("sig")))
           .join(corpusB, "bk")
           .join(corpusG, "c_id")
           .select(col("doc_id"),
@@ -2803,7 +2673,11 @@ object Dedup {
     // same seam as cascadeStages); CC runs on increment-internal pairs
     // only. All decisions integer/string-exact ⇒ hash-gated, recursive
     // closure restated in the oracle (increment-scoped, so the sf3
-    // blowup of the monolithic closure doesn't apply).
+    // blowup of the monolithic closure doesn't apply). The oracle reads
+    // the mined pairs through one MATERIALIZED copy (`pm`): DuckDB 1.0
+    // inlines `pairs` into each of its uses, and with the membership
+    // filters of `iip` over the inlined miner it ran out of memory at
+    // any corpus size, 10 planted docs included.
     Q("pipeline_dedup_cascade_compact",
       s"""WITH RECURSIVE u AS (SELECT doc_id, (${Text.messyUrlSql}) AS url FROM documents),
         |${Text.urlCanonCtes},
@@ -2828,13 +2702,14 @@ object Dedup {
         |    SELECT doc_id, text FROM i2 WHERE exact_vs IS NULL)
         |  WHERE len(string_split(text, ' ')) >= 3),
         |$minerCtes,
+        |pm AS MATERIALIZED (SELECT a_id, b_id FROM pairs),
         |nc AS (SELECT DISTINCT doc_id FROM (
-        |    SELECT a_id AS doc_id FROM pairs WHERE a_id % 7 IN (2, 4) AND b_id % 7 NOT IN (2, 4)
+        |    SELECT a_id AS doc_id FROM pm WHERE a_id % 7 IN (2, 4) AND b_id % 7 NOT IN (2, 4)
         |    UNION ALL
-        |    SELECT b_id AS doc_id FROM pairs WHERE b_id % 7 IN (2, 4) AND a_id % 7 NOT IN (2, 4))),
+        |    SELECT b_id AS doc_id FROM pm WHERE b_id % 7 IN (2, 4) AND a_id % 7 NOT IN (2, 4))),
         |rem AS (SELECT doc_id FROM i2 WHERE exact_vs IS NULL
         |          AND doc_id NOT IN (SELECT doc_id FROM nc)),
-        |iip AS (SELECT a_id, b_id FROM pairs
+        |iip AS (SELECT a_id, b_id FROM pm
         |  WHERE a_id IN (SELECT doc_id FROM rem) AND b_id IN (SELECT doc_id FROM rem)),
         |edges AS (SELECT a_id, b_id FROM iip
         |          UNION SELECT b_id AS a_id, a_id AS b_id FROM iip),
@@ -2893,25 +2768,6 @@ object Dedup {
     // DedupSpec measures recall vs the exact all-pairs result; rows-only
     // for the driver.
     Q.noOracle("dedup_embedding_lsh") { (s, dir) =>
-      val e = Ann.embsWithNorm(s, dir)
-      val L = 24
-      val bits = math.max(6,
-        math.ceil(math.log(e.count() / 64.0) / math.log(2)).toInt)
-      val tabled = e.select(col("vec_id"),
-          posexplode(graft.functions.Kernels.hyperplaneSigs(
-            col("emb"), lit(L), lit(bits))).as(Seq("t", "sig")))
-        .select(col("vec_id"), struct(col("t"), col("sig")).as("tk"))
-      val cands = tabled.as("a").join(tabled.as("b"),
-          col("a.tk") === col("b.tk") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-        .distinct()
-      cands
-        .join(e.select(col("vec_id").as("a_id"), col("emb").as("ea"), col("nrm").as("na")), "a_id")
-        .join(e.select(col("vec_id").as("b_id"), col("emb").as("eb"), col("nrm").as("nb")), "b_id")
-        .select(col("a_id"), col("b_id"),
-          round(graft.functions.Native.dot(s, col("ea"), col("eb")) /
-            (col("na") * col("nb")), 4).as("cos"))
-        .where(col("cos") >= 0.5)
-        .orderBy(col("a_id"), col("b_id"))
+      embeddingLshPairs(s, Ann.embsWithNorm(s, dir)).orderBy(col("a_id"), col("b_id"))
     })
 }

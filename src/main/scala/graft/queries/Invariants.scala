@@ -416,11 +416,8 @@ object Invariants {
       val e = Ann.embsWithNorm(s, dir)
       val n = e.count()
       val a = Ann.ivfBuild(e, Dedup.semanticCellCount(n), knownCount = n).assigned
-      val endpoints = a.as("x").join(a.as("y"),
-          col("x.cell") === col("y.cell") && col("x.n_id") < col("y.n_id"))
-        .where(graft.functions.Native.dot(s, col("x.emb"), col("y.emb")) /
-          (col("x.nrm") * col("y.nrm")) >= 0.5)
-        .select(explode(array(col("x.n_id"), col("y.n_id"))).as("removed_id"))
+      val endpoints = Dedup.semanticPairs(s, a, 0.5)
+        .select(explode(array(col("a_id"), col("b_id"))).as("removed_id"))
         .distinct()
       val badOrder = removals.where(col("rep_id") >= col("removed_id"))
         .select(lit("rep_not_less").as("reason"), col("removed_id"), col("rep_id"))
@@ -594,18 +591,8 @@ object Invariants {
       // independent simhash ground truth: 8-bit blocks, same verify
       val sigs = Dedup.simhashSignatures(Tables(s, dir, "documents"))
         .localCheckpoint(true)
-      val blocked8 = sigs.selectExpr("doc_id", "sh",
-        """explode(transform(sequence(0,7),
-          |  b -> struct(b AS blk, shiftright(sh, CAST(b*8 AS INT)) & 255 AS bval))) AS x"""
-          .stripMargin)
-        .select(col("doc_id"), col("sh"), col("x.blk").as("blk"), col("x.bval").as("bval"))
-      val truth8 = blocked8.as("a").join(blocked8.as("b"),
-          col("a.blk") === col("b.blk") && col("a.bval") === col("b.bval") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-          expr("bit_count(a.sh ^ b.sh)").as("hamming"))
-        .where(col("hamming") <= 3)
-        .select(col("a_id"), col("b_id")).distinct()
+      val truth8 = Similar.hammingPairs(sigs, "doc_id", "sh", 8, 8, 3)
+        .select(col("a_id"), col("b_id"))
       val simGot = pairs("dedup_simhash")
       val simDiff = truth8.except(simGot).unionAll(simGot.except(truth8))
         .agg(count(lit(1)).as("m"))

@@ -105,17 +105,7 @@ object Media {
        |  CAST(CAST(hi AS HUGEINT) * 4294967296 + lo
        |    - CASE WHEN hi >= 2147483648 THEN 18446744073709551616 ELSE 0 END AS BIGINT) AS phash,
        |  lo, hi FROM hw),
-       |bands AS (SELECT media_id, phash, b.b,
-       |    CASE b.b WHEN 0 THEN lo % 65536 WHEN 1 THEN (lo // 65536) % 65536
-       |             WHEN 2 THEN hi % 65536 ELSE (hi // 65536) % 65536 END AS bv
-       |  FROM ph, range(0, 4) b(b)),
-       |cand AS (SELECT DISTINCT a.media_id AS a_id, b.media_id AS b_id,
-       |    a.phash AS pa, b.phash AS pb
-       |  FROM bands a JOIN bands b
-       |    ON a.b = b.b AND a.bv = b.bv AND a.media_id < b.media_id)
-       |SELECT a_id, b_id, CAST(bit_count(xor(pa, pb)) AS BIGINT) AS hamming
-       |FROM cand WHERE bit_count(xor(pa, pb)) <= 3
-       |ORDER BY a_id, b_id""".stripMargin
+       |${Similar.hammingPairsSql("ph", "media_id", "phash", 4, 16, 3)}""".stripMargin
   }
 
   private val phashIncrSql: String =
@@ -322,10 +312,7 @@ object Media {
           expr("bit_count(pa ^ pb)") =!= col("hamming"))
         .select(lit("unsound").as("kind"), col("a_id"), col("b_id"))
       // hamming-0 witness: all same-hash pairs (a < b) must be emitted
-      val exact = h.as("x").join(h.as("y"),
-          col("x.phash") === col("y.phash") &&
-            col("x.media_id") < col("y.media_id"))
-        .select(col("x.media_id").as("a_id"), col("y.media_id").as("b_id"))
+      val exact = Similar.buckets(Similar.Keyed(h, "media_id", Seq("phash"), unique = true))
       val missing = exact.join(pairs, Seq("a_id", "b_id"), "left_anti")
         .select(lit("missing_exact").as("kind"), col("a_id"), col("b_id"))
       unsound.unionByName(missing).orderBy(col("kind"), col("a_id"), col("b_id"))
@@ -450,7 +437,7 @@ object Media {
     // no recall gate needed. Ties at cos=1.0 (image-dup cohorts) are
     // the point: the ranking must break them identically to the oracle.
     Q("media_ann",
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT doc_id, r.range AS i,
         |         ((n_chars % 64) * 31 + r.range * 17) % 256 AS a
         |  FROM documents, range(32) r),
@@ -470,12 +457,7 @@ object Media {
         |scored AS (SELECT q_id, n_id, dot / (nq.nrm * nc.nrm) AS cos
         |           FROM d JOIN n nq ON nq.doc_id = q_id
         |                  JOIN n nc ON nc.doc_id = n_id),
-        |ranked AS (SELECT q_id, n_id, cos, row_number() OVER (
-        |             PARTITION BY q_id ORDER BY round(cos, 6) DESC, n_id) AS rank
-        |           FROM scored)
-        |SELECT q_id, rank, n_id, round(cos, 4) AS cos
-        |FROM ranked WHERE rank <= 5
-        |ORDER BY q_id, rank""".stripMargin) { (s, dir) =>
+        |${Similar.topKSql(5)}""".stripMargin) { (s, dir) =>
       val sess = s
       import sess.implicits._
       val emb = Multimodal.pairsFromDocuments(s, dir)
@@ -488,37 +470,15 @@ object Media {
       val queries = emb.where(col("pair_id") < 10)
         .select(col("pair_id").as("q_id"), col("emb").as("qemb"),
           col("nrm").as("qnrm"))
-      val scored = emb.where(col("pair_id") >= 10)
-        .crossJoin(broadcast(queries))
+      Similar.topK(Similar.probe(emb.where(col("pair_id") >= 10), queries)
         .select(col("q_id"), col("pair_id").as("n_id"),
-          (graft.functions.Native.dot(s, col("qemb"), col("emb")) /
-            (col("qnrm") * col("nrm"))).as("cos"))
-      scored
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-            .orderBy(round(col("cos"), 6).desc, col("n_id"))))
-        .where(col("rank") <= 5)
-        .select(col("q_id"), col("rank"), col("n_id"),
-          round(col("cos"), 4).as("cos"))
-        .orderBy(col("q_id"), col("rank"))
+          Similar.cosine(s, col("qemb"), col("emb"), col("qnrm"), col("nrm")).as("cos")), 5)
     })
 
   /** C13f core over any (media_id, phash) frame: 4×16-bit pigeonhole
     * banding → within-bucket candidates → exact bit_count verify ≤ 3.
     */
-  private[graft] def phashNearDupPairs(h: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val banded = h.select(col("media_id"), col("phash"),
-      explode(expr(
-        // mask after the shift: band 3 of a negative hash sign-extends
-        "transform(sequence(0, 3), b -> struct(b AS band, " +
-          "shiftright(phash, b * 16) & 65535 AS bv))")).as("bk"))
-    banded.as("a").join(banded.as("b"),
-        col("a.bk") === col("b.bk") && col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("a_id"), col("b.media_id").as("b_id"),
-        col("a.phash").as("pa"), col("b.phash").as("pb"))
-      .distinct()
-      .select(col("a_id"), col("b_id"),
-        expr("bit_count(pa ^ pb)").cast("long").as("hamming"))
-      .where(col("hamming") <= 3)
-  }
+  private[graft] def phashNearDupPairs(h: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    Similar.hammingPairs(h, "media_id", "phash", 4, 16, 3)
+      .withColumn("hamming", col("hamming").cast("long"))
 }

@@ -3498,9 +3498,7 @@ object Text {
             graft.functions.Kernels.grams3(col("ws")).as("ga"),
             graft.functions.Kernels.minhashInt128(
               graft.functions.Kernels.grams3(col("ws"))).as("sig"))
-          .select(col("doc_id"), col("ga"),
-            explode(transform(sequence(lit(0), lit(31)),
-              b => struct(b.as("band"), slice(col("sig"), b * 4 + 1, lit(4)).as("bsig")))).as("bk"))
+          .select(col("doc_id"), col("ga"), Similar.minhashBands(col("sig")))
           .join(retB, "bk")
           .join(retG, "c_id")
           .select(col("doc_id"),

@@ -51,14 +51,4 @@ object Session {
       require(picked.nonEmpty, s"SPARK_GRAFT_ONLY=$names matches nothing")
       picked
     }
-
-  /** Runs `f` three times; returns (first result, median wall seconds). */
-  def med3[T](f: => T): (T, Double) = {
-    val runs = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    (runs.head._1, runs.map(_._2).sorted.apply(1))
-  }
 }

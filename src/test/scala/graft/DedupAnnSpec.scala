@@ -131,23 +131,7 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("C79 cascade compaction: planted corpus exercises all six (stage, vs) outcomes") {
-    import spark.implicits._
-    val dir = "target/tmp/cascade-compact"
-    def w(n: Int, tag: String) = (1 to n).map(i => s"$tag$i").mkString(" ")
-    val A = w(12, "a"); val B = w(12, "b"); val C = w(22, "c"); val D = w(22, "d")
-    // increment = doc_id % 7 IN (2, 4); messy-url canon siblings are
-    // (3p, 3p+2); hand-planted so every (stage, vs) outcome occurs:
-    Seq(
-      (0L, A), (1L, C),            // corpus
-      (2L, A),                     // canon sibling of corpus 0 → url/corpus
-      (9L, B), (11L, w(12, "e")),  // canon pair in-increment: 9 min-keeps, 11 url/increment
-      (16L, B),                    // exact dup of surviving 9 → exact/increment
-      (23L, C + " extra"),         // jacc 0.95 with corpus 1 → neardup/corpus
-      (30L, D), (32L, w(12, "f")), // canon pair in-increment: 30 keeps, 32 url/increment
-      (58L, D + " tail")           // jacc 0.95 with surviving 30 → neardup/increment
-    ).map { case (id, t) => (id, t, "en", "synth", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val dir = Planted.cascadeDocs(spark)
     val out = q("pipeline_dedup_cascade_compact", dir)
       .collect()
       .map(r => r.getLong(0) -> ((r.getString(1), Option(r.getString(2)).getOrElse("-"))))
@@ -637,32 +621,12 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("C32 dedup_semantic: planted near-dups collapse into one component (recall >= 0.9)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // 8 well-separated gaussian clusters + 25 planted near-dup twins
-    // (copy + tiny noise, cosine ~0.9999): the quantizer must put a twin
-    // in its original's cell essentially always, so SemDeDup's
-    // within-cell verification finds the pair. Noise scale matters: at
-    // sigma 1.5 on |center| ~ 20, intra-cluster cosine sits ~0.92 —
-    // BELOW tau 0.98 — so ordinary cluster-mates do NOT count as
-    // near-dups and the recall measured is the twins', not a trivial
-    // whole-cluster collapse (asserted below)
-    val rnd = new scala.util.Random(11)
-    val dim = 16
-    val centers = Array.fill(8)(Array.fill(dim)(rnd.nextGaussian() * 5))
-    val base = (0 until 400).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.toIndexedSeq.map(_ + rnd.nextGaussian() * 1.5))
-    }
-    val twins = (0 until 25).map { j =>
-      val (origId, v) = base(rnd.nextInt(base.size))
-      (1000L + j, origId, v.map(_ + rnd.nextGaussian() * 0.001))
-    }
-    val df = (base.map { case (id, v) => (id, v) } ++
-        twins.map { case (id, _, v) => (id, v) })
-      .toDF("vec_id", "emb")
-      .select(col("vec_id"), col("emb"),
-        sqrt(graft.functions.Native.dot(spark, col("emb"), col("emb"))).as("nrm"))
+    // the quantizer must put a planted twin in its original's cell
+    // essentially always, so SemDeDup's within-cell verification finds
+    // the pair; ordinary cluster-mates sit below tau 0.98, so the recall
+    // measured is the twins', not a trivial whole-cluster collapse
+    // (asserted below)
+    val (df, twins) = Planted.semanticTwins(spark)
     val labels = graft.queries.Dedup.semanticDedup(spark, df, k = 8, tau = 0.98)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // non-vacuity: if whole clusters collapsed (intra-cluster cosine
@@ -675,7 +639,7 @@ class DedupAnnSpec extends SparkSpec {
     // rebuild full component membership: removed -> rep, rep -> itself
     val comp = labels.toMap
     def root(x: Long): Long = comp.getOrElse(x, x)
-    val hit = twins.count { case (twinId, origId, _) => root(twinId) == root(origId) }
+    val hit = twins.count { case (twinId, origId) => root(twinId) == root(origId) }
     info(s"planted-twin recall = $hit/25 (${labels.length} removals)")
     assert(hit >= 23, s"only $hit/25 planted twins collapsed")
   }
