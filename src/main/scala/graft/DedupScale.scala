@@ -26,21 +26,23 @@ object DedupScale {
     * silently loses all planted work).
     */
   private def corpus(spark: SparkSession, n: Long): DataFrame = {
+    val stopSql = queries.Curation.stopwordsSql
+    val nStop = queries.Curation.stopwords.size
     val base = spark.range(n).select(
       col("id").as("doc_id"),
       concat_ws(" ", expr(
-        """transform(sequence(0, 39), i ->
+        s"""transform(sequence(0, 39), i ->
           |  CASE WHEN i % 4 = 3
-          |    THEN element_at(array('the','a','of','and','to'), int(pmod(xxhash64(id, i), 5)) + 1)
+          |    THEN element_at(array($stopSql), int(pmod(xxhash64(id, i), $nStop)) + 1)
           |    ELSE concat('w', pmod(xxhash64(id * 41 + i), 500))
           |  END)""".stripMargin)).as("text"))
     // planted near-dups: id % 10 == 9 re-derives id-9's words, editing
     // positions 0 and 20 — jacc 34/42 = 0.8095 (see scaladoc arithmetic)
     base.withColumn("text", when(col("doc_id") % 10 === 9, concat_ws(" ", expr(
-      """transform(sequence(0, 39), i ->
+      s"""transform(sequence(0, 39), i ->
         |  CASE WHEN i = 0 OR i = 20 THEN concat('edit', doc_id)
         |  WHEN i % 4 = 3
-        |    THEN element_at(array('the','a','of','and','to'), int(pmod(xxhash64(doc_id - 9, i), 5)) + 1)
+        |    THEN element_at(array($stopSql), int(pmod(xxhash64(doc_id - 9, i), $nStop)) + 1)
         |  ELSE concat('w', pmod(xxhash64((doc_id - 9) * 41 + i), 500))
         |  END)""".stripMargin))).otherwise(col("text")))
   }

@@ -71,7 +71,7 @@ object IncrScale {
     val bloom4 = queries.Dedup.corpusBloom(c4)
     def full(c: DataFrame, b: DataFrame): Long =
       c.unionByName(b)
-        .groupBy(unhex(sha2(lower(regexp_replace(trim(col("text")), "\\s+", " ")), 256)))
+        .groupBy(graft.queries.Curation.normDigest)
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n"))
         .count()
     // wall time at this scale is fixed-overhead-bound; the quantity that

@@ -831,11 +831,12 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   // boundedCollect, and later reads of the generation slice it on the
   // driver with no Spark job. So a loop alternating commits with single
   // reads never pays for a whole-view collect. A hit costs one stat of
-  // each manifest the view reads (entries; and folds, for a materialized
-  // view), an exact compare of their text with the snapshot's, and a
-  // slice of entries parsed at fill: no Spark job, no JSON parse, no
-  // file read, no engine monitor (only ReadSnapshots' own brief one), and
-  // both caps read from the conf without an exception. The text comes
+  // each manifest the view reads (entries; folds alone for a materialized
+  // reduced view, both for a materialized Fold), an exact compare of
+  // their text with the snapshot's, and a slice of entries parsed at
+  // fill: no Spark job, no JSON parse, no file read, no engine monitor
+  // (only ReadSnapshots' own brief one), and both caps read from the
+  // conf without an exception. The text comes
   // from ManifestPins, which holds each manifest it has read open: a
   // manifest is only ever replaced by a rename, and an open file's inode
   // number cannot be reused, so a path that stats as the held file's
@@ -881,14 +882,16 @@ class Graft(val spark: SparkSession, val stateRoot: String,
   private def readGeneration(view: String, vd: ViewDef): Option[ReadGen] = {
     val p = Option(readPaths.get(view)).getOrElse(readPaths.computeIfAbsent(view, v =>
       Graft.ReadPaths(manifestPath(viewDir(v)), Paths.get(foldsDir(v)), manifestPath(foldsDir(v)))))
-    manifestPins.text(p.entries).flatMap { e =>
-      // only a materialized view reads folds; another's answer is its entries
-      if (!vd.materialize) Some(ReadGen(e, None))
-      else manifestPins.text(p.foldsManifest) match {
-        case Some(f) => Some(ReadGen(e, Some(f)))
-        // a folds dir without a manifest says nothing about when it changed
-        case None => if (Files.exists(p.folds)) None else Some(ReadGen(e, None))
-      }
+    def withEntries(folds: Option[String]) = manifestPins.text(p.entries).map(ReadGen(_, folds))
+    // only a materialized view reads folds; another's answer is its entries
+    if (!vd.materialize) withEntries(None)
+    else manifestPins.text(p.foldsManifest) match {
+      // a reduced view answers from its folds alone (useFolds, a fill's
+      // fromFolds); a Fold view's cap probe also counts its entries
+      case Some(f) if vd.reduce.exists(!_.isInstanceOf[Reduce.Fold]) => Some(ReadGen("", Some(f)))
+      case Some(f) => withEntries(Some(f))
+      // a folds dir without a manifest says nothing about when it changed
+      case None => if (Files.exists(p.folds)) None else withEntries(None)
     }
   }
 

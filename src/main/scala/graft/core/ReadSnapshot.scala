@@ -11,11 +11,14 @@ import org.apache.spark.unsafe.types.ByteArray
 /** A view's read generation: the raw text of its `entries/_manifest.txt`
   * and, when the view is materialized and has a folds/ dir, of
   * `folds/_manifest.txt` (a view that is not materialized never reads
-  * folds). Every state commit renames a new manifest with fresh
-  * data-file names over the old one, so equal text means the view serves
-  * exactly the same rows. A driver read gets the text from
-  * [[ManifestPins]]: one stat of each manifest while it is the file the
-  * engine holds open, a read of its bytes after it was replaced.
+  * folds). A materialized reduced view other than a Fold answers from
+  * its folds alone, so while its folds manifest exists `entries` is
+  * empty and only the folds text is read. Every state commit renames a
+  * new manifest with fresh data-file names over the old one, so equal
+  * text means the view serves exactly the same rows. A driver read gets
+  * the text from [[ManifestPins]]: one stat of each manifest while it is
+  * the file the engine holds open, a read of its bytes after it was
+  * replaced.
   */
 private[graft] final case class ReadGen(entries: String, folds: Option[String])
 

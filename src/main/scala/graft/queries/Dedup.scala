@@ -35,17 +35,13 @@ import graft.core.Tables
   */
 object Dedup {
 
+  import Curation.{normDigest, normText, words}
+
   private val ccLock = new Object
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  /** Whitespace-collapse + lowercase — the standard exact-dedup key,
-    * shared with [[Text]]'s curation pipeline so the two dedup surfaces
-    * can never diverge on the normalization.
-    */
-  private[queries] val normText: Column =
-    lower(regexp_replace(trim(col("text")), "\\s+", " "))
 
   /** Distinct word 3-grams of a document, as one array column
     * (JIT kernel — the interpreted HOF chain was the sf0.1 bottleneck).
@@ -60,7 +56,7 @@ object Dedup {
     * (VERDICT #1 — one gram-kernel pass feeds both exact miners).
     */
   private[graft] def gramSets(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), split(col("text"), " ").as("ws"))
+    d.select(col("doc_id"), words.as("ws"))
       .where(size(col("ws")) >= 3)
       .select(col("doc_id"), gramsOf(col("ws")).as("gs"))
 
@@ -494,7 +490,7 @@ object Dedup {
   private[queries] def cascadeKeyFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val base = docs(s, dir).select(col("doc_id"),
       Text.canonicalUrlCol(Text.messyUrlCol).as("canon"),
-      unhex(sha2(normText, 256)).as("h"))
+      normDigest.as("h"))
     val s1 = base.withColumn("url_keep",
       col("doc_id") === min(col("doc_id")).over(Window.partitionBy(col("canon"))))
     val s2 = s1.where(col("url_keep"))
@@ -561,7 +557,7 @@ object Dedup {
     val isIncr = (col("doc_id") % 7).isin(2L, 4L)
     val keyed = (df: DataFrame) => df.select(col("doc_id"),
       Text.canonicalUrlCol(Text.messyUrlCol).as("canon"),
-      unhex(sha2(normText, 256)).as("h"))
+      normDigest.as("h"))
     compactStagedVerdicts(s,
       keyed(d.where(!isIncr)).select(col("canon"), col("h")),
       keyed(d.where(isIncr)),
@@ -704,10 +700,10 @@ object Dedup {
     * drive it).
     */
   def incrementalExact(batch: DataFrame, corpus: DataFrame): DataFrame =
-    batch.select(col("doc_id"), unhex(sha2(normText, 256)).as("h"))
+    batch.select(col("doc_id"), normDigest.as("h"))
       .groupBy(col("h"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("batch_dups"))
-      .join(corpus.select(unhex(sha2(normText, 256)).as("h")), Seq("h"), "left_anti")
+      .join(corpus.select(normDigest.as("h")), Seq("h"), "left_anti")
       .select(col("keep_id"), col("batch_dups"))
 
   /** The MONOLITHIC corpus-digest bloom filter of the C30b path — the
@@ -747,12 +743,12 @@ object Dedup {
     // unmaterialized plan would re-scan + re-hash the batch per consumer
     val bAgg = batch
       .select(col("doc_id"), xxhash64(normText).as("hl"),
-        unhex(sha2(normText, 256)).as("h"))
+        normDigest.as("h"))
       .groupBy(col("h"), col("hl"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("batch_dups"))
       .localCheckpoint(true)
     val definitelyNew = bAgg.where(!might)
-    val hits = corpus.select(unhex(sha2(normText, 256)).as("h"))
+    val hits = corpus.select(normDigest.as("h"))
       .join(broadcast(bAgg.where(might).select(col("h"))), Seq("h"), "left_semi")
       .distinct()
     val survived = bAgg.where(might)
@@ -861,7 +857,7 @@ object Dedup {
       .map(_.getInt(0)).getOrElse(1) // empty index: every bucket misses
     val bAgg = batch
       .select(col("doc_id"), xxhash64(normText).as("hl"),
-        unhex(sha2(normText, 256)).as("h"))
+        normDigest.as("h"))
       .groupBy(col("h"), col("hl"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("batch_dups"))
       .localCheckpoint(true)
@@ -889,7 +885,7 @@ object Dedup {
       .localCheckpoint(true)
     val definitelyNew = bAgg.join(broadcast(cand), Seq("hl"), "left_anti")
     val mightRows = bAgg.join(broadcast(cand), Seq("hl"), "left_semi")
-    val hits = corpus.select(unhex(sha2(normText, 256)).as("h"))
+    val hits = corpus.select(normDigest.as("h"))
       .join(broadcast(mightRows.select(col("h"))), Seq("h"), "left_semi")
       .distinct()
     val survived = mightRows.join(broadcast(hits), Seq("h"), "left_anti")
@@ -1063,7 +1059,7 @@ object Dedup {
   def simhashSignatures(d: DataFrame): DataFrame =
     d.where(col("text").isNotNull) // a null text would NPE inside the kernel
       .select(col("doc_id"),
-        graft.functions.Kernels.simhash64(split(col("text"), " ")).as("sh"))
+        graft.functions.Kernels.simhash64(words).as("sh"))
 
   /** C5: simhash pairs at hamming <= 3 — 4×16-bit pigeonhole blocks. */
   private[graft] def simhashPairs(d: DataFrame,
@@ -1074,7 +1070,7 @@ object Dedup {
   private[graft] def simhashIntPairs(d: DataFrame,
       gen: Similar.Candidates = Similar.buckets): DataFrame =
     Similar.hammingPairs(d.where(col("text").isNotNull).select(col("doc_id"),
-        graft.functions.Kernels.simhashInt48(split(col("text"), " ")).as("sh")),
+        graft.functions.Kernels.simhashInt48(words).as("sh")),
       "doc_id", "sh", 2, 24, 1, gen)
       .withColumn("hamming", col("hamming").cast("long"))
 
@@ -1095,10 +1091,9 @@ object Dedup {
     * of the 32 B digest (guide §2.3, narrower keys).
     */
   private[graft] def substringGrams(d: DataFrame, n: Int): DataFrame = {
-    val ws = split(col("text"), " ")
-    d.where(size(ws) >= n)
-      .select(col("doc_id"), size(ws).as("n_tokens"),
-        posexplode(graft.functions.Kernels.wordGramHashes(ws, n)).as(Seq("pos", "h")))
+    d.where(size(words) >= n)
+      .select(col("doc_id"), size(words).as("n_tokens"),
+        posexplode(graft.functions.Kernels.wordGramHashes(words, n)).as(Seq("pos", "h")))
   }
 
   /** C37c core over any (doc_id, text) frame — see the query scaladoc
@@ -1124,7 +1119,7 @@ object Dedup {
     // ONLY affected docs' token streams posexplode
     val toks = d.join(adaptiveBuild(covered.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p", "w")))
+      .select(col("doc_id"), posexplode(words).as(Seq("p", "w")))
     val agg = toks.join(covered.select(col("doc_id"), col("p")),
         Seq("doc_id", "p"), "left_anti")
       .groupBy(col("doc_id")).agg(
@@ -1291,7 +1286,7 @@ object Dedup {
         |s2 AS (SELECT doc_id, text,
         |  CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY k) THEN 1 ELSE 0 END AS exact_keep
         |  FROM (SELECT doc_id, text,
-        |          lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS k
+        |          ${Curation.normSql()} AS k
         |        FROM s1 WHERE url_keep = 1))""".stripMargin
 
   /** The exact τ=0.8 3-gram Jaccard pair miner over a `docs_ws`
@@ -1347,9 +1342,9 @@ object Dedup {
 
     // C1: exact dedup — hash-groupBy on normalized text, keep min id.
     Q("dedup_exact",
-      """SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt
+      s"""SELECT min(doc_id) AS keep_id, count(*) AS dup_cnt
         |FROM documents
-        |GROUP BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
+        |GROUP BY ${Curation.normSql()}
         |ORDER BY keep_id""".stripMargin) { (s, dir) =>
       // group on unhex(sha2) of the normalized text, not the text
       // itself: the shuffle key shrinks from ~300 B of document text to
@@ -1358,7 +1353,7 @@ object Dedup {
       // difference between shuffling the corpus and shuffling a
       // fingerprint column (collision odds ~n²/2²⁵⁶ ≈ 0)
       docs(s, dir)
-        .groupBy(unhex(sha2(normText, 256)).as("h"))
+        .groupBy(normDigest.as("h"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
         .select(col("keep_id"), col("dup_cnt"))
         .orderBy(col("keep_id"))
@@ -1375,8 +1370,8 @@ object Dedup {
     // joins back co-partitioned on the digest — the corpus pays the C1
     // shuffle once and nothing else; all integer ⇒ hash-gated.
     Q("dedup_soft_weights",
-      """WITH k AS (
-        |  SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS k
+      s"""WITH k AS (
+        |  SELECT doc_id, ${Curation.normSql()} AS k
         |  FROM documents),
         |c AS (SELECT k, count(*) AS n FROM k GROUP BY k)
         |SELECT k.doc_id, CAST(c.n AS BIGINT) AS cluster_n,
@@ -1384,7 +1379,7 @@ object Dedup {
         |FROM k JOIN c ON c.k = k.k
         |ORDER BY k.doc_id""".stripMargin) { (s, dir) =>
       val k = docs(s, dir)
-        .select(col("doc_id"), unhex(sha2(normText, 256)).as("h"))
+        .select(col("doc_id"), normDigest.as("h"))
       val c = k.groupBy(col("h")).agg(count(lit(1)).as("n"))
       k.join(c, Seq("h"))
         .select(col("doc_id"), col("n").as("cluster_n"),
@@ -1402,10 +1397,10 @@ object Dedup {
     // 100 TB shape: the C1 digest agg (map-side combinable, 32 B keys)
     // then a |distinct sizes| (≤ dozens) second agg — nothing else.
     Q("dedup_cluster_stats",
-      """WITH k AS (
-        |  SELECT lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS k,
+      s"""WITH k AS (
+        |  SELECT ${Curation.normSql()} AS k,
         |    CAST(count(*) AS BIGINT) AS sz,
-        |    CAST(sum(len(string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' '))) AS BIGINT) AS toks
+        |    CAST(sum(len(string_split(${Curation.normSql()}, ' '))) AS BIGINT) AS toks
         |  FROM documents GROUP BY k)
         |SELECT sz AS cluster_size,
         |  count(*) AS n_clusters,
@@ -1415,7 +1410,7 @@ object Dedup {
         |  CAST(sum(toks - toks // sz) AS BIGINT) AS excess_tokens
         |FROM k GROUP BY sz ORDER BY cluster_size""".stripMargin) { (s, dir) =>
       docs(s, dir)
-        .groupBy(unhex(sha2(normText, 256)).as("h"))
+        .groupBy(normDigest.as("h"))
         // token mass over the NORMALIZED text (the cluster key's string):
         // copies are then literally identical, so per-copy tokens =
         // toks div sz is exact even for whitespace-variant duplicates
@@ -1444,7 +1439,7 @@ object Dedup {
         |ORDER BY keep_id""".stripMargin) { (s, dir) =>
       docs(s, dir)
         .select(col("doc_id"),
-          unhex(sha2(array_join(array_sort(array_distinct(split(col("text"), " "))), " "), 256)).as("sig"))
+          unhex(sha2(array_join(array_sort(array_distinct(words)), " "), 256)).as("sig"))
         .groupBy(col("sig"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("cluster_size"))
         .select(col("keep_id"), col("cluster_size"))
@@ -1624,7 +1619,7 @@ object Dedup {
         |FROM grams JOIN d USING (g)
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val g = docs(s, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+        .select(col("doc_id"), words.as("ws"))
         .where(size(col("ws")) >= 3)
         .select(col("doc_id"), explode(gramsOf(col("ws"))).as("g"))
       val gdf = g.groupBy(col("g")).agg(count(lit(1)).as("df"))
@@ -1816,7 +1811,7 @@ object Dedup {
     // recursive-CTE closure extended with the text_quality CTE and the
     // same argmax — all integer arithmetic, hash-gated.
     Q("dedup_keep_best",
-      """WITH RECURSIVE docs_ws AS (
+      s"""WITH RECURSIVE docs_ws AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
         |  WHERE len(string_split(text, ' ')) >= 3),
         |w AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS i FROM docs_ws),
@@ -1843,18 +1838,7 @@ object Dedup {
         |  UNION
         |  SELECT e.b_id AS id, reach.r FROM reach JOIN edges e ON e.a_id = reach.id),
         |labels AS (SELECT id, min(r) AS label FROM reach GROUP BY id),
-        |f AS (
-        |  SELECT doc_id,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        t -> t IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, CAST(least(n_words, 100) * 40
-        |    + (least(n_stop * 10, n_words) * 3000) // n_words
-        |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |  FROM f),
+        |q AS (${Curation.qualitySql("doc_id")}),
         |m AS (SELECT l.id, l.label, q.quality_bp
         |      FROM labels l JOIN q ON q.doc_id = l.id),
         |r AS (SELECT id, label, quality_bp, row_number() OVER (
@@ -1868,19 +1852,10 @@ object Dedup {
       ensureLocalCkptDir(s)
       val pairs = ngramJaccardPairs(docs(s, dir), 4, 5)
       val labels = connectedComponents(pairs)
-      // quality as a narrow projection at scan speed (same expressions as
-      // text_quality — keep in lockstep), BEFORE the join: only
-      // (doc_id, quality_bp) ever reaches the exchange
-      val ws = split(col("text"), " ")
-      val qual = docs(s, dir)
-        .select(col("doc_id"),
-          size(ws).as("n_words"),
-          size(array_distinct(ws)).as("n_distinct"),
-          size(filter(ws, t => t.isin("the", "a", "of", "and", "to"))).as("n_stop"))
-        .select(col("doc_id"),
-          (least(col("n_words"), lit(100)) * 40
-            + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-            + expr("(n_distinct * 3000) div n_words")).cast("long").as("quality_bp"))
+      // quality as a narrow projection at scan speed, BEFORE the join:
+      // only (doc_id, quality_bp) ever reaches the exchange
+      val qual = Curation.quality(docs(s, dir), col("doc_id"))
+        .select(col("doc_id"), col("quality_bp"))
       val ranked = labels.join(qual, col("id") === col("doc_id"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("label"))
@@ -1916,11 +1891,10 @@ object Dedup {
         |SELECT doc_id, n_chunks, CAST(n_dup AS BIGINT) AS n_dup,
         |  CAST((n_dup*10000)//n_chunks AS BIGINT) AS dup_bp
         |FROM per WHERE n_dup > 0 ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val ws = split(col("text"), " ")
-      val chunks = docs(s, dir).where(size(ws) >= 10)
+      val chunks = docs(s, dir).where(size(words) >= 10)
         .select(col("doc_id"),
-          explode(transform(sequence(lit(0), floor(size(ws) / 10).cast("int") - 1),
-            k => unhex(sha2(concat_ws(" ", slice(ws, k * 10 + 1, lit(10))), 256)))).as("h"))
+          explode(transform(sequence(lit(0), floor(size(words) / 10).cast("int") - 1),
+            k => unhex(sha2(concat_ws(" ", slice(words, k * 10 + 1, lit(10))), 256)))).as("h"))
       val chunkDf = chunks.groupBy(col("h"))
         .agg(countDistinct(col("doc_id")).as("docs"))
       chunks.join(chunkDf, "h")
@@ -1980,9 +1954,8 @@ object Dedup {
         |       coalesce(a2.clean_text, '') AS clean_text
         |FROM a1 LEFT JOIN a2 USING (doc_id)
         |WHERE n_removed > 0 ORDER BY a1.doc_id""".stripMargin) { (s, dir) =>
-      val ws = split(col("text"), " ")
-      val base = docs(s, dir).where(size(ws) >= 10)
-        .select(col("doc_id"), ws.as("ws"))
+      val base = docs(s, dir).where(size(words) >= 10)
+        .select(col("doc_id"), words.as("ws"))
       // slim detection stream: (doc_id, 32 B digest) per full chunk
       val hashes = base.select(col("doc_id"),
         explode(transform(sequence(lit(0), expr("size(ws) div 10").cast("int") - 1),
@@ -2185,8 +2158,8 @@ object Dedup {
     // the survivors anti-join the corpus. The doc_id % 3 split stands in
     // for the corpus/batch boundary on the shared test table.
     Q("dedup_incremental",
-      """WITH norm AS (
-        |  SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS k
+      s"""WITH norm AS (
+        |  SELECT doc_id, ${Curation.normSql()} AS k
         |  FROM documents),
         |batch AS (SELECT doc_id, k FROM norm WHERE doc_id % 3 = 0),
         |agg AS (SELECT k, min(doc_id) AS keep_id, count(*) AS batch_dups
@@ -2223,8 +2196,8 @@ object Dedup {
     // one. Assumes increments whose corpus overlap is bounded (the
     // ingest norm); a replay-heavy batch should take the C30 path.
     Q("dedup_incremental_bloom",
-      """WITH norm AS (
-        |  SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS k
+      s"""WITH norm AS (
+        |  SELECT doc_id, ${Curation.normSql()} AS k
         |  FROM documents),
         |batch AS (SELECT doc_id, k FROM norm WHERE doc_id % 3 = 0),
         |agg AS (SELECT k, min(doc_id) AS keep_id, count(*) AS batch_dups
@@ -2375,8 +2348,8 @@ object Dedup {
     // the driver. At scale this is the ingest-time shape: dedup happens
     // as data lands, not as a nightly batch over the accumulated pile.
     Q("dedup_incremental_stream",
-      """WITH norm AS (
-        |  SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS k
+      s"""WITH norm AS (
+        |  SELECT doc_id, ${Curation.normSql()} AS k
         |  FROM documents),
         |batch AS (SELECT doc_id, k FROM norm WHERE doc_id % 3 = 0),
         |agg AS (SELECT k, min(doc_id) AS keep_id, count(*) AS batch_dups
@@ -2388,12 +2361,12 @@ object Dedup {
       Events.runStream(s, OutputMode.Complete) {
         val stream = Events.streamOf(s, dir, "documents")
           .where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(col("doc_id"), unhex(sha2(normText, 256)).as("h"))
+          .select(col("doc_id"), normDigest.as("h"))
         // the static corpus digests — DISTINCT'd batch-side so the anti
         // probe table is as small as it can be
         val corpus = docs(s, dir)
           .where(pmod(col("doc_id"), lit(3)) =!= 0)
-          .select(unhex(sha2(normText, 256)).as("h"))
+          .select(normDigest.as("h"))
           .distinct()
         stream.join(corpus, Seq("h"), "left_anti")
           .groupBy(col("h"))
@@ -2453,13 +2426,13 @@ object Dedup {
             .localCheckpoint(true))
         val corpusG = Pinned.track(
           d.where(!isBatch)
-            .select(col("doc_id").as("c_id"), split(col("text"), " ").as("ws"))
+            .select(col("doc_id").as("c_id"), words.as("ws"))
             .where(size(col("ws")) >= 3)
             .select(col("c_id"), gramsOf(col("ws")).as("gb"))
             .localCheckpoint(true))
         val stream = Events.streamOf(s, dir, "documents")
           .where(pmod(col("doc_id"), lit(3)) === 0)
-        val sw = stream.select(col("doc_id"), split(col("text"), " ").as("ws"))
+        val sw = stream.select(col("doc_id"), words.as("ws"))
         val banded = sw.where(size(col("ws")) >= 3)
           .select(col("doc_id"), gramsOf(col("ws")).as("ga"),
             graft.functions.Kernels.minhashInt128(gramsOf(col("ws"))).as("sig"))
@@ -2536,7 +2509,7 @@ object Dedup {
         |${Text.urlCanonCtes},
         |$minhashIntCtes,
         |base AS (SELECT d.doc_id, c4.canon,
-        |    lower(regexp_replace(trim(d.text), '\\s+', ' ', 'g')) AS k,
+        |    ${Curation.normSql("d.text")} AS k,
         |    d.doc_id % 7 IN (2, 4) AS is_incr
         |  FROM documents d JOIN c4 ON c4.doc_id = d.doc_id),
         |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
@@ -2570,12 +2543,12 @@ object Dedup {
           .select(Text.canonicalUrlCol(Text.messyUrlCol).as("canon"))
           .distinct().withColumn("u", lit(1)).localCheckpoint(true))
         val corpusH = Pinned.track(corpus
-          .select(unhex(sha2(normText, 256)).as("h"))
+          .select(normDigest.as("h"))
           .distinct().withColumn("e", lit(1)).localCheckpoint(true))
         val corpusB = Pinned.track(bandedMinhashIntKeys(corpus)
           .select(col("doc_id").as("c_id"), col("bk")).localCheckpoint(true))
         val corpusG = Pinned.track(corpus
-          .select(col("doc_id").as("c_id"), split(col("text"), " ").as("ws"))
+          .select(col("doc_id").as("c_id"), words.as("ws"))
           .where(size(col("ws")) >= 3)
           .select(col("c_id"), gramsOf(col("ws")).as("gb"))
           .localCheckpoint(true))
@@ -2583,13 +2556,13 @@ object Dedup {
           .where((col("doc_id") % 7).isin(2L, 4L))
         val sw = stream.select(col("doc_id"), col("text"),
           Text.canonicalUrlCol(Text.messyUrlCol).as("canon"),
-          unhex(sha2(normText, 256)).as("h"))
+          normDigest.as("h"))
         val keyed = sw
           .join(corpusCanon, Seq("canon"), "left")
           .join(corpusH, Seq("h"), "left")
           .select(col("doc_id"), coalesce(col("u"), lit(0)).as("u"),
             coalesce(col("e"), lit(0)).as("e"), lit(0).as("n"))
-        val swg = sw.select(col("doc_id"), split(col("text"), " ").as("ws"))
+        val swg = sw.select(col("doc_id"), words.as("ws"))
         val near = swg.where(size(col("ws")) >= 3)
           .select(col("doc_id"), gramsOf(col("ws")).as("ga"),
             graft.functions.Kernels.minhashInt128(gramsOf(col("ws"))).as("sig"))
@@ -2627,7 +2600,7 @@ object Dedup {
       val batch = d.where(isIncr)
       val canonOf = (df: DataFrame) => df.select(col("doc_id"),
         Text.canonicalUrlCol(Text.messyUrlCol).as("canon"),
-        unhex(sha2(normText, 256)).as("h"))
+        normDigest.as("h"))
       val bk = canonOf(batch)
       val uIds = bk.join(canonOf(corpus).select(col("canon")).distinct(), Seq("canon"), "left_semi")
         .select(col("doc_id"))
@@ -2682,7 +2655,7 @@ object Dedup {
       s"""WITH RECURSIVE u AS (SELECT doc_id, (${Text.messyUrlSql}) AS url FROM documents),
         |${Text.urlCanonCtes},
         |base AS (SELECT d.doc_id, d.text, c4.canon,
-        |    lower(regexp_replace(trim(d.text), '\\s+', ' ', 'g')) AS k,
+        |    ${Curation.normSql("d.text")} AS k,
         |    d.doc_id % 7 IN (2, 4) AS is_incr
         |  FROM documents d JOIN c4 ON c4.doc_id = d.doc_id),
         |i1 AS (SELECT doc_id, text, canon, k,

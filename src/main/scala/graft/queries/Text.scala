@@ -19,7 +19,7 @@ object Text {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  private val words: Column = split(col("text"), " ")
+  import Curation.words
 
   /** The deterministic sampling coin shared by C19/C24/C29: an affine
     * map of doc_id over Z_1000003, reduced mod `buckets` (100 for
@@ -166,18 +166,8 @@ object Text {
   // object body) and Dedup CTEs (a mutually-referencing object) — an
   // eager val here reads nulls mid-initialization
   private lazy val pretrainE2eSql: String =
-    s"""WITH RECURSIVE f AS (
-      |  SELECT doc_id, source, lang, text,
-      |    len(string_split(text, ' ')) AS n_words,
-      |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-      |    len(list_filter(string_split(text, ' '),
-      |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-      |  FROM documents),
-      |q AS MATERIALIZED (
-      |  SELECT *, CAST(least(n_words, 100) * 40
-      |    + (least(n_stop * 10, n_words) * 3000) // n_words
-      |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-      |  FROM f),
+    s"""WITH RECURSIVE q AS MATERIALIZED (
+      |  ${Curation.qualitySql("doc_id, source, lang, text")}),
       |qs AS MATERIALIZED (SELECT * FROM q WHERE doc_id % 20 <> 0 AND quality_bp >= 5000),
       |u AS (SELECT doc_id, ($messyUrlSql) AS url FROM qs),
       |$urlCanonCtes,
@@ -187,7 +177,7 @@ object Text {
       |  FROM qs JOIN c4 ON c4.doc_id = qs.doc_id),
       |s2 AS MATERIALIZED (SELECT doc_id, source, lang, text, n_words,
       |  CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY k) THEN 1 ELSE 0 END AS exact_keep
-      |  FROM (SELECT *, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS k
+      |  FROM (SELECT *, ${Curation.normSql()} AS k
       |        FROM s1 WHERE url_keep = 1)),
       |docs_ws AS MATERIALIZED (
       |  SELECT doc_id, string_split(text, ' ') AS ws FROM s2
@@ -230,12 +220,8 @@ object Text {
       |                      < mr.rate_bp % 10000 THEN 1 ELSE 0 END AS BIGINT) AS copies
       |       FROM s4 JOIN mr ON mr.source = s4.source AND mr.lang = s4.lang
       |       WHERE s4.clean_tokens > 0),
-      |skept AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-      |           clean_tokens * copies AS tok
-      |          FROM s5 WHERE copies >= 1),
-      |sp AS (SELECT doc_id, coalesce(sum(tok) OVER (ORDER BY h, doc_id
-      |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-      |       FROM skept)
+      |skept AS (SELECT doc_id, clean_tokens * copies AS tok FROM s5 WHERE copies >= 1),
+      |sp AS (${Curation.shardPrefixSql("skept")})
       |SELECT d.doc_id,
       |  CASE WHEN d.doc_id % 20 = 0 THEN 'benchmark'
       |       WHEN coalesce(q.quality_bp, 0) < 5000 THEN 'quality'
@@ -274,23 +260,13 @@ object Text {
     */
   private lazy val pretrainIngestSql: String =
     s"""WITH RECURSIVE ${Dedup.minhashIntCtes},
-      |f AS (
-      |  SELECT doc_id, text,
-      |    len(string_split(text, ' ')) AS n_words,
-      |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-      |    len(list_filter(string_split(text, ' '),
-      |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-      |  FROM documents),
       |q AS MATERIALIZED (
-      |  SELECT *, CAST(least(n_words, 100) * 40
-      |    + (least(n_stop * 10, n_words) * 3000) // n_words
-      |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-      |  FROM f),
+      |  ${Curation.qualitySql("doc_id, text")}),
       |u AS (SELECT doc_id, ($messyUrlSql) AS url FROM documents),
       |$urlCanonCtes,
       |kq AS MATERIALIZED (
       |  SELECT q.doc_id, q.text, q.n_words, q.quality_bp, c4.canon,
-      |    lower(regexp_replace(trim(q.text), '\\s+', ' ', 'g')) AS k,
+      |    ${Curation.normSql("q.text")} AS k,
       |    q.doc_id % 7 IN (2, 4) AS is_incr
       |  FROM q JOIN c4 ON c4.doc_id = q.doc_id),
       |cq AS (SELECT * FROM kq
@@ -379,23 +355,13 @@ object Text {
     * with the UPDATED all-benchmark probe.
     */
   private lazy val pretrainCompactSql: String =
-    s"""WITH RECURSIVE f AS (
-      |  SELECT doc_id, source, lang, text,
-      |    len(string_split(text, ' ')) AS n_words,
-      |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-      |    len(list_filter(string_split(text, ' '),
-      |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-      |  FROM documents),
-      |q AS MATERIALIZED (
-      |  SELECT *, CAST(least(n_words, 100) * 40
-      |    + (least(n_stop * 10, n_words) * 3000) // n_words
-      |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-      |  FROM f),
+    s"""WITH RECURSIVE q AS MATERIALIZED (
+      |  ${Curation.qualitySql("doc_id, source, lang, text")}),
       |u AS (SELECT doc_id, ($messyUrlSql) AS url FROM documents),
       |$urlCanonCtes,
       |kq AS MATERIALIZED (
       |  SELECT q.doc_id, q.source, q.lang, q.text, q.n_words, q.quality_bp, c4.canon,
-      |    lower(regexp_replace(trim(q.text), '\\s+', ' ', 'g')) AS k,
+      |    ${Curation.normSql("q.text")} AS k,
       |    q.doc_id % 7 IN (2, 4) AS is_incr
       |  FROM q JOIN c4 ON c4.doc_id = q.doc_id),
       |cq AS (SELECT * FROM kq
@@ -500,12 +466,8 @@ object Text {
       |                      < mr.rate_bp % 10000 THEN 1 ELSE 0 END AS BIGINT) AS copies
       |       FROM s4 JOIN mr ON mr.source = s4.source AND mr.lang = s4.lang
       |       WHERE s4.clean_tokens > 0),
-      |skept AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-      |           clean_tokens * copies AS tok
-      |          FROM s5 WHERE copies >= 1),
-      |sp AS (SELECT doc_id, coalesce(sum(tok) OVER (ORDER BY h, doc_id
-      |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-      |       FROM skept)
+      |skept AS (SELECT doc_id, clean_tokens * copies AS tok FROM s5 WHERE copies >= 1),
+      |sp AS (${Curation.shardPrefixSql("skept")})
       |SELECT kq.doc_id,
       |  CASE WHEN kq.doc_id % 20 = 0 THEN 'benchmark'
       |       WHEN kq.quality_bp < 5000 THEN 'quality'
@@ -575,14 +537,7 @@ object Text {
     * battery.
     */
   private def pretrainQuality(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), col("source"), col("lang"), col("text"),
-        size(words).as("n_words"),
-        size(array_distinct(words)).as("n_distinct"),
-        size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"))
-      .withColumn("quality_bp",
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long"))
+    Curation.quality(d, col("doc_id"), col("source"), col("lang"), col("text"))
 
   /** The benchmark/quality/url/exact KEY stages of [[pretrainCascade]]
     * — (q, s1, s2), factored (r13) so `pretrain_stage_keys` can gate
@@ -622,7 +577,7 @@ object Text {
     val keyed = qs.select(col("doc_id"), col("source"), col("lang"),
       col("text"), col("n_words"),
       canonicalUrlCol(messyUrlCol).as("canon"),
-      unhex(sha2(Dedup.normText, 256)).as("h"))
+      Curation.normDigest.as("h"))
     val W = org.apache.spark.sql.expressions.Window
     val s1 = mat(keyed.withColumn("url_keep",
       col("doc_id") === min(col("doc_id")).over(W.partitionBy(col("canon")))))
@@ -669,7 +624,6 @@ object Text {
     */
   private def pretrainTail(d: DataFrame, surv: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val W = org.apache.spark.sql.expressions.Window
     val grams = Dedup.substringGrams(d, 4)
     val bprobe = grams.where(col("doc_id") % 20 === 0).select(col("h")).distinct()
     val hits = grams
@@ -698,22 +652,11 @@ object Text {
           when(keepCoin(10000) < col("rate_bp") % 10000, 1L).otherwise(0L)).cast("long"))
       .localCheckpoint(true))
     val kept = s5.where(col("copies") >= 1)
-      .select(col("doc_id"),
-        md5(col("doc_id").cast("string").cast("binary")).as("sh"),
+      .select(col("doc_id"), Curation.md5Key.as("sh"),
         (col("clean_tokens") * col("copies")).as("tok"))
     val b = Pinned.track(
       kept.withColumn("bk", substring(col("sh"), 1, 2)).localCheckpoint(true))
-    val off = b.groupBy(col("bk")).agg(sum(col("tok")).as("bt"))
-      .select(col("bk"), coalesce(
-        sum(col("bt")).over(
-          W.orderBy(col("bk")).rowsBetween(W.unboundedPreceding, -1)),
-        lit(0L)).as("boff"))
-    val pre = b.join(broadcast(off), Seq("bk"))
-      .withColumn("pre", col("boff") + coalesce(
-        sum(col("tok")).over(
-          W.partitionBy(col("bk")).orderBy(col("sh"), col("doc_id"))
-            .rowsBetween(W.unboundedPreceding, -1)),
-        lit(0L)))
+    val pre = Curation.shardPrefix(b)
       .select(col("doc_id"), expr("pre div 4096").as("shard"),
         expr("(pre % 4096) div 512").as("first_block"))
     (s4, s5, pre)
@@ -781,7 +724,7 @@ object Text {
       |  CAST(CASE WHEN score >= 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
       |FROM sc ORDER BY doc_id""".stripMargin
 
-  /** C45's manifest core over any (doc_id, h, tokens) frame — the
+  /** C45's manifest core over any (doc_id, sh, tok) frame — the
     * two-level distributed weighted prefix sum (see the C45 Q scaladoc
     * for the shape reasoning). ONE definition shared by
     * `text_shard_manifest` (whole corpus) and `pipeline_curate_shard`
@@ -789,26 +732,20 @@ object Text {
     * assignment rule cannot drift between the standalone operator and
     * the pipeline composition.
     */
-  private def shardManifest(base: DataFrame): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val b = base.withColumn("b", substring(col("h"), 1, 2))
-    val off = b.groupBy(col("b")).agg(sum(col("tokens")).as("bt"))
-      .select(col("b"), coalesce(
-        sum(col("bt")).over(
-          W.orderBy(col("b")).rowsBetween(W.unboundedPreceding, -1)),
-        lit(0L)).as("boff"))
-    b.join(broadcast(off), Seq("b"))
-      .withColumn("pre", col("boff") + coalesce(
-        sum(col("tokens")).over(
-          W.partitionBy(col("b")).orderBy(col("h"), col("doc_id"))
-            .rowsBetween(W.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(expr("pre div 4096").as("shard"), col("tokens"), col("h"))
+  private def shardManifest(base: DataFrame): DataFrame =
+    Curation.shardPrefix(base.withColumn("bk", substring(col("sh"), 1, 2)))
+      .select(expr("pre div 4096").as("shard"), col("tok"), col("sh"))
       .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("tokens")).as("tokens"),
-        min(col("h")).as("first_h"), max(col("h")).as("last_h"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("tokens"),
+        min(col("sh")).as("first_h"), max(col("sh")).as("last_h"))
       .orderBy(col("shard"))
-  }
+
+  /** The SQL twin of [[shardManifest]] over `rel`'s (doc_id, tok) rows. */
+  private def shardManifestSql(rel: String): String =
+    s"""p AS (${Curation.shardPrefixSql(rel)})
+      |SELECT CAST(pre // 4096 AS BIGINT) AS shard, count(*) AS n_docs,
+      |  CAST(sum(tok) AS BIGINT) AS tokens, min(sh) AS first_h, max(sh) AS last_h
+      |FROM p GROUP BY 1 ORDER BY shard""".stripMargin
 
   /** C38's DuckDB twin, shared verbatim by batch (`text_lm_score`) and
     * stream (D10 `text_lm_score_stream`) — one oracle gating both IS the
@@ -825,6 +762,43 @@ object Text {
       |cp AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS cp FROM c2 GROUP BY 1),
       |s AS (SELECT bg.doc_id, (c2.c2 * 10000) // cp.cp AS p
       |      FROM bg JOIN c2 USING (w1, w2) JOIN cp USING (w1))""".stripMargin
+
+  /** C18's curate stages as DuckDB CTEs `q` and `kept` over
+    * `documents`: the quality battery, the quality floor (plus `extra`
+    * conditions over `q` and its `joins`), then the exact keep-first
+    * window. The Scala twin is [[curateKept]].
+    */
+  private def curateCtes(joins: String = "", extra: String = ""): String =
+    s"""q AS (${Curation.qualitySql("doc_id, lang, n_chars, text")}),
+      |kept AS (
+      |  SELECT q.*, ${Curation.keepFirstSql} AS rn
+      |  FROM q$joins WHERE quality_bp >= 5000$extra)""".stripMargin
+
+  /** C18's per-(split, lang) accounting of `kept`; twin of [[splitCounts]]. */
+  private val curateSplitSql: String =
+    s"""SELECT ${Curation.splitSql} AS split,
+      |  lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
+      |FROM kept WHERE rn = 1
+      |GROUP BY 1, lang ORDER BY split, lang""".stripMargin
+
+  /** The oracle of C18 `pipeline_curate` and its stream twin. */
+  private val curateSql: String = s"WITH ${curateCtes()}\n$curateSplitSql"
+
+  /** C18's survivors of `d`: quality_bp >= 5000, inside `lmKeep` when
+    * given, then exact keep-first.
+    */
+  private def curateKept(d: DataFrame, lmKeep: Option[DataFrame] = None): DataFrame = {
+    val q = Curation.quality(d, col("doc_id"), col("lang"), col("n_chars"), col("text"))
+      .where(col("quality_bp") >= 5000)
+    Curation.keepFirst(lmKeep.fold(q)(q.join(_, Seq("doc_id"), "left_semi")))
+  }
+
+  /** C18's per-(split, lang) doc and char counts of a survivor frame. */
+  private def splitCounts(kept: DataFrame): DataFrame =
+    kept.select(Curation.split.as("split"), col("lang"), col("n_chars"))
+      .groupBy(col("split"), col("lang"))
+      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
+      .orderBy(col("split"), col("lang"))
 
   private val lmScoreSql: String =
     s"""$lmCtes
@@ -859,7 +833,7 @@ object Text {
     * mechanism — count marker hits per language, argmax — is identical.)
     */
   private val markers: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "a", "of", "and", "to"),
+    "en" -> Curation.stopwords,
     "fr" -> Seq("le", "la", "et", "les", "des"),
     "de" -> Seq("der", "die", "und", "das", "ein"),
     "es" -> Seq("el", "los", "y", "las", "una"))
@@ -981,11 +955,10 @@ object Text {
     * one tokenization, so they cannot drift.
     */
   private def bigramPairs(d: DataFrame): DataFrame = {
-    val ws = split(col("text"), " ")
-    d.where(size(ws) >= 2)
+    d.where(size(words) >= 2)
       .select(col("doc_id"),
         explode(zip_with(
-          slice(ws, lit(1), size(ws) - 1), slice(ws, lit(2), size(ws) - 1),
+          slice(words, lit(1), size(words) - 1), slice(words, lit(2), size(words) - 1),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .where(col("doc_id").isNotNull && col("w1").isNotNull && col("w2").isNotNull)
@@ -1075,19 +1048,9 @@ object Text {
 
   /** Per-doc card base columns (quality_bp, split, word counts). */
   private[graft] def cardBase(d: DataFrame): DataFrame =
-    d.select(
-      col("doc_id"), col("lang"), col("source"), col("n_chars"),
-      size(words).as("n_words"),
-      size(array_distinct(words)).as("n_distinct"),
-      size(filter(words, t => t.isin("the", "a", "of", "and", "to"))).as("n_stop"),
-      when(col("doc_id") % 10 < 8, lit("train"))
-        .when(col("doc_id") % 10 === 8, lit("val"))
-        .otherwise(lit("test")).as("split"),
-      domainCol.as("domain"))
-      .withColumn("quality_bp",
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long"))
+    d.select(Seq(col("doc_id"), col("lang"), col("source"), col("n_chars")) ++
+        Curation.counts ++ Seq(Curation.split.as("split"), domainCol.as("domain")): _*)
+      .withColumn("quality_bp", Curation.qualityBp)
 
   // ------------------------------------------------ r9 URL/domain layer
 
@@ -1221,15 +1184,9 @@ object Text {
     * size-adaptive dup sliver; the corpus text never shuffles).
     */
   private[graft] def domainReputation(d0: DataFrame): DataFrame = {
-    val d = d0.select(domainCol.as("domain"),
-      size(words).as("n_words"),
-      size(array_distinct(words)).as("n_distinct"),
-      size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"),
-      unhex(sha2(Dedup.normText, 256)).as("h")) // SAME key as dedup_exact
-      .withColumn("qbp",
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long"))
+    val d = d0.select(domainCol.as("domain") +: Curation.counts :+
+        Curation.normDigest.as("h"): _*) // SAME key as dedup_exact
+      .withColumn("qbp", Curation.qualityBp)
     val dupH = d.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
       .where(col("cnt") > 1).select(col("h"))
     val dupPerDomain = d.select(col("domain"), col("h"))
@@ -1549,7 +1506,7 @@ object Text {
     * (train, bench) pairs.
     */
   private[graft] def fuzzyDecontam(d0: DataFrame): DataFrame = {
-    val d = d0.where(size(split(col("text"), " ")) >= 3)
+    val d = d0.where(size(words) >= 3)
     val isBench = col("doc_id") % 20 === 0
     val grams = Dedup.substringGrams(d, 3) // (doc_id, n_tokens, pos, h)
     val bench = grams.where(isBench)
@@ -1637,7 +1594,7 @@ object Text {
     * accounted correctly.
     */
   private[graft] def cardDigestCounts(d: DataFrame): DataFrame =
-    d.groupBy(unhex(sha2(Dedup.normText, 256)).as("h"))
+    d.groupBy(Curation.normDigest.as("h"))
       .agg(count(lit(1)).as("c"))
 
   /** Assemble the final card rows from state: melt every section from
@@ -1694,20 +1651,10 @@ object Text {
     * query gating against THIS is the mergeability proof.
     */
   private[graft] val dataCardSql: String =
-    """WITH base AS (
-      |  SELECT doc_id, lang, source, n_chars,
-      |    len(string_split(text, ' ')) AS n_words,
-      |    CAST(least(len(string_split(text, ' ')), 100) * 40
-      |      + (least(len(list_filter(string_split(text, ' '),
-      |           t -> t IN ('the','a','of','and','to'))) * 10,
-      |           len(string_split(text, ' '))) * 3000)
-      |        // len(string_split(text, ' '))
-      |      + (len(list_distinct(string_split(text, ' '))) * 3000)
-      |        // len(string_split(text, ' ')) AS BIGINT) AS quality_bp,
-      |    CASE WHEN doc_id % 10 < 8 THEN 'train'
-      |         WHEN doc_id % 10 = 8 THEN 'val' ELSE 'test' END AS split,
-      |    """.stripMargin + domainSql + """ AS domain
-      |  FROM documents),
+    s"""WITH base AS (
+      |  SELECT doc_id, lang, source, n_chars, n_words, quality_bp,
+      |    ${Curation.splitSql} AS split, domain
+      |  FROM (${Curation.qualitySql(s"doc_id, lang, source, n_chars, $domainSql AS domain")})),
       |corpus AS (
       |  SELECT count(*) AS docs, CAST(sum(n_chars) AS BIGINT) AS chars,
       |    CAST(sum(n_words) AS BIGINT) AS words,
@@ -1718,7 +1665,7 @@ object Text {
       |dw AS (SELECT count(DISTINCT w) AS n FROM (
       |  SELECT unnest(string_split(text, ' ')) AS w FROM documents)),
       |dg AS (SELECT count(*) AS c FROM documents
-      |       GROUP BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))),
+      |       GROUP BY ${Curation.normSql()}),
       |rows_out AS (
       |  SELECT 'corpus' AS section, 'docs' AS metric, CAST(docs AS BIGINT) AS value FROM corpus
       |  UNION ALL SELECT 'corpus', 'chars', chars FROM corpus
@@ -1755,7 +1702,6 @@ object Text {
     * discipline): batch and ingest scoring cannot drift.
     */
   private def dsirBuckets(d: DataFrame): DataFrame = {
-    val ws = split(col("text"), " ")
     // r13 OPT: bucket arithmetic moved into the JIT kernel
     // (Kernels.dsirBucketIds — same ascii·position polynomial mod 4096,
     // previously an interpreted transform/aggregate/zip_with chain per
@@ -1763,7 +1709,7 @@ object Text {
     // elements and null/short texts fail the size filter), so the old
     // b-IS-NOT-NULL guard — which existed to keep both consumers'
     // subtrees canonically identical — is vacuous and dropped with it.
-    d.where(size(ws) >= 2).select(col("doc_id"), ws.as("ws"))
+    d.where(size(words) >= 2).select(col("doc_id"), words.as("ws"))
       .select(col("doc_id"),
         explode(graft.functions.Kernels.dsirBucketIds(col("ws"))).as("b"))
   }
@@ -1851,21 +1797,12 @@ object Text {
   /** The C54 CTE chain through `kept` — ONE definition spliced into
     * the C54 oracle and C73's per-stage ablation oracle.
     */
-  private val curateWebCtes: String =
-    s"""WITH f0 AS (
-      |  SELECT doc_id, lang, n_chars, $domainSql AS domain,
-      |    len(string_split(text, ' ')) AS n_words,
-      |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-      |    len(list_filter(string_split(text, ' '),
-      |        w -> w IN ('the','a','of','and','to'))) AS n_stop,
-      |    lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS k
-      |  FROM documents),
-      |q0 AS (
-      |  SELECT *, CAST(least(n_words, 100) * 40
-      |      + (least(n_stop * 10, n_words) * 3000) // n_words
-      |      + (n_distinct * 3000) // n_words AS BIGINT) AS qbp,
+  private val curateWebCtes: String = {
+    val norm = Curation.normSql()
+    s"""WITH q0 AS (
+      |  SELECT *, quality_bp AS qbp,
       |    CASE WHEN count(*) OVER (PARTITION BY k) > 1 THEN 1 ELSE 0 END AS isdup
-      |  FROM f0),
+      |  FROM (${Curation.qualitySql(s"doc_id, lang, n_chars, $domainSql AS domain, $norm AS k")})),
       |rep AS (
       |  SELECT domain, count(*) AS n,
       |    CAST(sum(qbp) AS BIGINT) // count(*) AS mq,
@@ -1888,11 +1825,11 @@ object Text {
       |kept AS (
       |  SELECT *, row_number() OVER (PARTITION BY k ORDER BY doc_id) AS rn
       |  FROM survived)""".stripMargin
+  }
 
   private val curateWebSql: String =
     s"""$curateWebCtes
-      |SELECT CASE WHEN doc_id % 10 < 8 THEN 'train'
-      |            WHEN doc_id % 10 = 8 THEN 'val' ELSE 'test' END AS split,
+      |SELECT ${Curation.splitSql} AS split,
       |  lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
       |FROM kept WHERE rn = 1
       |GROUP BY 1, lang ORDER BY split, lang""".stripMargin
@@ -1907,7 +1844,7 @@ object Text {
     val sig = d.select(col("doc_id"),
       size(words).cast("long").as("n_words"),
       aggregate(words, lit(0L), (a, w) => a + length(w)).as("sum_len"),
-      size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).cast("long").as("n_stop"),
+      Curation.nStop(words).cast("long").as("n_stop"),
       array_max(transform(array_distinct(words),
         w => size(filter(words, x => x === w)))).cast("long").as("top_c"),
       size(array_distinct(words)).cast("long").as("n_distinct"))
@@ -1934,11 +1871,11 @@ object Text {
     * into both so the rule thresholds live in exactly one SQL string.
     */
   private val gopherCtes: String =
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${Curation.wordsSql} AS ws FROM documents),
       |s AS (SELECT doc_id,
       |  CAST(len(ws) AS BIGINT) AS n_words,
       |  CAST(list_sum(list_transform(ws, w -> len(w))) AS BIGINT) AS sum_len,
-      |  CAST(len(list_filter(ws, w -> w IN ('the','a','of','and','to'))) AS BIGINT) AS n_stop,
+      |  CAST(${Curation.nStopSql("ws")} AS BIGINT) AS n_stop,
       |  CAST(list_max(list_transform(list_distinct(ws),
       |       w -> len(list_filter(ws, x -> x = w)))) AS BIGINT) AS top_c,
       |  CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct
@@ -1989,16 +1926,10 @@ object Text {
     def m(df: DataFrame): DataFrame =
       if (materialize) Pinned.track(df.localCheckpoint(true)) else df
     // ONE text-bearing projection: every downstream row is slim
-    val base = m(docs(s, dir).select(col("doc_id"), col("lang"), col("n_chars"),
-      domainCol.as("domain"),
-      size(words).as("n_words"),
-      size(array_distinct(words)).as("n_distinct"),
-      size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"),
-      unhex(sha2(Dedup.normText, 256)).as("h"))
-      .withColumn("qbp",
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long")))
+    val base = m(docs(s, dir).select(
+        Seq(col("doc_id"), col("lang"), col("n_chars"), domainCol.as("domain")) ++
+          Curation.counts :+ Curation.normDigest.as("h"): _*)
+      .withColumn("qbp", Curation.qualityBp))
     val f = m(base.join(broadcast(BlockedDomains.toDF("domain")),
       Seq("domain"), "left_anti"))
     val overB = Dedup.adaptiveBuild(
@@ -2030,16 +1961,10 @@ object Text {
     * stream side runs it as the stateful aggregation).
     */
   private def driftStats(v: DataFrame, n: String, t: String, sq: String): DataFrame =
-    v.select(col("lang"), size(words).cast("long").as("nw"),
-        size(array_distinct(words)).as("n_distinct"),
-        size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"),
-        size(words).as("n_words"))
-      .withColumn("qbp",
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long"))
+    Curation.quality(v, col("lang"))
       .groupBy(col("lang"))
-      .agg(count(lit(1)).as(n), sum(col("nw")).as(t), sum(col("qbp")).as(sq))
+      .agg(count(lit(1)).as(n), sum(col("n_words").cast("long")).as(t),
+        sum(col("quality_bp")).as(sq))
 
   /** C64's drift arithmetic over the two |langs|-row stat tables. */
   private def driftFinish(q0: DataFrame, q1: DataFrame): DataFrame = {
@@ -2058,28 +1983,16 @@ object Text {
   }
 
   private val corpusDriftSql: String =
-    """WITH v0 AS (
+    s"""WITH v0 AS (
         |  SELECT lang, CASE WHEN doc_id % 11 = 3 THEN text || ' v0' ELSE text END AS text
         |  FROM documents WHERE doc_id % 5 != 4),
         |v1 AS (SELECT lang, text FROM documents WHERE doc_id % 7 != 2),
         |q0 AS (SELECT lang, count(*) AS n0,
-        |         CAST(sum(len(string_split(text,' '))) AS BIGINT) AS t0,
-        |         CAST(sum(least(len(string_split(text,' ')), 100) * 40
-        |           + (least(len(list_filter(string_split(text,' '),
-        |                w -> w IN ('the','a','of','and','to'))) * 10,
-        |                len(string_split(text,' '))) * 3000) // len(string_split(text,' '))
-        |           + (len(list_distinct(string_split(text,' '))) * 3000)
-        |                // len(string_split(text,' '))) AS BIGINT) AS sq0
-        |       FROM v0 GROUP BY lang),
+        |         CAST(sum(n_words) AS BIGINT) AS t0, CAST(sum(quality_bp) AS BIGINT) AS sq0
+        |       FROM (${Curation.qualitySql("lang", "v0")}) GROUP BY lang),
         |q1 AS (SELECT lang, count(*) AS n1,
-        |         CAST(sum(len(string_split(text,' '))) AS BIGINT) AS t1,
-        |         CAST(sum(least(len(string_split(text,' ')), 100) * 40
-        |           + (least(len(list_filter(string_split(text,' '),
-        |                w -> w IN ('the','a','of','and','to'))) * 10,
-        |                len(string_split(text,' '))) * 3000) // len(string_split(text,' '))
-        |           + (len(list_distinct(string_split(text,' '))) * 3000)
-        |                // len(string_split(text,' '))) AS BIGINT) AS sq1
-        |       FROM v1 GROUP BY lang),
+        |         CAST(sum(n_words) AS BIGINT) AS t1, CAST(sum(quality_bp) AS BIGINT) AS sq1
+        |       FROM (${Curation.qualitySql("lang", "v1")}) GROUP BY lang),
         |t AS (SELECT (SELECT CAST(sum(t0) AS BIGINT) FROM q0) AS tot0,
         |             (SELECT CAST(sum(t1) AS BIGINT) FROM q1) AS tot1),
         |r AS (SELECT q0.lang, q0.n0, q1.n1,
@@ -2159,37 +2072,21 @@ object Text {
     // C10: quality score — length, word-length, stopword ratio, repetition
     // (distinct/total words), folded into one bounded score.
     Q("text_quality",
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    length(text) AS n_chars_m,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents)
-        |SELECT doc_id, n_chars_m AS n_chars, n_words,
+      s"""SELECT doc_id, n_chars_m AS n_chars, n_words,
         |  round((n_chars_m - n_words + 1.0) / n_words, 4) AS avg_word_len,
         |  round(n_stop * 1.0 / n_words, 4) AS stopword_ratio,
-        |  round(n_distinct * 1.0 / n_words, 4) AS distinct_ratio,
-        |  CAST(least(n_words, 100) * 40
-        |    + (least(n_stop * 10, n_words) * 3000) // n_words
-        |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |FROM f ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val f = docs(s, dir).select(col("doc_id"),
-        length(col("text")).as("n_chars_m"),
-        size(words).as("n_words"),
-        size(array_distinct(words)).as("n_distinct"),
-        size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"))
+        |  round(n_distinct * 1.0 / n_words, 4) AS distinct_ratio, quality_bp
+        |FROM (${Curation.qualitySql("doc_id, length(text) AS n_chars_m")})
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // the composite score is INTEGER basis points with integer division:
       // a double composite rounds differently across engines on boundary
       // rows (observed 18/5000 flips at sf0.1); exact arithmetic can't
-      f.select(col("doc_id"), col("n_chars_m").as("n_chars"), col("n_words"),
-        round((col("n_chars_m") - col("n_words") + 1.0d) / col("n_words"), 4).as("avg_word_len"),
-        round(col("n_stop") * 1.0d / col("n_words"), 4).as("stopword_ratio"),
-        round(col("n_distinct") * 1.0d / col("n_words"), 4).as("distinct_ratio"),
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long").as("quality_bp"))
+      Curation.quality(docs(s, dir), col("doc_id"), length(col("text")).as("n_chars_m"))
+        .select(col("doc_id"), col("n_chars_m").as("n_chars"), col("n_words"),
+          round((col("n_chars_m") - col("n_words") + 1.0d) / col("n_words"), 4).as("avg_word_len"),
+          round(col("n_stop") * 1.0d / col("n_words"), 4).as("stopword_ratio"),
+          round(col("n_distinct") * 1.0d / col("n_words"), 4).as("distinct_ratio"),
+          col("quality_bp"))
         .orderBy(col("doc_id"))
     },
 
@@ -2328,15 +2225,9 @@ object Text {
     // single-partition window is over buckets, never rows) and totals
     // ride a 1-row broadcast.
     Q("text_quality_sweep",
-      """WITH f AS (
-        |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-        |    CAST(least(len(string_split(text, ' ')), 100) * 40
-        |      + (least(len(list_filter(string_split(text, ' '),
-        |           w -> w IN ('the','a','of','and','to'))) * 10,
-        |           len(string_split(text, ' '))) * 3000) // len(string_split(text, ' '))
-        |      + (len(list_distinct(string_split(text, ' '))) * 3000)
-        |           // len(string_split(text, ' ')) AS BIGINT) AS qbp
-        |  FROM documents),
+      s"""WITH f AS (
+        |  SELECT CAST(n_words AS BIGINT) AS n_words, quality_bp AS qbp
+        |  FROM (${Curation.qualitySql("doc_id")})),
         |t AS (SELECT CAST(count(*) AS BIGINT) AS n_all,
         |             CAST(sum(n_words) AS BIGINT) AS t_all FROM f),
         |b AS (SELECT (qbp // 500) * 500 AS bucket, count(*) AS n,
@@ -2348,15 +2239,8 @@ object Text {
         |  n_keep * 10000 // n_all AS keep_bp,
         |  tok_keep * 10000 // t_all AS token_keep_bp
         |FROM c CROSS JOIN t ORDER BY threshold_bp""".stripMargin) { (s, dir) =>
-      val f = docs(s, dir).select(
-          size(words).cast("long").as("n_words"),
-          size(array_distinct(words)).cast("long").as("n_distinct"),
-          size(filter(words, w => w.isin("the", "a", "of", "and", "to")))
-            .cast("long").as("n_stop"))
-        .withColumn("qbp",
-          (least(col("n_words"), lit(100L)) * 40
-            + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-            + expr("(n_distinct * 3000) div n_words")).cast("long"))
+      val f = Curation.quality(docs(s, dir))
+        .select(col("n_words").cast("long").as("n_words"), col("quality_bp").as("qbp"))
       val t = f.agg(count(lit(1)).as("n_all"), sum(col("n_words")).as("t_all"))
       val b = f.groupBy((expr("qbp div 500") * 500).as("bucket"))
         .agg(count(lit(1)).as("n"), sum(col("n_words")).as("tok"))
@@ -2819,14 +2703,11 @@ object Text {
     // dataset splits without RNG state (the split is a pure function of
     // the row, stable under reshuffling/reprocessing).
     Q("text_data_split",
-      """SELECT CASE WHEN doc_id % 10 < 8 THEN 'train'
-        |            WHEN doc_id % 10 = 8 THEN 'val' ELSE 'test' END AS split,
+      s"""SELECT ${Curation.splitSql} AS split,
         |  count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
         |FROM documents GROUP BY 1 ORDER BY split""".stripMargin) { (s, dir) =>
       docs(s, dir)
-        .select(when(col("doc_id") % 10 < 8, lit("train"))
-          .when(col("doc_id") % 10 === 8, lit("val"))
-          .otherwise(lit("test")).as("split"), col("n_chars"))
+        .select(Curation.split.as("split"), col("n_chars"))
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
         .orderBy(col("split"))
@@ -2847,16 +2728,9 @@ object Text {
     // over those slim rows (never global, never text-bearing); the
     // per-lang budget table is lang-count rows and broadcasts.
     Q("text_quality_budget_select",
-      """WITH f AS (
-        |  SELECT doc_id, lang,
-        |    len(string_split(text, ' ')) AS tokens,
-        |    CAST(least(len(string_split(text, ' ')), 100) * 40
-        |      + (least(len(list_filter(string_split(text, ' '),
-        |           w -> w IN ('the','a','of','and','to'))) * 10,
-        |           len(string_split(text, ' '))) * 3000) // len(string_split(text, ' '))
-        |      + (len(list_distinct(string_split(text, ' '))) * 3000)
-        |           // len(string_split(text, ' ')) AS BIGINT) AS qbp
-        |  FROM documents),
+      s"""WITH f AS (
+        |  SELECT doc_id, lang, n_words AS tokens, quality_bp AS qbp
+        |  FROM (${Curation.qualitySql("doc_id, lang")})),
         |b AS (SELECT lang, CAST(sum(tokens) AS BIGINT) // 2 AS budget FROM f GROUP BY lang),
         |r AS (SELECT f.*, b.budget,
         |        CAST(sum(tokens) OVER (PARTITION BY f.lang
@@ -2866,16 +2740,9 @@ object Text {
         |  any_value(budget) AS budget, CAST(min(qbp) AS BIGINT) AS cutoff_bp
         |FROM r WHERE run <= budget GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
       val W = org.apache.spark.sql.expressions.Window
-      val f = docs(s, dir).select(col("doc_id"), col("lang"),
-        size(words).cast("long").as("tokens"),
-        size(array_distinct(words)).as("n_distinct"),
-        size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"),
-        size(words).as("n_words"))
-        .withColumn("qbp",
-          (least(col("n_words"), lit(100)) * 40
-            + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-            + expr("(n_distinct * 3000) div n_words")).cast("long"))
-        .select(col("doc_id"), col("lang"), col("tokens"), col("qbp"))
+      val f = Curation.quality(docs(s, dir), col("doc_id"), col("lang"))
+        .select(col("doc_id"), col("lang"), col("n_words").cast("long").as("tokens"),
+          col("quality_bp").as("qbp"))
       val budgets = f.groupBy(col("lang"))
         .agg(expr("CAST(sum(tokens) AS BIGINT) div 2").as("budget"))
       f.join(broadcast(budgets), Seq("lang"))
@@ -2900,10 +2767,9 @@ object Text {
     // one co-partitioned exchange of 32 B digests, never text, and the
     // final agg is 2 rows. Integer end-to-end ⇒ hash-gated.
     Q("text_split_leakage",
-      """WITH f AS (
-        |  SELECT doc_id, lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS k,
-        |    CASE WHEN doc_id % 10 < 8 THEN 'train'
-        |         WHEN doc_id % 10 = 8 THEN 'val' ELSE 'test' END AS split
+      s"""WITH f AS (
+        |  SELECT doc_id, ${Curation.normSql()} AS k,
+        |    ${Curation.splitSql} AS split
         |  FROM documents),
         |tr AS (SELECT DISTINCT k FROM f WHERE split = 'train'),
         |ev AS (
@@ -2913,11 +2779,7 @@ object Text {
         |SELECT split, n_docs, n_leaked,
         |  CAST(n_leaked * 10000 // n_docs AS BIGINT) AS leak_bp
         |FROM ev ORDER BY split""".stripMargin) { (s, dir) =>
-      val f = docs(s, dir).select(
-        when(col("doc_id") % 10 < 8, lit("train"))
-          .when(col("doc_id") % 10 === 8, lit("val"))
-          .otherwise(lit("test")).as("split"),
-        unhex(sha2(Dedup.normText, 256)).as("h"))
+      val f = docs(s, dir).select(Curation.split.as("split"), Curation.normDigest.as("h"))
       val train = f.where(col("split") === "train").select(col("h")).distinct()
       val ev = f.where(col("split") =!= "train")
       val leaked = ev.join(train, Seq("h"), "left_semi")
@@ -2935,52 +2797,8 @@ object Text {
     // deterministic split → per-(split, lang) accounting. One pass of
     // narrow column work, one dedup shuffle on a 32 B fingerprint, one
     // small aggregation — the whole pipeline is 2 shuffles at any scale.
-    Q("pipeline_curate",
-      """WITH f AS (
-        |  SELECT doc_id, lang, n_chars, text,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents),
-        |q AS (
-        |  SELECT *, CAST(least(n_words, 100) * 40
-        |    + (least(n_stop * 10, n_words) * 3000) // n_words
-        |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |  FROM f),
-        |kept AS (
-        |  SELECT *, row_number() OVER (
-        |      PARTITION BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |      ORDER BY doc_id) AS rn
-        |  FROM q WHERE quality_bp >= 5000)
-        |SELECT CASE WHEN doc_id % 10 < 8 THEN 'train'
-        |            WHEN doc_id % 10 = 8 THEN 'val' ELSE 'test' END AS split,
-        |  lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
-        |FROM kept WHERE rn = 1
-        |GROUP BY 1, lang ORDER BY split, lang""".stripMargin) { (s, dir) =>
-      val f = docs(s, dir).select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
-        size(words).as("n_words"),
-        size(array_distinct(words)).as("n_distinct"),
-        size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"))
-      val q = f.withColumn("quality_bp",
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long"))
-        .where(col("quality_bp") >= 5000)
-      val kept = q.withColumn("rn",
-          org.apache.spark.sql.functions.row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(unhex(sha2(Dedup.normText, 256))) // SAME key as dedup_exact
-              .orderBy(col("doc_id"))))
-        .where(col("rn") === 1)
-      kept.select(
-          when(col("doc_id") % 10 < 8, lit("train"))
-            .when(col("doc_id") % 10 === 8, lit("val"))
-            .otherwise(lit("test")).as("split"),
-          col("lang"), col("n_chars"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-        .orderBy(col("split"), col("lang"))
+    Q("pipeline_curate", curateSql) { (s, dir) =>
+      splitCounts(curateKept(docs(s, dir)))
     },
 
     // C18b: pipeline_curate with C38's LM score wired in as a filter
@@ -2995,67 +2813,14 @@ object Text {
     // doc_id join exchange on the corpus side — the lm stage's scores
     // arrive already partitioned by doc_id from their per-doc agg.
     Q("pipeline_curate_lm",
-      """WITH docs_ws AS (
-        |  SELECT doc_id, string_split(text,' ') AS ws FROM documents
-        |  WHERE len(string_split(text,' ')) >= 2),
-        |w AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws,1) AS i FROM docs_ws),
-        |bg AS (SELECT a.doc_id, a.w AS w1, b.w AS w2
-        |       FROM w a JOIN w b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
-        |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY 1, 2),
-        |cp AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS cp FROM c2 GROUP BY 1),
-        |sp AS (SELECT bg.doc_id, (c2.c2 * 10000) // cp.cp AS p
-        |       FROM bg JOIN c2 USING (w1, w2) JOIN cp USING (w1)),
+      s"""$lmCtes,
         |lm AS (SELECT doc_id, CAST(CAST(sum(p) AS BIGINT) // count(*) AS BIGINT) AS lm_bp
-        |       FROM sp GROUP BY doc_id),
-        |f AS (
-        |  SELECT doc_id, lang, n_chars, text,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents),
-        |q AS (
-        |  SELECT *, CAST(least(n_words, 100) * 40
-        |    + (least(n_stop * 10, n_words) * 3000) // n_words
-        |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |  FROM f),
-        |kept AS (
-        |  SELECT q.*, row_number() OVER (
-        |      PARTITION BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |      ORDER BY doc_id) AS rn
-        |  FROM q JOIN lm USING (doc_id)
-        |  WHERE quality_bp >= 5000 AND lm.lm_bp >= 330)
-        |SELECT CASE WHEN doc_id % 10 < 8 THEN 'train'
-        |            WHEN doc_id % 10 = 8 THEN 'val' ELSE 'test' END AS split,
-        |  lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
-        |FROM kept WHERE rn = 1
-        |GROUP BY 1, lang ORDER BY split, lang""".stripMargin) { (s, dir) =>
+        |       FROM s GROUP BY doc_id),
+        |${curateCtes(" JOIN lm USING (doc_id)", " AND lm.lm_bp >= 330")}
+        |$curateSplitSql""".stripMargin) { (s, dir) =>
       val lmKeep = lmScores(s, dir).where(col("lm_bp") >= 330)
         .select(col("doc_id"))
-      val f = docs(s, dir).select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
-        size(words).as("n_words"),
-        size(array_distinct(words)).as("n_distinct"),
-        size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"))
-      val q = f.withColumn("quality_bp",
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long"))
-        .where(col("quality_bp") >= 5000)
-        .join(lmKeep, Seq("doc_id"), "left_semi")
-      val kept = q.withColumn("rn",
-          org.apache.spark.sql.functions.row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(unhex(sha2(Dedup.normText, 256))) // SAME key as dedup_exact
-              .orderBy(col("doc_id"))))
-        .where(col("rn") === 1)
-      kept.select(
-          when(col("doc_id") % 10 < 8, lit("train"))
-            .when(col("doc_id") % 10 === 8, lit("val"))
-            .otherwise(lit("test")).as("split"),
-          col("lang"), col("n_chars"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-        .orderBy(col("split"), col("lang"))
+      splitCounts(curateKept(docs(s, dir), Some(lmKeep)))
     },
 
     // C18e: curate → shuffle → SHARD, the end of the make-training-data
@@ -3072,51 +2837,12 @@ object Text {
     // exchange (+ the bounded 256-row cumsum) — the whole pipeline
     // never globally sorts.
     Q("pipeline_curate_shard",
-      """WITH f AS (
-        |  SELECT doc_id, lang, n_chars, text,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents),
-        |q AS (
-        |  SELECT *, CAST(least(n_words, 100) * 40
-        |    + (least(n_stop * 10, n_words) * 3000) // n_words
-        |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |  FROM f),
-        |kept AS (
-        |  SELECT *, row_number() OVER (
-        |      PARTITION BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |      ORDER BY doc_id) AS rn
-        |  FROM q WHERE quality_bp >= 5000),
-        |train AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-        |                 n_words AS tokens
-        |          FROM kept WHERE rn = 1 AND doc_id % 10 < 8),
-        |p AS (SELECT doc_id, h, tokens,
-        |  coalesce(sum(tokens) OVER (ORDER BY h, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre FROM train)
-        |SELECT CAST(pre // 4096 AS BIGINT) AS shard, count(*) AS n_docs,
-        |  CAST(sum(tokens) AS BIGINT) AS tokens, min(h) AS first_h, max(h) AS last_h
-        |FROM p GROUP BY 1 ORDER BY shard""".stripMargin) { (s, dir) =>
-      val f = docs(s, dir).select(col("doc_id"), col("text"),
-        size(words).as("n_words"),
-        size(array_distinct(words)).as("n_distinct"),
-        size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"))
-      val q = f.withColumn("quality_bp",
-        (least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")).cast("long"))
-        .where(col("quality_bp") >= 5000)
-      val kept = q.withColumn("rn",
-          org.apache.spark.sql.functions.row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(unhex(sha2(Dedup.normText, 256))) // SAME key as dedup_exact
-              .orderBy(col("doc_id"))))
-        .where(col("rn") === 1)
-      shardManifest(kept.where(col("doc_id") % 10 < 8)
-        .select(col("doc_id"),
-          md5(col("doc_id").cast("string").cast("binary")).as("h"),
-          col("n_words").cast("long").as("tokens")))
+      s"""WITH ${curateCtes()},
+        |train AS (SELECT doc_id, n_words AS tok
+        |          FROM kept WHERE rn = 1 AND ${Curation.splitSql} = 'train'),
+        |${shardManifestSql("train")}""".stripMargin) { (s, dir) =>
+      shardManifest(curateKept(docs(s, dir)).where(Curation.split === "train")
+        .select(col("doc_id"), Curation.md5Key.as("sh"), col("n_words").cast("long").as("tok")))
     },
 
     // C83 (r13): the END-TO-END pretraining-data arm — the r12 verdict's
@@ -3228,7 +2954,7 @@ object Text {
       val iPass = iq.where(col("doc_id") % 20 =!= 0 && col("quality_bp") >= 5000)
       val ik = iPass.select(col("doc_id"),
         canonicalUrlCol(messyUrlCol).as("canon"),
-        unhex(sha2(Dedup.normText, 256)).as("h"))
+        Curation.normDigest.as("h"))
       // r14 OPT (VERDICT #1, guide §2.4): the verdict miner's input is
       // retained-text ∪ increment stage-2 survivors
       // (compactStagedVerdicts' construction; the two sides partition
@@ -3325,22 +3051,12 @@ object Text {
     // stage-composed pairs + inv_cascade_cc_parity + C4e's sf3 hash
     // gate; the mixture/shard arithmetic via C42/C42b/C45's gates.
     Q("pretrain_stage_keys",
-      s"""WITH f AS (
-        |  SELECT doc_id, text,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents),
-        |q AS MATERIALIZED (
-        |  SELECT *, CAST(least(n_words, 100) * 40
-        |    + (least(n_stop * 10, n_words) * 3000) // n_words
-        |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |  FROM f),
+      s"""WITH q AS MATERIALIZED (
+        |  ${Curation.qualitySql("doc_id, text")}),
         |u AS (SELECT doc_id, ($messyUrlSql) AS url FROM documents),
         |$urlCanonCtes,
         |qs AS (SELECT q.doc_id, q.n_words, q.quality_bp, c4.canon,
-        |    lower(regexp_replace(trim(q.text), '\\s+', ' ', 'g')) AS k
+        |    ${Curation.normSql("q.text")} AS k
         |  FROM q JOIN c4 ON c4.doc_id = q.doc_id
         |  WHERE q.doc_id % 20 <> 0 AND q.quality_bp >= 5000),
         |s1 AS (SELECT *, CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY canon)
@@ -3453,7 +3169,7 @@ object Text {
         val fB = Future(Pinned.track(Dedup.bandedMinhashIntKeys(retained)
           .select(col("doc_id").as("c_id"), col("bk")).localCheckpoint(true)))
         val fG = Future(Pinned.fat(retained
-          .select(col("doc_id").as("c_id"), split(col("text"), " ").as("ws"))
+          .select(col("doc_id").as("c_id"), words.as("ws"))
           .where(size(col("ws")) >= 3)
           .select(col("c_id"), graft.functions.Kernels.grams3(col("ws")).as("gb"))))
         val fP = Future(Pinned.track(Dedup.substringGrams(
@@ -3466,17 +3182,10 @@ object Text {
         val bprobe = Await.result(fP, Duration.Inf)
         val stream = Events.streamOf(s, dir, "documents")
           .where((col("doc_id") % 7).isin(2L, 4L))
-        val fq = stream.select(col("doc_id"), col("text"),
-            size(words).as("n_words"),
-            size(array_distinct(words)).as("n_distinct"),
-            size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"))
-          .withColumn("quality_bp",
-            (least(col("n_words"), lit(100)) * 40
-              + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-              + expr("(n_distinct * 3000) div n_words")).cast("long"))
+        val fq = Curation.quality(stream, col("doc_id"), col("text"))
           .select(col("doc_id"), col("text"), col("n_words"), col("quality_bp"),
             canonicalUrlCol(messyUrlCol).as("canon"),
-            unhex(sha2(Dedup.normText, 256)).as("h"))
+            Curation.normDigest.as("h"))
         val base = fq
           .join(retC, Seq("canon"), "left")
           .join(retH, Seq("h"), "left")
@@ -3492,7 +3201,7 @@ object Text {
         val surv = fq.where(col("doc_id") % 20 =!= 0 && col("quality_bp") >= 5000)
           .join(retC.select(col("canon")), Seq("canon"), "left_anti")
           .join(retH.select(col("h")), Seq("h"), "left_anti")
-        val swg = surv.select(col("doc_id"), split(col("text"), " ").as("ws"))
+        val swg = surv.select(col("doc_id"), words.as("ws"))
         val near = swg.where(size(col("ws")) >= 3)
           .select(col("doc_id"),
             graft.functions.Kernels.grams3(col("ws")).as("ga"),
@@ -3549,51 +3258,15 @@ object Text {
     // so this reuses D4's two-level aggregate split. Gated by the SAME
     // DuckDB oracle as batch pipeline_curate — driver-checked
     // batch/stream parity, like C30/D6.
-    Q("pipeline_curate_stream",
-      """WITH f AS (
-        |  SELECT doc_id, lang, n_chars, text,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents),
-        |q AS (
-        |  SELECT *, CAST(least(n_words, 100) * 40
-        |    + (least(n_stop * 10, n_words) * 3000) // n_words
-        |    + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |  FROM f),
-        |kept AS (
-        |  SELECT *, row_number() OVER (
-        |      PARTITION BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |      ORDER BY doc_id) AS rn
-        |  FROM q WHERE quality_bp >= 5000)
-        |SELECT CASE WHEN doc_id % 10 < 8 THEN 'train'
-        |            WHEN doc_id % 10 = 8 THEN 'val' ELSE 'test' END AS split,
-        |  lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
-        |FROM kept WHERE rn = 1
-        |GROUP BY 1, lang ORDER BY split, lang""".stripMargin) { (s, dir) =>
-      Events.runStream(s, OutputMode.Complete) {
-        val stream = Events.streamOf(s, dir, "documents")
-        val f = stream.select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
-          size(words).as("n_words"),
-          size(array_distinct(words)).as("n_distinct"),
-          size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"))
-        f.withColumn("quality_bp",
-            (least(col("n_words"), lit(100)) * 40
-              + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-              + expr("(n_distinct * 3000) div n_words")).cast("long"))
+    Q("pipeline_curate_stream", curateSql) { (s, dir) =>
+      splitCounts(Events.runStream(s, OutputMode.Complete) {
+        Curation.quality(Events.streamOf(s, dir, "documents"),
+            col("doc_id"), col("lang"), col("n_chars"), col("text"))
           .where(col("quality_bp") >= 5000)
-          .groupBy(unhex(sha2(Dedup.normText, 256)).as("h"))
+          .groupBy(Curation.normDigest.as("h"))
           .agg(min(struct(col("doc_id"), col("lang"), col("n_chars"))).as("keep"))
-      }
-        .select(
-          when(col("keep.doc_id") % 10 < 8, lit("train"))
-            .when(col("keep.doc_id") % 10 === 8, lit("val"))
-            .otherwise(lit("test")).as("split"),
-          col("keep.lang").as("lang"), col("keep.n_chars").as("n_chars"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-        .orderBy(col("split"), col("lang"))
+      }.select(col("keep.doc_id").as("doc_id"), col("keep.lang").as("lang"),
+        col("keep.n_chars").as("n_chars")))
     },
 
     // C18c: the corpus DATA CARD — the per-release statistics report a
@@ -3743,18 +3416,7 @@ object Text {
     // bypass the window entirely via a count semi-filter. All integer
     // ⇒ hash-gated.
     Q("text_domain_cap",
-      s"""WITH f AS (
-        |  SELECT doc_id, $domainSql AS domain,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents),
-        |q AS (SELECT doc_id, domain,
-        |    CAST(least(n_words, 100) * 40
-        |      + (least(n_stop * 10, n_words) * 3000) // n_words
-        |      + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |  FROM f),
+      s"""WITH q AS (${Curation.qualitySql(s"doc_id, $domainSql AS domain")}),
         |r AS (SELECT doc_id, domain, quality_bp,
         |        CAST(row_number() OVER (
         |          PARTITION BY domain ORDER BY quality_bp DESC, doc_id) AS BIGINT) AS rnk
@@ -3793,21 +3455,10 @@ object Text {
     // two scan-speed passes (digest pass + quality pass) — the C37
     // scans-are-cheap trade.
     Q("text_domain_reputation",
-      s"""WITH f AS (
-        |  SELECT doc_id, $domainSql AS domain,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop,
-        |    lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS k
-        |  FROM documents),
-        |q AS (
-        |  SELECT domain,
-        |    CAST(least(n_words, 100) * 40
-        |      + (least(n_stop * 10, n_words) * 3000) // n_words
-        |      + (n_distinct * 3000) // n_words AS BIGINT) AS qbp,
+      s"""WITH q AS (
+        |  SELECT domain, quality_bp AS qbp,
         |    CASE WHEN count(*) OVER (PARTITION BY k) > 1 THEN 1 ELSE 0 END AS isdup
-        |  FROM f),
+        |  FROM (${Curation.qualitySql(s"doc_id, $domainSql AS domain, ${Curation.normSql()} AS k")})),
         |r AS (
         |  SELECT domain, count(*) AS n_docs,
         |    CAST(sum(qbp) AS BIGINT) // count(*) AS mean_quality_bp,
@@ -3836,14 +3487,7 @@ object Text {
     // (blocklist, over-cap set, reputation keep-set) is bounded or
     // size-adaptive. Integer end-to-end ⇒ hash-gated.
     Q("pipeline_curate_web", curateWebSql) { (s, dir) =>
-      curateWebFrames(s, dir).last._2.select(
-          when(col("doc_id") % 10 < 8, lit("train"))
-            .when(col("doc_id") % 10 === 8, lit("val"))
-            .otherwise(lit("test")).as("split"),
-          col("lang"), col("n_chars"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-        .orderBy(col("split"), col("lang"))
+      splitCounts(curateWebFrames(s, dir).last._2)
     },
 
     // C73 (r9): the web pipeline's per-stage WATERFALL — C66's ablation
@@ -3909,16 +3553,10 @@ object Text {
         val sess = s
         import sess.implicits._
         val stream = Events.streamOf(s, dir, "documents")
-        val base = stream.select(col("doc_id"), col("lang"), col("n_chars"),
-          domainCol.as("domain"),
-          size(words).as("n_words"),
-          size(array_distinct(words)).as("n_distinct"),
-          size(filter(words, w => w.isin("the", "a", "of", "and", "to"))).as("n_stop"),
-          sha2(Dedup.normText, 256).as("hx"))
-          .withColumn("qbp",
-            (least(col("n_words"), lit(100)) * 40
-              + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-              + expr("(n_distinct * 3000) div n_words")).cast("long"))
+        val base = stream.select(
+            Seq(col("doc_id"), col("lang"), col("n_chars"), domainCol.as("domain")) ++
+              Curation.counts :+ sha2(Curation.normText, 256).as("hx"): _*)
+          .withColumn("qbp", Curation.qualityBp)
         val f = base.join(broadcast(BlockedDomains.toDF("domain")),
             Seq("domain"), "left_anti")
           .select(col("domain"), col("doc_id"), col("lang"),
@@ -3949,17 +3587,9 @@ object Text {
           .where(col("verdict") === "keep").select(col("domain")))
       val v2 = admitted.join(repKeep, Seq("domain"), "left_semi")
         .where(col("qbp") >= 5000)
-      v2.withColumn("rn", row_number().over(
+      splitCounts(v2.withColumn("rn", row_number().over(
           W.partitionBy(col("hx")).orderBy(col("doc_id"))))
-        .where(col("rn") === 1)
-        .select(
-          when(col("doc_id") % 10 < 8, lit("train"))
-            .when(col("doc_id") % 10 === 8, lit("val"))
-            .otherwise(lit("test")).as("split"),
-          col("lang"), col("n_chars"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-        .orderBy(col("split"), col("lang"))
+        .where(col("rn") === 1))
     },
 
     // C52 (r9): TOPIC TAGGING — broadcast keyword-taxonomy
@@ -4201,12 +3831,11 @@ object Text {
         |FROM hits h JOIN gn ON gn.doc_id = h.doc_id
         |WHERE (h.shared_grams * 10000) // gn.n_grams >= 100
         |ORDER BY h.doc_id""".stripMargin) { (s, dir) =>
-      val ws = split(col("text"), " ")
       // JIT kernel, not transform+concat_ws+array_distinct: the
       // interpreted HOF tree was the slowest query in the suite (4.7 s at
       // sf0.1); the kernel form is one compiled loop per row
-      val g4 = graft.functions.Kernels.gramsN(ws, 4)
-      val grams = docs(s, dir).where(size(ws) >= 4)
+      val g4 = graft.functions.Kernels.gramsN(words, 4)
+      val grams = docs(s, dir).where(size(words) >= 4)
         .select(col("doc_id"), g4.as("gs"))
         .select(col("doc_id"), size(col("gs")).as("n_grams"), explode(col("gs")).as("g"))
       val probe = grams.where(col("doc_id") % 20 === 0).select(col("g")).distinct()
@@ -4698,11 +4327,11 @@ object Text {
     // scale-correct way to number a sorted corpus. First 50 positions as
     // the gate.
     Q("text_global_shuffle",
-      """WITH s AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)
+      s"""WITH s AS (SELECT doc_id, ${Curation.md5KeySql} AS h FROM documents)
         |SELECT CAST(row_number() OVER (ORDER BY h, doc_id) AS BIGINT) AS pos, doc_id, h
         |FROM s ORDER BY pos LIMIT 50""".stripMargin) { (s, dir) =>
       val sorted = docs(s, dir)
-        .select(col("doc_id"), md5(col("doc_id").cast("string").cast("binary")).as("h"))
+        .select(col("doc_id"), Curation.md5Key.as("h"))
         .orderBy(col("h"), col("doc_id"))
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType, nullable = false),
@@ -4735,18 +4364,7 @@ object Text {
     // sorted passes move only (doc_id, quality_bp, phase, coin) slivers,
     // never text. All integer ⇒ hash-gated.
     Q("text_curriculum_order",
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    len(string_split(text, ' ')) AS n_words,
-        |    len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> w IN ('the','a','of','and','to'))) AS n_stop
-        |  FROM documents),
-        |q AS (SELECT doc_id,
-        |    CAST(least(n_words, 100) * 40
-        |      + (least(n_stop * 10, n_words) * 3000) // n_words
-        |      + (n_distinct * 3000) // n_words AS BIGINT) AS quality_bp
-        |  FROM f),
+      s"""WITH q AS (${Curation.qualitySql("doc_id")}),
         |n AS (SELECT count(*) AS n FROM q),
         |r AS (SELECT doc_id, quality_bp,
         |        row_number() OVER (ORDER BY quality_bp DESC, doc_id) AS rn
@@ -5137,23 +4755,16 @@ object Text {
     // 1-row broadcast. Low kn_bp = unpredictable-under-smoothing docs,
     // the CCNet "tail" bucket.
     Q("text_lm_kn",
-      """WITH docs_ws AS (
-        |  SELECT doc_id, string_split(text,' ') AS ws FROM documents
-        |  WHERE len(string_split(text,' ')) >= 2),
-        |w AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws,1) AS i FROM docs_ws),
-        |bg AS (SELECT a.doc_id, a.w AS w1, b.w AS w2
-        |       FROM w a JOIN w b ON b.doc_id = a.doc_id AND b.i = a.i + 1),
+      s"""$lmCtes,
         |bgc AS (SELECT doc_id, w1, w2, CAST(count(*) AS BIGINT) AS nd FROM bg GROUP BY 1, 2, 3),
-        |c2 AS (SELECT w1, w2, CAST(sum(nd) AS BIGINT) AS c2 FROM bgc GROUP BY 1, 2),
-        |cp AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS cp,
-        |              CAST(count(*) AS BIGINT) AS n1f FROM c2 GROUP BY 1),
+        |cf AS (SELECT w1, CAST(count(*) AS BIGINT) AS n1f FROM c2 GROUP BY 1),
         |rv AS (SELECT w2, CAST(count(*) AS BIGINT) AS n1r FROM c2 GROUP BY 1),
         |nt AS (SELECT CAST(count(*) AS BIGINT) AS ntypes FROM c2),
         |p AS (SELECT bgc.doc_id, bgc.nd,
         |        ((4 * c2.c2 - 3) * 10000) // (4 * cp.cp)
-        |        + CAST((CAST(3 * cp.n1f AS HUGEINT) * rv.n1r * 10000)
+        |        + CAST((CAST(3 * cf.n1f AS HUGEINT) * rv.n1r * 10000)
         |               // (CAST(4 * cp.cp AS HUGEINT) * nt.ntypes) AS BIGINT) AS p_bp
-        |      FROM bgc JOIN c2 USING (w1, w2) JOIN cp USING (w1)
+        |      FROM bgc JOIN c2 USING (w1, w2) JOIN cp USING (w1) JOIN cf USING (w1)
         |               JOIN rv USING (w2) CROSS JOIN nt),
         |agg AS (SELECT doc_id, CAST(sum(nd) AS BIGINT) AS n_bigrams,
         |               CAST(sum(nd * p_bp) AS BIGINT) AS sum_pbp
@@ -5208,21 +4819,20 @@ object Text {
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams, CAST(sum(p) AS BIGINT) AS sum_pbp,
         |       CAST(CAST(sum(p) AS BIGINT) // count(*) AS BIGINT) AS lm3_bp
         |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val ws = split(col("text"), " ")
-      val base = docs(s, dir).where(size(ws) >= 3)
+      val base = docs(s, dir).where(size(words) >= 3)
       // r14 OPT (VERDICT #2 applied one order down, guide §2.3): dense
       // word-id dictionary — the probe spine joins five count tables on
       // 1-3 word STRING keys; ids make every downstream key an int (see
       // text_lm_backoff for the injectivity argument and A/B evidence)
-      val dict = wordIds(base.select(explode(ws).as("w")))
+      val dict = wordIds(base.select(explode(words).as("w")))
       def wid(slot: String, out: String) =
         broadcast(dict.select(col("w").as(slot), col("wid").as(out)))
       val tgc = base
         .select(col("doc_id"), explode(zip_with(
           zip_with(
-            slice(ws, lit(1), size(ws) - 2), slice(ws, lit(2), size(ws) - 2),
+            slice(words, lit(1), size(words) - 2), slice(words, lit(2), size(words) - 2),
             (a, b) => struct(a.as("w1"), b.as("w2"))),
-          slice(ws, lit(3), size(ws) - 2),
+          slice(words, lit(3), size(words) - 2),
           (p, c) => struct(p.getField("w1").as("w1"),
             p.getField("w2").as("w2"), c.as("w3")))).as("tg"))
         .select(col("doc_id"), col("tg.w1").as("s1"),
@@ -5244,9 +4854,9 @@ object Text {
       val cp3 = c3.groupBy(col("w1"), col("w2")).agg(sum(col("c3")).as("cp3"))
         .localCheckpoint(true).transform(Pinned.track)
       val tails = base.select(explode(array(
-          struct(element_at(ws, -2).as("sa"), element_at(ws, -1).as("sb")),
-          struct(element_at(ws, -2).as("sa"), lit(null).cast("string").as("sb")),
-          struct(element_at(ws, -1).as("sa"), lit(null).cast("string").as("sb")))).as("t"))
+          struct(element_at(words, -2).as("sa"), element_at(words, -1).as("sb")),
+          struct(element_at(words, -2).as("sa"), lit(null).cast("string").as("sb")),
+          struct(element_at(words, -1).as("sa"), lit(null).cast("string").as("sb")))).as("t"))
         .select(col("t.sa").as("sa"), col("t.sb").as("sb"))
         .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("tc"))
         // boundary words are base tokens (inner sa map drops nothing);
@@ -5351,8 +4961,7 @@ object Text {
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_4grams, CAST(sum(p) AS BIGINT) AS sum_sbp,
         |       CAST(CAST(sum(p) AS BIGINT) // count(*) AS BIGINT) AS sbo_bp
         |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val ws = split(col("text"), " ")
-      val base = docs(s, dir).where(size(ws) >= 4)
+      val base = docs(s, dir).where(size(words) >= 4)
       // r14 OPT (VERDICT #2, guide §2.3 — shuffle fewer bytes): the
       // probe spine joins SEVEN count tables on 1-4 word STRING keys,
       // and every count-table groupBy shuffled those strings too. A
@@ -5365,10 +4974,10 @@ object Text {
       // broadcasts into the one gram-assembly pass; at cluster scale
       // that one token-keyed hash join replaces seven string-keyed
       // corpus shuffles.
-      val dict = wordIds(base.select(explode(ws).as("w")))
+      val dict = wordIds(base.select(explode(words).as("w")))
       def wid(slot: String, out: String) =
         broadcast(dict.select(col("w").as(slot), col("wid").as(out)))
-      val fg0 = base.select(col("doc_id"), ws.as("ws"))
+      val fg0 = base.select(col("doc_id"), words.as("ws"))
         .select(col("doc_id"), explode(expr(
           """transform(sequence(0, size(ws) - 4),
             |  i -> named_struct('w1', ws[i], 'w2', ws[i+1],
@@ -5400,11 +5009,11 @@ object Text {
       // through LEFT joins so the arity-marking nulls survive (null
       // word → null id, non-null boundary words always hit the dict)
       val tl0 = base.select(explode(array(
-          struct(element_at(ws, -3).as("sa"), element_at(ws, -2).as("sb"),
-            element_at(ws, -1).as("sc")),
-          struct(element_at(ws, -2).as("sa"), element_at(ws, -1).as("sb"),
+          struct(element_at(words, -3).as("sa"), element_at(words, -2).as("sb"),
+            element_at(words, -1).as("sc")),
+          struct(element_at(words, -2).as("sa"), element_at(words, -1).as("sb"),
             lit(null).cast("string").as("sc")),
-          struct(element_at(ws, -1).as("sa"), lit(null).cast("string").as("sb"),
+          struct(element_at(words, -1).as("sa"), lit(null).cast("string").as("sb"),
             lit(null).cast("string").as("sc")))).as("t"))
         .select(col("t.sa").as("sa"), col("t.sb").as("sb"), col("t.sc").as("sc"))
         .groupBy(col("sa"), col("sb"), col("sc")).agg(count(lit(1)).as("tn"))
@@ -5633,7 +5242,7 @@ object Text {
       // SAME (wa, wb) aggregate, whose exchange ReuseExchange collapses
       // (the C38/session-4 single-tokenize discipline; PlanSpec pins
       // one documents scan)
-      val items = docs(s, dir).select(split(col("text"), " ").as("ws"))
+      val items = docs(s, dir).select(words.as("ws"))
         .select(explode(concat(
           transform(col("ws"),
             w => struct(w.as("wa"), lit(null).cast("string").as("wb"))) +:
@@ -5692,17 +5301,10 @@ object Text {
     // corpus_tokens/budget; a production 100M-token budget keeps the
     // manifest driver-small at any corpus size).
     Q("text_shard_manifest",
-      """WITH t AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-        |                  len(string_split(text,' ')) AS tokens FROM documents),
-        |p AS (SELECT doc_id, h, tokens,
-        |  coalesce(sum(tokens) OVER (ORDER BY h, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre FROM t)
-        |SELECT CAST(pre // 4096 AS BIGINT) AS shard, count(*) AS n_docs,
-        |  CAST(sum(tokens) AS BIGINT) AS tokens, min(h) AS first_h, max(h) AS last_h
-        |FROM p GROUP BY 1 ORDER BY shard""".stripMargin) { (s, dir) =>
-      shardManifest(docs(s, dir).select(col("doc_id"),
-        md5(col("doc_id").cast("string").cast("binary")).as("h"),
-        size(split(col("text"), " ")).cast("long").as("tokens")))
+      s"""WITH t AS (SELECT doc_id, len(${Curation.wordsSql}) AS tok FROM documents),
+        |${shardManifestSql("t")}""".stripMargin) { (s, dir) =>
+      shardManifest(docs(s, dir).select(col("doc_id"), Curation.md5Key.as("sh"),
+        size(words).cast("long").as("tok")))
     },
 
     // C28: PII redaction — ordered regex scrub (email, IPv4, phone,
@@ -5982,10 +5584,12 @@ object Text {
     * `src`(doc_id, source, ws): emits CTEs `<p>_w`/`<p>_u`/`<p>_agg`
     * with `<p>_agg`(source, n, bp). Raw `|` margins — the consuming
     * oracle's outer stripMargin handles them (the urlCanonCtes
-    * convention).
+    * convention). `<p>_w` is MATERIALIZED: `<p>_u` reads it six times,
+    * and inlined, each read re-ran `src` (the kept side's whole
+    * near-dup closure), which ran out of memory under a 3 GB cap.
     */
   private def distinctNgramsSql(src: String, p: String): String =
-    s"""${p}_w AS (SELECT doc_id, source, unnest(ws) AS w,
+    s"""${p}_w AS MATERIALIZED (SELECT doc_id, source, unnest(ws) AS w,
        |        generate_subscripts(ws, 1) AS i FROM $src),
        |${p}_u AS (
        |  SELECT 1 AS n, source, w AS gram FROM ${p}_w

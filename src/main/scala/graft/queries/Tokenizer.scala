@@ -56,7 +56,7 @@ object Tokenizer {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  private val words: Column = split(col("text"), " ")
+  import Curation.words
 
   /** Misra-Gries summary size per partition (counters). The merged
     * upper-lower gap is D = sum d_p <= N/(M+1): at gate scale (~5e5

@@ -61,7 +61,7 @@ object Train {
     */
   private val AccFloorBp = 8500L
 
-  private val words = split(col("text"), " ")
+  import Curation.words
 
   /** Per-occurrence hashed token counts: (doc_id, bucket, c). */
   private[graft] def bucketCounts(d: DataFrame): DataFrame =
@@ -74,15 +74,9 @@ object Train {
     * pipeline_curate cutoff) — the teacher rule the model imitates.
     */
   private[graft] def distillLabels(d: DataFrame): DataFrame =
-    d.select(col("doc_id"),
-        size(words).as("n_words"),
-        size(array_distinct(words)).as("n_distinct"),
-        size(filter(words, t => t.isin("the", "a", "of", "and", "to"))).as("n_stop"))
+    Curation.quality(d, col("doc_id"))
       .select(col("doc_id"),
-        when((least(col("n_words"), lit(100)) * 40
-          + expr("(least(n_stop * 10, n_words) * 3000) div n_words")
-          + expr("(n_distinct * 3000) div n_words")) >= 5000, lit(1.0d))
-          .otherwise(lit(0.0d)).as("y"))
+        when(col("quality_bp") >= 5000, lit(1.0d)).otherwise(lit(0.0d)).as("y"))
 
   /** A trained linear model over z-scored hashed-count features. */
   final case class LinearModel(
@@ -629,7 +623,7 @@ object Train {
     d.select(col("doc_id"), col("n_chars"),
         size(words).as("nw"),
         size(array_distinct(words)).as("nd"),
-        size(filter(words, t => t.isin("the", "a", "of", "and", "to"))).as("ns"))
+        Curation.nStop(words).as("ns"))
       .select(col("doc_id"),
         lit(16L).as("x0"),
         expr("least(nw, 100) div 4").cast("long").as("x1"),
@@ -691,25 +685,22 @@ object Train {
       s"(${detExpr((i, k) => if (k == cj) s"b_$i" else aName(i, k))}) AS det$cj"
     }
     val score = (0 until RidgeDim).map(j => s"f.x$j * d.det$j").mkString(" + ")
-    s"""WITH f AS (
-      |  SELECT doc_id, 16 AS x0,
-      |    least(len(string_split(text, ' ')), 100) // 4 AS x1,
-      |    ((least(len(list_filter(string_split(text, ' '),
-      |        w -> w IN ('the','a','of','and','to'))) * 10,
-      |      len(string_split(text, ' '))) * 3000)
-      |      // greatest(len(string_split(text, ' ')), 1)) // 100 AS x2,
-      |    ((len(list_distinct(string_split(text, ' '))) * 3000)
-      |      // greatest(len(string_split(text, ' ')), 1)) // 100 AS x3,
-      |    least(n_chars, 1984) // 64 AS x4,
-      |    CASE WHEN least(len(string_split(text, ' ')), 100) * 40
-      |        + (least(len(list_filter(string_split(text, ' '),
-      |            w -> w IN ('the','a','of','and','to'))) * 10,
-      |           len(string_split(text, ' '))) * 3000)
-      |          // greatest(len(string_split(text, ' ')), 1)
-      |        + (len(list_distinct(string_split(text, ' '))) * 3000)
-      |          // greatest(len(string_split(text, ' ')), 1) >= 5000
-      |      THEN 1 ELSE 0 END AS y
+    s"""WITH c AS (
+      |  SELECT doc_id, n_chars, len(${Curation.wordsSql}) AS nw,
+      |    len(list_distinct(${Curation.wordsSql})) AS nd,
+      |    ${Curation.nStopSql(Curation.wordsSql)} AS ns
       |  FROM documents),
+      |f AS (
+      |  SELECT doc_id, 16 AS x0,
+      |    least(nw, 100) // 4 AS x1,
+      |    ((least(ns * 10, nw) * 3000) // greatest(nw, 1)) // 100 AS x2,
+      |    ((nd * 3000) // greatest(nw, 1)) // 100 AS x3,
+      |    least(n_chars, 1984) // 64 AS x4,
+      |    CASE WHEN least(nw, 100) * 40
+      |        + (least(ns * 10, nw) * 3000) // greatest(nw, 1)
+      |        + (nd * 3000) // greatest(nw, 1) >= 5000
+      |      THEN 1 ELSE 0 END AS y
+      |  FROM c),
       |mat AS (SELECT ${matCols.mkString(",\n    ")}
       |        FROM f WHERE doc_id < $RidgeTrainIds),
       |dets AS (SELECT ($detA) AS detA, ${detJs.mkString(",\n    ")} FROM mat)
@@ -744,9 +735,8 @@ object Train {
     * (de 0, en 1, es 2, fr 3, und 4 — LangClasses order).
     */
   private[graft] def langidRouterFeatures(d: DataFrame): DataFrame = {
-    val ws = split(col("text"), " ")
     def rhit(lang: String): Column =
-      size(filter(ws, w => w.isin(Text.markerWords(lang): _*)))
+      size(filter(words, w => w.isin(Text.markerWords(lang): _*)))
     def chit(lang: String): Column = least(rhit(lang), lit(31)).cast("long")
     val noHits = rhit("en") === 0 && rhit("fr") === 0 &&
       rhit("de") === 0 && rhit("es") === 0
@@ -801,7 +791,7 @@ object Train {
     def aName(i: Int, j: Int) = s"a_${math.min(i, j)}_${math.max(i, j)}"
     def rhit(l: String): String = {
       val set = Text.markerWords(l).map(w => s"'$w'").mkString(",")
-      s"len(list_filter(string_split(text, ' '), w -> w IN ($set)))"
+      s"len(list_filter(${Curation.wordsSql}, w -> w IN ($set)))"
     }
     def chit(l: String) = s"least(${rhit(l)}, 31)"
     val noHits = Seq("en", "fr", "de", "es").map(l => s"${rhit(l)} = 0").mkString(" AND ")

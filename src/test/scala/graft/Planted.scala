@@ -55,4 +55,27 @@ object Planted {
         sqrt(graft.functions.Native.dot(spark, col("emb"), col("emb"))).as("nrm"))
     (df, twins.map { case (id, orig, _) => (id, orig) })
   }
+
+  /** A 64-dim `embeddings` table under `dir`: 120 random unit vectors,
+    * and for the first 20 of them two noisy copies each (cosine ~0.98
+    * to the original and to each other). The 20 groups of three plant 60
+    * pairs above the integer near-dup families' cosine 0.5, where two
+    * random directions in 64 dims almost never reach it. Returns the dir
+    * and the planted pair count.
+    */
+  def embeddingGroups(spark: SparkSession, dir: String): (String, Int) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    def unit(v: Seq[Double]) = {
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(x => (x / n).toFloat)
+    }
+    val base = Seq.fill(120)(unit(Seq.fill(64)(rnd.nextGaussian())))
+    val groups = 20
+    val copies = base.take(groups).flatMap(b => Seq.fill(2)(unit(b.map(_ + rnd.nextGaussian() * 0.02))))
+    (base ++ copies).zipWithIndex.map { case (v, i) => (i.toLong, v, i % 10) }
+      .toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    (dir, groups * 3)
+  }
 }

@@ -231,20 +231,20 @@ class ReadSnapshotSpec extends SparkSpec {
     g.index(a)
     val views = Seq("by-first", "count", "sums")
     views.foreach(v => (1 to 2).foreach(_ => g.listEntries(v)))
-    // entries of each view, and the folds of materialized sums
-    assert(g.snapshotFills == 3 && g.manifestByteReads == 4 && g.manifestPinsHeld == 4)
+    // the entries of by-first and count; materialized sums reads its folds alone
+    assert(g.snapshotFills == 3 && g.manifestByteReads == 3 && g.manifestPinsHeld == 3)
     val hits = g.snapshotHits
     (1 to 20).foreach(_ => views.foreach(v => g.getValue(v, "b")))
-    assert(g.snapshotHits == hits + 60 && g.manifestByteReads == 4)
+    assert(g.snapshotHits == hits + 60 && g.manifestByteReads == 3)
     write(dir, "a.json", "c", 3)
     g.index(a)
-    assert(g.manifestByteReads == 4, "a commit reads its manifests as a writer")
+    assert(g.manifestByteReads == 3, "a commit reads its manifests as a writer")
     (1 to 3).foreach(_ => views.foreach(v => g.listEntries(v)))
-    assert(g.manifestByteReads == 8 && g.manifestPinsHeld == 4)
+    assert(g.manifestByteReads == 6 && g.manifestPinsHeld == 3)
     g.close()
     assert(g.manifestPinsHeld == 0)
     assert(g.getValue("count", "c") == Some(2.0))
-    assert(g.manifestByteReads == 9 && g.manifestPinsHeld == 1, "a read after close pins again")
+    assert(g.manifestByteReads == 7 && g.manifestPinsHeld == 1, "a read after close pins again")
   }
 
   test("commits and reads hold at most two manifest descriptors per view; destroy holds none") {
@@ -366,6 +366,49 @@ class ReadSnapshotSpec extends SparkSpec {
     (1 to 3).foreach(_ => assert(jobsIn(assert(g.getValue("sums", "c") == Some(2.0))) > 0))
     assert(g.getValue("count", "c") == Some(1.0))
     assert(g.snapshotFills == 3 && g.snapshotHits == hits + 4)
+  }
+
+  test("a materialized view's generation is its folds manifest alone") {
+    val dir = root.resolve("fgen-a")
+    write(dir, "a.json", "b", 1); write(dir, "b.json", "c", 2); write(dir, "c.json", "b", 3)
+    val state = root.resolve("fgen-state").toString
+    val a = new DirArchive("dat://fgen", dir.toString)
+    val g = new Graft(spark, state)
+    defineAll(g)
+    g.index(a)
+    val (entries, folds) = (Paths.get(state, "sums", "entries", "_manifest.txt"),
+      Paths.get(state, "sums", "folds", "_manifest.txt"))
+    def sumOfB(want: Double): Unit = assert(g.getValue("sums", "b") == Some(want))
+    (1 to 2).foreach(_ => sumOfB(4.0))
+    val fills = g.snapshotFills
+    // another engine's compact flips the entries manifest, not the folds
+    val g2 = new Graft(spark, state)
+    defineAll(g2)
+    val (e0, f0) = (Files.readAllBytes(entries), Files.readAllBytes(folds))
+    g2.compact("sums")
+    assert(!java.util.Arrays.equals(Files.readAllBytes(entries), e0))
+    assert(java.util.Arrays.equals(Files.readAllBytes(folds), f0))
+    val hits = g.snapshotHits
+    assert(jobsIn(sumOfB(4.0)) == 0 && g.snapshotHits == hits + 1 && g.snapshotFills == fills,
+      "an entries-only flip keeps the snapshot")
+    // a folds flip replaces it: the first read runs Spark, the second fills
+    write(dir, "a.json", "b", 5)
+    g2.index(a)
+    assert(jobsIn(sumOfB(8.0)) > 0)
+    sumOfB(8.0)
+    assert(g.snapshotFills == fills + 1, "a folds flip replaces the snapshot")
+    // dropping the folds replaces it
+    defineAll(new Graft(spark, state), sumsMaterialized = false)
+    assert(!Files.exists(folds.getParent))
+    assert(jobsIn(sumOfB(8.0)) > 0)
+    sumOfB(8.0)
+    assert(g.snapshotFills == fills + 2, "dropping the folds replaces the snapshot")
+    // a folds dir without a manifest still declines
+    defineAll(new Graft(spark, state))
+    Files.delete(folds)
+    val (h, f) = (g.snapshotHits, g.snapshotFills)
+    (1 to 3).foreach(_ => assert(jobsIn(sumOfB(8.0)) > 0))
+    assert(g.snapshotHits == h && g.snapshotFills == f, "a folds dir without a manifest declines")
   }
 
   test("an index pass that changed only files outside a view's glob keeps its snapshot") {

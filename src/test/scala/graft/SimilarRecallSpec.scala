@@ -10,9 +10,10 @@ import graft.queries.{Ann, Dedup, Pinned, Similar}
 /** Exact recall of the similarity families: each family's verifier runs
   * once over its bucketed candidates and once over all pairs (the
   * [[Similar.allPairs]] generator), on sf0.001 and the planted corpora.
-  * sf0.001's embeddings hold no pair at cos >= 0.5, so the float
-  * embedding families run on the planted twins and the integer ones,
-  * which need 64-dim vectors, on sf0.01. Verification is exact, so the bucketed rows, scores included,
+  * sf0.001's embeddings hold no pair at cos >= 0.5 (sf0.01's hold one),
+  * so the float embedding families run on the planted twins and the
+  * integer ones, which need 64-dim vectors, on the planted 64-dim
+  * groups, where all pairs must find at least every planted pair. Verification is exact, so the bucketed rows, scores included,
   * are always a subset of the all-pairs rows. Where candidate generation
   * is exact (pigeonhole hamming blocks, the prefix-filtered AllPairs
   * join) or capture is ~1 (32×4 minhash bands at jaccard >= 0.8 miss
@@ -27,6 +28,7 @@ class SimilarRecallSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
   }
+  private lazy val groups64 = Planted.embeddingGroups(spark, "target/tmp/recall-groups64")
   private def docs(dir: String) = Tables(spark, dir, "documents")
 
   /** The rows of `bucketed` and of `all`, collected in one job. */
@@ -47,6 +49,9 @@ class SimilarRecallSpec extends SparkSpec {
 
   private val docDirs = () => Seq(sf(), cascade)
   private val embDirs = () => Seq(twins)
+  private val emb64Dirs = () => Seq(groups64._1)
+  /** Pairs each planted corpus must yield over all pairs. */
+  private def planted(dir: String): Int = if (dir == groups64._1) groups64._2 else 0
 
   private val families = Seq(
     Family("ngram prefix AllPairs (tau 4/5)", exact = true, docDirs, (d, g) =>
@@ -63,7 +68,7 @@ class SimilarRecallSpec extends SparkSpec {
         "media_id", "phash", 4, 16, 3, g)),
     Family("embedding hyperplane LSH", exact = false, embDirs, (d, g) =>
       Dedup.embeddingLshPairs(spark, Ann.embsWithNorm(spark, d), g)),
-    Family("embedding integer LSH", exact = false, () => Seq(sf("sf0.01")), (d, g) =>
+    Family("embedding integer LSH", exact = false, emb64Dirs, (d, g) =>
       Dedup.embeddingLshIntPairs(spark, d, g)),
     Family("semantic IVF cells", exact = false, embDirs, (d, g) => {
       val e = Ann.embsWithNorm(spark, d)
@@ -71,7 +76,7 @@ class SimilarRecallSpec extends SparkSpec {
       Dedup.semanticPairs(spark,
         Ann.ivfBuild(e, Dedup.semanticCellCount(n), knownCount = n).assigned, 0.5, g)
     }),
-    Family("semantic integer cells", exact = false, () => Seq(sf("sf0.01")), (d, g) =>
+    Family("semantic integer cells", exact = false, emb64Dirs, (d, g) =>
       Dedup.semanticIntPairs(spark, d, g)))
 
   families.foreach { f =>
@@ -81,6 +86,7 @@ class SimilarRecallSpec extends SparkSpec {
         assert(bucketed.subsetOf(all), s"$dir: unverified rows ${(bucketed -- all).take(3)}")
         if (f.exact)
           assert(bucketed == all, s"$dir: missed ${(all -- bucketed).take(3)}")
+        assert(all.size >= planted(dir), s"$dir: ${all.size} all-pairs rows, ${planted(dir)} planted")
         info(s"$dir: ${bucketed.size} of ${all.size} all-pairs rows")
         all.size
       }
